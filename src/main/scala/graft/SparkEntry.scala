@@ -2391,11 +2391,11 @@ object SparkEntry {
       val dedup = new graft.streaming.StreamingSemDeDup()
         .setInputCol("embedding").setTimeCol("ts")
         .setWatermarkDelay("3650 days")
-        // the single-cell exhaustive probe is FAT (every corpus member
-        // in one buffer) and the fixture source is one parquet file
-        // (~3 splits): without the spread the x100 sweep stranded the
-        // probe on 2 of 32 cores
-        .setSpreadProbe(true)
+        // the single-cell quantizer makes the stage spread each
+        // micro-batch before its FAT exhaustive probe (every corpus
+        // member in one buffer): the fixture source is one parquet file
+        // (~3 splits), and unspread the x100 sweep stranded the probe on
+        // 2 of 32 cores
         .setFromModel(m).setCorpusIndex(idx)
         .transform(stream)
       val qname = s"semdd_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
@@ -2536,7 +2536,7 @@ object SparkEntry {
         .transform(stream)
       val dedup = new graft.streaming.StreamingSemDeDup()
         .setInputCol("embedding").setTimeCol("ts")
-        .setWatermarkDelay("3650 days").setSpreadProbe(true)
+        .setWatermarkDelay("3650 days") // single cell: the probe spreads
         .setFromModel(m).setCorpusIndex(idx)
         .transform(exactStage)
       val qname = s"semdd_chain_${java.util.UUID.randomUUID().toString.replace("-", "")}"

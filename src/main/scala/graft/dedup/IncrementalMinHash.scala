@@ -6,6 +6,7 @@ import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Incremental (snapshot-delta) NEAR-duplicate removal: the MinHash
@@ -59,19 +60,6 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     "per-band-bucket corpus candidate cap (skew guard)")
   setDefault(maxBucketSize -> 1000)
   def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
-  final val broadcastMaxCandidates = new LongParam(this,
-    "broadcastMaxCandidates",
-    "broadcast the candidate/drop id frames into the verify and " +
-      "survivor joins only while the measured candidate-pair count is " +
-      "at or under this bound; above it the joins fall back to the " +
-      "planner's shuffle strategy (a huge snapshot delta with a high " +
-      "dup rate can push these frames past Spark's broadcast limits — " +
-      "a shuffle join finishes where a forced broadcast would fail); " +
-      "0 disables the hints outright",
-    ParamValidators.gtEq(0))
-  setDefault(broadcastMaxCandidates -> 5000000L)
-  def setBroadcastMaxCandidates(v: Long): this.type =
-    set(broadcastMaxCandidates, v)
   final val verifyMode = new Param[String](this, "verifyMode",
     "'signature' verifies against the index alone (MinHash Jaccard " +
       "estimate); 'exact' verifies candidates by exact shingle Jaccard " +
@@ -149,15 +137,21 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     // index describes an already-deduplicated corpus). The id frames
     // carry no catalog stats (they derive from a checkpointed RDD), so
     // the planner cannot size them itself: hint broadcast, but only
-    // under a MEASURED row bound — counting the materialized checkpoint
+    // while their MEASURED size fits the session's own broadcast bound,
+    // spark.sql.autoBroadcastJoinThreshold (-1 turns the hints off, as
+    // it turns off the planner's). Counting the materialized checkpoint
     // is nearly free, and candidates are only O(dup rate · batch)
     // RELATIVE to the corpus, not absolutely small (r19 verdict: a huge
     // high-dup-rate delta could push an unconditional hint past the 8 GB
-    // broadcast cap and fail where a shuffle join finishes). dropIds ⊆
-    // the batch side of cands, so one measurement guards every hint.
-    val candCount = cands.count()
+    // broadcast cap and fail where a shuffle join finishes). A
+    // candidate row is two longs (16 B) and every hinted frame is a
+    // projection of cands (dropIds ⊆ its batch side), so one
+    // measurement bounds every hint.
+    val candBytes = cands.count() * 16L
+    val broadcastLimit = SQLConf.get.autoBroadcastJoinThreshold
     def maybeBroadcast(f: DataFrame): DataFrame =
-      if (candCount <= $(broadcastMaxCandidates)) broadcast(f) else f
+      if (broadcastLimit >= 0 && candBytes <= broadcastLimit) broadcast(f)
+      else f
     val dropIds = $(verifyMode) match {
       case "signature" =>
         val bSig = df.select(id.cast("long").as("__id"),

@@ -299,15 +299,7 @@ class IncrementalSemDeDupModel(override val uid: String)
         var hit = false
         var j = 0
         while (j < cVs.length && !hit) {
-          val b = cVs(j)
-          val m = math.min(a.length, b.length)
-          var d = 0.0; var na = 0.0; var nb = 0.0
-          var t = 0
-          while (t < m) {
-            d += a(t) * b(t); na += a(t) * a(t); nb += b(t) * b(t); t += 1
-          }
-          val cos = d / (math.sqrt(na) * math.sqrt(nb))
-          if (cos.isNaN || cos >= thr) hit = true
+          hit = SemDeDup.cosineDup(a, cVs(j), thr)
           j += 1
         }
         if (hit) dups += bIds(i)

@@ -256,10 +256,7 @@ class SemDeDup(override val uid: String) extends Transformer
     val centroidFar = $(keepRule) == "centroidFar"
     val dupUdf = udf { es: Seq[org.apache.spark.sql.Row] =>
       // entries arrive id-ascending (the aggregator keeps them sorted);
-      // exact cosine per pair, mirroring VectorCosine's arithmetic AND
-      // Spark's NaN comparison semantics (a zero-norm cosine is NaN,
-      // which Spark orders above every number, so NaN >= thr held in
-      // the former filter and must keep holding)
+      // exact cosine per pair, mirroring VectorCosine's arithmetic
       val n = es.length
       val ids = new Array[Long](n)
       val vs = new Array[Array[Double]](n)
@@ -277,15 +274,7 @@ class SemDeDup(override val uid: String) extends Transformer
       while (i < n) {
         var j = i + 1
         while (j < n) {
-          val (a, b) = (vs(i), vs(j))
-          val m = math.min(a.length, b.length)
-          var d = 0.0; var na = 0.0; var nb = 0.0
-          var t = 0
-          while (t < m) {
-            d += a(t) * b(t); na += a(t) * a(t); nb += b(t) * b(t); t += 1
-          }
-          val cos = d / (math.sqrt(na) * math.sqrt(nb))
-          if (cos.isNaN || cos >= thr) {
+          if (SemDeDup.cosineDup(vs(i), vs(j), thr)) {
             // paper rule: of a duplicate pair, drop the endpoint MORE
             // similar to its centroid (ties: ids ascend, so dropping j
             // keeps the smaller id — the family convention); minId
@@ -400,6 +389,26 @@ object SemDeDup extends graft.core.GraftReadable[SemDeDup] {
     val (c1, _) = argmin(q.coarse)
     val (c2, d2) = argmin(q.subs(c1))
     (q.base(c1) + c2, 1.0 - d2 / 2.0)
+  }
+
+  /** Number of flat cells `q` assigns to. */
+  private[graft] def cells(q: Quantizer): Int =
+    q.base(q.coarse.length - 1) + q.subs(q.coarse.length - 1).length
+
+  /** The family duplicate rule on RAW vectors: cosine ≥ `thr`, where a
+    * zero-norm pair gives NaN and NaN counts as a duplicate — Spark's
+    * NaN ordering (NaN sorts above every number), which the former
+    * expression-based verify's `cos >= thr` filter had. */
+  private[graft] def cosineDup(a: Array[Double], b: Array[Double],
+      thr: Double): Boolean = {
+    val m = math.min(a.length, b.length)
+    var d = 0.0; var na = 0.0; var nb = 0.0
+    var t = 0
+    while (t < m) {
+      d += a(t) * b(t); na += a(t) * a(t); nb += b(t) * b(t); t += 1
+    }
+    val cos = d / (math.sqrt(na) * math.sqrt(nb))
+    cos.isNaN || cos >= thr
   }
 
   /** One cluster member riding the grouped verify: id, ORIGINAL vector

@@ -34,6 +34,16 @@ trait TestBase extends AnyFunSuite with BeforeAndAfterAll {
       s"data mismatch:\n  a=${av.take(5).mkString(";")}\n  b=${bv.take(5).mkString(";")}")
   }
 
+  /** Runs `f` with the given session confs set, restoring them after. */
+  def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** sf0.001 table loader for suites that want realistic data. */
   def sfTable(name: String): DataFrame =
     spark.read.parquet(s"/root/testdata/sf0.001/$name.parquet")

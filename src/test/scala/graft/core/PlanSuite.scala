@@ -200,15 +200,6 @@ class PlanSuite extends TestBase {
     }
   }
 
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("dedup candidate generation shuffles narrow payloads only") {
     // the minhash band explode must NOT carry the hashed-shingle array
     // through its shuffle: no shuffle in dedup_minhash's plan may carry

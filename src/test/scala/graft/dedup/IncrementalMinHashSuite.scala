@@ -61,41 +61,50 @@ class IncrementalMinHashSuite extends TestBase {
 
   test("over-threshold candidate count falls back to shuffle joins") {
     // the broadcast hints on the candidate/drop id frames are gated on
-    // the MEASURED candidate count (the frames carry no stats): above
-    // broadcastMaxCandidates no join may carry a broadcast HINT — the
-    // strategy is the planner's again (a huge high-dup-rate delta could
-    // otherwise push a forced broadcast past Spark's 8 GB cap; AQE
-    // re-broadcasting a frame it MEASURED as tiny at runtime stays
-    // legitimate and is why the assertion reads the optimized plan's
-    // hints, not the executed strategy) and the result must be
-    // unchanged.
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    // the MEASURED candidate bytes against the session's
+    // spark.sql.autoBroadcastJoinThreshold (the frames carry no stats):
+    // over it — here -1, which also turns the planner's own broadcasts
+    // off — no join may carry a broadcast HINT, the strategy is the
+    // planner's again (a huge high-dup-rate delta could otherwise push a
+    // forced broadcast past Spark's 8 GB cap; AQE re-broadcasting a
+    // frame it MEASURED as tiny at runtime stays legitimate and is why
+    // the assertion reads the optimized plan's join hints, not the
+    // executed strategy), and the result must be unchanged.
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join,
+      LogicalPlan}
+    val plans = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           durationNs: Long): Unit =
-        plans.synchronized { plans += qe.optimizedPlan.toString }
+        plans.synchronized { plans += qe.optimizedPlan }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(l)
     try {
-      def antiJoinPlans(): Seq[String] = {
+      // broadcast flags of every join in the survivor anti-join's plans
+      def antiJoinBroadcastHints(): Seq[Boolean] = {
         org.apache.spark.graftshims.ListenerBridge
           .waitUntilEmpty(spark.sparkContext, 5000)
         val p = plans.synchronized { val s = plans.toSeq; plans.clear(); s }
-        p.filter(_.contains("LeftAnti"))
+        val joins = p.filter(_.exists {
+          case j: Join => j.joinType == LeftAnti
+          case _ => false
+        }).flatMap(_.collect { case j: Join => j })
+        assert(joins.nonEmpty, "expected the survivor anti-join to run")
+        joins.map(j => Seq(j.hint.leftHint, j.hint.rightHint).flatten
+          .exists(_.strategy.contains(BROADCAST)))
       }
-      val small = op("exact").setCorpus(corpus)
-        .setBroadcastMaxCandidates(0L).transform(batch)
-      val overPlans = antiJoinPlans()
-      assert(overPlans.nonEmpty, "expected the survivor anti-join to run")
-      assert(!overPlans.exists(_.contains("strategy=broadcast")),
+      val small = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        op("exact").setCorpus(corpus).transform(batch)
+      }
+      assert(!antiJoinBroadcastHints().exists(identity),
         "over-threshold path must not hint a broadcast")
       val default = op("exact").setCorpus(corpus).transform(batch)
-      val underPlans = antiJoinPlans()
-      assert(underPlans.exists(_.contains("strategy=broadcast")),
+      assert(antiJoinBroadcastHints().exists(identity),
         "under-threshold path should keep the broadcast hint")
       assert(ids(small) == Seq(11L, 13L) && ids(default) == Seq(11L, 13L),
         "fallback must not change decisions")

@@ -364,7 +364,6 @@ class StreamingSuite extends TestBase {
     ).toDF("doc_id", "embedding")
     val m = new graft.dedup.IncrementalSemDeDup().setInputCol("embedding")
       .setNClusters(1).setThreshold(0.99).fit(corpus)
-    val idx = m.indexCorpus(corpus)
     val batch = Seq(
       (10L, Array(1.0, 0.05, 0.0, 0.0)),  // near-dup of corpus 0 -> drop
       (11L, Array(0.0, 0.05, 1.0, 0.0)),  // near-dup of corpus 1 -> drop
@@ -373,18 +372,42 @@ class StreamingSuite extends TestBase {
       (14L, null.asInstanceOf[Array[Double]]), // no evidence -> keep
       (15L, null.asInstanceOf[Array[Double]])  // both nulls must pass
     ).toDF("doc_id", "embedding")
-    val out = new StreamingSemDeDup().setInputCol("embedding")
-      .setFromModel(m).setCorpusIndex(idx)
-      .transform(batch).select("doc_id").as[Long].collect().sorted
+    // single cell: the probe filter sits above the spreading
+    // repartition; a multi-cell quantizer probes in place — and the
+    // payload shuffle cannot change decisions. Read from parquet, as
+    // the gates do: the optimizer folds a local batch away entirely.
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter,
+      RepartitionOperation}
+    val dir = java.nio.file.Files.createTempDirectory("semdd_spread")
+      .resolve("batch").toString
+    batch.write.parquet(dir)
+    def run(model: graft.dedup.IncrementalSemDeDupModel)
+        : (Array[Long], Boolean) = {
+      val dedup = new StreamingSemDeDup().setInputCol("embedding")
+        .setFromModel(model).setCorpusIndex(model.indexCorpus(corpus))
+        .transform(spark.read.parquet(dir))
+      val plan = dedup.queryExecution.optimizedPlan
+      val probes = plan.collect {
+        case f: Filter if f.condition.exists(_.isInstanceOf[ScalaUDF]) => f
+      }
+      assert(probes.nonEmpty, s"no probe filter in the plan:\n$plan")
+      (dedup.select("doc_id").as[Long].collect().sorted,
+        probes.forall(_.child.exists(_.isInstanceOf[RepartitionOperation])))
+    }
+    val (out, spread) = run(m)
     assert(out.length == 3 && out.contains(14L) && out.contains(15L))
     assert(out.contains(12L) || out.contains(13L))
-    // the spreadProbe lever (payload shuffle before the probe) cannot
-    // change decisions
-    val spread = new StreamingSemDeDup().setInputCol("embedding")
-      .setFromModel(m).setCorpusIndex(idx).setSpreadProbe(true)
-      .transform(batch).select("doc_id").as[Long].collect().sorted
-    assert(spread.length == 3 &&
-      spread.contains(14L) && spread.contains(15L))
+    val multi = new graft.dedup.IncrementalSemDeDup().setInputCol("embedding")
+      .setNClusters(2).setThreshold(0.99).fit(corpus)
+    assert(graft.dedup.SemDeDup.cells(multi.getOrDefault(multi.quantizer)) == 2)
+    val (outMulti, spreadMulti) = run(multi)
+    assert(spread && !spreadMulti,
+      "only the single-cell probe should sit above a repartition")
+    // 12/13 are exact repeats: which copy survives is arbitrary
+    def decisions(ids: Array[Long]) =
+      (ids.filterNot(Set(12L, 13L)).toSeq, ids.count(Set(12L, 13L)))
+    assert(decisions(outMulti) == decisions(out))
     // reserved internal columns clash at plan construction
     intercept[IllegalArgumentException] {
       new StreamingSemDeDup().setInputCol("embedding").setFromModel(m)
@@ -696,22 +719,59 @@ class StreamingSuite extends TestBase {
     val stage = new StreamingNearestNeighbors().setInputCol("embedding")
       .setK(1).setNProbe(1).setFromModel(ivf)
       .setCorpus(corpus, "doc_id", "embedding")
-    assert(stage.cachedProbe.isEmpty)
-    stage.transform(batch).collect()
-    val b1 = stage.cachedProbe.get
-    stage.transform(batch).collect() // repeated call: NO re-collect/re-broadcast
-    assert(stage.cachedProbe.get.id == b1.id,
+    assertProbeCached(() => stage.cachedProbe,
+      () => assert(stage.transform(batch)
+        .select(col("neighbors")(0)("id")).as[Long].collect().toSeq ==
+        Seq(0L)),
+      () => stage.setCorpus(corpus, "doc_id", "embedding"),
+      () => stage.release())
+  }
+
+  /** The probe-cache contract: the first transform builds the probe
+    * broadcast, a repeated call reuses it (no re-collect, no
+    * re-broadcast), replacing the corpus destroys it, and `release()`
+    * destroys the rebuilt one. */
+  private def assertProbeCached(
+      cached: () => Option[org.apache.spark.broadcast.Broadcast[_]],
+      run: () => Unit, replace: () => Unit, release: () => Unit): Unit = {
+    assert(cached().isEmpty)
+    run()
+    val b1 = cached().get
+    run()
+    assert(cached().get.id == b1.id,
       "repeated transform must reuse the cached broadcast")
-    // replacing the corpus destroys the old broadcast and rebuilds
-    stage.setCorpus(corpus, "doc_id", "embedding")
-    assert(stage.cachedProbe.isEmpty)
+    replace()
+    assert(cached().isEmpty)
     intercept[org.apache.spark.SparkException] { b1.value }
-    val out = stage.transform(batch)
-      .select(col("neighbors")(0)("id")).as[Long].collect()
-    assert(out.toSeq == Seq(0L))
-    val b2 = stage.cachedProbe.get
-    stage.release()
+    run() // rebuilt, same decisions
+    val b2 = cached().get
+    release()
+    assert(cached().isEmpty)
     intercept[org.apache.spark.SparkException] { b2.value }
+  }
+
+  test("StreamingMinHashDeduplicator and StreamingFingerprintDeduplicator " +
+    "broadcast the corpus probe ONCE per index and destroy it on " +
+    "setCorpusIndex and release") {
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    val mhIdx = StreamingMinHashDeduplicator.signatureIndex(
+      Seq((1L, base)).toDF("doc_id", "text"), "doc_id", "text", 3, 128)
+    val texts = Seq((10L, base + " extra")).toDF("doc_id", "text")
+    val mh = new StreamingMinHashDeduplicator().setInputCol("text")
+      .setCorpusIndex(mhIdx)
+    assertProbeCached(() => mh.cachedProbe,
+      () => assert(mh.transform(texts).count() == 0),
+      () => mh.setCorpusIndex(mhIdx), () => mh.release())
+    // ids 0-3 are bit-identical audio re-encodes: 1 hits 0's fingerprint
+    val wav = (id: Long) => graft.SparkEntry.testFpWavBytes(id)
+    val fpIdx = StreamingFingerprintDeduplicator.fingerprintIndex(
+      Seq((0L, wav(0L))).toDF("doc_id", "payload"), "payload", "audio")
+    val media = Seq((10L, wav(1L))).toDF("doc_id", "payload")
+    val fp = new StreamingFingerprintDeduplicator().setModality("audio")
+      .setInputCol("payload").setCorpusIndex(fpIdx)
+    assertProbeCached(() => fp.cachedProbe,
+      () => assert(fp.transform(media).count() == 0),
+      () => fp.setCorpusIndex(fpIdx), () => fp.release())
   }
 
   test("StreamingSemDeDup builds the DSL probe broadcasts ONCE per index " +
@@ -723,15 +783,9 @@ class StreamingSuite extends TestBase {
     val batch = Seq((10L, Array(1.0, 0.03, 0.0))).toDF("doc_id", "embedding")
     val stage = new StreamingSemDeDup().setInputCol("embedding")
       .setFromModel(m).setCorpusIndex(idx)
-    stage.transform(batch).collect()
-    val b1 = stage.cachedProbe.get
-    stage.transform(batch).collect()
-    assert(stage.cachedProbe.get.id == b1.id,
-      "repeated transform must reuse the cached broadcasts")
-    stage.setCorpusIndex(idx)
-    assert(stage.cachedProbe.isEmpty)
-    intercept[org.apache.spark.SparkException] { b1.value }
-    assert(stage.transform(batch).count() == 0) // rebuilt, same decisions
+    assertProbeCached(() => stage.cachedProbe,
+      () => assert(stage.transform(batch).count() == 0),
+      () => stage.setCorpusIndex(idx), () => stage.release())
   }
 
   test("StreamingSemDeDup.transformMicroBatch decides identically to the " +
