@@ -42,11 +42,11 @@ object Bench {
     * BENCH_r18/r19 records — NOT 2048 as previously assumed); anything
     * past it is cut from the HEAD of the line, which made BENCH_r{7,8}
     * unparseable and voided PERF_r19 (the r19 line rendered at exactly
-    * the old 1930-byte budget and lost its first 3 bytes). After the sbt
-    * "[info] " prefix (7 B), the "[success] Total time..." epilogue
-    * (~72 B) and two newlines, ~1919 B remain for the line itself; 1890
-    * leaves real margin for epilogue drift. The degrade rungs in
-    * [[renderLine]] absorb any budget. */
+    * the old 1930-byte budget and lost its first 3 bytes). `run` writes
+    * the forked JVM's stdout bare (build.sbt `outputStrategy`); after the
+    * "[success] Total time..." epilogue (~72 B) and two newlines, ~1926 B
+    * remain for the line itself; 1890 leaves real margin for epilogue
+    * drift. The degrade rungs in [[renderLine]] absorb any budget. */
   val MaxLineBytes = 1890
 
   /** Render the contract line: full names + walls for every query with
@@ -299,11 +299,8 @@ object Bench {
     val namedWalls = results.map { case (k, (w, _, _, _)) => k -> w }
     val line = renderLine(namedWalls, total, sfDir)
     println(line)
-    // the stderr copy + file exist because rounds 1-10 all recorded
-    // "parsed": null from the stdout tail alone; the full-precision
-    // all-names line lands in bench_contract_full.json (the compact line
-    // aggregates sub-0.5 s walls)
-    System.err.println(line)
+    // the compact line aggregates sub-0.5 s walls; the full-precision
+    // all-names line lands in bench_contract_full.json
     java.nio.file.Files.write(
       java.nio.file.Paths.get("target/bench_contract.json"),
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -1,7119 +1,21 @@
 package graft
 
-import graft.dedup._
-import graft.featurize._
-import graft.sim._
-import graft.stages._
-import graft.text._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.gates.GateRegistry
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Determinism discipline for the DuckDB-oracle hash compare:
-  *   - integer / string / timestamp outputs are exact;
-  *   - sums over fixed-decimal data go through `cast(decimal(·,s))` (exact,
-  *     order-independent) and are emitted `cast("double")`;
-  *   - means use [[graft.core.Determinism.deterministicMean]] (exact decimal
-  *     sum, one double divide) — bit-identical in Spark and DuckDB;
-  *   - every computed column is aliased identically in Spark and oracle SQL.
-  */
-/** Closed-vocabulary TF gate constants shared by the text_featurizer
-  * query and its oracle: 10 common stopwords, murmur bucket per term via
-  * the public HashingTF.indexOf, collision-freedom asserted at build time
-  * (so the gate cannot depend on fixture luck).
-  */
-private[graft] object TextFeaturizerGate {
-  val Terms: Seq[String] =
-    Seq("the", "and", "of", "to", "a", "in", "is", "for", "on", "with")
-  // the gate's input text is restricted to the closed term set before
-  // featurizing, so the hash space only has to keep THESE 10 terms
-  // collision-free (asserted below) — and a small space keeps the
-  // vector_to_array in the gate query O(1k), not O(256k), per row
-  val NumFeatures: Int = 1 << 10
-  lazy val termIndices: Seq[(String, Int)] = {
-    val htf = new org.apache.spark.ml.feature.HashingTF()
-      .setNumFeatures(NumFeatures)
-    val idx = Terms.map(t => t -> htf.indexOf(t))
-    require(idx.map(_._2).distinct.size == Terms.size,
-      "closed-set bucket collision — pick different terms")
-    idx
-  }
-}
-
-/** Planted-multilingual fixture shared by the language_id gate and
-  * LanguageIdentifierSuite: five languages with characteristic word
-  * pools; each doc's language is doc_id % 5 and its text is a
-  * deterministic 16-word sample of the pool (word i =
-  * pool[(doc_id*7 + i*13) % 12] — pure integer arithmetic, so the
-  * synthesis is replayable anywhere, though the ORACLE only needs the
-  * planted label: the gate is the quality_classifier pattern, pass =
-  * the trained classifier recovers every planted language exactly).
-  */
-private[graft] object LanguageGateFixture {
-  /** doc_id % 5 -> language code. */
-  val LangByMod: Seq[String] = Seq("en", "fr", "es", "de", "it")
-  val Pools: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "and", "of", "to", "have", "that", "it", "is",
-      "was", "for", "not", "with"),
-    "fr" -> Seq("le", "et", "les", "des", "une", "dans", "pour", "que",
-      "vous", "avec", "être", "sur"),
-    "es" -> Seq("el", "los", "las", "una", "para", "con", "por", "como",
-      "más", "pero", "sobre", "también"),
-    "de" -> Seq("der", "und", "die", "das", "nicht", "ein", "mit", "für",
-      "auf", "ist", "sich", "von"),
-    "it" -> Seq("il", "di", "che", "per", "una", "con", "non", "sono",
-      "della", "questo", "più", "anche"))
-
-  def langCol: org.apache.spark.sql.Column =
-    element_at(typedLit(LangByMod), (col("doc_id") % 5 + 1).cast("int"))
-
-  private def poolText(pool: Seq[String]): org.apache.spark.sql.Column =
-    concat_ws(" ", transform(sequence(lit(0), lit(15)),
-      i => element_at(typedLit(pool),
-        ((col("doc_id") * 7 + i * 13) % 12 + 1).cast("int"))))
-
-  def textCol: org.apache.spark.sql.Column =
-    LangByMod.zipWithIndex.foldLeft(
-      lit(null).cast(org.apache.spark.sql.types.StringType)) {
-      case (acc, (l, i)) =>
-        when(col("doc_id") % 5 === i, poolText(Pools(l))).otherwise(acc)
-    }
-}
-
-/** Planted fixture for the subword_embedding gate: 5 classes whose word
-  * pools draw from DISJOINT 5-letter alphabets, so character n-grams —
-  * the subword evidence — never cross classes by construction. Train
-  * docs (doc_id % 3 != 0) use the 12 base words of their class
-  * (doc_id % 5); TEST docs (doc_id % 3 == 0) use morphological
-  * variants (base + a 2-letter class-alphabet suffix) absent from
-  * every training document — all-OOV, so the word-lookup path pools
-  * them to ZERO (the round-16 verdict's 100 TB vocabulary-drift hole)
-  * and only the fastText-style subword fallback can recover the
-  * class. Word synthesis is pure integer arithmetic on doc_id, so the
-  * fixture is replayable anywhere; the ORACLE only needs the planted
-  * label (the trained_embedding convention). */
-private[graft] object SubwordGateFixture {
-  private val Alphabets: Seq[String] =
-    Seq("abcde", "fghij", "klmno", "pqrst", "uvwxy")
-  /** 12 distinct 5-letter base words per class (chars j%5, (j/5)%5,
-    * (j*3)%5, (j*2+1)%5, (j+2)%5 of the class alphabet — any two j
-    * differ in char 0 or char 1). */
-  val Pools: Seq[Seq[String]] = Alphabets.map { al =>
-    (0 until 12).map { j =>
-      Seq(j % 5, (j / 5) % 5, (j * 3) % 5, (j * 2 + 1) % 5, (j + 2) % 5)
-        .map(al(_)).mkString
-    }
-  }
-  /** The held-out morphological variants: base + the class alphabet's
-    * first two letters (7 letters, so no variant collides with any
-    * 5-letter base word; same-alphabet suffix keeps the n-gram
-    * evidence class-pure). */
-  val VariantPools: Seq[Seq[String]] =
-    Pools.zip(Alphabets).map { case (pool, al) =>
-      pool.map(_ + al.substring(0, 2))
-    }
-
-  private def poolText(pool: Seq[String]): org.apache.spark.sql.Column =
-    concat_ws(" ", transform(sequence(lit(0), lit(15)),
-      i => element_at(typedLit(pool),
-        ((col("doc_id") * 7 + i * 13) % 12 + 1).cast("int"))))
-
-  def textCol: org.apache.spark.sql.Column =
-    (0 until 5).foldLeft(
-      lit(null).cast(org.apache.spark.sql.types.StringType)) {
-      case (acc, c) =>
-        when(col("doc_id") % 5 === c,
-          when(col("doc_id") % 3 === 0, poolText(VariantPools(c)))
-            .otherwise(poolText(Pools(c)))).otherwise(acc)
-    }
-}
-
-/** Shared tail of the trained-embedding gates: 5-way nearest-centroid
-  * recovery of the planted class (the language_id planted-rule pattern
-  * over embedding space — the clustering itself is not SQL-replayable,
-  * the recovered labels are). Centroids come from the train split
-  * (doc_id % 3 != 0; bounded collect of 5 × dim means). */
-private[graft] object EmbedGateSupport {
-  def nearestCentroidRecovery(emb: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val cents = emb.filter(col("doc_id") % 3 =!= 0)
-      .select((col("doc_id") % 5).cast("int").as("__c"),
-        posexplode(col("embedding")))
-      .groupBy("__c", "pos").agg(avg(col("col")).as("v"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (c, rs) =>
-        c -> rs.sortBy(_.getInt(1)).map(_.getDouble(2))
-      }
-    val bc = emb.sparkSession.sparkContext.broadcast(
-      (0 until 5).map(cents(_)).toArray)
-    val assignUdf = udf { e: Seq[Float] =>
-      val cs = bc.value
-      var best = 0; var bestS = Double.MinValue
-      var c = 0
-      while (c < cs.length) {
-        var s0 = 0.0; var ss = 0.0
-        var j = 0
-        while (j < cs(c).length) {
-          s0 += e(j) * cs(c)(j); ss += cs(c)(j) * cs(c)(j); j += 1
-        }
-        val sim = if (ss > 0) s0 / math.sqrt(ss) else 0.0
-        if (sim > bestS) { bestS = sim; best = c }
-        c += 1
-      }
-      best.toLong
-    }
-    emb.select(col("doc_id"), assignUdf(col("embedding")).as("pred_class"))
-  }
-}
-
-/** Ranking train/validation-split gate fixture shared by the ranking_tvs
-  * query and RecoSuite's margin test. Constructed so JACCARD similarity
-  * strictly beats LIFT on held-out NDCG@5, deterministically:
-  *  - users 1-4 hold out item 1 (their rating-5 head); item 1 trains only
-  *    with users 5-8, so jaccard(1,2)=4/8 is strong while lift(1,·)
-  *    divides by item 2's popularity (occ 8) and collapses;
-  *  - decoy item 20 co-occurs once with items 3,4 via user 9 — lift's
-  *    popularity normalization ranks the rare decoy ABOVE ground-truth
-  *    item 1 for users 1-4 (1/7 vs sum 0.268/3-way), jaccard does not;
-  *  - all scores are exact count ratios decimal-summed, ties broken on
-  *    item id, so per-user NDCG is a closed-form constant (hand-derived
-  *    in the oracle: jaccard (8/log2(5)+0.5)/9 -> 4384, lift
-  *    (4/log2(6)+5/log2(5))/9 -> 4112 after floor(x*1e4+0.5)).
-  */
-private[graft] object RankingGateFixture {
-  // (user, item, rating): 4 items per user => holdout = top-1 by rating
-  val Rows: Seq[(Long, Int, Double)] =
-    (1L to 4L).flatMap(u =>
-      Seq((u, 1, 5.0), (u, 2, 3.0), (u, 3, 3.0), (u, 4, 3.0))) ++
-    (5L to 6L).flatMap(u =>
-      Seq((u, 3, 5.0), (u, 1, 3.0), (u, 2, 3.0), (u, 4, 3.0))) ++
-    (7L to 8L).flatMap(u =>
-      Seq((u, 4, 5.0), (u, 1, 3.0), (u, 2, 3.0), (u, 3, 3.0))) ++
-    Seq((9L, 2, 5.0), (9L, 3, 3.0), (9L, 4, 3.0), (9L, 20, 3.0))
-
-  def df(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Rows.toDF("user", "item", "rating")
-  }
-}
-
+/** Driver contract — see SURVEY.md §7. Both maps derive from
+  * [[graft.gates.GateRegistry]]; a gate is one [[graft.gates.Gate]] in
+  * its family file under `graft/gates/`. */
 object SparkEntry {
-
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Planted-cluster fixture shared by `embed_cluster`/`topic_balance`:
-    * dim-8 embeddings with one dominant planted direction per
-    * doc_id % 6 group plus tiny deterministic jitter — separable enough
-    * that the seeded spherical k-means recovers the partition EXACTLY
-    * at every SF (the quality_classifier planted-rule pattern). Returns
-    * the fitted assignment (doc_id, cluster). */
-  private def plantedClusters(s: SparkSession, dir: String): DataFrame = {
-    val emb = tbl(s, dir, "documents").select(col("doc_id"),
-      array((0 until 8).map(d =>
-        when(col("doc_id") % 6 === d, lit(10.0))
-          .otherwise(pmod(col("doc_id") * (d + 7), lit(13))
-            .cast("double") / 100.0)): _*).as("emb"))
-    new graft.sim.EmbeddingClusterer().setInputCol("emb")
-      .setIdCol("doc_id").setK(6).setSeed(7L)
-      .fit(emb).transform(emb)
-      .select(col("doc_id"), col("cluster"))
-  }
-
-  /** Directory to hand a FileStreamSource for table `name`: the
-    * driver's testdata stores each table as a SINGLE parquet file (the
-    * source wants a directory — expose the file through a temp-dir
-    * symlink), while Spark-written corpora (the 10x/100x ScaleGen
-    * replicas) store it as a parquet DIRECTORY that can be streamed
-    * directly. Without the branch the symlink points at a directory the
-    * source never descends into — the stream is silently EMPTY, which
-    * made the streaming gates' scaled-corpus walls meaninglessly fast. */
-  private def streamingPath(dir: String, name: String, tag: String): String = {
-    val src = java.nio.file.Paths.get(s"$dir/$name.parquet")
-    if (java.nio.file.Files.isDirectory(src)) src.toString
-    else {
-      val tmp = java.nio.file.Files.createTempDirectory(tag)
-      tmp.toFile.deleteOnExit()
-      java.nio.file.Files.createSymbolicLink(
-        tmp.resolve(s"$name.parquet"), src.toAbsolutePath)
-      tmp.toString
-    }
-  }
-
-  /** Deterministic WAV fixture for the multimodal audio gate: canonical
-    * 44-byte RIFF/PCM header + a 4 kHz square wave (alternating ±8192 =
-    * ±0.25 full-scale) at 8 kHz mono 16-bit, `2000 * (1 + id % 4)` frames
-    * (0.25–1.0 s). Every field the decoder reports is closed-form:
-    * duration_ms = 250 * (1 + id % 4), rate 8000, mono, RMS exactly 0.25
-    * (|sample| is constant and 8192/32768 = 2^-2 is binary-exact). */
-  private[graft] def testWavBytes(id: Long): Array[Byte] = {
-    val frames = 2000 * (1 + (id % 4).toInt)
-    val dataLen = frames * 2
-    val b = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(1)            // PCM, mono
-      .putInt(8000).putInt(16000)         // sample rate, byte rate
-      .putShort(2).putShort(16)           // block align, bits
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
-    var i = 0
-    while (i < frames) {
-      b.putShort(if (i % 2 == 0) 8192 else -8192)
-      i += 1
-    }
-    b.array()
-  }
-
-  /** Deterministic WAV fixture for the audio-fingerprint dedup gate:
-    * 8 kHz mono 16-bit, 64 segments × 125 samples (1 s), each segment a
-    * ±a square wave whose amplitude a = 512·(2 + mix(group, seg) mod
-    * 14) is drawn per (group = id/4, segment) from a 512-step grid.
-    * `id % 4` selects the volume re-encode: ×1, ×3/4, ×5/8, ×9/8 — all
-    * EXACT on the 512-multiple grid (384/320/576·(k+2)), so window
-    * energies scale uniformly and the energy-contour fingerprint is
-    * bit-identical within a group, while cross-group grids are
-    * independent draws (margins pinned in AudioFingerprintSuite). */
-  private[graft] def testFpWavBytes(id: Long): Array[Byte] = {
-    val segs = 64; val perSeg = 125
-    val group = id >>> 2
-    def mix(z0: Long): Long = {
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    val frames = segs * perSeg
-    val dataLen = frames * 2
-    val b = java.nio.ByteBuffer.allocate(44 + dataLen)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(1)            // PCM, mono
-      .putInt(8000).putInt(16000)         // sample rate, byte rate
-      .putShort(2).putShort(16)           // block align, bits
-      .put("data".getBytes("US-ASCII")).putInt(dataLen)
-    var i = 0
-    while (i < frames) {
-      val base =
-        1024 + 512 * java.lang.Math.floorMod(mix(group * 131L + i / perSeg), 14L).toInt
-      val a = ((id & 3L).toInt match {
-        case 0 => base
-        case 1 => base * 3 / 4
-        case 2 => base * 5 / 8
-        case _ => base * 9 / 8
-      }).toShort
-      b.putShort(if (i % 2 == 0) a else (-a).toShort)
-      i += 1
-    }
-    b.array()
-  }
-
-  /** Deterministic Y4M fixture for the video-fingerprint dedup gate:
-    * 8×8 Cmono at 8 fps, 128 frames = 64 two-frame contour windows,
-    * each window a constant luma 16·(2 + mix(group, window) mod 12)
-    * from a 16-step grid (so ×3/4, ×5/8, ×9/8 brightness re-grades are
-    * EXACT: 12/10/18·(2+r)); `id % 4` selects the re-grade, making
-    * within-group luma contours bit-identical by construction while
-    * cross-group grids are independent draws. */
-  private[graft] def testFpY4mBytes(id: Long): Array[Byte] = {
-    val frames = 128
-    val group = id >>> 2
-    def mix(z0: Long): Long = {
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    val baos = new java.io.ByteArrayOutputStream(40 + 70 * frames)
-    baos.write("YUV4MPEG2 W8 H8 F8:1 Ip A1:1 Cmono\n".getBytes("US-ASCII"))
-    var f = 0
-    while (f < frames) {
-      baos.write("FRAME\n".getBytes("US-ASCII"))
-      val base = 2 + java.lang.Math.floorMod(mix(group * 151L + f / 2), 12L).toInt
-      val v = ((id & 3L).toInt match {
-        case 0 => 16 * base
-        case 1 => 12 * base
-        case 2 => 10 * base
-        case _ => 18 * base
-      }).toByte
-      var i = 0
-      while (i < 64) { baos.write(v); i += 1 }
-      f += 1
-    }
-    baos.toByteArray
-  }
-
-  /** Deterministic Y4M fixture for the multimodal video gate: 8×8
-    * C420jpeg at 8 fps, `2 * (1 + id % 4)` frames of constant luma
-    * `64 * (id % 4)`. Every field the decoder reports is closed-form:
-    * header is 38 bytes + 102 per frame (6-byte FRAME line + 64 luma +
-    * 32 chroma), so size = 38 + 204*(1+id%4); duration_ms =
-    * 250*(1+id%4) (frames/8 is binary-exact); mean luma × 255 =
-    * 64*(id%4) exactly (constant plane). */
-  private[graft] def testY4mBytes(id: Long): Array[Byte] = {
-    val frames = 2 * (1 + (id % 4).toInt)
-    val luma = (64 * (id % 4)).toByte
-    val baos = new java.io.ByteArrayOutputStream(38 + 102 * frames)
-    baos.write("YUV4MPEG2 W8 H8 F8:1 Ip A1:1 C420jpeg\n".getBytes("US-ASCII"))
-    var f = 0
-    while (f < frames) {
-      baos.write("FRAME\n".getBytes("US-ASCII"))
-      var i = 0
-      while (i < 64) { baos.write(luma); i += 1 }
-      baos.write(new Array[Byte](32)) // U + V planes (4×4 each)
-      f += 1
-    }
-    baos.toByteArray
-  }
-
-  /** Deterministic 64×48 grayscale 24-bit BMP for the perceptual-hash
-    * dedup gate. Groups of four consecutive ids share one base pattern
-    * (8×8-pixel blocks, each a splitmix64-derived gray in [40, 190] —
-    * pseudo-random per (group, block), so distinct groups are ~32 pHash
-    * bits apart); within a group, `id % 4` selects the re-encode pHash
-    * is designed to survive: 0 = base, 1 = +24 brightness, 2 = ×9/8
-    * contrast, 3 = both (+12 then ×17/16). All variants stay in
-    * [40, 226] so no clamping perturbs the affine relation, and the
-    * within/cross-group Hamming margins are pinned by
-    * PerceptualHashSuite. */
-  private[graft] def testBmpBytes(id: Long): Array[Byte] = {
-    val w = 64; val h = 48
-    val group = id >>> 2
-    val variant = (id & 3L).toInt
-    def mix(z0: Long): Long = {
-      var z = z0 + 0x9e3779b97f4a7c15L
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    val rowBytes = w * 3 // 192 — already a multiple of 4, no padding
-    val size = 54 + rowBytes * h
-    val b = java.nio.ByteBuffer.allocate(size)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    b.put('B'.toByte).put('M'.toByte).putInt(size)
-      .putInt(0).putInt(54)                 // reserved, pixel offset
-      .putInt(40).putInt(w).putInt(h)       // BITMAPINFOHEADER
-      .putShort(1).putShort(24)             // planes, bpp
-      .putInt(0).putInt(rowBytes * h)       // BI_RGB, image size
-      .putInt(2835).putInt(2835).putInt(0).putInt(0)
-    var y = h - 1 // bottom-up row order
-    while (y >= 0) {
-      var x = 0
-      while (x < w) {
-        val block = (y / 8) * (w / 8) + (x / 8)
-        val base =
-          40 + java.lang.Math.floorMod(mix(group * 97L + block), 151L).toInt
-        val v = variant match {
-          case 0 => base
-          case 1 => base + 24
-          case 2 => base * 9 / 8
-          case _ => (base + 12) * 17 / 16
-        }
-        val vb = v.toByte
-        b.put(vb).put(vb).put(vb)
-        x += 1
-      }
-      y -= 1
-    }
-    b.array()
-  }
-
-  /** Deterministic MPEG-1 Layer III stream for the mp3_metadata gate —
-    * every header field closed-form in doc_id: 32 kHz (1152 samples =
-    * exactly 36 ms/frame), `2 + id % 4` frames, first-frame bitrate
-    * index `9 + id % 5` (128/160/192/224/256 kbps), mono when id is
-    * even (which also gets an ID3v2 tag of `(id % 7) * 3` bytes the
-    * parser must skip), and ids % 3 == 0 alternate the bitrate index
-    * per frame (VBR — duration must come from the frame walk, not
-    * bitrate math). id % 16 == 7 is GARBAGE (no sync) → null metadata. */
-  private[graft] def testMp3Bytes(id: Long): Array[Byte] = {
-    if (id % 16 == 7)
-      return Array.tabulate(64)(i => ((id + i) & 0x3f).toByte) // no sync
-    val frames = 2 + (id % 4).toInt
-    val out = new java.io.ByteArrayOutputStream()
-    if (id % 2 == 0) { // ID3v2 header + filler
-      val n = ((id % 7) * 3).toInt
-      out.write(Array[Byte]('I', 'D', '3', 3, 0, 0))
-      out.write(Array[Byte](0, 0, ((n >> 7) & 0x7f).toByte,
-        (n & 0x7f).toByte))
-      var i = 0
-      while (i < n) { out.write((i & 0x7f)); i += 1 }
-    }
-    val brBase = 9 + (id % 5).toInt
-    var f = 0
-    while (f < frames) {
-      val brIdx =
-        if (id % 3 == 0 && f % 2 == 1) brBase + 1 else brBase // VBR ids
-      val kbps = Array(128, 160, 192, 224, 256, 320)(brIdx - 9)
-      val frameLen = 144 * kbps * 1000 / 32000 // exact for these rates
-      out.write(0xff)
-      out.write(0xfb) // sync | MPEG1 | Layer III | no CRC
-      out.write((brIdx << 4) | (2 << 2)) // bitrate idx, 32 kHz, no pad
-      out.write(if (id % 2 == 0) 0xc0 else 0x00) // mono / stereo
-      var i = 4
-      while (i < frameLen) { out.write(((id + f + i) & 0x7f).toInt); i += 1 }
-      f += 1
-    }
-    out.toByteArray
-  }
-
-  /** Deterministic ISO BMFF (MP4) box tree for the mp4_metadata gate:
-    * ftyp(isom) + moov(mvhd timescale 1000, duration `500 * (1 + id %
-    * 8)` + a video trak with tkhd 16.16 dimensions `16*(1+id%4)` ×
-    * `16*(1+id%3)` + an audio trak when id is even) + mdat. id % 16 ==
-    * 3 is GARBAGE (valid-looking sizes, no moov) → null metadata. */
-  private[graft] def testMp4Bytes(id: Long): Array[Byte] = {
-    def box(typ: String, body: Array[Byte]): Array[Byte] = {
-      val b = java.nio.ByteBuffer.allocate(8 + body.length)
-      b.putInt(8 + body.length).put(typ.getBytes("US-ASCII")).put(body)
-      b.array()
-    }
-    if (id % 16 == 3)
-      return box("free", Array.tabulate(24)(i => ((id + i) & 0x7f).toByte))
-    def concat(bs: Array[Byte]*): Array[Byte] = bs.flatten.toArray
-    val mvhd = {
-      val b = java.nio.ByteBuffer.allocate(100)
-      b.putInt(0)                         // version 0 + flags
-        .putInt(0).putInt(0)              // ctime, mtime
-        .putInt(1000)                     // timescale
-        .putInt((500L * (1 + id % 8)).toInt) // duration
-        .putInt(0x00010000).putShort(0x0100.toShort) // rate, volume
-      b.position(b.position() + 10)       // reserved
-      b.putInt(0x00010000).putInt(0).putInt(0)
-        .putInt(0).putInt(0x00010000).putInt(0)
-        .putInt(0).putInt(0).putInt(0x40000000) // unity matrix
-      b.position(b.position() + 24)       // predefined
-      b.putInt(3)                         // next track id
-      box("mvhd", b.array())
-    }
-    def tkhd(w: Int, h: Int, trackId: Int): Array[Byte] = {
-      val b = java.nio.ByteBuffer.allocate(84)
-      b.putInt(7)                         // version 0 + enabled flags
-        .putInt(0).putInt(0).putInt(trackId).putInt(0)
-        .putInt((500L * (1 + id % 8)).toInt) // duration
-      b.position(b.position() + 8 + 2 + 2 + 2 + 2) // reserved etc.
-      b.putInt(0x00010000).putInt(0).putInt(0)
-        .putInt(0).putInt(0x00010000).putInt(0)
-        .putInt(0).putInt(0).putInt(0x40000000)
-      b.putInt(w << 16).putInt(h << 16)   // 16.16 fixed point
-      box("tkhd", b.array())
-    }
-    def hdlr(kind: String): Array[Byte] = {
-      val b = java.nio.ByteBuffer.allocate(25)
-      b.putInt(0).putInt(0).put(kind.getBytes("US-ASCII"))
-      b.position(b.position() + 12)       // reserved
-      b.put(0.toByte)                     // empty name
-      box("hdlr", b.array())
-    }
-    val videoTrak = box("trak", concat(
-      tkhd(16 * (1 + id % 4).toInt, 16 * (1 + id % 3).toInt, 1),
-      box("mdia", hdlr("vide"))))
-    val audioTrak =
-      if (id % 2 == 0) box("trak", concat(tkhd(0, 0, 2),
-        box("mdia", hdlr("soun"))))
-      else Array.empty[Byte]
-    concat(
-      box("ftyp", concat("isom".getBytes("US-ASCII"),
-        Array[Byte](0, 0, 0, 0), "iso2".getBytes("US-ASCII"))),
-      box("moov", concat(mvhd, videoTrak, audioTrak)),
-      box("mdat", Array.tabulate(16)(i => ((id + i) & 0x7f).toByte)))
-  }
-
-  /** Planted-region image fixture for the ImageLIME gate: 32×32 BGR,
-    * all black except one all-white 16×16 quadrant selected by
-    * `id % 4` in SLIC grid order (TL, TR, BL, BR) — with numSegments=4
-    * the quadrant is exactly one superpixel and its segment index equals
-    * the quadrant index. */
-  private[graft] def plantedImageBytes(id: Long): Array[Byte] = {
-    val w = 32
-    val q = (id % 4).toInt
-    val y0 = if (q >= 2) 16 else 0
-    val x0 = if (q % 2 == 1) 16 else 0
-    val out = new Array[Byte](32 * 32 * 3)
-    var y = y0
-    while (y < y0 + 16) {
-      var x = x0
-      while (x < x0 + 16) {
-        val base = (y * w + x) * 3
-        out(base) = -1; out(base + 1) = -1; out(base + 2) = -1
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- relational / plan-shaping headline queries -----------------
-    "q1_pricing_summary" -> { (s, dir) =>
-      tbl(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("sum_base_price"),
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount"))).cast("decimal(18,4)"))
-            .cast("double").as("sum_disc_price"),
-          sum(((col("l_extendedprice") * (lit(1.0) - col("l_discount"))) * (lit(1.0) + col("l_tax")))
-            .cast("decimal(18,6)")).cast("double").as("sum_charge"),
-          count(lit(1)).as("count_order"))
-    },
-
-    "q3_shipping_priority" -> { (s, dir) =>
-      val cutoff = lit("1996-03-15").cast("timestamp")
-      val c = tbl(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = tbl(s, dir, "orders").filter(col("o_orderdate") < cutoff)
-      val l = tbl(s, dir, "lineitem").filter(col("l_shipdate") > cutoff)
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,4)")).cast("double").as("revenue"))
-    },
-
-    "q5_region_revenue" -> { (s, dir) =>
-      val lo = lit("1996-01-01").cast("timestamp")
-      val hi = lit("1997-01-01").cast("timestamp")
-      val region = broadcast(tbl(s, dir, "region").filter(col("r_name") === "ASIA"))
-      val nation = broadcast(tbl(s, dir, "nation"))
-      val cust = tbl(s, dir, "customer")
-      val supp = tbl(s, dir, "supplier")
-      val ord = tbl(s, dir, "orders")
-        .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
-      val li = tbl(s, dir, "lineitem")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .join(supp, col("l_suppkey") === col("s_suppkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .join(nation, col("s_nationkey") === col("n_nationkey"))
-        .join(region, col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,4)")).cast("double").as("revenue"))
-    },
-
-    "window_topk_per_user" -> { (s, dir) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("value").desc, col("event_id"))
-      tbl(s, dir, "events")
-        .withColumn("rn", row_number().over(w).cast("int"))
-        .filter(col("rn") <= 3)
-        .select(col("user_id"), col("event_id"), col("value"), col("rn"))
-    },
-
-    // ---- stages (§2.2, §2.11) ---------------------------------------
-    "select_columns" -> { (s, dir) =>
-      new SelectColumns().setCols(Seq("p_partkey", "p_name", "p_retailprice"))
-        .transform(tbl(s, dir, "part"))
-    },
-
-    "drop_columns" -> { (s, dir) =>
-      new DropColumns().setCols(Seq("n_regionkey")).transform(tbl(s, dir, "nation"))
-    },
-
-    "rename_column" -> { (s, dir) =>
-      new RenameColumn().setInputCol("r_name").setOutputCol("region_name")
-        .transform(tbl(s, dir, "region"))
-    },
-
-    "explode_words" -> { (s, dir) =>
-      new Explode().setInputCol("__words").setOutputCol("word")
-        .transform(tbl(s, dir, "part")
-          .withColumn("__words", split(col("p_type"), " ")))
-        .select(col("p_partkey"), col("word"))
-    },
-
-    "data_conversion" -> { (s, dir) =>
-      val converted = new DataConversion().setCols(Seq("l_quantity"))
-        .setConvertTo("integer")
-        .transform(
-          new DataConversion().setCols(Seq("l_shipdate")).setConvertTo("date")
-            .setDateTimeFormat("yyyy-MM-dd")
-            .transform(tbl(s, dir, "lineitem")))
-      converted.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity"), col("l_shipdate"))
-    },
-
-    "lambda_udf" -> { (s, dir) =>
-      val stage = new UDFTransformer().setInputCols(Seq("value"))
-        .setOutputCol("value_x2").setExpr(cols => cols.head * 2.0)
-      val lam = new Lambda().setTransform(df => df.filter(col("value") > 100.0))
-      stage.transform(lam.transform(tbl(s, dir, "events")))
-        .select(col("event_id"), col("value"), col("value_x2"))
-    },
-
-    "repartition_stage" -> { (s, dir) =>
-      new Repartition().setN(8).transform(
-        tbl(s, dir, "events").select(col("event_id"), col("event_type")))
-    },
-
-    "partition_consolidator" -> { (s, dir) =>
-      new PartitionConsolidator().transform(
-        tbl(s, dir, "events").select(col("event_id"), col("event_type"), col("value")))
-    },
-
-    "stratified_repartition" -> { (s, dir) =>
-      new StratifiedRepartition().setLabelCol("event_type").setMode("original")
-        .transform(tbl(s, dir, "events")
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"), col("props")))
-    },
-
-    "minibatch_roundtrip" -> { (s, dir) =>
-      val batched = new FixedMiniBatchTransformer().setBatchSize(32)
-        .transform(tbl(s, dir, "events")
-          .select(col("event_id"), col("event_type"), col("value")))
-      new FlattenBatch().transform(batched)
-    },
-
-    // ---- aggregations (§2.4) ----------------------------------------
-    "summarize_counts" -> { (s, dir) =>
-      new SummarizeData().setComputeBasic(false).setComputeSample(false)
-        .setExactUnique(true)
-        .transform(tbl(s, dir, "lineitem")
-          .select(col("l_quantity"), col("l_discount"), col("l_returnflag")))
-    },
-
-    // concurrent per-column jobs deliberately kept (NOT singlePass): with
-    // exactUnique the wide single-agg plans one Expand row per distinct
-    // aggregate — a ×5 blowup of the scan, measured 2.6× slower than the
-    // 4 concurrent per-column jobs at sf0.1. Round-6's 2.9→5.1 s bench
-    // drift on this query was suite-position JIT/GC, not plan change:
-    // isolated wall (fresh JVM, bench attribution) matches round 5 and
-    // stage/task/shuffle counts are identical.
-    "summarize_full" -> { (s, dir) => // exact counts + decimal-sum moments
-      new SummarizeData().setExactUnique(true).setComputeBasic(false)
-        .setExactMoments(true)
-        .transform(tbl(s, dir, "lineitem")
-          .select("l_quantity", "l_discount", "l_tax", "l_returnflag"))
-    },
-
-    "class_balancer" -> { (s, dir) =>
-      val events = tbl(s, dir, "events")
-      new ClassBalancer().setInputCol("event_type").setOutputCol("weight")
-        .fit(events).transform(events)
-        .select(col("event_id"), col("event_type"), col("weight"))
-    },
-
-    "ensemble_by_key" -> { (s, dir) =>
-      new EnsembleByKey().setKeys(Seq("user_id")).setCols(Seq("value"))
-        .setColNames(Seq("mean_value"))
-        .transform(tbl(s, dir, "events"))
-    },
-
-    "clean_missing_data" -> { (s, dir) =>
-      val events = tbl(s, dir, "events")
-      new CleanMissingData().setInputCols(Seq("value")).setCleaningMode("Mean")
-        .fit(events).transform(events)
-        .select(col("event_id"), col("value"))
-    },
-
-    "value_indexer" -> { (s, dir) =>
-      val events = tbl(s, dir, "events")
-      new ValueIndexer().setInputCol("event_type").setOutputCol("event_type_idx")
-        .fit(events).transform(events)
-        .select(col("event_id"), col("event_type"), col("event_type_idx"))
-    },
-
-    "index_to_value" -> { (s, dir) =>
-      val events = tbl(s, dir, "events")
-      val indexed = new ValueIndexer().setInputCol("event_type")
-        .setOutputCol("event_type_idx").fit(events).transform(events)
-      new IndexToValue().setInputCol("event_type_idx").setOutputCol("event_type_rt")
-        .transform(indexed)
-        .select(col("event_id"), col("event_type"), col("event_type_rt"))
-    },
-
-    // ---- text ops (§2.8 + LLM-pipeline) -----------------------------
-    "unicode_normalize" -> { (s, dir) =>
-      new UnicodeNormalize().setInputCol("text").setOutputCol("text_norm")
-        .setForm("NFC").setLower(true)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("text_norm"))
-    },
-
-    "text_preprocessor" -> { (s, dir) =>
-      new TextPreprocessor().setInputCol("text").setOutputCol("text_repl")
-        .setMap(Map("scan" -> "SCAN", "join" -> "JOIN"))
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("text_repl"))
-    },
-
-    "doc_token_count" -> { (s, dir) =>
-      tbl(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-        md5(DedupFunctions.canonical(col("text"))).as("fp_md5"))
-    },
-
-    // fingerprint (xxhash64) stays suite-only; quality is hashed as the
-    // scaled integer quality_q4 (floor(q*1e4+0.5)) so no raw IEEE ratio or
-    // round(x,6) decimal-tie semantics ever reaches the hash gate
-    "doc_stats" -> { (s, dir) =>
-      new DocumentAnalyzer().setInputCol("text")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("n_tokens").cast("long").as("n_tokens"),
-          col("n_tokens_est"), col("n_alpha"), col("n_punct"), col("n_stop"),
-          col("quality_q4"), col("lang_pred"))
-    },
-
-    "page_splitter" -> { (s, dir) => // rows-only (per-row page list)
-      new PageSplitter().setInputCol("text").setOutputCol("pages")
-        .setMaximumPageLength(200).setMinimumPageLength(100)
-        .transform(tbl(s, dir, "documents"))
-        .selectExpr("doc_id", "size(pages) as n_pages")
-    },
-
-    "doc_chunks" -> { (s, dir) =>
-      new TokenChunker().setInputCol("text").setOutputCol("chunks")
-        .setChunkTokens(40).setStrideTokens(30)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), posexplode(col("chunks")))
-        .select(col("doc_id"), col("pos").cast("int").as("chunk_id"),
-          col("col").as("chunk"))
-    },
-
-    "multi_ngram" -> { (s, dir) =>
-      new MultiNGram().setInputCol("__toks").setOutputCol("ngrams")
-        .setLengths(Seq(1, 2, 3))
-        .transform(tbl(s, dir, "documents")
-          .withColumn("__toks", split(col("text"), " ")))
-        .select(col("doc_id"), size(col("ngrams")).cast("int").as("n_ngrams"))
-    },
-
-    // ---- dedup family (LLM-pipeline) --------------------------------
-    "dedup_exact" -> { (s, dir) =>
-      new ExactDeduplicator().setInputCol("text").setIdCol("doc_id")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("text"))
-    },
-
-    "dedup_minhash" -> { (s, dir) => // hash-gated vs exact Jaccard
-      new MinHashDeduplicator().setInputCol("text").setIdCol("doc_id")
-        .setThreshold(0.8)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"))
-    },
-
-    "dedup_simhash" -> { (s, dir) => // rows-only
-      new SimHashDeduplicator().setInputCol("text").setIdCol("doc_id")
-        .setMaxHamming(3)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"))
-    },
-
-    // exactness gate in the driver's eyes (twin of the suite ground-truth
-    // test): Manku pigeonhole candidates are exact for pairs within
-    // maxHamming, so survivors must EQUAL the O(n²) brute-force Hamming
-    // dedup computed from the same fingerprints — emitted as a symmetric
-    // difference count whose oracle is the constant 0
-    "dedup_simhash_exact" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      val out = new SimHashDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").setMaxHamming(3)
-        .transform(docs).select(col("doc_id").cast("long").as("id"))
-      val fp = docs.select(col("doc_id").cast("long").as("id"),
-        DedupFunctions.simHash64(col("text")).as("fp"))
-      val dropped = fp.as("a").join(fp.as("b"),
-          col("a.id") < col("b.id") &&
-            DedupFunctions.hamming64(col("a.fp"), col("b.fp")) <= 3)
-        .select(col("b.id").as("id")).distinct()
-      val expected = fp.select("id").except(dropped)
-      expected.except(out).unionAll(out.except(expected))
-        .agg(count(lit(1)).as("mismatches"))
-    },
-
-    "dedup_ngram_jaccard" -> { (s, dir) => // hash-gated vs exact Jaccard
-      new NGramJaccardDeduplicator().setInputCol("text").setIdCol("doc_id")
-        .setThreshold(0.8)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"))
-    },
-
-    // priority-aware exact dedup: within each canonical-text group the
-    // preferred (lowest-priority-value) source's copy survives, ties by
-    // id — the "keep the curated copy, drop the crawl's" curation rule
-    "dedup_exact_priority" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-        .withColumn("__prio", when(col("lang") === "en", 0).otherwise(1))
-      new ExactDeduplicator().setInputCol("text").setIdCol("doc_id")
-        .setPriorityCol("__prio")
-        .transform(docs)
-        .select(col("doc_id"), col("lang"))
-    },
-
-    // hash-gated vs an exact transitive closure: cluster_id = min doc id
-    // reachable through exact-Jaccard >= 0.8 edges, recomputed by the
-    // oracle as a recursive min-label propagation over the same pairs
-    "dedup_clusters" -> { (s, dir) =>
-      new DuplicateClusterer().setInputCol("text").setIdCol("doc_id")
-        .setThreshold(0.8)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("cluster_id"))
-    },
-
-    // canonical-doc curation over the same clusters: keep the LONGEST
-    // member per cluster (smallest doc_id on ties) + the multiplicity —
-    // one partial-aggregating max_by, no window (skew note in Scaladoc)
-    "dedup_canonical" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      val clustered = new DuplicateClusterer().setInputCol("text")
-        .setIdCol("doc_id").setThreshold(0.8).transform(docs)
-      new graft.dedup.CanonicalSelector().setClusterCol("cluster_id")
-        .setIdCol("doc_id").setScoreCol("__len")
-        .transform(clustered.withColumn("__len", length(col("text"))))
-        .select(col("cluster_id"), col("doc_id"), col("cluster_size"))
-    },
-
-    "dedup_embedding" -> { (s, dir) => // hash-gated vs exact cosine
-      new EmbeddingNearDupDeduplicator().setInputCol("embedding")
-        .setIdCol("vec_id").setThreshold(0.95)
-        .transform(tbl(s, dir, "embeddings"))
-        .select(col("vec_id"))
-    },
-
-    // Incremental snapshot-delta dedup: the fixture has no natural
-    // cross-split duplicates at sf0.01, so the gate PLANTS them —
-    // the batch is the doc_id%4==0 docs plus exact copies (shifted ids)
-    // of corpus docs (%8==1, must all drop) and of batch docs (%8==4,
-    // must collapse to the original) — all SQL-replayable unions
-    "dedup_incremental" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-      val batch = docs.filter(col("doc_id") % 4 === 0)
-        .unionByName(docs.filter(col("doc_id") % 8 === 1)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 8 === 4)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      new graft.dedup.IncrementalDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").setCorpus(corpus).transform(batch)
-        .select(col("doc_id"))
-    },
-
-    // Bloom-cascade incremental dedup, exact verify: the ~10-bit/doc
-    // partitioned Bloom filter routes definitely-new docs past the
-    // fingerprint index and exact-verifies the maybes — no false
-    // negatives, so the output EQUALS IncrementalDeduplicator and the
-    // same planted-split oracle hashes it
-    "dedup_bloom" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-      val batch = docs.filter(col("doc_id") % 4 === 0)
-        .unionByName(docs.filter(col("doc_id") % 8 === 1)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 8 === 4)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      val fpIdx = graft.dedup.IncrementalDeduplicator
-        .fingerprintIndex(corpus, "text")
-      new graft.dedup.BloomIncrementalDeduplicator().setInputCol("text")
-        .setIdCol("doc_id")
-        .setBloomIndex(graft.dedup.BloomIncrementalDeduplicator
-          .buildIndex(fpIdx, numBuckets = 32))
-        .setCorpusIndex(fpIdx).transform(batch)
-        .select(col("doc_id"))
-    },
-
-    // Approximate mode (index-only steady state, maybes dropped
-    // outright): gated at a 40-bit/doc budget where the per-doc FP
-    // probability is ~5e-9 — the filter's decisions are deterministic
-    // (xxhash64 bit placement), so this pins "no false positive occurs
-    // on this corpus", the analogous posture to the signature-mode
-    // MinHash gate's probed threshold margin
-    "dedup_bloom_approx" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-      val batch = docs.filter(col("doc_id") % 4 === 0)
-        .unionByName(docs.filter(col("doc_id") % 8 === 1)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 8 === 4)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      val fpIdx = graft.dedup.IncrementalDeduplicator
-        .fingerprintIndex(corpus, "text")
-      new graft.dedup.BloomIncrementalDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").setVerify("approximate")
-        .setBloomIndex(graft.dedup.BloomIncrementalDeduplicator
-          .buildIndex(fpIdx, numBuckets = 32, bitsPerDoc = 40))
-        .transform(batch)
-        .select(col("doc_id"))
-    },
-
-    // Incremental NEAR-dup dedup (MinHash): same planted snapshot split
-    // as dedup_incremental; exact verify mode so the oracle can replay
-    // batch-vs-corpus decisions by exact shingle Jaccard (signature mode
-    // estimates at the threshold and is suite-covered instead). Natural
-    // cross-split near-dups exist in the fixture (~25 pairs at sf0.01),
-    // so this gate is not planted-only.
-    "dedup_incremental_minhash" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-      val batch = docs.filter(col("doc_id") % 4 === 0)
-        .unionByName(docs.filter(col("doc_id") % 8 === 1)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 8 === 4)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      new graft.dedup.IncrementalMinHashDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").setVerifyMode("exact")
-        .setCorpus(corpus).transform(batch)
-        .select(col("doc_id"))
-    },
-
-    // Incremental NEAR-dup dedup in SIGNATURE mode — the steady-state
-    // 100 TB path: corpus-side decisions come from the persistent
-    // signature INDEX alone (setCorpusIndex; corpus text never reread),
-    // similarity = the MinHash agreement estimate. The oracle replays
-    // with exact Jaccard, which is sound because 0.85 sits in a wide gap
-    // of BOTH spectra on this fixture (SigModeProbe, all three sf dirs:
-    // nearest exact below/above = 0.8000/0.8889, nearest estimate =
-    // 0.7969/0.8984 — every candidate pair ≥0.035 from the threshold on
-    // both measures, zero estimate-vs-exact flips; the semdedup_exact
-    // margin convention)
-    "dedup_incremental_minhash_sig" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-      val batch = docs.filter(col("doc_id") % 4 === 0)
-        .unionByName(docs.filter(col("doc_id") % 8 === 1)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 8 === 4)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      val index = graft.dedup.IncrementalMinHashDeduplicator
-        .signatureIndex(corpus, "doc_id", "text", 3, 128)
-      new graft.dedup.IncrementalMinHashDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").setThreshold(0.85)
-        .setCorpusIndex(index).transform(batch)
-        .select(col("doc_id"))
-    },
-
-    // SemDeDup at its real operating point (rows-only: the k-means
-    // partition is not SQL-replayable); exactness companion below.
-    // AUTO cluster count (corpus/targetClusterSize) — the scale knob the
-    // paper uses, so the benched operating point is the one that holds
-    // at 10x/100x instead of saturating the per-cluster cap
-    "semdedup" -> { (s, dir) =>
-      // corpusSizeHint: the gate knows its fixture (the driver's three
-      // sf dirs — a curation pipeline likewise knows the previous
-      // stage's row count), so auto-k skips its count() pass; a rounded
-      // hint is fine by the param contract (k only needs the order of
-      // magnitude), and for these dirs the hint is exact, so k — and
-      // the result — is unchanged. Unknown dirs fall back to counting.
-      val hint = new java.io.File(dir).getName match {
-        case "sf0.001" | "sf0.01" => 500L
-        case "sf0.1" => 2000L
-        case _ => 0L
-      }
-      new graft.dedup.SemDeDup().setInputCol("embedding").setIdCol("vec_id")
-        .setThreshold(0.465).setKeepRule("centroidFar")
-        .setTargetClusterSize(256).setCorpusSizeHint(hint)
-        .transform(tbl(s, dir, "embeddings"))
-        .select(col("vec_id"))
-    },
-
-    // THE FULL EMBEDDING CHAIN as one plan (round 16): raw text ->
-    // HashedEmbedder -> SemDeDup at its auto-k operating point — the
-    // self-contained semantic-dedup recipe a 100 TB pipeline runs, with
-    // no external model anywhere. Rows-only by design (the k-means
-    // partition is not SQL-replayable); the chain's links have their own
-    // hash gates (hashed_embedding exact-integer; semdedup_exact
-    // all-pairs). This is also the SCALING.md chain row's handle.
-    "embed_chain" -> { (s, dir) =>
-      val hint = new java.io.File(dir).getName match {
-        case "sf0.001" | "sf0.01" => 500L
-        case "sf0.1" => 5000L
-        case _ => 0L
-      }
-      val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-      val emb = new graft.text.HashedEmbedder().setInputCol("text")
-        .setDim(64).setSalt("chain").transform(docs)
-      new graft.dedup.SemDeDup().setInputCol("embedding")
-        .setIdCol("doc_id").setThreshold(0.9)
-        .setTargetClusterSize(256).setCorpusSizeHint(hint)
-        .transform(emb)
-        .select(col("doc_id"))
-    },
-
-    // THE LEARNED CHAIN (round 17): fit TrainedEmbedder (with the
-    // fastText subword fallback) INSIDE the plan, embed, SemDeDup at
-    // auto-k — the semantic-dedup recipe with in-library LEARNED
-    // vectors, no external model anywhere. Runs over the planted
-    // 5-class fixture, NOT the raw synthetic text: tools.EmbedChainProbe
-    // measured the raw corpus's learned-vector cosine floor at 0.9861
-    // (tiny shared vocabulary — every doc is every doc's near-dup, a
-    // fixture property, so a chain over it is degenerate); the planted
-    // pools give the space real topic structure (within-class ≈ 1,
-    // cross-class low). Rows-only by design like embed_chain (the
-    // k-means partition is not SQL-replayable); the links have their
-    // own hash gates (trained_embedding / subword_embedding planted
-    // recovery; semdedup_exact all-pairs). Also the SCALING.md
-    // learned-chain row: fit (bounded) + transform (linear, zero
-    // shuffle) + dedup in one wall.
-    "trained_embed_chain" -> { (s, dir) =>
-      val hint = new java.io.File(dir).getName match {
-        case "sf0.001" | "sf0.01" => 500L
-        case "sf0.1" => 5000L
-        case _ => 0L
-      }
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("text", LanguageGateFixture.textCol)
-      val m = new graft.text.TrainedEmbedder().setInputCol("text")
-        .setDim(32).setMinCount(1).setMaxIter(1).setTrainSample(4096)
-        .setSubwordBits(16)
-        .fit(docs)
-      new graft.dedup.SemDeDup().setInputCol("embedding")
-        .setIdCol("doc_id").setThreshold(0.9)
-        .setTargetClusterSize(256).setCorpusSizeHint(hint)
-        .transform(m.transform(docs))
-        .select(col("doc_id"))
-    },
-
-    // SemDeDup exactness gate: nClusters=1 is the exhaustive setting —
-    // every pair is compared, so the result IS exact pairwise cosine
-    // dedup and the oracle replays it all-pairs (the knn_ivf_recall
-    // pattern). 0.465 sits in a wide gap of the sf0.01 cosine spectrum
-    // (nearest pairs 0.4666 / 0.4597), so cross-engine float drift at
-    // the cutoff cannot flip a pair — and unlike the 0.95 embedding
-    // gate, pairs DO exist above it, so the keep rule is exercised.
-    "semdedup_exact" -> { (s, dir) =>
-      new graft.dedup.SemDeDup().setInputCol("embedding").setIdCol("vec_id")
-        .setNClusters(1).setThreshold(0.465).setKeepRule("minId")
-        .setMaxClusterSize(4096)
-        .transform(tbl(s, dir, "embeddings"))
-        .select(col("vec_id"))
-    },
-
-    // Incremental SEMANTIC dedup (round 17) — the snapshot-delta face
-    // of SemDeDup, completing the incremental family (exact + MinHash
-    // lexical faces exist since round 12): the quantizer fits ONCE on
-    // the corpus, the corpus embedding index persists, and each batch
-    // assigns + joins by cell — corpus work is never repeated per
-    // snapshot. Auto-k operating point, rows-only (the cell partition
-    // is not SQL-replayable); the exactness companion below replays
-    // everything all-pairs.
-    "semdedup_incremental" -> { (s, dir) =>
-      val hint = new java.io.File(dir).getName match {
-        case "sf0.001" | "sf0.01" => 375L
-        case "sf0.1" => 1500L
-        case _ => 0L
-      }
-      val emb = tbl(s, dir, "embeddings")
-      val corpus = emb.filter(col("vec_id") % 4 =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      val batch = emb.filter(col("vec_id") % 4 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .unionByName(emb.filter(col("vec_id") % 8 === 1)
-          .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-      val m = new graft.dedup.IncrementalSemDeDup().setInputCol("embedding")
-        .setIdCol("vec_id").setThreshold(0.465)
-        .setTargetClusterSize(256).setCorpusSizeHint(hint)
-        .fit(corpus)
-      m.setCorpusIndex(m.indexCorpus(corpus))
-        .transform(batch)
-        .select(col("vec_id"))
-    },
-
-    // the incremental semantic exactness companion (the semdedup_exact
-    // pattern): nClusters=1 compares every batch-vs-corpus pair and the
-    // within-batch pass is exhaustive too, so the whole decision
-    // replays all-pairs in SQL. 0.465 sits in the measured cosine-
-    // spectrum gap (nearest pairs 0.4666/0.4597), offset copies of
-    // corpus rows are identical vectors (cosine 1 — must drop), and
-    // the corpus-always-survives rule means only batch ids appear
-    "semdedup_incremental_exact" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      val corpus = emb.filter(col("vec_id") % 4 =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      val batch = emb.filter(col("vec_id") % 4 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .unionByName(emb.filter(col("vec_id") % 8 === 1)
-          .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-      val m = new graft.dedup.IncrementalSemDeDup().setInputCol("embedding")
-        .setIdCol("vec_id").setThreshold(0.465).setNClusters(1)
-        .fit(corpus)
-      m.setCorpusIndex(m.indexCorpus(corpus))
-        .setWithinBatchClusters(1).setMaxClusterSize(4096)
-        .transform(batch)
-        .select(col("vec_id"))
-    },
-
-    // ---- topic clustering + cluster-balanced curation ----------------
-    // EmbeddingClusterer gated on EXACT recovery of a planted partition:
-    // 6 orthogonal planted directions (one per doc_id % 6) with tiny
-    // deterministic jitter; spherical k-means must reproduce the
-    // partition, and the arbitrary k-means labels are canonicalized to
-    // each cluster's min doc_id so the oracle replays label-free.
-    "embed_cluster" -> { (s, dir) =>
-      // window min, not a self-join: the assignment UDF runs ONCE
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster")
-      SparkEntry.plantedClusters(s, dir)
-        .withColumn("cluster_rep", min(col("doc_id")).over(w))
-        .select(col("doc_id"), col("cluster_rep"))
-    },
-
-    // deterministic per-group doc-count cap (the quota half of
-    // cluster-balanced curation): 10 docs per source by the family's
-    // md5(id:salt) draw — the oracle replays the window-rank rule the
-    // bottom-k aggregator is provably equivalent to
-    "group_quota" -> { (s, dir) =>
-      new graft.text.GroupQuotaSampler().setGroupCol("source")
-        .setIdCol("doc_id").setCap(10)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("source"))
-    },
-
-    // the COMPOSED capability (DataComp-LM topic rebalancing): planted
-    // clusters -> per-cluster quota, one plan; survivors and their
-    // canonical cluster rep both replayed in SQL
-    "topic_balance" -> { (s, dir) =>
-      val assigned = SparkEntry.plantedClusters(s, dir)
-      val kept = new graft.text.GroupQuotaSampler().setGroupCol("cluster")
-        .setIdCol("doc_id").setCap(15).setSalt("balance")
-        .transform(assigned)
-      // window min over the post-quota survivors (tiny frame), no re-run
-      // of the assignment + quota lineage through a self-join
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster")
-      kept.withColumn("cluster_rep", min(col("doc_id")).over(w))
-        .select(col("doc_id"), col("cluster_rep"))
-    },
-
-    // ---- soft dedup (n-gram commonness reweighting) ------------------
-    // integer sufficient statistics only (distinct-3-gram count and the
-    // sum of their document frequencies) — the weight itself is a pure
-    // function of per-gram dfs and stays suite-pinned, so no
-    // cross-engine float sum ordering ever reaches the hash gate
-    "soft_dedup" -> { (s, dir) =>
-      new graft.text.SoftDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").setN(3)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("sd_n_grams"), col("sd_sum_df"))
-    },
-
-    // the 100 TB path: CountMinSketch dfs, map-only weight pass. At the
-    // sf0.01 correctness fixture the 5x2^20 sketch is collision-free
-    // (expected all-5-row collisions ~G·(G/w)^5 ≈ 1e-3, verified, and
-    // deterministic for fixed data+seed), so the estimates ARE the exact
-    // dfs and the exact-mode oracle applies verbatim (the
-    // dedup_bloom_approx pattern). Unbounded on purpose: this gate is
-    // also the SCALING.md handle for the map-only path
-    "soft_dedup_sketch" -> { (s, dir) =>
-      new graft.text.SoftDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").setN(3).setMode("sketch")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("sd_n_grams"), col("sd_sum_df"))
-    },
-
-    // ---- similarity search (LLM-pipeline) ---------------------------
-    "knn_bruteforce" -> { (s, dir) => // rows-only (float-sum ordering)
-      val emb = tbl(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      new NearestNeighbors().setInputCol("embedding").setIdCol("vec_id")
-        .setK(5).setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("neighbor_id"))
-    },
-
-    // Dense-head scoring over precomputed embeddings (round 15): the
-    // features are dyadic-quantized (floor(e*64)/64) and the planted
-    // 64->4->1 ReLU head's weights are quarters, so every product and
-    // running sum is EXACT in both engines' float/double paths and the
-    // score emits as an exact integer at 1024x scale — no float-order
-    // tolerance needed
-    "mlp_score" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      val x = transform(col("embedding"),
-        e => floor(e * 64) / 64)
-      val (d, h) = (64, 4)
-      val w1 = Array.tabulate(h, d)((i, j) => ((i * 3 + j * 5) % 7 - 3) / 4.0)
-      val b1 = Array.tabulate(h)(i => (i % 3 - 1) / 4.0)
-      val v = Array(Array.tabulate(h)(i => ((i * 2) % 5 - 2) / 4.0))
-      new graft.nn.MLPScorer().setInputCol("__x").setOutputCol("__score")
-        .setLayers(Seq(graft.nn.DenseLayer(w1, b1),
-          graft.nn.DenseLayer(v, Array(0.25))))
-        .transform(emb.withColumn("__x", x))
-        .select(col("vec_id"),
-          (col("__score") * 1024).cast("long").as("score_q"))
-    },
-
-    "knn_balltree" -> { (s, dir) => // rows-only: exact ball-tree KNN
-      val emb = tbl(s, dir, "embeddings")
-      val model = new graft.nn.KNN().setInputCol("embedding")
-        .setIdCol("vec_id").setK(5).fit(emb)
-      model.transform(emb.filter(col("vec_id") < 100))
-        .select(col("vec_id"), explode(col("matches.id")).as("neighbor_id"))
-    },
-
-    // co-located fact⋈fact join through bucketed tables: both sides are
-    // written bucketBy(32, orderkey).sortBy then joined + aggregated with
-    // ZERO exchanges after ingest (PlanSuite asserts the exchange-free
-    // plan; this gate hashes the result itself). 32 buckets = the session
-    // shuffle parallelism: bucket count bounds both write-task and scan
-    // parallelism, and the result is bucket-count-invariant
-    "bucketed_join" -> { (s, dir) =>
-      // FIXED staging path per sf dir: saveAsTable(overwrite) replaces the
-      // external files in place, so repeated runs re-use one staging copy
-      // instead of orphaning a fresh temp dir per invocation (DROP TABLE
-      // on an external table removes only metadata)
-      val staging = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_buckets_${new java.io.File(dir).getName}").toString
-      val o = tbl(s, dir, "orders").select(col("o_orderkey"),
-        col("o_orderpriority"))
-      val l = tbl(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_extendedprice"), col("l_discount"))
-      // ingest (the one-time bucketBy writes) timed apart from the
-      // exchange-free join+agg and dropped in target/ so the bench
-      // detail can attribute the two phases separately (VERDICT r10
-      // "Next round" #4); coLocatedJoin = these two bucketize calls +
-      // the same qualified join
-      val t0 = System.nanoTime()
-      val lb = graft.io.Bucketing.bucketize(
-        l, "graft_bj_l", s"$staging/l", "l_orderkey", 32)
-      val rb = graft.io.Bucketing.bucketize(
-        o, "graft_bj_r", s"$staging/r", "o_orderkey", 32)
-      val ingestSec = (System.nanoTime() - t0) / 1e9
-      try {
-        val p = java.nio.file.Paths.get("target")
-        java.nio.file.Files.createDirectories(p)
-        java.nio.file.Files.write(p.resolve("graft_bj_ingest_sec"),
-          "%.3f".formatLocal(java.util.Locale.ROOT, ingestSec)
-            .getBytes("UTF-8"))
-      } catch { case _: Throwable => () }
-      lb.join(rb, lb("l_orderkey") === rb("o_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_orderpriority"))
-        .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,4)")).cast("double").as("revenue"))
-    },
-
-    // the corpus-stays-distributed exact path: per-partition ball trees +
-    // bounded top-k merge must equal the brute-force oracle exactly
-    "knn_partitioned" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      new graft.nn.PartitionedKNN().setInputCol("embedding")
-        .setIdCol("vec_id").setK(5)
-        .setQueries(emb.filter(col("vec_id") < 100), "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id").as("vec_id"),
-          explode(col("matches.id")).as("neighbor_id"))
-    },
-
-    // corpus-level boilerplate detector: top-20 most frequent lowercase
-    // word 3-grams with counts, total-ordered (count desc, gram asc) so
-    // the limit is deterministic
-    "frequent_ngrams" -> { (s, dir) =>
-      new FrequentNGrams().setInputCol("text").setN(3).setTopK(20)
-        .transform(tbl(s, dir, "documents"))
-    },
-
-    // Gopher-style structural quality gate over integer/q4 signals —
-    // survivors only, recomputed by the oracle from the doc_stats
-    // expressions with the same thresholds
-    "quality_filter" -> { (s, dir) =>
-      new QualityFilter().setInputCol("text")
-        .setMinTokens(40).setMaxTokens(100000)
-        .setMinQualityQ4(4000L).setMinStopwordHits(1L)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"))
-    },
-
-    // END-TO-END curation recipe in ONE gate: exact dedup -> Gopher
-    // quality gate -> deterministic training order -> fixed-window
-    // chunking. Every stage is individually hash-gated elsewhere; this
-    // gate pins the COMPOSITION (survivor sets feed downstream exactly,
-    // offsets are cumulative over the curated order) — what a user's
-    // pipeline actually runs
-    "curation_e2e" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      val dd = new ExactDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").transform(docs)
-      val q = new QualityFilter().setInputCol("text")
-        .setMinTokens(40).setMaxTokens(100000)
-        .setMinQualityQ4(4000L).setMinStopwordHits(1L).transform(dd)
-      new ConcatChunker().setInputCol("text").setIdCol("doc_id")
-        .setContextLen(128).setSeed("e2e")
-        .transform(q.select("doc_id", "text"))
-        .select(col("doc_id"), col("tok_offset"), col("chunk_id"),
-          col("tok_start"), col("tok_end"))
-    },
-
-    // THE WHOLE RECIPE as one gate: synthesized crawl pages (URL + HTML
-    // + planted mojibake + a lorem page-killer class) framed into WARC
-    // segments, re-read, then Recipes.webExtraction (URL blocklist ->
-    // HTML extract -> mojibake repair -> C4) -> Recipes.corpusCuration
-    // (Gopher word gate -> exact dedup -> deterministic order) ->
-    // vocab-rank tokenization -> TokenShards write/read. Every stage is
-    // individually hash-gated elsewhere; this pins the SPLICES (crawl
-    // front end feeds curation feeds the training sink). The oracle
-    // constructs the expected post-extraction text directly (extraction
-    // and repair have their own chain-replay gates) and replays the
-    // curation arithmetic: C4 line/page rules reduce to the planted
-    // classes, word gate, canonical min-id dedup, md5 order, rank ids
-    "recipe_e2e" -> { (s, dir) =>
-      import graft.text.MojibakeRepair.moji
-      val sfName = new java.io.File(dir).getName
-      val wstag = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_recipe_warc_$sfName").toString
-      val tstag = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_recipe_tok_$sfName").toString
-      val domains = array(lit("good.com"), lit("evil.com"), lit("fine.org"),
-        lit("nice.net"), lit("ok.io"))
-      val page = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://"),
-          element_at(domains, (col("doc_id") % 5 + 1).cast("int")),
-          lit("/p/"), col("doc_id").cast("string")).as("url"),
-        concat(
-          lit("<html><head><script>if (1 < 2) { f(); }</script></head>" +
-            "<body><h1>Doc "),
-          col("doc_id").cast("string"),
-          lit("</h1><p>"), col("text"),
-          lit(s" caf${moji("é")} ends here. and this sentence too. " +
-            "plus a third one. also a fourth sentence. finally the " +
-            "fifth.</p>"),
-          when(col("doc_id") % 13 === 0,
-            lit("<p>lorem ipsum dolor sit amet.</p>"))
-            .otherwise(lit("<p>a clean closing line.</p>")),
-          lit("</body></html>")).as("html"))
-      graft.io.warc.WarcFiles.write(
-        page.select(col("url").as("uri"),
-          encode(concat(
-            lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"),
-            col("html")), "UTF-8").as("bytes")),
-        wstag, maxShardBytes = 1L << 20)
-      val crawl = graft.io.warc.WarcFiles.read(s, wstag)
-        .select(col("uri").as("url"),
-          decode(graft.io.warc.WarcFiles.httpBody(col("bytes")), "UTF-8")
-            .as("html"))
-      val web = graft.text.Recipes.webExtraction(
-        blockedDomains = Seq("evil.com")).fit(crawl).transform(crawl)
-      val withId = web.select(
-        regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
-          .as("doc_id"), col("text"))
-      val curated = graft.text.Recipes
-        .corpusCuration(minWords = 70, seed = "e2e")
-        .fit(withId).transform(withId)
-      val words = curated.select(col("doc_id"), col("shuffle_pos"),
-        posexplode(split(
-          graft.dedup.DedupFunctions.canonical(col("text")), " "))
-          .as(Seq("pos", "w")))
-        .filter(length(col("w")) > 0)
-      val vocab = words.select("w").distinct()
-        .withColumn("id", row_number().over(Window.orderBy("w")))
-      val toks = words.join(vocab, "w")
-        .groupBy("doc_id", "shuffle_pos")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("id")))),
-          e => e.getField("id")).as("ids"))
-        .select(concat(array(col("doc_id").cast("int"),
-          col("shuffle_pos").cast("int")), col("ids")).as("tokens"))
-      graft.io.binary.TokenShards.write(toks, tstag,
-        maxShardBytes = 1L << 20)
-      graft.io.binary.TokenShards.read(s, tstag)
-        .select(element_at(col("tokens"), 1).cast("long").as("doc_id"),
-          element_at(col("tokens"), 2).cast("long").as("shuffle_pos"),
-          posexplode(slice(col("tokens"), 3, Int.MaxValue))
-            .as(Seq("pos", "token_id")))
-        .select(col("doc_id"), col("shuffle_pos"), col("pos"),
-          col("token_id"))
-    },
-
-    // FineWeb-shaped quality gating spliced INTO the extraction recipe
-    // (round 16): URL blocklist -> HTML extract -> mojibake repair ->
-    // C4 -> HashedEmbedder (un-normalized count mode: exact integer
-    // dims) -> planted dyadic 16->4->1 head -> threshold at 0. One
-    // narrow zero-exchange plan (PlanSuite-asserted); every stage's
-    // arithmetic is exact dyadic in both engines, so survivorship
-    // replays in SQL with no float tolerance. The html construction is
-    // recipe_e2e's (its oracle already pins extraction+repair), so the
-    // oracle constructs the post-extraction text directly and replays
-    // embed -> head -> threshold
-    "recipe_embed_e2e" -> { (s, dir) =>
-      import graft.text.MojibakeRepair.moji
-      val domains = array(lit("good.com"), lit("evil.com"), lit("fine.org"),
-        lit("nice.net"), lit("ok.io"))
-      val page = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://"),
-          element_at(domains, (col("doc_id") % 5 + 1).cast("int")),
-          lit("/p/"), col("doc_id").cast("string")).as("url"),
-        concat(
-          lit("<html><head><script>if (1 < 2) { f(); }</script></head>" +
-            "<body><h1>Doc "),
-          col("doc_id").cast("string"),
-          lit("</h1><p>"), col("text"),
-          lit(s" caf${moji("é")} ends here. and this sentence too. " +
-            "plus a third one. also a fourth sentence. finally the " +
-            "fifth.</p>"),
-          when(col("doc_id") % 13 === 0,
-            lit("<p>lorem ipsum dolor sit amet.</p>"))
-            .otherwise(lit("<p>a clean closing line.</p>")),
-          lit("</body></html>")).as("html"))
-      val (d, h) = (16, 4)
-      val w1 = Array.tabulate(h, d)((i, j) => ((i * 3 + j * 5) % 7 - 3) / 4.0)
-      val b1 = Array.tabulate(h)(i => (i % 3 - 1) / 4.0)
-      val v = Array(Array.tabulate(h)(i => ((i * 2) % 5 - 2) / 4.0))
-      val emb = new graft.text.HashedEmbedder().setDim(d).setSalt("e16")
-        .setNormalize(false).setOutputCol("__emb16")
-      val head = new graft.nn.MLPScorer().setOutputCol("__q16")
-        .setLayers(Seq(graft.nn.DenseLayer(w1, b1),
-          graft.nn.DenseLayer(v, Array(0.25))))
-      // threshold 12 sits near the score median at every sf (~52% keep),
-      // so both branches are populated; scores land ON dyadic values and
-      // the arithmetic is exact in both engines, so >= 12 cannot flip
-      val web = graft.text.Recipes.webExtraction(
-        blockedDomains = Seq("evil.com"),
-        qualityHead = Some((emb, head, 12.0)))
-        .fit(page).transform(page)
-      web.select(regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
-        .as("doc_id"))
-    },
-
-    // C4 cleaning rules (Raffel 2020 §2.2) over synthesized multi-line
-    // text: per doc, planted lines exercise every rule — a no-terminal-
-    // punct line (id%3), a 2-word line (id%4), a javascript line (id%5),
-    // a lorem-ipsum page-killer (id%7), a brace line that FAILS line
-    // rules (id%11 — pinning that page literals are checked on the
-    // CLEANED text: the brace never reaches it), and a badword page-
-    // killer (id%13). The oracle replays line filtering, sentence
-    // counting, and all three page rules in SQL
-    "c4_filter" -> { (s, dir) =>
-      val id = col("doc_id")
-      val t2 = concat_ws("\n",
-        col("text"),
-        when(id % 3 === 0, lit("This sentence ends properly."))
-          .otherwise(lit("no terminal punctuation here")),
-        when(id % 4 === 0, lit("Too short."))
-          .otherwise(lit("this longer line survives fine.")),
-        when(id % 5 === 0, lit("Enable javascript to view this page."))
-          .otherwise(lit("another good sentence here.")),
-        when(id % 7 === 0, lit("lorem ipsum dolor sit amet."))
-          .otherwise(lit("final line of the page.")),
-        when(id % 11 === 0, lit("code { margin: 0 }"))
-          .otherwise(lit("closing remark stands alone.")),
-        when(id % 13 === 0, lit("that badword kills pages."))
-          .otherwise(lit("a clean finishing line.")))
-      new graft.text.C4Filter().setInputCol("__t2").setMinSentences(2)
-        .setBadWords(Array("badword"))
-        .transform(tbl(s, dir, "documents").withColumn("__t2", t2))
-        .select(col("doc_id"), col("c4_text"))
-    },
-
-    // Gopher §A1.1 structural signals over synthesized multi-line text
-    // (the corpus is single-line): each doc gains a bullet-or-plain
-    // line (id%3), an ellipsis-or-plain terminator line (id%4), and a
-    // hash/unicode-ellipsis line (id%5) — exercising every counter and
-    // both q4 denominators; the oracle recomputes all ten columns
-    "gopher_signals" -> { (s, dir) =>
-      val id = col("doc_id")
-      val t2 = concat_ws("\n",
-        col("text"),
-        when(id % 3 === 0,
-          concat(lit("- bullet item "), id.cast("string")))
-          .otherwise(concat(lit("plain "), id.cast("string"))),
-        when(id % 4 === 0, lit("to be continued..."))
-          .otherwise(lit("the end")),
-        when(id % 5 === 0,
-          concat(lit("### tags… and more "), id.cast("string")))
-          .otherwise(lit("closing line")))
-      new graft.text.GopherSignals().setInputCol("__t2")
-        .transform(tbl(s, dir, "documents").withColumn("__t2", t2))
-        .select(col("doc_id"), col("gs_n_words"), col("gs_n_alpha_words"),
-          col("gs_alpha_word_q4"), col("gs_n_symbols"),
-          col("gs_symbol_word_q4"), col("gs_n_lines"),
-          col("gs_n_bullet_lines"), col("gs_bullet_line_q4"),
-          col("gs_n_ellipsis_lines"), col("gs_ellipsis_line_q4"))
-    },
-
-    // greedy first-fit token packing in id order within each source group;
-    // the oracle replays the same scan as a recursive running-sum CTE
-    "seq_pack" -> { (s, dir) =>
-      new SequencePacker().setInputCol("text").setIdCol("doc_id")
-        .setMaxTokens(256).setGroupCol("source")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("source"), col("doc_id"), col("seq_id"))
-    },
-
-    // ---- train / eval (§2.13) ---------------------------------------
-    // Exactly-separable planted rule (model_statistics' rule-model idea,
-    // but through the REAL fit path): the label is a pure function of two
-    // binary features, so the tree reaches pure leaves and the trained
-    // model's predictions equal the rule row-for-row — which the oracle
-    // recomputes in SQL. Exercises the full chain: label indexing,
-    // feature assembly, fit, scoring, label mapped back to strings.
-    "train_classifier" -> { (s, dir) =>
-      val events = tbl(s, dir, "events")
-        .select(col("event_id"),
-          when(col("value") > 250, 1.0).otherwise(0.0).as("f1"),
-          when(pmod(col("user_id"), lit(2)) === 0, 1.0).otherwise(0.0).as("f2"))
-        .withColumn("rule_label",
-          concat(lit("c"), (col("f1") * 2 + col("f2")).cast("int")))
-      val model = new graft.train.TrainClassifier().setLabelCol("rule_label")
-        .setFeatureCols(Seq("f1", "f2")).setLearner("DecisionTree")
-        .fit(events)
-      model.transform(events)
-        .select(col("event_id"), col("predicted_label"))
-    },
-
-    // hash-gated: the operator under test is ComputeModelStatistics itself,
-    // driven by a DETERMINISTIC rule model (no fit) so the confusion counts
-    // are fixture-exact. Accuracy / weighted precision / recall / F1 are
-    // integer-ratio functions of those counts; floor-scaled to q4 integers
-    // they hash-match SQL count arithmetic. AUC (sort + trapezoid, not
-    // SQL-stable) stays suite-gated via the BenchmarksSuite AUROC goldens.
-    "model_statistics" -> { (s, dir) =>
-      val scored = tbl(s, dir, "events")
-        .withColumn("is_purchase",
-          when(col("event_type") === "purchase", 1.0).otherwise(0.0))
-        .withColumn("prediction",
-          when(col("value") > 35.0, 1.0).otherwise(0.0))
-      new graft.train.ComputeModelStatistics().setLabelCol("is_purchase")
-        .setEvaluationMetric("classification")
-        .transform(scored)
-        .select(
-          floor(col("accuracy") * 1e4 + 0.5).cast("long").as("accuracy_q4"),
-          floor(col("precision") * 1e4 + 0.5).cast("long").as("precision_q4"),
-          floor(col("recall") * 1e4 + 0.5).cast("long").as("recall_q4"),
-          floor(col("f1") * 1e4 + 0.5).cast("long").as("f1_q4"))
-    },
-
-    // Exact TF gate: restrict the vocabulary to a CLOSED query-defined
-    // term set (so hash collisions are impossible by construction, not by
-    // fixture luck), featurize for real (RegexTokenizer -> HashingTF),
-    // and emit integer (doc_id, feat_idx, tf) long-form. The oracle
-    // re-counts tokens in SQL and maps term -> murmur bucket via
-    // constants computed from HashingTF.indexOf (closed-set pattern, as
-    // vw_featurizer). IDF's float product stays suite-gated
-    // (TrainSuite/BenchmarksSuite exercise the full tf-idf chain).
-    // Featurize's timestamp/date path as an exact long-form gate: the
-    // five assembled components (epoch seconds, year, month, dayofweek,
-    // day) are integers by construction, so vector_to_array slots cast
-    // exactly to BIGINT and DuckDB recomputes them with date parts
-    // (Spark dayofweek is 1=Sunday..7; DuckDB's is 0=Sunday..6, +1).
-    "featurize_datetime" -> { (s, dir) =>
-      val orders = tbl(s, dir, "orders")
-      val m = new Featurize().setInputCols(Seq("o_orderdate"))
-        .setOutputCol("f").fit(orders)
-      val arr = org.apache.spark.ml.functions.vector_to_array(col("f"))
-      m.transform(orders).withColumn("__arr", arr)
-        .select(col("o_orderkey"),
-          col("__arr")(0).cast("long").as("epoch_ms"),
-          col("__arr")(1).cast("long").as("yr"),
-          col("__arr")(2).cast("long").as("dow"),
-          col("__arr")(3).cast("long").as("mo"),
-          col("__arr")(4).cast("long").as("dom"))
-    },
-
-    // timestamp path: the reference's full 8-component layout
-    // [epochMs, year, isoDow, month, day, hour, minute, second]
-    "featurize_timestamp" -> { (s, dir) =>
-      // events.ts has shipped as raw long nanos (nanosAsLong), TIMESTAMP
-      // and TIMESTAMP_NTZ across testdata generations — normalize to a
-      // session-TZ (UTC) timestamp whatever arrives; Featurize takes
-      // typed timestamp columns
-      val ev0 = tbl(s, dir, "events")
-      val events = ev0.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          ev0.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          ev0.withColumn("ts", col("ts").cast("timestamp"))
-        case _ => ev0
-      }
-      val m = new Featurize().setInputCols(Seq("ts"))
-        .setOutputCol("f").fit(events)
-      val arr = org.apache.spark.ml.functions.vector_to_array(col("f"))
-      m.transform(events).withColumn("__arr", arr)
-        .select(col("event_id"),
-          col("__arr")(0).cast("long").as("epoch_ms"),
-          col("__arr")(1).cast("long").as("yr"),
-          col("__arr")(2).cast("long").as("dow"),
-          col("__arr")(3).cast("long").as("mo"),
-          col("__arr")(4).cast("long").as("dom"),
-          col("__arr")(5).cast("long").as("hr"),
-          col("__arr")(6).cast("long").as("mi"),
-          col("__arr")(7).cast("long").as("sec"))
-    },
-
-    "text_featurizer" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-        // explicit whitespace class, NOT \s: Java's \s includes
-        // (vertical tab) where DuckDB's RE2 \s does not — both sides of
-        // the gate must split on the identical character set
-        .withColumn("__closed", concat_ws(" ",
-          org.apache.spark.sql.functions.filter(
-            split(lower(col("text")), "[ \\t\\n\\r\\f]+"),
-            t => t.isInCollection(TextFeaturizerGate.Terms))))
-      val m = new TextFeaturizer().setInputCol("__closed")
-        .setOutputCol("feats").setUseIDF(false)
-        .setNumFeatures(TextFeaturizerGate.NumFeatures).fit(docs)
-      val arr = org.apache.spark.ml.functions.vector_to_array(col("feats"))
-      val stackExpr = TextFeaturizerGate.termIndices
-        .map { case (_, i) => s"$i, CAST(__arr[$i] AS BIGINT)" }
-        .mkString(s"stack(${TextFeaturizerGate.Terms.size}, ", ", ",
-          ") AS (feat_idx, tf)")
-      m.transform(docs).withColumn("__arr", arr)
-        .selectExpr("doc_id", stackExpr)
-        .filter(col("tf") > 0)
-    },
-
-    "knn_lsh" -> { (s, dir) => // rows-only
-      val emb = tbl(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      new LSHNearestNeighbors().setInputCol("embedding").setIdCol("vec_id")
-        // 2-bit bands sized for the small sf corpora (500-2000 vectors):
-        // recall@5 ~0.98 vs brute force (SimilaritySuite gates >= 0.9).
-        // The 64-plane/16-bit default targets >=10M-vector corpora.
-        .setK(5).setNumPlanes(16).setBands(8)
-        .setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("neighbor_id"))
-    },
-
-    "embedding_pool" -> { (s, dir) => // per-group mean-pooled vectors
-      new graft.sim.EmbeddingMeanPooler().setInputCol("embedding")
-        .setGroupCols(Array("__grp")).setOutputCol("pooled")
-        .transform(tbl(s, dir, "embeddings")
-          .withColumn("__grp", (col("vec_id") % 10).cast("long")))
-        .select(col("__grp").as("grp"), posexplode(col("pooled")))
-        .select(col("grp"), col("pos").cast("int").as("dim"),
-          col("col").as("mean_val"))
-    },
-
-    "knn_conditional" -> { (s, dir) => // rows-only: label-conditioned KNN
-      val emb = tbl(s, dir, "embeddings")
-        .withColumn("label", (col("vec_id") % 3).cast("int"))
-      val m = new graft.nn.KNN().setInputCol("embedding").setIdCol("vec_id")
-        .setLabelCol("label").setK(5).fit(emb)
-      m.setConditionerCol("allowed")
-        .transform(emb.filter(col("vec_id") < 10)
-          .withColumn("allowed", array(lit(0), lit(1))))
-        .select(col("vec_id"),
-          explode(col(m.getOutputCol).getField("id")).as("neighbor_id"))
-    },
-
-    "knn_ivf" -> { (s, dir) => // rows-only (kmeans cell assignment)
-      val emb = tbl(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      new IVFNearestNeighbors().setInputCol("embedding").setIdCol("vec_id")
-        // 8 cells / 6 probes: the small-sf corpora are near-unclustered
-        // random vectors, so 50% scan tops out at ~0.83 median recall over
-        // quantizer seeds — 6 probes is the smallest point whose WORST
-        // seed stays above the suite's 0.9 recall gate (margin per the
-        // probabilistic-gate discipline). Production corpora with real
-        // cluster structure run nLists=4096/nProbe=64 (~1.6% scan).
-        .setNLists(8).fit(emb)
-        .setK(5).setNProbe(6).setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("neighbor_id"))
-    },
-
-    // ANN quality gate: LSH at near-exhaustive banding (1-bit bands: a
-    // neighbor is missed only if ALL 16 sign bits differ) compared against
-    // brute force IN Spark; emits per-query hit counts whose oracle is the
-    // constant full-recall table — any recall loss turns the row red
-    "knn_lsh_recall" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-      val lsh = new LSHNearestNeighbors().setInputCol("embedding")
-        .setIdCol("vec_id").setK(5).setNumPlanes(16).setBands(16)
-        .setQueries(queries, "vec_id", "embedding").transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      val bf = new NearestNeighbors().setInputCol("embedding")
-        .setIdCol("vec_id").setK(5).setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      bf.join(lsh, Seq("query_id", "id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-        .select(col("query_id"), col("hits"), lit(5L).as("k"))
-    },
-
-    // IVF twin of knn_lsh_recall: at nProbe == nLists the posting-list
-    // scan is exhaustive, so the top-5 must EQUAL brute force — any cell
-    // assignment / probe-join / top-k regression breaks the constant
-    // full-recall hash (cells only shape the scan, never the candidates)
-    // k-NN GRAPH (self top-k join, query set == corpus): brute mode on
-    // a 100-node subgraph, every edge hash-gated against the all-pairs
-    // SQL replay (knn_bruteforce float precedent: cosine doubles agree
-    // across engines; tie-break (score desc, id asc) in both)
-    "knn_graph" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings").filter(col("vec_id") < 100)
-      new graft.sim.KNNGraph().setInputCol("embedding").setIdCol("vec_id")
-        .setK(3).setBruteForce(true)
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("neighbor_id"))
-    },
-
-    // IVF-mode graph at nProbe == nLists: every cell probed, so the
-    // cell partition cannot lose a neighbor and the graph must equal
-    // brute force EXACTLY — per-node hit count is the constant k
-    // (the knn_ivf_recall pattern)
-    "knn_graph_recall" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      val g = new graft.sim.KNNGraph().setInputCol("embedding")
-        .setIdCol("vec_id").setK(5).setNLists(8).setNProbe(8)
-      val ivf = g.transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      val bf = g.copy(org.apache.spark.ml.param.ParamMap.empty)
-        .setBruteForce(true).transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      bf.join(ivf, Seq("query_id", "id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-        .select(col("query_id"), col("hits"), lit(5L).as("k"))
-    },
-
-    "knn_ivf_recall" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-      val ivf = new IVFNearestNeighbors().setInputCol("embedding")
-        .setIdCol("vec_id").setNLists(8).fit(emb)
-        .setK(5).setNProbe(8).setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      val bf = new NearestNeighbors().setInputCol("embedding")
-        .setIdCol("vec_id").setK(5).setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      bf.join(ivf, Seq("query_id", "id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-        .select(col("query_id"), col("hits"), lit(5L).as("k"))
-    },
-
-    // IVF-PQ at an operating point (rows-only: kmeans codebooks are not
-    // SQL-replayable); the exactness companion is knn_ivfpq_recall
-    "knn_ivfpq" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 10)
-      new graft.sim.IVFPQNearestNeighbors().setInputCol("embedding")
-        .setIdCol("vec_id").setNLists(8).setNumSub(8).setNBits(8).fit(emb)
-        .setK(5).setNProbe(6).setRerankK(100)
-        .setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"),
-          explode(col("neighbors.id")).as("neighbor_id"))
-    },
-
-    // IVF-PQ exactness gate: exhaustive probe + full re-rank must equal
-    // brute force (every candidate reaches the exact cosine re-rank, so
-    // the PQ approximation cannot change the answer) — the knn_ivf_recall
-    // pattern, hash-gated on constant per-query hit counts
-    "knn_ivfpq_recall" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      val n = emb.count().toInt
-      val queries = emb.filter(col("vec_id") < 10)
-      val pq = new graft.sim.IVFPQNearestNeighbors().setInputCol("embedding")
-        .setIdCol("vec_id").setNLists(8).setNumSub(8).setNBits(4).fit(emb)
-        .setK(5).setNProbe(8).setRerankK(n)
-        .setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      val bf = new NearestNeighbors().setInputCol("embedding")
-        .setIdCol("vec_id").setK(5).setQueries(queries, "vec_id", "embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      bf.join(pq, Seq("query_id", "id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-        .select(col("query_id"), col("hits"), lit(5L).as("k"))
-    },
-
-    // ---- recommendation (§2.4, §2.13) -------------------------------
-    "sar_item_similarity" -> { (s, dir) =>
-      new graft.reco.SAR().setUserCol("user_id").setItemCol("event_type")
-        .setRatingCol("value").setSimilarityFunction("jaccard")
-        .calculateItemItemSimilarity(tbl(s, dir, "events"))
-    },
-
-    "sar_affinity" -> { (s, dir) =>
-      new graft.reco.SAR().setUserCol("user_id").setItemCol("event_type")
-        .setRatingCol("value").setTimeCol("ts").setDecayHalfLifeDays(30)
-        .calculateUserItemAffinities(tbl(s, dir, "events"))
-    },
-
-    "sar_recommend" -> { (s, dir) =>
-      val model = new graft.reco.SAR().setUserCol("user_id")
-        .setItemCol("event_type").setRatingCol("value")
-        .setTimeCol("ts").setDecayHalfLifeDays(30)
-        .setSimilarityFunction("jaccard")
-        .fit(tbl(s, dir, "events"))
-      model.recommendForAllUsers(3, removeSeen = false)
-        .withColumn("rank", col("rank").cast("int"))
-    },
-
-    // Deterministic grid gate over RankingTrainValidationSplit: on the
-    // RankingGateFixture graph, jaccard strictly dominates lift on
-    // held-out NDCG@5 (see the fixture's Scaladoc for the closed-form
-    // derivation); gate both candidates' quantized NDCG plus the winner.
-    "ranking_tvs" -> { (s, dir) =>
-      val r = new graft.reco.RankingTrainValidationSplit()
-        .setUserCol("user").setItemCol("item").setRatingCol("rating")
-        .setK(5).setHoldoutFraction(0.25)
-        .setGrid(Seq(("jaccard", 30), ("lift", 30)))
-        .fit(RankingGateFixture.df(s))
-      val best = r.bestParams("similarityFunction").toString
-      r.results.select(col("similarity"),
-          col("half_life").cast("int").as("half_life"),
-          floor(col("ndcg_at_k") * 1e4 + 0.5).cast("long").as("ndcg_q"),
-          (col("similarity") === lit(best)).cast("int").as("is_best"))
-    },
-
-    "ranking_ground_truth" -> { (s, dir) =>
-      // exploded (user, rn, item) scalar rows: the driver's checker can't
-      // sort list columns, so flatten the ground-truth arrays positionally
-      new graft.reco.RankingAdapter().setUserCol("user_id")
-        .setItemCol("event_type").setRatingCol("value").setK(3)
-        .transform(tbl(s, dir, "events"))
-        .select(col("user"), posexplode(col("ground_truth")).as(Seq("pos", "item")))
-        .select(col("user"), (col("pos") + 1).cast("int").as("rn"), col("item"))
-    },
-
-    "ranking_metrics" -> { (s, dir) => // per-user metrics (deterministic)
-      val events = tbl(s, dir, "events")
-      val gt = new graft.reco.RankingAdapter().setUserCol("user_id")
-        .setItemCol("event_type").setRatingCol("value").setK(3)
-        .transform(events)
-      val model = new graft.reco.SAR().setUserCol("user_id")
-        .setItemCol("event_type").setRatingCol("value").fit(events)
-      val recs = model.recommendForAllUsers(3, removeSeen = false)
-        .groupBy("user")
-        .agg(sort_array(collect_list(struct(col("rank"), col("item"))))
-          .getField("item").as("recommendations"))
-      new graft.reco.RankingEvaluator().setK(3).setPerUserMetrics(true)
-        .transform(recs.join(gt, "user"))
-        .withColumn("user", col("user").cast("long"))
-    },
-
-    // ---- explainers (§2.13) -----------------------------------------
-    "lime_tabular" -> { (s, dir) =>
-      // exactly-linear black box => the surrogate recovers the true
-      // coefficients to solver tolerance; rounded to 4 decimals (+0.0
-      // normalizes -0.0) this is oracle-exact
-      val ev = tbl(s, dir, "events").filter(col("event_id") < 200)
-      new graft.explain.TabularLIME().setIdCol("event_id")
-        .setInputCols(Seq("value", "user_id")).setNumSamples(64)
-        .setScoringFn(df => df.withColumn("prediction",
-          col("value") * 2.0 + col("user_id") * 0.5))
-        .transform(ev)
-        .select(col("event_id"),
-          (round(col("intercept"), 4) + lit(0.0)).as("intercept"),
-          (round(element_at(col("coefficients"), 1), 4) + lit(0.0)).as("c_value"),
-          (round(element_at(col("coefficients"), 2), 4) + lit(0.0)).as("c_user"))
-    },
-
-    "shap_tabular" -> { (s, dir) =>
-      // linear black box => SHAP values are exactly w_i (x_i - mean_i);
-      // deterministic background means + exact WLS solve make this
-      // oracle-checkable at 4 decimals
-      val ev = tbl(s, dir, "events").filter(col("event_id") < 200)
-      new graft.explain.TabularSHAP().setIdCol("event_id")
-        .setInputCols(Seq("value", "user_id")).setNumSamples(64)
-        .setScoringFn(df => df.withColumn("prediction",
-          col("value") * 2.0 + col("user_id") * 0.5))
-        .transform(ev)
-        .select(col("event_id"),
-          (round(col("intercept"), 4) + lit(0.0)).as("base"),
-          (round(element_at(col("coefficients"), 1), 4) + lit(0.0)).as("phi_value"),
-          (round(element_at(col("coefficients"), 2), 4) + lit(0.0)).as("phi_user"))
-    },
-
-    // linear per-dimension black box f(v) = sum_d c_d v_d with
-    // c_d = ((d % 4) + 1) / 4: the vector explainers must recover c_d
-    // (LIME) / c_d (x_d - mean_d) (SHAP) exactly, emitted long-form
-    // (vec_id, dim, ...) so a 64-dim explanation stays oracle-checkable
-    "lime_vector" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings").filter(col("vec_id") < 20)
-      new graft.explain.VectorLIME().setIdCol("vec_id")
-        .setInputCol("embedding").setNumSamples(160)
-        .setScoringFn(df => df.withColumn("prediction",
-          aggregate(zip_with(
-            col("embedding").cast("array<double>"),
-            sequence(lit(0), size(col("embedding")) - 1),
-            (v, d) => v * ((d % 4 + 1).cast("double") * lit(0.25))),
-            lit(0.0), (acc, x) => acc + x)))
-        .transform(emb)
-        .select(col("vec_id"), posexplode(col("coefficients")))
-        .select(col("vec_id"), col("pos").cast("int").as("dim"),
-          (round(col("col"), 4) + lit(0.0)).as("coef"))
-    },
-
-    "shap_vector" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings").filter(col("vec_id") < 20)
-      new graft.explain.VectorSHAP().setIdCol("vec_id")
-        .setInputCol("embedding").setNumSamples(160)
-        .setScoringFn(df => df.withColumn("prediction",
-          aggregate(zip_with(
-            col("embedding").cast("array<double>"),
-            sequence(lit(0), size(col("embedding")) - 1),
-            (v, d) => v * ((d % 4 + 1).cast("double") * lit(0.25))),
-            lit(0.0), (acc, x) => acc + x)))
-        .transform(emb)
-        .select(col("vec_id"), (round(col("intercept"), 3) + lit(0.0)).as("base"),
-          posexplode(col("coefficients")))
-        .select(col("vec_id"), col("pos").cast("int").as("dim"),
-          (round(col("col"), 4) + lit(0.0)).as("phi"), col("base"))
-    },
-
-    // Planted one-hot rule model for TextLIME: doc text is 8 fixed
-    // tokens with the literal "key" planted at position doc_id % 8; the
-    // black box is 1 iff the masked text still contains "key", so
-    // y == mask bit p EXACTLY and the surrogate recovers the one-hot
-    // coefficient vector (intercept 0) to solver tolerance. Margin-
-    // tested in ExplainersSuite (planted coef ≥ 1 vs 0 elsewhere).
-    "lime_text" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id").cast("long").as("doc_id"))
-        .withColumn("text8", concat_ws(" ",
-          (0 until 8).map(i => when(col("doc_id") % 8 === i, lit("key"))
-            .otherwise(lit(s"tok$i"))): _*))
-      new graft.explain.TextLIME().setIdCol("doc_id").setTextCol("text8")
-        .setNumSamples(64)
-        .setScoringFn(df => df.withColumn("prediction",
-          when(col("text8").contains("key"), 1.0).otherwise(0.0)))
-        .transform(docs)
-        .select(col("doc_id"),
-          (round(col("intercept"), 4) + lit(0.0)).as("intercept"),
-          posexplode(col("token_importance")))
-        .select(col("doc_id"), col("intercept"),
-          col("pos").cast("int").as("dim"),
-          (round(col("col"), 4) + lit(0.0)).as("coef"))
-    },
-
-    // Planted one-hot region model for ImageLIME: 32x32 black image with
-    // ONE bright 16x16 quadrant (doc_id % 4). numSegments=4 puts the
-    // SLIC init grid exactly on the quadrants, and the 255-vs-0 color
-    // distance dwarfs the spatial term, so the bright quadrant is one
-    // superpixel whose index IS the quadrant — the rule model (any
-    // non-black pixel -> 1) makes y == mask bit q exactly, closed-form
-    // one-hot recovery like lime_text. Margin-tested in ExplainersSuite.
-    "lime_image" -> { (s, dir) =>
-      val data = udf((id: Long) => SparkEntry.plantedImageBytes(id))
-      val docs = tbl(s, dir, "documents").filter(col("doc_id") < 100)
-        .select(col("doc_id").cast("long").as("doc_id"))
-        .withColumn("image", struct(
-          lit("synth").as("origin"), lit(32).as("height"),
-          lit(32).as("width"), lit(3).as("nChannels"),
-          lit(graft.image.ImageSchemaUtils.ocvType8UC3).as("mode"),
-          data(col("doc_id")).as("data")))
-      val bright = udf((img: Row) =>
-        if (img.getAs[Array[Byte]](5).exists(_ != 0)) 1.0 else 0.0)
-      new graft.explain.ImageLIME().setIdCol("doc_id").setImageCol("image")
-        .setNumSamples(64).setNumSegments(4)
-        .setScoringFn(df => df.withColumn("prediction", bright(col("image"))))
-        .transform(docs)
-        .select(col("doc_id"),
-          (round(col("intercept"), 4) + lit(0.0)).as("intercept"),
-          posexplode(col("segment_importance")))
-        .select(col("doc_id"), col("intercept"),
-          col("pos").cast("int").as("dim"),
-          (round(col("col"), 4) + lit(0.0)).as("coef"))
-    },
-
-    // ---- cyber (§2.4: per-tenant ops) -------------------------------
-    "cyber_std_scaler" -> { (s, dir) =>
-      new graft.cyber.PerTenantStandardScaler().setTenantCol("event_type")
-        .setInputCol("value").setOutputCol("z")
-        .transform(tbl(s, dir, "events"))
-        .select(col("event_id"), col("event_type"), col("value"), col("z"))
-    },
-
-    "cyber_minmax_scaler" -> { (s, dir) =>
-      new graft.cyber.PerTenantMinMaxScaler().setTenantCol("event_type")
-        .setInputCol("value").setOutputCol("scaled")
-        .transform(tbl(s, dir, "events"))
-        .select(col("event_id"), col("event_type"), col("value"), col("scaled"))
-    },
-
-    "cyber_id_indexer" -> { (s, dir) =>
-      new graft.cyber.PerTenantIdIndexer().setTenantCol("event_type")
-        .setInputCol("user_id").setOutputCol("uid")
-        .transform(tbl(s, dir, "events"))
-        .select(col("event_id"), col("event_type"), col("user_id"), col("uid"))
-    },
-
-    "cyber_complement" -> { (s, dir) =>
-      new graft.cyber.ComplementAccessTransformer().setTenantCol("event_type")
-        .setUserCol("user_id").setResCol("res")
-        .transform(tbl(s, dir, "events")
-          .withColumn("res", pmod(col("value").cast("int"), lit(10))))
-        .select(col("event_type"), col("user_id"), col("res"))
-    },
-
-    "access_anomaly" -> { (s, dir) => // rows-only: ALS scores
-      // gate-latency hygiene: rows-only output is iteration-invariant
-      // (the driver records rows+schema only here), so a single ALS
-      // iteration suffices; score exactness lives in the margin-tested
-      // access_anomaly_planted companion below (maxIter 5)
-      new graft.cyber.AccessAnomaly().setTenantCol("event_type")
-        .setUserCol("user_id").setResCol("res").setRank(4).setMaxIter(1)
-        .setNumBlocks(2) // gate-scale: input capped at 2000 rows
-        .transform(tbl(s, dir, "events")
-          .filter(col("event_id") < 2000)
-          .withColumn("res", pmod(col("value").cast("int"), lit(10))))
-        .select(col("event_type"), col("user_id"), col("res"))
-    },
-
-    // Planted-access exact companion gate (isolation_forest pattern) for
-    // the rows-only ALS query above. Closed two-community access graph
-    // from a FIXED event_id range (ids 0..999 are identical at every sf):
-    // user = id%20 (communities 0-9 and 10-19), res = (id/20)%5 offset
-    // into the community's 5 home resources — every user hits each home
-    // resource 10x. Four single cross-community accesses are planted; the
-    // ALS embedding confines each community to its own factor subspace,
-    // so the planted pairs' predictions sit far below every intra pair
-    // (CyberSuite margin-tests the score gap). Gate = symmetric
-    // difference between the top-4 anomaly-scored pairs and the planted
-    // set, constant-0 oracle.
-    "access_anomaly_planted" -> { (s, dir) =>
-      import s.implicits._
-      val base = tbl(s, dir, "events").filter(col("event_id") < 1000)
-        .select(pmod(col("event_id"), lit(20)).cast("int").as("user"),
-          (pmod(floor(col("event_id") / 20), lit(5)) +
-            lit(5) * floor(pmod(col("event_id"), lit(20)) / 10))
-            .cast("int").as("res"))
-      val plantedPairs = Seq((0, 7), (3, 9), (12, 1), (17, 4))
-      val planted = plantedPairs.toDF("user", "res")
-      val scored = new graft.cyber.AccessAnomaly().setTenantCol("tenant")
-        .setUserCol("user").setResCol("res").setRank(4).setMaxIter(5)
-        .setNumBlocks(2)
-        .transform(base.union(planted).withColumn("tenant", lit(0)))
-      val top = scored
-        .orderBy(col("anomaly_score").desc, col("user"), col("res"))
-        .limit(plantedPairs.size).select("user", "res")
-      top.union(planted.select(col("user").cast("int"), col("res").cast("int")))
-        .groupBy("user", "res").count().filter(col("count") =!= 2)
-        .agg(count(lit(1)).cast("long").as("mismatches"))
-    },
-
-    // ---- automl (§2.13) ---------------------------------------------
-    // Separable-rule CV gate (train_classifier pattern): the label is an
-    // OR of two binary features (greedy-splittable, unlike XOR), every
-    // grid candidate reaches pure leaves, so WHICHEVER candidate wins
-    // cross-validation, the best model's predictions equal the rule the
-    // oracle recomputes. Exercises grid x fold fitting, the thread pool,
-    // winner selection, and best-model scoring end-to-end.
-    "tune_hyperparameters" -> { (s, dir) =>
-      import org.apache.spark.ml.Pipeline
-      import org.apache.spark.ml.classification.DecisionTreeClassifier
-      import org.apache.spark.ml.feature.VectorAssembler
-      val ev = tbl(s, dir, "events")
-        .select(col("event_id"),
-          when(col("value") > 250, 1.0).otherwise(0.0).as("f1"),
-          when(pmod(col("user_id"), lit(2)) === 0, 1.0).otherwise(0.0).as("f2"))
-        .withColumn("label", greatest(col("f1"), col("f2")))
-      val va = new VectorAssembler().setInputCols(Array("f1", "f2"))
-        .setOutputCol("features")
-      val dt = new DecisionTreeClassifier()
-      val grid = new graft.automl.HyperparamBuilder()
-        .addHyperparam(dt.maxDepth,
-          graft.automl.DiscreteHyperParam(Seq(2, 4))).build(2, seed = 5)
-      val tuned = new graft.automl.TuneHyperparameters(
-        Seq(("dt", new Pipeline().setStages(Array(va, dt)), grid)),
-        graft.automl.Evaluators.accuracy("label", "prediction"),
-        numFolds = 2, parallelism = 4).fit(ev)
-      tuned.bestModel.transform(ev)
-        .select(col("event_id"), col("prediction"))
-    },
-
-    // ---- HTTP-on-Spark (§2.12) --------------------------------------
-    "http_transformer" -> { (s, dir) =>
-      // local mock JSON service (driver JVM; executors share it in local
-      // mode) answering {"text": ...} -> {"length": N}
-      val port = MockServices.lenServicePort()
-      import org.apache.spark.sql.types._
-      new graft.io.http.SimpleHTTPTransformer()
-        .setInputCols(Seq("text"))
-        .setUrl(s"http://localhost:$port/len")
-        .setOutputDataType(StructType(Seq(StructField("length", IntegerType))))
-        .setOutputCol("parsed").setConcurrency(16)
-        // spread the async window across tasks — the cluster shape (HTTP
-        // fan-out per executor), and robust to per-request latency spikes
-        .transform(tbl(s, dir, "documents").repartition(8))
-        .select(col("doc_id"), col("parsed.length").as("text_len"))
-    },
-
-    "download_from_urls" -> { (s, dir) =>
-      // pooled async GETs against the mock blob service: payload length is
-      // a pure function of the id, so byte counts are oracle-checkable
-      val port = MockServices.lenServicePort()
-      new graft.io.http.DownloadFromUrls().setInputCol("__url")
-        .setOutputCol("bytes").setConcurrency(16)
-        .transform(tbl(s, dir, "documents").repartition(8)
-          .withColumn("__url",
-            concat(lit(s"http://localhost:$port/blob/"), col("doc_id"))))
-        .select(col("doc_id"), length(col("bytes")).cast("int").as("n_bytes"),
-          col("download_status").as("status"))
-    },
-
-    // ---- streaming semantics on batch frames (§2.10) ----------------
-    "window_agg_hourly" -> { (s, dir) =>
-      new graft.streaming.EventTimeWindowAggregator()
-        .setTimeCol("ts").setWindowDuration("1 hour")
-        .setGroupCols(Seq("event_type")).setValueCol("value")
-        .transform(tbl(s, dir, "events"))
-    },
-
-    "sessionize" -> { (s, dir) =>
-      new graft.streaming.Sessionize().setKeyCol("user_id")
-        .setTimeCol("ts").setGapSeconds(1800)
-        .transform(tbl(s, dir, "events"))
-        .select(col("event_id"), col("user_id"), col("session_id"))
-    },
-
-    // Same operator, same oracle as window_agg_hourly — but executed
-    // through the Structured Streaming ENGINE end-to-end: file source →
-    // watermarked event-time window agg → memory sink, one AvailableNow
-    // run. Complete output mode so the final windows (which an append-
-    // mode watermark would hold back at end-of-input) are emitted; the
-    // watermark column plumbing is still exercised. Closes the last
-    // driver-untested execution mode (VERDICT r9 "What's missing" #3).
-    "window_agg_hourly_stream" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "events", "wah_stream"))
-      val agg = new graft.streaming.EventTimeWindowAggregator()
-        .setTimeCol("ts").setWindowDuration("1 hour")
-        .setGroupCols(Seq("event_type")).setValueCol("value")
-        .setWatermark("1 hour")
-        .transform(stream)
-      val qname = s"wah_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = agg.writeStream.format("memory").queryName(qname)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-    },
-
-    // Streaming dedup executed through the Structured Streaming ENGINE:
-    // file source → watermarked dropDuplicatesWithinWatermark on the
-    // canonical-text fingerprint → memory sink. WHICH copy of a
-    // duplicate group survives a micro-batch is engine-arbitrary, so
-    // the gate hashes the survivor set's CANONICAL TEXTS — identical
-    // within a group by definition — which the oracle replays as a
-    // plain DISTINCT. (The fixture has natural exact dups at sf0.1, so
-    // the sweep exercises real collapses.)
-    "dedup_exact_stream" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      // synthetic event times sit well past the epoch: Spark's INITIAL
-      // watermark is 1970-01-01T00:00:00Z, and a row whose event time
-      // equals it (doc_id 0 under a bare from_unixtime) is dropped as
-      // late before the dedup ever sees it
-      val stream = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "documents", "dedup_stream"))
-        .withColumn("ts",
-          to_timestamp(from_unixtime(col("doc_id") + lit(1700000000L))))
-      val dedup = new graft.streaming.StreamingDeduplicator()
-        .setInputCol("text").setTimeCol("ts").setWatermarkDelay("3650 days")
-        .transform(stream)
-      val qname = s"dedup_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = dedup.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(graft.dedup.DedupFunctions.canonical(col("text")).as("ct"))
-    },
-
-    // Streaming NEAR-dup text dedup (round 17) — the MinHash family's
-    // streaming face, completing the streaming dedup story (exact text
-    // / perceptual media / near-dup text). Same fixture as
-    // dedup_incremental_minhash_sig, run through the REAL engine: the
-    // corpus (doc_id % 4 != 0) persists its signature index; the stream
-    // carries the %4==0 docs plus id-offset VERBATIM copies — the
-    // %8==1 copies duplicate CORPUS docs and must drop via the
-    // broadcast band probe (signature agreement 1), while the %8==4
-    // copies duplicate %4==0 STREAM docs and exercise the IN-STREAM
-    // exact state instead (their canonical twin rides the same run).
-    // %4==0 docs drop iff a corpus doc sits at
-    // estimate >= 0.85 — replayable with EXACT Jaccard because
-    // SigModeProbe measured every candidate pair of this fixture >=
-    // 0.035 from the cutoff on BOTH spectra (zero estimate-vs-exact
-    // flips, all three sf dirs). The gate emits the DISTINCT surviving
-    // CANONICAL-TEXT set (the dedup_exact_stream convention — which
-    // copy of canonically-equal rows survives the in-stream state is
-    // engine-arbitrary, the set is not).
-    "dedup_minhash_stream" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val corpus = tbl(s, dir, "documents")
-        .filter(col("doc_id") % 4 =!= 0)
-        .select(col("doc_id"), col("text"))
-      val idx = graft.streaming.StreamingMinHashDeduplicator
-        .signatureIndex(corpus, "doc_id", "text", 3, 128)
-      def src() = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "documents", "mh_stream"))
-      val stream = src().filter(col("doc_id") % 4 === 0)
-        .select(col("doc_id"), col("text"))
-        .unionByName(src().filter(col("doc_id") % 8 === 1)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        .unionByName(src().filter(col("doc_id") % 8 === 4)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-        .withColumn("ts", to_timestamp(from_unixtime(
-          col("doc_id") % 1000000L + lit(1700000000L))))
-      val dedup = new graft.streaming.StreamingMinHashDeduplicator()
-        .setInputCol("text").setTimeCol("ts")
-        .setWatermarkDelay("3650 days").setThreshold(0.85)
-        .setCorpusIndex(idx)
-        .transform(stream)
-      val qname = s"mh_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = dedup.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(graft.dedup.DedupFunctions.canonical(col("text")).as("ct"))
-        .distinct()
-    },
-
-    // the SAME near-dup streaming fixture through the LARGE-INDEX mode
-    // (round 18): a real engine run whose sink is foreachBatch +
-    // StreamingMinHashDeduplicator.transformMicroBatch — Bloom band-key
-    // prefilter broadcast (tier 1), flagged rows verified through a
-    // distributed equi band join on the persisted index (tier 2), NO
-    // signature broadcast. Decisions match the DSL path (Bloom has no
-    // false negatives; the verify is the same signature agreement), so
-    // the gate shares dedup_minhash_stream's oracle verbatim.
-    "dedup_minhash_stream_fb" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val corpus = tbl(s, dir, "documents")
-        .filter(col("doc_id") % 4 =!= 0)
-        .select(col("doc_id"), col("text"))
-      val idx = graft.streaming.StreamingMinHashDeduplicator
-        .signatureIndex(corpus, "doc_id", "text", 3, 128)
-      def src() = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "documents", "mh_fb_stream"))
-      val stream = src().filter(col("doc_id") % 4 === 0)
-        .select(col("doc_id"), col("text"))
-        .unionByName(src().filter(col("doc_id") % 8 === 1)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        .unionByName(src().filter(col("doc_id") % 8 === 4)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      val stage = new graft.streaming.StreamingMinHashDeduplicator()
-        .setInputCol("text").setThreshold(0.85).setCorpusIndex(idx)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("mh_fb_out").toString
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          stage.transformMicroBatch(b)
-            .write.mode("append").parquet(outDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outDir)
-        .select(graft.dedup.DedupFunctions.canonical(col("text")).as("ct"))
-        .distinct()
-    },
-
-    // Streaming PERCEPTUAL dedup — the fingerprint family's streaming
-    // face (round 17; mirrors dedup_exact_stream): the corpus index
-    // holds every member of the EVEN planted audio groups; the stream
-    // carries two exact re-encodes (members 0 and 1) of EVERY group.
-    // Even-group rows must be dropped by the pigeonhole index probe
-    // (their fingerprints sit at hamming 0 of the index; cross-group
-    // contours are >= 12 bits away, AudioFingerprintSuite margins) and
-    // odd-group pairs collapse in-stream (exact re-encodes are
-    // bit-identical by construction) — survivors are ONE row per odd
-    // group. The gate emits the group id, not the surviving doc_id:
-    // which member of a bit-identical pair arrives first is
-    // order-dependent, the surviving GROUP SET is not.
-    "audio_fp_dedup_stream" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val wav = udf((id: Long) => SparkEntry.testFpWavBytes(id))
-      val corpus = tbl(s, dir, "documents").select(col("doc_id"))
-        .filter((col("doc_id") / 4).cast("long") % 2 === 0)
-        .withColumn("payload", wav(col("doc_id")))
-      val idx = graft.streaming.StreamingFingerprintDeduplicator
-        .fingerprintIndex(corpus, "payload", "audio")
-      val stream = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "documents", "audiofp_stream"))
-        .filter(col("doc_id") % 4 <= 1)
-        .select(col("doc_id"))
-        .withColumn("payload", wav(col("doc_id")))
-        .withColumn("ts",
-          to_timestamp(from_unixtime(col("doc_id") + lit(1700000000L))))
-      val dedup = new graft.streaming.StreamingFingerprintDeduplicator()
-        .setModality("audio").setInputCol("payload").setTimeCol("ts")
-        .setWatermarkDelay("3650 days").setCorpusIndex(idx)
-        .transform(stream)
-      val qname = s"audiofp_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = dedup.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select((col("doc_id") / 4).cast("long").as("group_id"))
-    },
-
-    // Streaming SEMANTIC dedup (round 18) — closes the last cell of the
-    // batch/incremental/streaming × exact/near-dup/perceptual/semantic
-    // dedup matrix. The semdedup_incremental_exact fixture run through
-    // the REAL engine: the corpus (vec_id % 4 != 0) persists its
-    // embedding index under a single-cell quantizer (the exhaustive,
-    // SQL-replayable setting — every corpus member shares the stream
-    // doc's cell, so the broadcast probe compares every pair); the
-    // stream carries the %4==0 vectors plus id-offset VERBATIM copies:
-    // the %8==1 copies duplicate CORPUS vectors (cosine exactly 1) and
-    // must drop via the broadcast cell probe, while the %8==4 copies
-    // duplicate %4==0 STREAM vectors and exercise the IN-STREAM
-    // exact-embedding state instead (their bit-identical twin rides the
-    // same run). A %4==0 doc drops iff a corpus vector sits at cosine
-    // >= 0.465 — the threshold in the measured sf0.01 cosine-spectrum
-    // gap (nearest pairs 0.4666/0.4597, the semdedup_exact margins).
-    // The gate emits the DISTINCT surviving BASE-id set (vec_id %
-    // 1000000 — which copy of bit-identical vectors survives the
-    // in-stream state is engine-arbitrary, the set is not; all
-    // embeddings-table vectors are pairwise distinct, so distinct base
-    // ids replay closed-form).
-    "semdedup_stream" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val emb = tbl(s, dir, "embeddings")
-      val corpus = emb.filter(col("vec_id") % 4 =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      val m = new graft.dedup.IncrementalSemDeDup().setInputCol("embedding")
-        .setIdCol("vec_id").setThreshold(0.465).setNClusters(1)
-        .fit(corpus)
-      val idx = m.indexCorpus(corpus)
-      def src() = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "embeddings", "semdd_stream"))
-      val stream = src().filter(col("vec_id") % 4 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .unionByName(src().filter(col("vec_id") % 8 === 1)
-          .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-        .unionByName(src().filter(col("vec_id") % 8 === 4)
-          .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding")))
-        .withColumn("ts", to_timestamp(from_unixtime(
-          col("vec_id") % 1000000L + lit(1700000000L))))
-      val dedup = new graft.streaming.StreamingSemDeDup()
-        .setInputCol("embedding").setTimeCol("ts")
-        .setWatermarkDelay("3650 days")
-        // the single-cell quantizer makes the stage spread each
-        // micro-batch before its FAT exhaustive probe (every corpus
-        // member in one buffer): the fixture source is one parquet file
-        // (~3 splits), and unspread the x100 sweep stranded the probe on
-        // 2 of 32 cores
-        .setFromModel(m).setCorpusIndex(idx)
-        .transform(stream)
-      val qname = s"semdd_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = dedup.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select((col("vec_id") % 1000000L).as("vec_id")).distinct()
-    },
-
-    // the SAME semantic streaming fixture through the LARGE-INDEX mode
-    // (round 19 — the MinHash face's dedup_minhash_stream_fb pattern on
-    // the family's FATTEST index): a real engine run whose sink is
-    // foreachBatch + StreamingSemDeDup.transformMicroBatch —
-    // occupied-cell BitSet prefilter broadcast (tier 1, exact), flagged
-    // rows verified through ONE distributed cell equi-join against the
-    // bounded per-cell corpus buffer frame (tier 2), NO vector
-    // broadcast. Decisions match the DSL path (the BitSet tier cannot
-    // lose or invent a candidate cell; the verify is the same family
-    // cosine rule), so the gate shares semdedup_stream's oracle
-    // verbatim.
-    "semdedup_stream_fb" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val emb = tbl(s, dir, "embeddings")
-      val corpus = emb.filter(col("vec_id") % 4 =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      val m = new graft.dedup.IncrementalSemDeDup().setInputCol("embedding")
-        .setIdCol("vec_id").setThreshold(0.465).setNClusters(1)
-        .fit(corpus)
-      val idx = m.indexCorpus(corpus)
-      def src() = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "embeddings", "semdd_fb_stream"))
-      val stream = src().filter(col("vec_id") % 4 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .unionByName(src().filter(col("vec_id") % 8 === 1)
-          .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-        .unionByName(src().filter(col("vec_id") % 8 === 4)
-          .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding")))
-      val stage = new graft.streaming.StreamingSemDeDup()
-        .setInputCol("embedding").setFromModel(m).setCorpusIndex(idx)
-      val outDir = java.nio.file.Files
-        .createTempDirectory("semdd_fb_out").toString
-      val q = stream.writeStream
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          stage.transformMicroBatch(b)
-            .write.mode("append").parquet(outDir)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outDir)
-        .select((col("vec_id") % 1000000L).as("vec_id")).distinct()
-    },
-
-    // Streaming ANN ENRICHMENT (round 18) — the retrieval face of the
-    // streaming family: each streamed image embeds and is tagged with
-    // its top-4 corpus neighbors from the broadcast IVF index, map-only
-    // per micro-batch, zero state. nProbe == nLists probes every cell,
-    // so the result is EXACT and the planted re-encode groups make it
-    // closed-form: every query's true top-4 is its own 4-member group
-    // (within-group cosine >= 0.99989, cross <= 0.68908 — the
-    // PHashProbe margins), so per-query in-group hits == 4.
-    "knn_stream" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val bmp = udf((id: Long) => SparkEntry.testBmpBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", bmp(col("doc_id")))
-      val emb = new graft.image.ImageEmbedder().setInputCol("payload")
-        .transform(docs).select(col("doc_id"), col("image_embedding"))
-        .localCheckpoint()
-      val ivf = new IVFNearestNeighbors().setInputCol("image_embedding")
-        .setIdCol("doc_id").setNLists(8).fit(emb)
-      val stream = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "documents", "knn_stream"))
-        .filter(col("doc_id") < 200)
-        .select(col("doc_id"))
-        .withColumn("payload", bmp(col("doc_id")))
-      val embedded = new graft.image.ImageEmbedder().setInputCol("payload")
-        .transform(stream)
-      val tagged = new graft.streaming.StreamingNearestNeighbors()
-        .setInputCol("image_embedding").setK(4).setNProbe(8)
-        // the x100 sweep corpus holds 500k vectors (~270 MB at dim 63
-        // — fine on 128 GiB executors); the conservative 2^18 default
-        // stays for users who haven't sized their broadcast
-        .setMaxIndexEntries(1 << 20)
-        .setFromModel(ivf).setCorpus(emb, "doc_id", "image_embedding")
-        .transform(embedded)
-      val qname = s"knn_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = tagged.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select(col("doc_id"), explode(col("neighbors.id")).as("id"))
-        .filter((col("id") / 4).cast("long") ===
-          (col("doc_id") / 4).cast("long"))
-        .groupBy("doc_id").agg(count(lit(1)).as("hits"))
-    },
-
-    // the COMPOSED streaming curation chain (round 18): exact-text
-    // dedup THEN semantic dedup as TWO stateful stages of ONE append
-    // query — the multiple-stateful-operator capability the dedup
-    // matrix's composability story rests on (each stage only sets the
-    // watermark when the stream has none, so the chain shares the
-    // first stage's — WatermarkUtil). Same fixture as semdedup_stream
-    // with text derived from the BASE id: the %8==4 offset copies now
-    // collapse at the EXACT-TEXT stage (identical text AND vector, so
-    // the semantic decision is unchanged whichever copy survives) and
-    // the %8==1 corpus copies pass it (distinct text) to drop at the
-    // semantic probe — the surviving base-id set is IDENTICAL to
-    // semdedup_stream's, so the oracle is shared verbatim.
-    "semdedup_stream_chained" -> { (s, dir) =>
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val emb = tbl(s, dir, "embeddings")
-      val corpus = emb.filter(col("vec_id") % 4 =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      val m = new graft.dedup.IncrementalSemDeDup().setInputCol("embedding")
-        .setIdCol("vec_id").setThreshold(0.465).setNClusters(1)
-        .fit(corpus)
-      val idx = m.indexCorpus(corpus)
-      def src() = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "embeddings", "semdd_chain"))
-      val stream = src().filter(col("vec_id") % 4 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .unionByName(src().filter(col("vec_id") % 8 === 1)
-          .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-        .unionByName(src().filter(col("vec_id") % 8 === 4)
-          .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding")))
-        .withColumn("ts", to_timestamp(from_unixtime(
-          col("vec_id") % 1000000L + lit(1700000000L))))
-        .withColumn("text",
-          concat(lit("doc "), (col("vec_id") % 1000000L).cast("string")))
-      val exactStage = new graft.streaming.StreamingDeduplicator()
-        .setInputCol("text").setTimeCol("ts").setWatermarkDelay("3650 days")
-        .transform(stream)
-      val dedup = new graft.streaming.StreamingSemDeDup()
-        .setInputCol("embedding").setTimeCol("ts")
-        .setWatermarkDelay("3650 days") // single cell: the probe spreads
-        .setFromModel(m).setCorpusIndex(idx)
-        .transform(exactStage)
-      val qname = s"semdd_chain_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = dedup.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select((col("vec_id") % 1000000L).as("vec_id")).distinct()
-    },
-
-    // the streaming semantic face at its 100 TB OPERATING POINT
-    // (auto-k quantizer -> each stream doc probes ONE ~256-member cell
-    // buffer instead of the whole corpus): rows-only by design — the
-    // k-means cell partition is not SQL-replayable — with
-    // semdedup_stream (single-cell = exhaustive) as the hash-green
-    // exactness companion, the semdedup_incremental/-_exact pattern.
-    // Also the SCALING.md streaming-semantic row's handle.
-    "semdedup_stream_autok" -> { (s, dir) =>
-      val hint = new java.io.File(dir).getName match {
-        case "sf0.001" | "sf0.01" => 375L
-        case "sf0.1" => 1500L
-        case _ => 0L
-      }
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val emb = tbl(s, dir, "embeddings")
-      val corpus = emb.filter(col("vec_id") % 4 =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      val m = new graft.dedup.IncrementalSemDeDup().setInputCol("embedding")
-        .setIdCol("vec_id").setThreshold(0.465)
-        .setTargetClusterSize(256).setCorpusSizeHint(hint)
-        .fit(corpus)
-      val idx = m.indexCorpus(corpus)
-      def src() = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "embeddings", "semdd_stream_ak"))
-      val stream = src().filter(col("vec_id") % 4 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .unionByName(src().filter(col("vec_id") % 8 === 1)
-          .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
-        .unionByName(src().filter(col("vec_id") % 8 === 4)
-          .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding")))
-        .withColumn("ts", to_timestamp(from_unixtime(
-          col("vec_id") % 1000000L + lit(1700000000L))))
-      val dedup = new graft.streaming.StreamingSemDeDup()
-        .setInputCol("embedding").setTimeCol("ts")
-        .setWatermarkDelay("3650 days")
-        .setFromModel(m).setCorpusIndex(idx)
-        .transform(stream)
-      val qname = s"semdd_stream_ak_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = dedup.writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname)
-        .select((col("vec_id") % 1000000L).as("vec_id")).distinct()
-    },
-
-    // Stateful sessionization executed through the Structured Streaming
-    // ENGINE: file source → flatMapGroupsWithState (NoTimeout: timeouts
-    // spin perpetual empty micro-batches, incompatible with a bounded
-    // AvailableNow run) → memory sink, append mode. The single batch
-    // closes every session except each user's still-open LAST one; the
-    // oracle replays the same gaps-and-islands in SQL and drops each
-    // user's final session. Closes the last operator family whose
-    // streaming path had no driver gate (VERDICT r10 "What's missing" #5).
-    "sessionize_stream" -> { (s, dir) =>
-      import s.implicits._
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .parquet(streamingPath(dir, "events", "sess_stream"))
-      // epoch seconds from native timestamp or legacy long nanos — the
-      // same dual handling as the batch Sessionize stage
-      val secs = schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => expr("ts DIV 1000000000")
-        case _ => unix_timestamp(col("ts"))
-      }
-      val ev = stream.select(col("user_id").cast("long").as("k"),
-        secs.cast("long").as("t")).as[(Long, Long)]
-      val closed = graft.streaming.SessionizeStream(ev, 1800L,
-        useTimeout = false)(s)
-      val qname = s"sess_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val q = closed.toDF().writeStream.format("memory").queryName(qname)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(qname).select(col("key").as("user_id"),
-        col("start").as("session_start"), col("end").as("session_end"),
-        col("n"))
-    },
-
-    "per_instance_stats" -> { (s, dir) =>
-      // deterministic baseline predictor (decimal-exact global mean) so
-      // the per-row losses are oracle-checkable
-      val ev = tbl(s, dir, "events")
-      val mean = ev.agg(graft.core.Determinism
-        .deterministicMean(col("value"))).head().getDouble(0)
-      new graft.train.ComputePerInstanceStatistics()
-        .setLabelCol("value").setEvaluationMetric("regression")
-        .transform(ev.withColumn("prediction", lit(mean)))
-        .select(col("event_id"), col("L1_loss"), col("L2_loss"))
-    },
-
-    // ---- VW hashing featurizer (§2.8) -------------------------------
-    // hash-gated: the sparse (index, value) pairs themselves. The murmur
-    // feature indices form a tiny closed set here (1 numeric column + 5
-    // event types, all distinct under the 18-bit mask), so the oracle
-    // enumerates them as constants — Murmur3 itself is property-tested
-    // against the public test vectors in FeaturizeSuite, and an
-    // independent python murmur3_32 reproduced these exact constants.
-    "vw_featurizer" -> { (s, dir) =>
-      val feats = new graft.featurize.VowpalHashFeaturizer()
-        .setInputCols(Seq("value", "event_type")).setNumBits(18)
-        .transform(tbl(s, dir, "events"))
-      val toPairs = udf((v: org.apache.spark.ml.linalg.SparseVector) =>
-        v.indices.zip(v.values).toSeq)
-      feats.select(col("event_id"), explode(toPairs(col("features"))).as("p"))
-        .select(col("event_id"), col("p._1").as("feat_idx"),
-          col("p._2").as("feat_val"))
-    },
-
-    // ---- isolation forest (§2.13) -----------------------------------
-    // Planted-anomaly exact gate (dedup_simhash_exact pattern): plant
-    // unmistakable outliers (x100 + 5000 vs an inlier range of [0, 490]),
-    // fit a seeded forest, and assert the top-|planted| scored rows ARE
-    // the planted set — symmetric-difference count, constant-0 oracle.
-    // AnomalySuite's margin test keeps the fixture far from the
-    // decision boundary (score separation, not a tuned threshold).
-    "isolation_forest" -> { (s, dir) =>
-      // Fixed-size input (access_anomaly's pattern) + ~1% planted + a
-      // 256-point subsample: a tree only ranks an extreme inlier below
-      // the planted set if its subsample contains a planted point (the
-      // split range must cover the gap); at this density P(no planted in
-      // a subsample) ~ 7%, so ~46 of 50 trees separate — scale-invariant
-      // and far from any path-length tie, unlike sampling 128 of the
-      // full corpus where planted density falls with sf.
-      val planted = pmod(col("event_id"), lit(97)) === 0
-      val ev = tbl(s, dir, "events").select(col("event_id"), col("value"))
-        .filter(col("event_id") < 2000)
-        .withColumn("v",
-          when(planted, col("value") * 100 + 5000.0).otherwise(col("value")))
-      val m = new graft.anomaly.IsolationForest()
-        .setInputCols(Seq("v"))
-        .setNumTrees(50).setSubsampleSize(256).fit(ev)
-      val nPlanted = ev.filter(planted).count().toInt
-      val detected = m.transform(ev)
-        .orderBy(col("anomaly_score").desc, col("event_id"))
-        .limit(nPlanted).select("event_id")
-      detected.union(ev.filter(planted).select("event_id"))
-        .groupBy("event_id").count().filter(col("count") =!= 2)
-        .agg(count(lit(1)).cast("long").as("mismatches"))
-    },
-
-    // ---- multimodal column plumbing (LLM-pipeline) ------------------
-    // Three modality passes over the same table. Image rows feed text
-    // bytes (not decodable → stub path, decoded=false, magic sniffed).
-    // Audio rows feed the deterministic WAV fixture through the REAL
-    // javax.sound decode ([[testWavBytes]]: every asserted field is
-    // closed-form — decoded=true, magic 'riff', duration from id).
-    // Video rows feed the deterministic Y4M fixture through the REAL
-    // y4m decode ([[testY4mBytes]]: decoded=true, magic 'y4m', duration
-    // AND decoded mean luma closed-form from id). The float→ms /
-    // float→255 roundings keep the hash compare integer-exact.
-    "multimodal_stub" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      val image = new graft.io.binary.MultimodalFeaturizer()
-        .setInputCol("payload").setModality("image").setDim(8)
-        .transform(docs.withColumn("payload", col("text").cast("binary")))
-        .select(col("doc_id"), col("media_meta.modality").as("modality"),
-          col("media_meta.size_bytes").as("size_bytes"),
-          col("media_meta.magic").as("magic"),
-          col("media_meta.decoded").as("decoded"),
-          lit(0L).as("duration_ms"), lit(0L).as("luma255"))
-      val wav = udf((id: Long) => SparkEntry.testWavBytes(id))
-      val audio = new graft.io.binary.MultimodalFeaturizer()
-        .setInputCol("payload").setModality("audio").setDim(6)
-        .transform(docs.withColumn("payload", wav(col("doc_id"))))
-        .select(col("doc_id"), col("media_meta.modality").as("modality"),
-          col("media_meta.size_bytes").as("size_bytes"),
-          col("media_meta.magic").as("magic"),
-          col("media_meta.decoded").as("decoded"),
-          round(element_at(col("media_features"), 1) * 1000)
-            .cast("long").as("duration_ms"), lit(0L).as("luma255"))
-      val y4m = udf((id: Long) => SparkEntry.testY4mBytes(id))
-      val video = new graft.io.binary.MultimodalFeaturizer()
-        .setInputCol("payload").setModality("video").setDim(7)
-        .transform(docs.withColumn("payload", y4m(col("doc_id"))))
-        .select(col("doc_id"), col("media_meta.modality").as("modality"),
-          col("media_meta.size_bytes").as("size_bytes"),
-          col("media_meta.magic").as("magic"),
-          col("media_meta.decoded").as("decoded"),
-          round(element_at(col("media_features"), 1) * 1000)
-            .cast("long").as("duration_ms"),
-          round(element_at(col("media_features"), 6) * 255)
-            .cast("long").as("luma255"))
-      image.unionAll(audio).unionAll(video)
-    },
-
-    // Perceptual-hash image near-dedup (the LAION-pipeline multimodal
-    // dedup shape): deterministic synthetic BMPs — four per planted
-    // group: base pattern, +24 brightness, ×9/8 contrast, both — run
-    // the REAL pure-JVM path (ImageIO decode → bilinear 32×32 gray →
-    // DCT pHash) and dedup at the default hamming ≤ 4 via the Manku
-    // pigeonhole (blocks 6 → 21-bit bucket keys — the scale-safe point;
-    // the first (6, 8) sweep spilled 54.8 GB at 100x on 16-bit keys).
-    // Brightness/contrast re-encodes leave the AC signs intact so
-    // within-group hammings sit ≤ 4 while cross-group pseudo-random
-    // patterns sit ≥ 10 bits away (PHashProbe over all sf0.1 ids;
-    // PerceptualHashSuite pins the margins) — byte-exact dedup would
-    // keep all four. Survivors = min doc_id per group — closed-form,
-    // label-free SQL
-    "image_phash_dedup" -> { (s, dir) =>
-      val bmp = udf((id: Long) => SparkEntry.testBmpBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", bmp(col("doc_id")))
-      new graft.image.ImagePHashDeduplicator().setInputCol("payload")
-        .setIdCol("doc_id")
-        .transform(docs)
-        .select(col("doc_id"))
-    },
-
-    // In-library image SIMILARITY SEARCH: ImageEmbedder (the DCT AC
-    // block, L2-normalized — brightness- AND contrast-invariant) feeds
-    // the same exact-KNN operator the text embeddings use. Every
-    // image's nearest non-self neighbor must land inside its planted
-    // 4-id group (within-group cosine ≈ 1, cross-group ≈ 0 on
-    // independent patterns); mismatches are counted and the oracle is
-    // the constant 0 (the sr_anomalies / dedup_simhash_exact
-    // convention). Queries are bounded to 200 (the knn_bruteforce
-    // convention — 63-dim DCT vectors give a ball tree little to prune,
-    // so all-pairs at sf0.1 is quadratic); at corpus scale the
-    // composition swaps NearestNeighbors for PartitionedKNN/IVF
-    // unchanged — same Array[Float] contract
-    "image_knn" -> { (s, dir) =>
-      val bmp = udf((id: Long) => SparkEntry.testBmpBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", bmp(col("doc_id")))
-      // localCheckpoint BEFORE the KNN: NearestNeighbors is a broadcast
-      // nested-loop join, and an un-materialized UDF embedding column
-      // re-decodes once per JOINED PAIR under it (measured: 349 s at
-      // sf0.1 — 200 × 5000 decodes) — the SemDeDup expensive-upstream
-      // convention, 63 floats/doc materialized
-      val emb = new graft.image.ImageEmbedder().setInputCol("payload")
-        .transform(docs).select(col("doc_id"), col("image_embedding"))
-        .localCheckpoint()
-      val knn = new NearestNeighbors().setInputCol("image_embedding")
-        .setIdCol("doc_id").setK(2)
-        .setQueries(emb.filter(col("doc_id") < 200),
-          "doc_id", "image_embedding")
-        .transform(emb)
-      knn.select(col("query_id"), explode(col("neighbors.id")).as("nid"))
-        .filter(col("nid") =!= col("query_id"))
-        .filter((col("nid") / lit(4)).cast("long") =!=
-          (col("query_id") / lit(4)).cast("long"))
-        .agg(count(lit(1)).cast("long").as("mismatches"))
-    },
-
-    // THE FULL IMAGE EMBEDDING CHAIN as one plan (round 17 — the text
-    // embed_chain discipline applied to images, where round 16 found
-    // the decode-heavy upstream is exactly where re-execution traps
-    // hide): raw payload -> ImageEmbedder -> SemDeDup at its auto-k
-    // operating point. SemDeDup's internal localCheckpoint of the
-    // narrow (id, vector) frame is what keeps the decode at ONE pass —
-    // without it the count/sample/assign passes would re-decode the
-    // corpus 4x. Rows-only by design (the k-means partition is not
-    // SQL-replayable); the exactness companion below replays the same
-    // semantics all-pairs. Threshold 0.9 sits in a wide measured gap
-    // of the planted fixture's cosine spectrum (PHashProbe embed mode,
-    // all 5000 sf0.1 ids: min within-group 0.99989, max cross-group
-    // 0.68908). Also the SCALING.md image-chain row's handle.
-    "image_embed_chain" -> { (s, dir) =>
-      val hint = new java.io.File(dir).getName match {
-        case "sf0.001" | "sf0.01" => 500L
-        case "sf0.1" => 5000L
-        case _ => 0L
-      }
-      val bmp = udf((id: Long) => SparkEntry.testBmpBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", bmp(col("doc_id")))
-      val emb = new graft.image.ImageEmbedder().setInputCol("payload")
-        .transform(docs).select(col("doc_id"), col("image_embedding"))
-      new graft.dedup.SemDeDup().setInputCol("image_embedding")
-        .setIdCol("doc_id").setThreshold(0.9)
-        .setTargetClusterSize(256).setCorpusSizeHint(hint)
-        .transform(emb)
-        .select(col("doc_id"))
-    },
-
-    // the image chain's exactness companion (the semdedup_exact
-    // pattern): nClusters=1 compares every pair, so the survivor set
-    // is closed-form — brightness/contrast re-encodes within a planted
-    // group sit at cosine ≥ 0.99989, independent cross-group patterns
-    // at ≤ 0.68908, and the 0.9 cutoff cannot flip either side; minId
-    // keeps the smallest id per group
-    "image_embed_chain_exact" -> { (s, dir) =>
-      val bmp = udf((id: Long) => SparkEntry.testBmpBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", bmp(col("doc_id")))
-      val emb = new graft.image.ImageEmbedder().setInputCol("payload")
-        .transform(docs).select(col("doc_id"), col("image_embedding"))
-      new graft.dedup.SemDeDup().setInputCol("image_embedding")
-        .setIdCol("doc_id").setNClusters(1).setThreshold(0.9)
-        .setKeepRule("minId").setMaxClusterSize(8192)
-        .transform(emb)
-        .select(col("doc_id"))
-    },
-
-    // the billion-image serving path, asserted by a gate instead of
-    // prose (round-16 verdict next-round #5): ImageEmbedder -> IVF at
-    // nProbe == nLists, where every cell is probed, so the cell
-    // partition cannot lose a neighbor and the result must equal the
-    // brute-force reference EXACTLY — per-query hit count is the
-    // constant k (the knn_ivf_recall pattern over image vectors)
-    "image_ivf_recall" -> { (s, dir) =>
-      val bmp = udf((id: Long) => SparkEntry.testBmpBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", bmp(col("doc_id")))
-      // localCheckpoint: the image_knn convention — the brute side is
-      // a broadcast nested-loop join, and an un-materialized decode UDF
-      // under it re-decodes once per joined pair
-      val emb = new graft.image.ImageEmbedder().setInputCol("payload")
-        .transform(docs).select(col("doc_id"), col("image_embedding"))
-        .localCheckpoint()
-      val queries = emb.filter(col("doc_id") < 20)
-      val ivf = new IVFNearestNeighbors().setInputCol("image_embedding")
-        .setIdCol("doc_id").setNLists(8).fit(emb)
-        .setK(5).setNProbe(8)
-        .setQueries(queries, "doc_id", "image_embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      val bf = new NearestNeighbors().setInputCol("image_embedding")
-        .setIdCol("doc_id").setK(5)
-        .setQueries(queries, "doc_id", "image_embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      bf.join(ivf, Seq("query_id", "id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("hits"))
-        .select(col("query_id"), col("hits"), lit(5L).as("k"))
-    },
-
-    // the billion-image serving path at its REAL operating point
-    // (round 18; image_ivf_recall asserts exactness at nProbe ==
-    // nLists, this asserts the recall FLOOR at nProbe = nLists/8 = 1 —
-    // the setting a latency-bound serving tier actually runs): over
-    // the planted re-encode groups (within-group cosine >= 0.99989,
-    // cross <= 0.68908 — PHashProbe margins over all sf0.1 ids), each
-    // query's true top-4 is exactly its own 4-member group, and
-    // probing ONE cell must recover >= 90% of those planted neighbors
-    // (group members quantize together except for the rare group
-    // astride a centroid boundary — tools.IVFServingProbe measured
-    // 160/160 recovered at nProbe=1 on ALL THREE sf dirs, so the 144
-    // floor has maximal margin). Emits the single boolean the floor
-    // defines; the k-means is seeded, so the value is deterministic
-    // per SF.
-    "image_ivf_serving" -> { (s, dir) =>
-      val bmp = udf((id: Long) => SparkEntry.testBmpBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", bmp(col("doc_id")))
-      // localCheckpoint: the image_knn convention — un-materialized
-      // decode UDFs re-decode under every internal pass
-      val emb = new graft.image.ImageEmbedder().setInputCol("payload")
-        .transform(docs).select(col("doc_id"), col("image_embedding"))
-        .localCheckpoint()
-      val queries = emb.filter(col("doc_id") < 40)
-      val ivf = new IVFNearestNeighbors().setInputCol("image_embedding")
-        .setIdCol("doc_id").setNLists(8).fit(emb)
-        .setK(4).setNProbe(1)
-        .setQueries(queries, "doc_id", "image_embedding")
-        .transform(emb)
-        .select(col("query_id"), explode(col("neighbors.id")).as("id"))
-      // planted pairs = 40 queries x 4 group members; the oracle pins
-      // the EXACT recovered count — tools.IVFServingProbe measured it
-      // DETERMINISTIC at 160/160 on all three SFs (seeded k-means), so
-      // a silent recall regression that still clears the documented
-      // 144 floor turns the gate red instead of hiding under it
-      // (round-18 verdict, What's wrong #5)
-      ivf.agg(sum(when((col("id") / 4).cast("long") ===
-          (col("query_id") / 4).cast("long"), 1L).otherwise(0L))
-          .cast("int").as("recovered"))
-    },
-
-    // Energy-contour audio near-dedup — the audio member of the
-    // multimodal dedup family (image pHash above; same pigeonhole, same
-    // min-id survivor rule). Groups of four WAVs share one 64-segment
-    // amplitude grid; variants are exact volume re-encodes (×3/4, ×5/8,
-    // ×9/8 on the 512-multiple grid), so within-group fingerprints are
-    // bit-identical BY CONSTRUCTION while cross-group contours are
-    // independent coin flips (AudioFingerprintSuite pins the margins).
-    // Closed-form survivors: min doc_id per group
-    "audio_fp_dedup" -> { (s, dir) =>
-      val wav = udf((id: Long) => SparkEntry.testFpWavBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", wav(col("doc_id")))
-      new graft.io.binary.AudioFingerprintDeduplicator()
-        .setInputCol("payload").setIdCol("doc_id")
-        .transform(docs)
-        .select(col("doc_id"))
-    },
-
-    // Compressed-media METADATA without a codec (round 18 — the
-    // metadata half of the declared compressed-media gap): MPEG audio
-    // frame-header walk over planted MP3 streams whose every field is
-    // closed-form in doc_id — incl. an ID3v2 tag to skip on even ids,
-    // VBR frame-length changes on ids % 3 == 0 (duration must come
-    // from the walk, not bitrate math), and planted GARBAGE on ids %
-    // 16 == 7 (null metadata — no evidence). 32 kHz / 1152 samples =
-    // exactly 36 ms per frame, so duration_ms is integer-exact.
-    "mp3_metadata" -> { (s, dir) =>
-      val mp3 = udf((id: Long) => SparkEntry.testMp3Bytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", mp3(col("doc_id")))
-      new graft.io.binary.MediaMetadataExtractor()
-        .setInputCol("payload").setFormat("mp3")
-        .transform(docs)
-        .select(col("doc_id"),
-          col("media_meta.sampleRate").as("sample_rate"),
-          col("media_meta.channels").as("channels"),
-          col("media_meta.frames").as("frames"),
-          col("media_meta.durationMs").as("duration_ms"),
-          col("media_meta.bitrateKbps").as("bitrate_kbps"))
-    },
-
-    // ISO BMFF (MP4) box-tree metadata: ftyp brand, mvhd
-    // timescale/duration, track count, and the video trak's 16.16
-    // tkhd dimensions — all closed-form in doc_id; ids % 16 == 3 are
-    // a moov-less box run (structurally valid, no evidence -> null)
-    "mp4_metadata" -> { (s, dir) =>
-      val mp4 = udf((id: Long) => SparkEntry.testMp4Bytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", mp4(col("doc_id")))
-      new graft.io.binary.MediaMetadataExtractor()
-        .setInputCol("payload").setFormat("mp4")
-        .transform(docs)
-        .select(col("doc_id"),
-          col("media_meta.majorBrand").as("major_brand"),
-          col("media_meta.timescale").as("timescale"),
-          col("media_meta.durationMs").as("duration_ms"),
-          col("media_meta.tracks").as("tracks"),
-          col("media_meta.width").as("width"),
-          col("media_meta.height").as("height"))
-    },
-
-    // Luma-contour video near-dedup — completes the multimodal dedup
-    // family (text/image/audio above; one shared pigeonhole shell).
-    // Groups of four Y4M clips share one 64-window luma grid; variants
-    // are exact brightness re-grades (×3/4, ×5/8, ×9/8 on the 16-step
-    // grid), so within-group fingerprints are bit-identical BY
-    // CONSTRUCTION while cross-group contours are independent coin
-    // flips (VideoFingerprintSuite pins the margins). Closed-form
-    // survivors: min doc_id per group
-    "video_fp_dedup" -> { (s, dir) =>
-      val y4m = udf((id: Long) => SparkEntry.testFpY4mBytes(id))
-      val docs = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("payload", y4m(col("doc_id")))
-      new graft.io.binary.VideoFingerprintDeduplicator()
-        .setInputCol("payload").setIdCol("doc_id")
-        .transform(docs)
-        .select(col("doc_id"))
-    },
-
-    // ---- spectral-residual saliency (§2.12, Ren et al. KDD'19) ------
-    // Planted-spike exact gate (isolation_forest pattern): per-user
-    // closed-form series — flat base with unmistakable +1000 spikes every
-    // 37th point — run the real FFT saliency detector, assert detected ==
-    // planted by symmetric difference, constant-0 oracle. SRSuite's
-    // margin test keeps spike scores far above / base scores far below
-    // the threshold on this construction.
-    "sr_anomalies" -> { (s, dir) =>
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-      val planted = col("rk") === 29
-      val ev = tbl(s, dir, "events").select("event_id", "user_id")
-        .withColumn("rk", row_number().over(w))
-        .withColumn("value", when(planted, 1100.0).otherwise(100.0))
-      val detected = new graft.anomaly.SRAnomalyDetector()
-        .setInputCol("value").setOrderCol("event_id")
-        .setGroupCols(Array("user_id")).setThreshold(3.0)
-        .transform(ev)
-        .filter(col("is_anomaly")).select("user_id", "event_id")
-      detected.union(ev.filter(planted).select("user_id", "event_id"))
-        .groupBy("user_id", "event_id").count().filter(col("count") =!= 2)
-        .agg(count(lit(1)).cast("long").as("mismatches"))
-    },
-
-    // ---- native ESD anomaly detection (§2.12 DetectAnomalies) -------
-    // per-user series over exact cent-scaled values; fixed critical
-    // values so the full iterative verdict is SQL-expressible
-    "detect_anomalies" -> { (s, dir) =>
-      new graft.anomaly.ESDAnomalyDetector().setInputCol("__cents")
-        .setIdCol("event_id").setGroupCols(Array("user_id"))
-        .setMaxAnomalies(3).setCriticalValues(Array(3.5, 3.5, 3.5))
-        .transform(tbl(s, dir, "events")
-          .withColumn("__cents", round(col("value") * 100)))
-        .filter(col("is_anomaly"))
-        .select(col("user_id"), col("iter"), col("event_id"))
-    },
-
-    // ---- training-data-pipeline ops (LLM family, round 10) ----------
-    // benchmark decontamination: src0 plays the eval benchmark; every
-    // other doc is flagged iff it shares a 4-word-gram with it (n=4
-    // validated to give a nonzero, non-universal rate at all three sfs)
-    "decontaminate" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      Decontamination.flag(
-          docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"), "text", "doc_id")
-        .select(col("doc_id"),
-          col("is_contaminated").cast("int").as("is_contaminated"))
-    },
-
-    // graded contamination: distinct 4-grams, benchmark hits, and the
-    // q4 overlap fraction per doc — broadcast benchmark set, map-only
-    "decontaminate_frac" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      Decontamination.overlapProfile(
-          docs.filter(col("source") =!= "src0"),
-          docs.filter(col("source") === "src0"), "text", "doc_id")
-        .select(col("doc_id"), col("n_grams"), col("n_hit"),
-          col("overlap_q4"))
-    },
-
-    // CCNet-style unigram-LM cross-entropy quality signal: fit counts
-    // the corpus (one hash agg), vocabSize=16 of the fixture's 31 types
-    // so the UNK path is exercised; transform is a broadcast-map narrow
-    // pass. Gated on exact integers (n_tokens, n_oov) + the q4-scaled
-    // cross-entropy (ln-ulp/summation drift is ~4 orders of magnitude
-    // inside the q4 rounding step — see UnigramLM Scaladoc)
-    "lm_perplexity" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      new graft.text.UnigramLM().setInputCol("text").setVocabSize(16)
-        .fit(docs).transform(docs)
-        .select(col("doc_id"), col("lm_n_tokens"), col("lm_n_oov"),
-          col("lm_ce_q4"))
-    },
-
-    // CCNet §4.3 head/middle/tail split: LM cross-entropy terciles
-    // (bucket 1 = head = lowest perplexity); the integer q4 score +
-    // doc_id tiebreak give a total order, so NTILE agrees exactly.
-    // The global window is the ORACLE-exact form; at corpus scale the
-    // same split is two approxQuantile thresholds + a narrow filter
-    // (ScoreSelector's approx mode — no global sort)
-    "ccnet_buckets" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = tbl(s, dir, "documents")
-      new graft.text.UnigramLM().setInputCol("text").setVocabSize(16)
-        .fit(docs).transform(docs)
-        .filter(col("lm_n_tokens") > 0)
-        .select(col("doc_id"), ntile(3).over(
-          Window.orderBy(col("lm_ce_q4"), col("doc_id"))).as("bucket"))
-    },
-
-    // WebDataset-style tar shard sink: every document's text is written
-    // into byte-capped tar shards executor-side and read back through
-    // the shard reader — the oracle is the identity, so any lost,
-    // duplicated, truncated, or misnamed entry breaks the hash
-    "tar_roundtrip" -> { (s, dir) =>
-      val staging = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_tar_${new java.io.File(dir).getName}").toString
-      val docs = tbl(s, dir, "documents")
-        .select(concat(col("doc_id").cast("string"), lit(".txt")).as("path"),
-          encode(col("text"), "UTF-8").as("bytes"))
-      graft.io.binary.TarShards.write(docs, staging,
-        maxShardBytes = 1L << 20)
-      graft.io.binary.TarShards.read(s, staging)
-        .select(regexp_replace(col("name"), "\\.txt$", "")
-          .cast("long").as("doc_id"),
-          decode(col("bytes"), "UTF-8").as("text"))
-    },
-
-    // URL/domain filter on synthesized crawl URLs: doc_id picks the
-    // domain (2 of 5 blocked, one spelled as a subdomain), every 7th
-    // URL carries a blocked path term; host extraction + dot-boundary
-    // suffix + substring rules all replayed in SQL
-    "url_filter" -> { (s, dir) =>
-      val domains = array(lit("good.com"), lit("evil.com"), lit("fine.org"),
-        lit("sub.bad.org"), lit("notevil.com"))
-      val urls = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://"),
-          when(col("doc_id") % 2 === 0, lit("www.")).otherwise(lit("")),
-          element_at(domains, (col("doc_id") % 5 + 1).cast("int")),
-          lit("/page/"), col("doc_id").cast("string"),
-          when(col("doc_id") % 7 === 0, lit("?ref=casino"))
-            .otherwise(lit(""))).as("url"))
-      new graft.text.UrlFilter().setInputCol("url")
-        .setBlockedDomains(Seq("evil.com", "bad.org"))
-        .setBlockedTerms(Seq("casino"))
-        .transform(urls)
-    },
-
-    // The UT1-scale blocklist-TABLE path: same multi-suffix URL
-    // synthesis as registered_domain; the blocklist TABLE is collected
-    // (bounded), packed as a broadcast CompactStringSet, and each row
-    // probes its host's dot-boundary suffix chain truncated at the
-    // registered domain — no join, no exchange (PlanSuite asserts
-    // both); oracle replays the registered-domain extraction + a
-    // NOT IN over the same normalized entries
-    "url_filter_table" -> { (s, dir) =>
-      import s.implicits._
-      val hosts = array(lit("news.bbc.co.uk"), lit("a.b.example.com"),
-        lit("www.example.com"), lit("shop.com.au"), lit("sub.x.co.jp"),
-        lit("foo.org"), lit("co.uk"))
-      val urls = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://"),
-          element_at(hosts, (col("doc_id") % 7 + 1).cast("int")),
-          lit("/p/"), col("doc_id").cast("string")).as("url"))
-      val blocklist = Seq("example.com", "bbc.co.uk", "x.co.jp")
-        .toDF("domain")
-      new graft.text.UrlFilter().setInputCol("url")
-        .setBlockedDomainTable(blocklist)
-        .transform(urls)
-    },
-
-    // allow mode (round 15): the same table becomes a curated-seed
-    // ALLOWLIST — only documents whose host sits under a listed domain
-    // survive (the OpenWebText-style pipeline)
-    "url_filter_allow" -> { (s, dir) =>
-      import s.implicits._
-      val hosts = array(lit("news.bbc.co.uk"), lit("a.b.example.com"),
-        lit("www.example.com"), lit("shop.com.au"), lit("sub.x.co.jp"),
-        lit("foo.org"), lit("co.uk"))
-      val urls = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://"),
-          element_at(hosts, (col("doc_id") % 7 + 1).cast("int")),
-          lit("/p/"), col("doc_id").cast("string")).as("url"))
-      val allowlist = Seq("example.com", "bbc.co.uk", "x.co.jp")
-        .toDF("domain")
-      new graft.text.UrlFilter().setInputCol("url")
-        .setBlockedDomainTable(allowlist).setTableMode("allow")
-        .transform(urls)
-    },
-
-    // Registered-domain extraction (the per-domain grouping key):
-    // two-label tail, or three when the tail is a listed public
-    // suffix; oracle replays both regexps and the suffix CASE
-    "registered_domain" -> { (s, dir) =>
-      val hosts = array(lit("news.bbc.co.uk"), lit("a.b.example.com"),
-        lit("www.example.com"), lit("shop.com.au"), lit("sub.x.co.jp"),
-        lit("foo.org"), lit("co.uk"))
-      val urls = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(lit("https://"),
-          element_at(hosts, (col("doc_id") % 7 + 1).cast("int")),
-          lit("/p/"), col("doc_id").cast("string")).as("url"))
-      urls.select(col("doc_id"),
-        graft.text.UrlFilter.registeredDomain(col("url")).as("domain"))
-    },
-
-    // RefinedWeb URL canonicalization: every crawl-duplicate decoration
-    // (scheme/host case, www, userinfo, default vs routing port,
-    // trailing slashes, tracking params mixed with kept params,
-    // fragment, and a non-URL passthrough row class) synthesized from
-    // doc_id; the oracle replays the whole normalize chain — every
-    // regex in it matches at most once, so Spark replace-all and
-    // DuckDB replace-first agree
-    "url_normalize" -> { (s, dir) =>
-      val schemes = array(lit("https"), lit("HTTPS"), lit("http"),
-        lit("HTTP"))
-      val ports = array(lit(":443"), lit(":80"), lit(":8080"), lit(""))
-      val hosts = array(lit("Example.com"), lit("site.org"),
-        lit("News.co.uk"))
-      val slashes = array(lit("/"), lit("//"), lit(""), lit(""), lit(""))
-      val qsv = array(
-        concat(lit("?utm_source=f&q="), col("doc_id").cast("string")),
-        lit("?gclid=x"), lit("?a=1&fbclid=y&b=2"), lit(""))
-      val messy = when(col("doc_id") % 11 === 10,
-          concat(lit("doc "), col("doc_id").cast("string")))
-        .otherwise(concat(
-          element_at(schemes, (col("doc_id") % 4 + 1).cast("int")),
-          lit("://"),
-          when(col("doc_id") % 3 === 0, lit("user:pw@")).otherwise(lit("")),
-          when(col("doc_id") % 2 === 0, lit("WWW.")).otherwise(lit("")),
-          element_at(hosts, (col("doc_id") % 3 + 1).cast("int")),
-          element_at(ports, (col("doc_id") % 4 + 1).cast("int")),
-          lit("/Path/"), col("doc_id").cast("string"),
-          element_at(slashes, (col("doc_id") % 5 + 1).cast("int")),
-          element_at(qsv, (col("doc_id") % 7 % 4 + 1).cast("int")),
-          when(col("doc_id") % 6 === 0, lit("#sec")).otherwise(lit(""))))
-      val urls = tbl(s, dir, "documents")
-        .select(col("doc_id"), messy.as("url"))
-      new graft.text.UrlNormalizer().setInputCol("url")
-        .transform(urls).select(col("doc_id"), col("url_norm"))
-    },
-
-    // URL-level dedup (RefinedWeb's first dedup stage): ~50 distinct
-    // pages each crawled many times under different decorations;
-    // normalize collapses the decorations, ExactDeduplicator keeps the
-    // smallest doc_id per canonical URL — rawKey mode, the recommended
-    // operating point for URL keys (paths stay case-sensitive). The
-    // oracle replays normalize + the min-id window over url_norm
-    "url_dedup" -> { (s, dir) =>
-      val page = (col("doc_id") % 50).cast("string")
-      val qsv = array(concat(lit("?q="), page),
-        concat(lit("?q="), page, lit("&utm_source=f")),
-        lit("?gclid=x"), lit(""))
-      val url = concat(
-        when(col("doc_id") % 4 === 0, lit("HTTPS")).otherwise(lit("https")),
-        lit("://"),
-        when(col("doc_id") % 2 === 0, lit("www.")).otherwise(lit("")),
-        lit("site.com"),
-        when(col("doc_id") % 4 === 1, lit(":443")).otherwise(lit("")),
-        lit("/page/"), page,
-        when(col("doc_id") % 5 === 0, lit("/")).otherwise(lit("")),
-        element_at(qsv, (col("doc_id") % 7 % 4 + 1).cast("int")),
-        when(col("doc_id") % 6 === 0, lit("#top")).otherwise(lit("")))
-      val crawls = tbl(s, dir, "documents")
-        .select(col("doc_id"), url.as("url"))
-      val normed = new graft.text.UrlNormalizer().setInputCol("url")
-        .transform(crawls)
-      new graft.dedup.ExactDeduplicator().setInputCol("url_norm")
-        .setIdCol("doc_id").setRawKey(true).transform(normed)
-        .select(col("doc_id"), col("url_norm"))
-    },
-
-    // SQ8 scalar quantization: per-dim corpus min/max -> uint8 codes;
-    // the oracle recomputes the bounds and replays the exact
-    // floor(+0.5) arithmetic chain double-for-double (float->double
-    // widening is exact — the knn-oracle precedent)
-    "embedding_sq8" -> { (s, dir) =>
-      val emb = tbl(s, dir, "embeddings")
-      val m = new graft.sim.ScalarQuantizer().setInputCol("embedding")
-        .fit(emb)
-      m.transform(emb)
-        .select(col("vec_id"), posexplode(col("codes"))
-          .as(Seq("pos", "code")))
-    },
-
-    // Mojibake repair on text dirtied with the classic UTF-8-as-cp1252
-    // sequences (derived, not hand-typed: MojibakeRepair.moji); the
-    // oracle replays synthesis + the full replace chain, itself built
-    // from the same published table
-    "mojibake_repair" -> { (s, dir) =>
-      import graft.text.MojibakeRepair.moji
-      val dirty = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(
-          lit(s"It${moji("’")}s ${moji("“")}fine${moji("„")} " +
-            s"caf${moji("é")} ${moji("—")} 20${moji("°")}C "),
-          col("text"),
-          lit(s" tail${moji("…")} ${moji("«")}q${moji("»")} " +
-            s"${moji("ü")}ber")).as("dirty"))
-      new graft.text.MojibakeRepair().setInputCol("dirty")
-        .setOutputCol("repaired").transform(dirty)
-        .select(col("doc_id"), col("repaired"))
-    },
-
-    // Token-shard (.bin/.idx) roundtrip: docs tokenized against a
-    // SQL-replayable corpus vocab (alphabetical rank of the canonical
-    // words), doc_id rides as token 0 since the flat Megatron-style
-    // format is purely positional; read back, explode, compare every
-    // (doc_id, pos, token_id) triple
-    "tokenshard_roundtrip" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val staging = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_tok_${new java.io.File(dir).getName}").toString
-      val words = tbl(s, dir, "documents")
-        .select(col("doc_id"), posexplode(split(
-          graft.dedup.DedupFunctions.canonical(col("text")), " "))
-          .as(Seq("pos", "w")))
-        .filter(length(col("w")) > 0)
-      // oracle plumbing, not the operator: the bounded corpus vocab
-      // gets ids by alphabetical rank (replayable), real pipelines feed
-      // tokenizer-model ids here
-      val vocab = words.select("w").distinct()
-        .withColumn("id", row_number().over(Window.orderBy("w")))
-      val toks = words.join(vocab, "w")
-        .groupBy("doc_id")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("id")))),
-          e => e.getField("id")).as("ids"))
-        .select(concat(array(col("doc_id").cast("int")), col("ids"))
-          .as("tokens"))
-      graft.io.binary.TokenShards.write(toks, staging,
-        maxShardBytes = 1L << 20)
-      graft.io.binary.TokenShards.read(s, staging)
-        .select(element_at(col("tokens"), 1).cast("long").as("doc_id"),
-          posexplode(slice(col("tokens"), 2, Int.MaxValue))
-            .as(Seq("pos", "token_id")))
-        .select(col("doc_id"), col("pos"), col("token_id"))
-    },
-
-    // HTML -> text extraction on pages synthesized around each doc's
-    // text: head/script/style/comment subtrees must vanish, block tags
-    // become single line breaks, entities decode, whitespace
-    // normalizes — the oracle replays the published regexp chain
-    // (HtmlTextExtractor.steps) step for step; patterns live in the
-    // Java-regex ∩ RE2 common subset so both engines agree
-    "html_extract" -> { (s, dir) =>
-      val page = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(
-          lit("<html><head><title>T</title><script>if (1 < 2) { f(\"x\"); }" +
-            "</script><style>p { color: red }</style></head><body><h1>Doc "),
-          col("doc_id").cast("string"),
-          lit("</h1><!-- hidden --><p class=\"a\">"),
-          col("text"),
-          lit("</p><div>A&amp;B &lt;tag&gt;&nbsp;tail&#39;s</div>" +
-            "</body></html>")).as("html"))
-      new graft.text.HtmlTextExtractor().setInputCol("html")
-        .setOutputCol("extracted").transform(page)
-        .select(col("doc_id"), col("extracted"))
-    },
-
-    // General numeric character references through the native linear
-    // decode (numericEntities=true): planted refs cover hex/decimal,
-    // the cp1252 C1 remap (&#146;), a supplementary plane (surrogate
-    // pair emission), the three U+FFFD classes (NUL, lone surrogate,
-    // out of range), a malformed ref that must survive verbatim, and
-    // the amp-decodes-last double-escape contract — the oracle replays
-    // each planted ref as a literal replacement at the decode's slot
-    // in the chain (the computed-character step is exactly what the
-    // regexp layer could not express; on the planted set it reduces to
-    // literals both engines agree on)
-    "html_entities" -> { (s, dir) =>
-      val page = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(lit("<html><body><p>Doc "), col("doc_id").cast("string"),
-          lit(": A&#x2019;B em&#8212;dash caf&#233; it&#146;s " +
-            "smile&#x1F600;! lone&#xD800;surr nul&#0;x big&#x110000;y " +
-            "bad&#zz; esc&amp;#39;q "),
-          col("text"), lit("</p></body></html>")).as("html"))
-      new graft.text.HtmlTextExtractor().setInputCol("html")
-        .setOutputCol("extracted").setNumericEntities(true)
-        .transform(page)
-        .select(col("doc_id"), col("extracted"))
-    },
-
-    // the crawl front end as ONE plan: synthesized HTML wrapped in an
-    // HTTP response, framed into WARC segments, re-read through the
-    // streaming parser, HTTP envelope stripped, HTML extracted — the
-    // WARC+HTTP layers are roundtrip-transparent, so the oracle is
-    // html_extract's replay verbatim
-    "crawl_e2e" -> { (s, dir) =>
-      val staging = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_crawl_${new java.io.File(dir).getName}").toString
-      val page = tbl(s, dir, "documents").select(col("doc_id"),
-        concat(
-          lit("<html><head><title>T</title><script>if (1 < 2) { f(\"x\"); }" +
-            "</script><style>p { color: red }</style></head><body><h1>Doc "),
-          col("doc_id").cast("string"),
-          lit("</h1><!-- hidden --><p class=\"a\">"),
-          col("text"),
-          lit("</p><div>A&amp;B &lt;tag&gt;&nbsp;tail&#39;s</div>" +
-            "</body></html>")).as("html"))
-      graft.io.warc.WarcFiles.write(
-        page.select(
-          concat(lit("urn:doc:"), col("doc_id").cast("string")).as("uri"),
-          encode(concat(
-            lit("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"),
-            col("html")), "UTF-8").as("bytes")),
-        staging, maxShardBytes = 1L << 20)
-      graft.io.warc.WarcFiles.read(s, staging)
-        .select(regexp_replace(col("uri"), "^urn:doc:", "")
-          .cast("long").as("doc_id"),
-          graft.text.HtmlTextExtractor.extract(
-            decode(graft.io.warc.WarcFiles.httpBody(col("bytes")), "UTF-8"))
-            .as("extracted"))
-    },
-
-    // WARC/WET roundtrip: documents written as WET conversion records
-    // (per-record gzip members, the Common Crawl layout) then re-read
-    // through the streaming segment parser — text byte-exact, ids
-    // recovered from the target URI
-    "warc_roundtrip" -> { (s, dir) =>
-      val staging = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_warc_${new java.io.File(dir).getName}").toString
-      val docs = tbl(s, dir, "documents")
-        .select(concat(lit("urn:doc:"), col("doc_id").cast("string")).as("uri"),
-          encode(col("text"), "UTF-8").as("bytes"))
-      graft.io.warc.WarcFiles.write(docs, staging, maxShardBytes = 1L << 20)
-      graft.io.warc.WarcFiles.read(s, staging)
-        .filter(col("record_type") === "conversion")
-        .select(regexp_replace(col("uri"), "^urn:doc:", "")
-          .cast("long").as("doc_id"),
-          decode(col("bytes"), "UTF-8").as("text"))
-    },
-
-    // within-doc repeated-line removal on synthesized pages (each doc
-    // becomes line+line+tail+line); the oracle replays first-occurrence
-    // order-preserving distinct with an indexed list_filter
-    "line_dedup_within" -> { (s, dir) =>
-      val pages = tbl(s, dir, "documents").select(col("doc_id"),
-        concat_ws("\n", col("text"), col("text"), lit("tail"), col("text"))
-          .as("page"))
-      new graft.text.WithinDocLineDeduplicator().setInputCol("page")
-        .setOutputCol("dedup_text").transform(pages)
-        .select(col("doc_id"), col("dedup_text"))
-    },
-
-    // one-row dataset-card report, every column an exact integer
-    "corpus_report" -> { (s, dir) =>
-      new graft.text.CorpusReport().setInputCol("text")
-        .transform(tbl(s, dir, "documents"))
-    },
-
-    // composition-table mode (round 15): one exact-integer report row
-    // per language — the data card's per-source breakdown
-    "corpus_report_grouped" -> { (s, dir) =>
-      new graft.text.CorpusReport().setInputCol("text")
-        .setGroupByCol("lang")
-        .transform(tbl(s, dir, "documents"))
-    },
-
-    // feature-hashed signed-random-projection embeddings (round 15):
-    // un-normalized count weighting makes every accumulator an exact
-    // INTEGER (sum of ±tf), and the md5 sign bits replay in SQL — the
-    // gate explodes the 16-dim vectors to (doc_id, dim, val) rows
-    "hashed_embedding" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").filter(col("text").isNotNull)
-      new graft.text.HashedEmbedder().setInputCol("text")
-        .setOutputCol("__e").setDim(16).setSalt("e15")
-        .setNormalize(false)
-        .transform(docs)
-        .select(col("doc_id"), posexplode(col("__e")))
-        .select(col("doc_id"), col("pos").cast("long").as("dim"),
-          col("col").cast("long").as("val"))
-    },
-
-    // LEARNED embeddings (round 16): skip-gram vectors fit in-library on
-    // the planted-multilingual fixture, then 5-way nearest-centroid
-    // recovery of the planted class — the language_id planted-rule
-    // pattern (the k-means partition itself is not SQL-replayable, the
-    // recovered labels are). Word pools are disjoint across classes, so
-    // skip-gram only ever sees same-pool contexts and the pooled doc
-    // vectors cluster by class with a wide margin (margins + save/load
-    // + SemDeDup composition are suite-asserted in TrainedEmbedderSuite)
-    "trained_embedding" -> { (s, dir) =>
-      val synth = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("text", LanguageGateFixture.textCol)
-      val m = new graft.text.TrainedEmbedder().setInputCol("text")
-        .setDim(32).setMinCount(1).setMaxIter(4).setTrainSample(4096)
-        .fit(synth.filter(col("doc_id") % 3 =!= 0))
-      EmbedGateSupport.nearestCentroidRecovery(m.transform(synth))
-    },
-
-    // the SIF pooling path under adversarial conditions: every doc
-    // carries a 16-token shared stopword that dominates a flat mean;
-    // the a/(a+p(w)) weights collapse it, so nearest-centroid recovery
-    // of the planted class stays exact (the sif-beats-mean margin on
-    // this fixture shape is suite-asserted in TrainedEmbedderSuite)
-    "trained_embedding_sif" -> { (s, dir) =>
-      val stop = (1 to 16).map(_ => "zzcommon").mkString(" ")
-      val synth = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("text",
-          concat(LanguageGateFixture.textCol, lit(" " + stop)))
-      val m = new graft.text.TrainedEmbedder().setInputCol("text")
-        .setDim(32).setMinCount(1).setMaxIter(4).setTrainSample(4096)
-        .setPooling("sif")
-        .fit(synth.filter(col("doc_id") % 3 =!= 0))
-      EmbedGateSupport.nearestCentroidRecovery(m.transform(synth))
-    },
-
-    // the fastText-style subword fallback (round 17) under the fixture
-    // the word-lookup path FAILS: every test doc (doc_id % 3 == 0) is
-    // written in morphological variants absent from the fit sample —
-    // all-OOV, zero vector, unrecoverable without subwords — and the
-    // char-n-gram bucket vectors must still recover the planted class
-    // exactly (alphabet-disjoint pools keep the gram evidence
-    // class-pure; see SubwordGateFixture)
-    "subword_embedding" -> { (s, dir) =>
-      val synth = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("text", SubwordGateFixture.textCol)
-      val m = new graft.text.TrainedEmbedder().setInputCol("text")
-        .setDim(32).setMinCount(1).setMaxIter(4).setTrainSample(4096)
-        .setSubwordBits(18)
-        .fit(synth.filter(col("doc_id") % 3 =!= 0))
-      EmbedGateSupport.nearestCentroidRecovery(m.transform(synth))
-    },
-
-    // top-fraction quality pruning, exact mode (deterministic global
-    // rank with (score desc, id asc) ties) — the SQL-replayable path;
-    // the approx quantile-sketch mode is the 100 TB path, suite-covered
-    "score_select" -> { (s, dir) =>
-      new graft.text.ScoreSelector().setScoreCol("n_chars")
-        .setIdCol("doc_id").setFraction(0.25).setMode("exact")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("n_chars"))
-    },
-
-    // stratified (per-domain) top-fraction pruning — the window
-    // partitions by source, so each domain keeps ceil(0.25 * n_domain)
-    "score_select_domain" -> { (s, dir) =>
-      new graft.text.ScoreSelector().setScoreCol("n_chars")
-        .setIdCol("doc_id").setFraction(0.25).setMode("exact")
-        .setPartitionCol("source")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    },
-
-    // fastText-style quality classifier gated on EXACT recovery of a
-    // planted separable rule: curated-side docs (odd ids) carry a marker
-    // token, the hashed-bigram LR must reproduce the labels perfectly —
-    // the oracle is the planted rule itself. quality_prob margins are
-    // suite-asserted; the gate hashes the integer predictions.
-    "quality_classifier" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
-        .withColumn("label", (col("doc_id") % 2 === 1).cast("double"))
-        .withColumn("text", when(col("label") === 1.0,
-          concat(col("text"), lit(" curatedtok"))).otherwise(col("text")))
-      // numBits=14 sizes the hash space to the problem (the language_id
-      // round-13 lesson): at 2^18 every L-BFGS iteration allocated and
-      // shipped a 2 MB dense gradient, 16x the useful size — the
-      // iteration fixed cost, not the 5k-row data pass, dominated the
-      // wall (measured 7.6 s isolated at sf0.1; an 8-way repartition of
-      // the fit input made it WORSE, 11.7 s, because it multiplied the
-      // dense-gradient allocation 8x). The bound that matters is the
-      // feature VOCABULARY, not the row count: the fixture draws from
-      // bounded word pools, so the distinct hashed n-gram vocabulary is
-      // a few thousand ≪ 2^14 buckets at EVERY SF (more rows reuse the
-      // same pools) and the planted token's features stay separable
-      // from colliders — oracle-verified at sf0.001/0.01/0.1, the
-      // largest supported SF
-      val m = new graft.text.QualityClassifier().setInputCol("text")
-        .setLabelCol("label").setNumBits(14).setMaxIter(25).fit(docs)
-      m.transform(docs).select(col("doc_id"), col("quality_pred"))
-    },
-
-    // Trained language identification (the first gate of every public
-    // curation recipe — CCNet/C4/RefinedWeb lead with a language
-    // classifier): planted-multilingual synthesis (LanguageGateFixture,
-    // 5 languages x 12-word pools, deterministic word choice), train the
-    // hashed char-n-gram multinomial LR on the doc_id%3!=0 split,
-    // predict ALL docs — pass iff every planted language is recovered
-    // (the quality_classifier planted-rule-recovery pattern; margins
-    // and save/load are suite-asserted)
-    "language_id" -> { (s, dir) =>
-      val synth = tbl(s, dir, "documents").select(col("doc_id"))
-        .withColumn("lang", LanguageGateFixture.langCol)
-        .withColumn("text", LanguageGateFixture.textCol)
-      // trainSample: the benched operating point is the recommended
-      // 100-TB one — bounded deterministic fit + full-corpus inference
-      // (50k covers every sf dir fully; at the 100x sweep it bounds
-      // the L-BFGS pass, SCALING.md round 13). numBits=14 sizes the
-      // hash space to the 5-language problem (fastText langid uses
-      // 2^21 for 176 languages — ~16 KB/language; 2^18 here made every
-      // L-BFGS iteration allocate and ship a 10.5 MB dense gradient,
-      // 16x the useful size — measured 22.6 s at sf0.1 / 92.7 s @10x
-      // before, SCALING.md round 13)
-      val m = new graft.text.LanguageIdentifier().setInputCol("text")
-        .setLabelCol("lang").setNumBits(14).setMaxIter(30)
-        .setTrainSample(50000)
-        .fit(synth.filter(col("doc_id") % 3 =!= 0))
-      m.transform(synth).select(col("doc_id"), col("lang_pred"))
-    },
-
-    // concat-and-chunk window assembly: deterministic shuffle order,
-    // global running token offsets, fixed 128-token windows crossing doc
-    // boundaries — every output is exact integer arithmetic, replayed in
-    // SQL as a cumulative sum + integer division
-    "concat_chunk" -> { (s, dir) =>
-      new graft.text.ConcatChunker().setInputCol("text").setIdCol("doc_id")
-        .setContextLen(128).setSeed("42")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("tok_offset"), col("chunk_id"),
-          col("tok_start"), col("tok_end"))
-    },
-
-    // BPE tokenizer losslessness gate: decode(encode(text)) must equal
-    // the canonical (lowercased, space-normalized) text byte-for-byte —
-    // the merges themselves are not SQL-replayable, but the round trip
-    // drives the full trained encode path over every document and any
-    // segmentation bug that drops/duplicates/reorders a symbol breaks
-    // reconstruction. BPESuite separately pins the learned merges on
-    // the Sennrich worked example.
-    "bpe_roundtrip" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      val model = new graft.text.BPETokenizer().setInputCol("text")
-        .setNumMerges(200).setMaxWordTypes(4096).fit(docs)
-      model.transform(docs)
-        .select(col("doc_id"), model.decode(col("bpe_tokens")).as("rt"))
-    },
-
-    // Unigram-LM (SentencePiece-style, Kudo 2018) tokenizer — same
-    // losslessness contract and gate shape as bpe_roundtrip: the EM-
-    // trained pieces are not SQL-replayable, but decode(encode(text))
-    // must reconstruct the canonical text exactly, driving the trained
-    // Viterbi encode over every document (OOV single-char fallback
-    // included). UnigramTokenizerSuite pins Viterbi against exhaustive
-    // enumeration and the EM/prune behavior on worked examples.
-    "unigram_roundtrip" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      val model = new graft.text.UnigramTokenizer().setInputCol("text")
-        .setVocabSize(300).setSeedSize(2000).setMaxWordTypes(4096).fit(docs)
-      model.transform(docs)
-        .select(col("doc_id"), model.decode(col("u_tokens")).as("rt"))
-    },
-
-    // Winnowing fingerprints (Schleimer 2003 / MOSS): every selected
-    // (position, md5) pair over char 9-grams with a 4-gram window,
-    // rightmost-min tie rule — the oracle replays gram hashing, window
-    // minima, and the tie rule verbatim in SQL, so selection is
-    // hash-gated position by position
-    "winnow_fingerprints" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      new graft.text.DocumentFingerprinter().setInputCol("text")
-        .setK(9).setWindow(4).transform(docs)
-        .select(col("doc_id"), explode(col("fingerprints")).as("fp"))
-        .select(col("doc_id"), col("fp.pos").cast("long").as("pos"),
-          col("fp.hash").as("hash"))
-    },
-
-    // Stupid-backoff trigram LM (Brants et al. 2007) at deliberately
-    // tiny budgets (vocab 16 / 32 grams per order) so BOTH the pruning
-    // rule and the full backoff chain are exercised; the oracle replays
-    // table construction, pruning, and the 0.4-per-skip chain in SQL.
-    // Per-order hit counts are exact integers; the cross-entropy gates
-    // in its q4 form (count-ratio scores are exact doubles, ln/sum drift
-    // sits ~8 orders below the rounding step — lm_perplexity precedent)
-    "sb_perplexity" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      new graft.text.StupidBackoffLM().setInputCol("text").setMaxOrder(3)
-        .setVocabSize(16).setGramBudget(32)
-        .fit(docs).transform(docs)
-        .select(col("doc_id"), col("sb_n_tokens"), col("sb_hits_1"),
-          col("sb_hits_2"), col("sb_hits_3"), col("sb_ce_q4"))
-    },
-
-    // ExactSubstr dedup (Lee et al. 2022): every 5-token span repeated
-    // anywhere in the corpus is removed from every doc; gated on the
-    // full span accounting AND the cleaned text byte-for-byte (the
-    // oracle replays with exact window text, so a 64-bit window-hash
-    // collision on the Spark side would be caught here)
-    "exact_substring" -> { (s, dir) =>
-      new graft.text.ExactSubstringDeduplicator().setInputCol("text")
-        .setMinMatchTokens(5)
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("es_n_tokens"), col("es_n_windows"),
-          col("es_n_dup_windows"), col("es_n_spans"),
-          col("es_n_dup_tokens"), col("es_dup_frac_q4"), col("es_text"))
-    },
-
-    // DSIR importance resampling (Xie et al. 2023): bigram LMs fitted on
-    // the src0 slice (target) and the full corpus (raw); per-doc log
-    // importance ratio q4-gated, selection at ratio >= 0
-    "dsir_score" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-      new graft.text.DSIRScorer().setInputCol("text")
-        .setTargetPredicate("source = 'src0'").setVocabSize(16)
-        .fit(docs).transform(docs)
-        .select(col("doc_id"), col("dsir_n_tokens"),
-          col("dsir_logratio_q4"),
-          col("dsir_selected").cast("int").as("dsir_selected"))
-    },
-
-    // CCNet-style line-level dedup over synthesized multi-line text (the
-    // corpus is single-line): each doc gains a shared boilerplate line
-    // (one of 3 variants -> corpus-repeated, removed) and a unique tail
-    // (kept); repeated original texts dedup too, identically in both
-    // engines. The oracle replays with exact line text, so Spark's
-    // 64-bit line-hash path is collision-checked by the gate
-    "line_dedup" -> { (s, dir) =>
-      val t2 = concat_ws("\n", col("text"),
-        concat(lit("boilerplate-"), (col("doc_id") % 3).cast("string")),
-        concat(lit("unique-"), col("doc_id").cast("string")))
-      new graft.text.LineDeduplicator().setInputCol("__t2")
-        .transform(tbl(s, dir, "documents").withColumn("__t2", t2))
-        .select(col("doc_id"), col("ld_n_lines"), col("ld_n_dup_lines"),
-          col("ld_text"))
-    },
-
-    // SITE-scoped boilerplate removal with document-frequency counting
-    // (round 15): `sitebp-<source>` repeats across every doc of a
-    // source -> removed; `xdom-<doc_id/20>` is unique within each
-    // source but shared ACROSS all 20 sources -> kept (corpus-wide
-    // counting would kill it); `twice-<doc_id>` appears twice inside
-    // ONE doc only -> kept under docs-once counting (raw occurrences
-    // would kill both copies); `unique-<doc_id>` always kept
-    "line_dedup_scoped" -> { (s, dir) =>
-      val t2 = concat_ws("\n", col("text"),
-        concat(lit("sitebp-"), col("source")),
-        concat(lit("xdom-"),
-          floor(col("doc_id") / 20).cast("long").cast("string")),
-        concat(lit("twice-"), col("doc_id").cast("string")),
-        concat(lit("twice-"), col("doc_id").cast("string")),
-        concat(lit("unique-"), col("doc_id").cast("string")))
-      new graft.text.LineDeduplicator().setInputCol("__t2")
-        .setScopeCol("source").setCountDocsOnce(true)
-        .transform(tbl(s, dir, "documents").withColumn("__t2", t2))
-        .select(col("doc_id"), col("ld_n_lines"), col("ld_n_dup_lines"),
-          col("ld_text"))
-    },
-
-    // deterministic global training-order shuffle: dense positions in
-    // md5(id || ':' || seed) order — the hash is the public contract, so
-    // the oracle reproduces the exact permutation
-    "corpus_shuffle" -> { (s, dir) =>
-      new graft.text.CorpusShuffler().setIdCol("doc_id")
-        .transform(tbl(s, dir, "documents").select("doc_id"))
-        .select(col("doc_id"), col("shuffle_pos"))
-    },
-
-    // PII redaction over deterministically synthesized PII (the corpus
-    // has none): email/phone/ip/ssn spans derived from doc_id are
-    // appended identically in the oracle SQL, then both engines redact —
-    // the gate checks the real regex chain byte-for-byte
-    "pii_redact" -> { (s, dir) =>
-      val id = col("doc_id")
-      val synth = concat(col("text"),
-        lit(" contact user"), id.cast("string"),
-        lit("@mail.example.com or +1 555-"),
-        lpad((id % 1000).cast("string"), 3, "0"), lit("-"),
-        lpad(((id * 7) % 10000).cast("string"), 4, "0"),
-        lit(" ip 10.0."), (id % 256).cast("string"),
-        lit("."), ((id * 3) % 256).cast("string"),
-        lit(" ssn "), lpad(((id % 900) + 100).cast("string"), 3, "0"),
-        lit("-"), lpad(((id % 90) + 10).cast("string"), 2, "0"),
-        lit("-"), lpad(((id * 13) % 10000).cast("string"), 4, "0"))
-      new PIIRedactor().setInputCol("__pii").setOutputCol("redacted")
-        .transform(tbl(s, dir, "documents").withColumn("__pii", synth))
-        .select(col("doc_id"), col("redacted"))
-    },
-
-    // Gopher-style repetition signals — all integer or q4-scaled outputs
-    "repetition_signals" -> { (s, dir) =>
-      new RepetitionProfiler().setInputCol("text")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("n_words"), col("dup_word_q4"),
-          col("top_2gram_count"), col("top_2gram_q4"), col("dup_2gram_q4"))
-    },
-
-    // Full Gopher repetition-removal set over synthesized structure
-    // (the corpus is single-line): a line duplicated on id%3, a
-    // paragraph duplicated on id%4, and a 10-word phrase repeated on
-    // id%5 (drives the 5..10-gram overlap-aware coverage); the oracle
-    // rebuilds the same text and recomputes all 16 columns
-    "gopher_repetition" -> { (s, dir) =>
-      val id = col("doc_id")
-      val rep10 =
-        "one two three four five six seven eight nine ten"
-      val t2 = concat_ws("\n\n",
-        concat_ws("\n",
-          col("text"),
-          lit("the same exact line repeats here"),
-          when(id % 3 === 0, lit("the same exact line repeats here"))
-            .otherwise(concat(lit("distinct closing line "),
-              id.cast("string")))),
-        when(id % 4 === 0, lit("para block alpha\npara block beta"))
-          .otherwise(concat(lit("para body "), id.cast("string"))),
-        lit("para block alpha\npara block beta"),
-        when(id % 5 === 0, lit(s"$rep10 filler word $rep10"))
-          .otherwise(concat(lit("tail words close page "),
-            id.cast("string"))))
-      new graft.text.GopherRepetition().setInputCol("__t2")
-        .transform(tbl(s, dir, "documents").withColumn("__t2", t2))
-        .select(col("doc_id") +:
-          graft.text.GopherRepetition.fields.map(f => col(f._1)): _*)
-    },
-
-    // The complete Gopher Table-A1 removal rule over fully synthesized
-    // docs: a priority CASE plants one violation class per prime mod —
-    // %7 word count, %11 dup n-grams, %13 bullet lines, %17 no stop
-    // words, %19 symbol ratio, %23 ellipsis lines, %29 duplicate lines
-    // — else a clean 64-word body; the oracle rebuilds the text and
-    // replays every threshold as exact q4 integer comparisons
-    "gopher_filter" -> { (s, dir) =>
-      val id = col("doc_id")
-      val bodyWords = concat_ws(" ",
-        org.apache.spark.sql.functions.transform(
-          sequence(lit(1), lit(60)),
-          i => concat(lit("wrd"), ((id * 31 + i) % 97).cast("string"))))
-      val body = concat(bodyWords, lit(" the and of that"))
-      val phrase6 = lit(
-        ("alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-          "lambda mu ") * 6)
-      val bullets = concat_ws("\n",
-        org.apache.spark.sql.functions.transform(
-          sequence(lit(1), lit(30)),
-          j => concat(lit("•filler item"), (id + j).cast("string"))))
-      val ellipsisLines = concat_ws("\n",
-        org.apache.spark.sql.functions.transform(
-          sequence(lit(1), lit(5)),
-          j => concat(lit("more to come "), (id + j).cast("string"),
-            lit("..."))))
-      val dupLines = lit(
-        List.fill(8)("repeated filler line here").mkString("\n"))
-      val t2 = when(id % 7 === 0, lit("tiny doc the and"))
-        .when(id % 11 === 0, concat(body, lit(" "), phrase6))
-        .when(id % 13 === 0, concat(body, lit("\n"), bullets))
-        .when(id % 17 === 0, bodyWords)
-        .when(id % 19 === 0,
-          concat(body, lit(" ### ### ### ### ### ### ### ### ### ###")))
-        .when(id % 23 === 0, concat(body, lit("\n"), ellipsisLines))
-        .when(id % 29 === 0, concat(body, lit("\n"), dupLines))
-        .otherwise(body)
-      new graft.text.GopherQualityFilter().setInputCol("__t2")
-        .transform(tbl(s, dir, "documents").withColumn("__t2", t2))
-        .select(col("doc_id"))
-    },
-
-    // deterministic domain-mixture sampling: md5-hex-prefix thresholds
-    // per source (1.0/0.75/0.5/0.25/0.1, default 0.125) — the kept set is
-    // a pure function of (doc_id, salt), independent of partitioning
-    "domain_mixture" -> { (s, dir) =>
-      new DomainMixtureSampler().setIdCol("doc_id").setDomainCol("source")
-        .setWeights(Map("src0" -> 1.0, "src1" -> 0.75, "src2" -> 0.5,
-          "src3" -> 0.25, "src4" -> 0.1))
-        .setDefaultWeight(0.125).setSalt("mix")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("source"))
-    },
-
-    // Temperature-scaled mixture over SKEWED derived domains (the
-    // fixture's source column is uniform, which would degenerate to
-    // plain fraction sampling): d0/d1/d2 get one doc_id%16 class each,
-    // d3 the other thirteen — so the gate exercises both the n^tau
-    // flattening and the rate-1 cap, and the oracle recomputes the
-    // histogram, the normalization, and the hex thresholds generically
-    // deterministic per-domain upsampling (repeat factors): d0 gets 2
-    // copies + a deterministic half a third, d1 exactly 1, d2 a
-    // deterministic quarter, d3 dropped — multi-epoch, identity,
-    // fractional-downsample, and drop in one gate; the oracle replays
-    // copies = floor(w) + (md5 < hexThreshold(frac(w))) and unnests
-    // range(0, copies)
-    "domain_upsample" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").withColumn("dom",
-        concat(lit("d"), least(pmod(col("doc_id"), lit(16)), lit(3))
-          .cast("string")))
-      new graft.text.DomainUpsampler().setIdCol("doc_id")
-        .setDomainCol("dom").setSalt("up")
-        .setWeights(Map("d0" -> 2.5, "d1" -> 1.0, "d2" -> 0.25, "d3" -> 0.0))
-        .transform(docs)
-        .select(col("doc_id"), col("epoch"))
-    },
-
-    "temperature_mixture" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents").withColumn("dom",
-        concat(lit("d"), least(pmod(col("doc_id"), lit(16)), lit(3))
-          .cast("string")))
-      new graft.text.TemperatureSampler().setIdCol("doc_id")
-        .setDomainCol("dom").setTemperature(0.5).setTargetFraction(0.5)
-        .setSalt("tmix")
-        .transform(docs)
-        .select(col("doc_id"))
-    },
-
-    // Token-budget mixture over the same skewed derived domains, with a
-    // synthetic per-doc token count: d0 capped under its total (a real
-    // fractional rate), d1 budgeted far above it (degenerates to
-    // keep-all), d2 budget 0 (dropped), d3 unlisted with the uncapped
-    // default; the oracle recomputes the totals, the min(1, b/t) rate,
-    // and the floor(r*2^32) hex threshold generically
-    "token_budget_mixture" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-        .withColumn("dom", concat(lit("d"),
-          least(pmod(col("doc_id"), lit(16)), lit(3)).cast("string")))
-        .withColumn("n_toks", pmod(col("doc_id"), lit(97)) + 20)
-      new graft.text.TokenBudgetSampler().setIdCol("doc_id")
-        .setDomainCol("dom").setTokensCol("n_toks")
-        .setBudgets(Map("d0" -> 4000L, "d1" -> 99999999L, "d2" -> 0L))
-        .setDefaultBudget(-1L).setSalt("tok")
-        .transform(docs)
-        .select(col("doc_id"), col("dom"))
-    },
-
-    // Deterministic disjoint splits: dyadic fractions make every
-    // cumulative boundary exact in double, so the oracle replays the
-    // thresholds as hex literals; the leftover 12.5% asserts the
-    // explicit NULL (unassigned) band
-    "deterministic_split" -> { (s, dir) =>
-      new graft.text.DeterministicSplitter().setIdCol("doc_id")
-        .setSplits(Map("train" -> 0.75, "val" -> 0.125)).setSalt("sp")
-        .transform(tbl(s, dir, "documents"))
-        .select(col("doc_id"), col("split"))
-    },
-
-    // exact mode: md5-ordered greedy prefix per domain under a hard
-    // token cap (keep iff tokens BEFORE the doc are under budget);
-    // d0 capped, d1 budget 0 (dropped), d2/d3 uncapped default; the
-    // oracle replays the window cumulative sum on the same (md5, id)
-    // order
-    "token_budget_exact" -> { (s, dir) =>
-      val docs = tbl(s, dir, "documents")
-        .withColumn("dom", concat(lit("d"),
-          least(pmod(col("doc_id"), lit(16)), lit(3)).cast("string")))
-        .withColumn("n_toks", pmod(col("doc_id"), lit(97)) + 20)
-      new graft.text.TokenBudgetSampler().setIdCol("doc_id")
-        .setDomainCol("dom").setTokensCol("n_toks")
-        .setBudgets(Map("d0" -> 1000L, "d1" -> 0L))
-        .setDefaultBudget(-1L).setSalt("tok").setExact(true)
-        .transform(docs)
-        .select(col("doc_id"), col("dom"))
-    }
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  // shared between lm_perplexity and the ccnet_buckets wrapper
-  private val lmPerplexitySql: String =
-    """WITH tok AS (
-          |  SELECT doc_id, unnest(list_filter(
-          |    string_split_regex(lower(trim(text)), '\s+'),
-          |    x -> x <> '')) AS t
-          |  FROM documents),
-          |cnt AS (SELECT t, COUNT(*) AS c FROM tok GROUP BY t),
-          |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nb FROM cnt),
-          |vocab AS (SELECT t, c FROM (
-          |    SELECT t, c, row_number() OVER (ORDER BY c DESC, t) AS rn
-          |    FROM cnt) WHERE rn <= 16),
-          |vs AS (SELECT CAST(COUNT(*) AS BIGINT) AS v,
-          |    CAST(SUM(c) AS BIGINT) AS cv FROM vocab),
-          |par AS (SELECT
-          |    CAST(tot.nb AS DOUBLE) + 1.0 * (vs.v + 1) AS denom,
-          |    CAST(tot.nb - vs.cv AS DOUBLE) + 1.0 AS unknum
-          |  FROM tot CROSS JOIN vs),
-          |sc AS (
-          |  SELECT tok.doc_id, COUNT(*) AS n_tok,
-          |    SUM(CASE WHEN vocab.t IS NULL THEN 1 ELSE 0 END) AS n_oov,
-          |    SUM(-ln((CASE WHEN vocab.t IS NULL THEN par.unknum
-          |      ELSE CAST(vocab.c AS DOUBLE) + 1.0 END) / par.denom)) AS s
-          |  FROM tok LEFT JOIN vocab ON tok.t = vocab.t CROSS JOIN par
-          |  GROUP BY tok.doc_id)
-          |SELECT d.doc_id,
-          |  CAST(COALESCE(sc.n_tok, 0) AS BIGINT) AS lm_n_tokens,
-          |  CAST(COALESCE(sc.n_oov, 0) AS BIGINT) AS lm_n_oov,
-          |  CAST(COALESCE(FLOOR(sc.s / sc.n_tok * 10000 + 0.5), 0) AS BIGINT)
-          |    AS lm_ce_q4
-          |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin
-
-  /** Shared DuckDB CTE block: every Gopher repetition signal computed
-    * from a `docs(doc_id, t2)` head CTE — line/paragraph duplicate
-    * stats, word positions, top-{2,3,4}-gram char counts, and
-    * overlap-aware dup-{5..10}-gram char coverage. Used by both the
-    * `gopher_repetition` signal oracle and the `gopher_filter`
-    * threshold-rule oracle. */
-  private val GopherRepetitionCtes: String =
-    """dstat AS (
-      |  SELECT doc_id, len(t2) AS dch FROM docs),
-      |lraw AS (
-      |  SELECT doc_id, unnest(string_split(t2, chr(10))) AS l FROM docs),
-      |lg AS (
-      |  SELECT doc_id, len(trim(l)) AS lc, count(*) AS c
-      |  FROM lraw WHERE trim(l) <> '' GROUP BY doc_id, trim(l), len(trim(l))),
-      |lstat AS (
-      |  SELECT doc_id, sum(c) AS nl,
-      |    sum(c - 1) AS ldup, sum((c - 1) * lc) AS ldupch
-      |  FROM lg GROUP BY 1),
-      |praw AS (
-      |  SELECT doc_id, unnest(string_split_regex(t2, '\n{2,}')) AS p
-      |  FROM docs),
-      |pg AS (
-      |  SELECT doc_id, len(trim(p)) AS pc, count(*) AS c
-      |  FROM praw WHERE trim(p) <> '' GROUP BY doc_id, trim(p), len(trim(p))),
-      |pstat AS (
-      |  SELECT doc_id, sum(c) AS np,
-      |    sum(c - 1) AS pdup, sum((c - 1) * pc) AS pdupch
-      |  FROM pg GROUP BY 1),
-      |toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(trim(t2), '\s+'),
-      |      x -> x <> '') AS t
-      |  FROM docs),
-      |wstat AS (
-      |  SELECT doc_id, len(t) AS nw,
-      |    COALESCE(list_sum(list_transform(t, x -> len(x))), 0) AS twc
-      |  FROM toks),
-      |wpos AS (
-      |  SELECT doc_id, i, t[i] AS w
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i
-      |        FROM toks)),
-      |g2 AS (SELECT doc_id, array_to_string(list_slice(t, i, i + 1), ' ')
-      |    AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks)),
-      |tp2 AS (SELECT doc_id, tc2 FROM (
-      |  SELECT doc_id, count(*) * len(g) AS tc2,
-      |    row_number() OVER (PARTITION BY doc_id
-      |      ORDER BY count(*) DESC, g ASC) AS rn
-      |  FROM g2 GROUP BY doc_id, g) WHERE rn = 1),
-      |g3 AS (SELECT doc_id, array_to_string(list_slice(t, i, i + 2), ' ')
-      |    AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-      |        FROM toks)),
-      |tp3 AS (SELECT doc_id, tc3 FROM (
-      |  SELECT doc_id, count(*) * len(g) AS tc3,
-      |    row_number() OVER (PARTITION BY doc_id
-      |      ORDER BY count(*) DESC, g ASC) AS rn
-      |  FROM g3 GROUP BY doc_id, g) WHERE rn = 1),
-      |g4 AS (SELECT doc_id, array_to_string(list_slice(t, i, i + 3), ' ')
-      |    AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 2)) AS i
-      |        FROM toks)),
-      |tp4 AS (SELECT doc_id, tc4 FROM (
-      |  SELECT doc_id, count(*) * len(g) AS tc4,
-      |    row_number() OVER (PARTITION BY doc_id
-      |      ORDER BY count(*) DESC, g ASC) AS rn
-      |  FROM g4 GROUP BY doc_id, g) WHERE rn = 1),
-      |g5 AS (SELECT doc_id, i,
-      |    array_to_string(list_slice(t, i, i + 4), ' ') AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i
-      |        FROM toks)),
-      |d5 AS (SELECT DISTINCT doc_id, c.i + u.j AS p
-      |  FROM (SELECT doc_id, i,
-      |      count(*) OVER (PARTITION BY doc_id, g) AS cc FROM g5) c,
-      |    unnest(range(0, 5)) AS u(j) WHERE c.cc > 1),
-      |s5 AS (SELECT d.doc_id, sum(len(w.w)) AS dc5
-      |  FROM d5 d JOIN wpos w ON d.doc_id = w.doc_id AND d.p = w.i
-      |  GROUP BY 1),
-      |g6 AS (SELECT doc_id, i,
-      |    array_to_string(list_slice(t, i, i + 5), ' ') AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 4)) AS i
-      |        FROM toks)),
-      |d6 AS (SELECT DISTINCT doc_id, c.i + u.j AS p
-      |  FROM (SELECT doc_id, i,
-      |      count(*) OVER (PARTITION BY doc_id, g) AS cc FROM g6) c,
-      |    unnest(range(0, 6)) AS u(j) WHERE c.cc > 1),
-      |s6 AS (SELECT d.doc_id, sum(len(w.w)) AS dc6
-      |  FROM d6 d JOIN wpos w ON d.doc_id = w.doc_id AND d.p = w.i
-      |  GROUP BY 1),
-      |g7 AS (SELECT doc_id, i,
-      |    array_to_string(list_slice(t, i, i + 6), ' ') AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 5)) AS i
-      |        FROM toks)),
-      |d7 AS (SELECT DISTINCT doc_id, c.i + u.j AS p
-      |  FROM (SELECT doc_id, i,
-      |      count(*) OVER (PARTITION BY doc_id, g) AS cc FROM g7) c,
-      |    unnest(range(0, 7)) AS u(j) WHERE c.cc > 1),
-      |s7 AS (SELECT d.doc_id, sum(len(w.w)) AS dc7
-      |  FROM d7 d JOIN wpos w ON d.doc_id = w.doc_id AND d.p = w.i
-      |  GROUP BY 1),
-      |g8 AS (SELECT doc_id, i,
-      |    array_to_string(list_slice(t, i, i + 7), ' ') AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS i
-      |        FROM toks)),
-      |d8 AS (SELECT DISTINCT doc_id, c.i + u.j AS p
-      |  FROM (SELECT doc_id, i,
-      |      count(*) OVER (PARTITION BY doc_id, g) AS cc FROM g8) c,
-      |    unnest(range(0, 8)) AS u(j) WHERE c.cc > 1),
-      |s8 AS (SELECT d.doc_id, sum(len(w.w)) AS dc8
-      |  FROM d8 d JOIN wpos w ON d.doc_id = w.doc_id AND d.p = w.i
-      |  GROUP BY 1),
-      |g9 AS (SELECT doc_id, i,
-      |    array_to_string(list_slice(t, i, i + 8), ' ') AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 7)) AS i
-      |        FROM toks)),
-      |d9 AS (SELECT DISTINCT doc_id, c.i + u.j AS p
-      |  FROM (SELECT doc_id, i,
-      |      count(*) OVER (PARTITION BY doc_id, g) AS cc FROM g9) c,
-      |    unnest(range(0, 9)) AS u(j) WHERE c.cc > 1),
-      |s9 AS (SELECT d.doc_id, sum(len(w.w)) AS dc9
-      |  FROM d9 d JOIN wpos w ON d.doc_id = w.doc_id AND d.p = w.i
-      |  GROUP BY 1),
-      |g10 AS (SELECT doc_id, i,
-      |    array_to_string(list_slice(t, i, i + 9), ' ') AS g
-      |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 8)) AS i
-      |        FROM toks)),
-      |d10 AS (SELECT DISTINCT doc_id, c.i + u.j AS p
-      |  FROM (SELECT doc_id, i,
-      |      count(*) OVER (PARTITION BY doc_id, g) AS cc FROM g10) c,
-      |    unnest(range(0, 10)) AS u(j) WHERE c.cc > 1),
-      |s10 AS (SELECT d.doc_id, sum(len(w.w)) AS dc10
-      |  FROM d10 d JOIN wpos w ON d.doc_id = w.doc_id AND d.p = w.i
-      |  GROUP BY 1)""".stripMargin
-
-  /** the library's q4 fraction convention in DuckDB SQL */
-  private def q4sql(num: String, den: String): String =
-    s"CAST(floor(CAST($num AS DOUBLE) / CAST($den AS DOUBLE)" +
-      " * 10000.0 + 0.5) AS BIGINT)"
-
+  /** Every gate's query, by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    GateRegistry.all.map(g => g.name -> g.query).toMap
+
+  /** The DuckDB oracle of every gate that has one, by name. */
   def oracleSql: Map[String, String] =
-    // the foreachBatch (two-tier, large-index) run of the SAME fixture
-    // decides identically to the broadcast DSL path — one oracle serves
-    // both (Bloom tier 1 has no false negatives; tier 2 verifies the
-    // same signature agreement)
-    oracleSqlBase +
-      ("dedup_minhash_stream_fb" -> oracleSqlBase("dedup_minhash_stream")) +
-      // the semantic face's two-tier run: the occupied-cell BitSet is
-      // exact and the tier-2 verify is the same cosine rule, so the
-      // all-pairs oracle serves it verbatim too
-      ("semdedup_stream_fb" -> oracleSqlBase("semdedup_stream")) +
-      // the chained run collapses the %8==4 copies at the exact-text
-      // stage instead of the in-stream embedding state, but the copies
-      // are identical in BOTH text and vector, so the surviving
-      // base-id set is the same all-pairs decision set
-      ("semdedup_stream_chained" -> oracleSqlBase("semdedup_stream"))
-
-  private lazy val oracleSqlBase: Map[String, String] = Map(
-    "featurize_datetime" ->
-      """SELECT o_orderkey,
-        |  epoch_ms(CAST(o_orderdate AS TIMESTAMP)) AS epoch_ms,
-        |  CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |  CAST(isodow(o_orderdate) AS BIGINT) AS dow,
-        |  CAST(month(o_orderdate) AS BIGINT) AS mo,
-        |  CAST(day(o_orderdate) AS BIGINT) AS dom
-        |FROM orders""".stripMargin,
-
-    "featurize_timestamp" ->
-      """SELECT event_id,
-        |  epoch_ms(ts) AS epoch_ms,
-        |  CAST(year(ts) AS BIGINT) AS yr,
-        |  CAST(isodow(ts) AS BIGINT) AS dow,
-        |  CAST(month(ts) AS BIGINT) AS mo,
-        |  CAST(day(ts) AS BIGINT) AS dom,
-        |  CAST(hour(ts) AS BIGINT) AS hr,
-        |  CAST(minute(ts) AS BIGINT) AS mi,
-        |  CAST(second(ts) AS BIGINT) AS sec
-        |FROM events""".stripMargin,
-
-    // closed-vocab TF long form; term -> bucket constants from
-    // HashingTF.indexOf (public murmur mapping), collision-checked
-    "text_featurizer" -> {
-      val inList = TextFeaturizerGate.Terms.map(t => s"'$t'").mkString(", ")
-      val cases = TextFeaturizerGate.termIndices
-        .map { case (t, i) => s"WHEN '$t' THEN $i" }.mkString(" ")
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(
-         |    regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f]+'),
-         |    t -> t IN ($inList))) AS tok
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(CASE tok $cases END AS INTEGER) AS feat_idx,
-         |  CAST(COUNT(*) AS BIGINT) AS tf
-         |FROM toks GROUP BY 1, 2""".stripMargin
-    },
-
-    // planted-anomaly symmetric differences are exactly empty
-    "isolation_forest" -> "SELECT CAST(0 AS BIGINT) AS mismatches",
-    "access_anomaly_planted" -> "SELECT CAST(0 AS BIGINT) AS mismatches",
-    "sr_anomalies" -> "SELECT CAST(0 AS BIGINT) AS mismatches",
-
-    // CV best model trained on a separable OR-rule predicts the rule
-    "tune_hyperparameters" ->
-      """SELECT event_id,
-        |  CAST(CASE WHEN value > 250 OR user_id % 2 = 0
-        |    THEN 1.0 ELSE 0.0 END AS DOUBLE) AS prediction
-        |FROM events""".stripMargin,
-
-    // trained-on-separable-rule predictions == the rule itself
-    "train_classifier" ->
-      """SELECT event_id, 'c' || CAST(
-        |  (CASE WHEN value > 250 THEN 2 ELSE 0 END) +
-        |  (CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-        |  AS INTEGER) AS predicted_label
-        |FROM events""".stripMargin,
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST((l_extendedprice * (1.0 - l_discount)) * (1.0 + l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1996-03-15 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1996-03-15 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY n_name""".stripMargin,
-
-    "window_topk_per_user" ->
-      """SELECT user_id, event_id, value, CAST(rn AS INTEGER) AS rn FROM (
-        |  SELECT user_id, event_id, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rn
-        |  FROM events) WHERE rn <= 3""".stripMargin,
-
-    "select_columns" ->
-      "SELECT p_partkey, p_name, p_retailprice FROM part",
-
-    "drop_columns" ->
-      "SELECT n_nationkey, n_name FROM nation",
-
-    "rename_column" ->
-      "SELECT r_regionkey, r_name AS region_name FROM region",
-
-    "explode_words" ->
-      "SELECT p_partkey, unnest(string_split(p_type, ' ')) AS word FROM part",
-
-    "data_conversion" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(l_quantity AS INTEGER) AS l_quantity,
-        |  strftime(l_shipdate, '%Y-%m-%d') AS l_shipdate
-        |FROM lineitem""".stripMargin,
-
-    "lambda_udf" ->
-      """SELECT event_id, value, value * 2.0 AS value_x2
-        |FROM events WHERE value > 100.0""".stripMargin,
-
-    "repartition_stage" ->
-      "SELECT event_id, event_type FROM events",
-
-    "partition_consolidator" ->
-      "SELECT event_id, event_type, value FROM events",
-
-    "stratified_repartition" ->
-      "SELECT event_id, user_id, event_type, value, props FROM events",
-
-    "minibatch_roundtrip" ->
-      "SELECT event_id, event_type, value FROM events",
-
-    "summarize_counts" ->
-      """SELECT 'l_quantity' AS Feature, CAST(count(l_quantity) AS DOUBLE) AS count,
-        |  CAST(count(DISTINCT l_quantity) AS DOUBLE) AS "unique",
-        |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS DOUBLE) AS missing
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'l_discount', CAST(count(l_discount) AS DOUBLE),
-        |  CAST(count(DISTINCT l_discount) AS DOUBLE),
-        |  CAST(sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'l_returnflag', CAST(count(l_returnflag) AS DOUBLE),
-        |  CAST(count(DISTINCT l_returnflag) AS DOUBLE),
-        |  CAST(sum(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |FROM lineitem""".stripMargin,
-
-    "class_balancer" ->
-      """WITH c AS (SELECT event_type, count(*) AS cnt FROM events GROUP BY event_type),
-        |m AS (SELECT max(cnt) AS mx FROM c)
-        |SELECT e.event_id, e.event_type, CAST(m.mx AS DOUBLE) / c.cnt AS weight
-        |FROM events e JOIN c ON e.event_type = c.event_type CROSS JOIN m""".stripMargin,
-
-    "ensemble_by_key" ->
-      """SELECT user_id,
-        |  CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE) / COUNT(value) AS mean_value
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    "clean_missing_data" ->
-      """SELECT event_id, COALESCE(value,
-        |  (SELECT CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE) / COUNT(value)
-        |   FROM events)) AS value
-        |FROM events""".stripMargin,
-
-    "value_indexer" ->
-      """WITH lv AS (SELECT event_type AS v,
-        |  CAST(row_number() OVER (ORDER BY event_type) - 1 AS INTEGER) AS idx
-        |  FROM (SELECT DISTINCT event_type FROM events))
-        |SELECT e.event_id, e.event_type, lv.idx AS event_type_idx
-        |FROM events e JOIN lv ON e.event_type = lv.v""".stripMargin,
-
-    "index_to_value" ->
-      "SELECT event_id, event_type, event_type AS event_type_rt FROM events",
-
-    "unicode_normalize" ->
-      "SELECT doc_id, lower(nfc_normalize(text)) AS text_norm FROM documents",
-
-    "text_preprocessor" ->
-      """SELECT doc_id,
-        |  replace(replace(text, 'scan', 'SCAN'), 'join', 'JOIN') AS text_repl
-        |FROM documents""".stripMargin,
-
-    "doc_token_count" ->
-      """SELECT doc_id,
-        |  len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-        |  md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp_md5
-        |FROM documents""".stripMargin,
-
-    // exact decimal-power-sum moments, formulas mirrored term-by-term
-    "summarize_full" -> {
-      def statsFor(c: String): String =
-        s"""SELECT '$c' AS "Feature", n AS "count", u AS "unique",
-           |  miss AS "missing",
-           |  s1 / n AS mean,
-           |  (s2 - n * ((s1/n) * (s1/n))) / (n - 1.0) AS variance,
-           |  SQRT((s2 - n * ((s1/n) * (s1/n))) / (n - 1.0)) AS stddev,
-           |  (s3/n - 3.0 * (s1/n) * (s2/n) + 2.0 * (s1/n) * (s1/n) * (s1/n))
-           |    / ((s2/n - (s1/n)*(s1/n)) * SQRT(s2/n - (s1/n)*(s1/n)))
-           |    AS skewness,
-           |  (s4/n - 4.0 * (s1/n) * (s3/n) + 6.0 * ((s1/n)*(s1/n)) * (s2/n)
-           |    - 3.0 * (((s1/n)*(s1/n)) * ((s1/n)*(s1/n))))
-           |    / ((s2/n - (s1/n)*(s1/n)) * (s2/n - (s1/n)*(s1/n))) - 3.0
-           |    AS kurtosis
-           |FROM (
-           |  SELECT CAST(COUNT(x) AS DOUBLE) AS n,
-           |    CAST(COUNT(DISTINCT x) AS DOUBLE) AS u,
-           |    CAST(SUM(CASE WHEN x IS NULL THEN 1 ELSE 0 END) AS DOUBLE) AS miss,
-           |    CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE) AS s1,
-           |    CAST(SUM(CAST(x*x AS DECIMAL(30,8))) AS DOUBLE) AS s2,
-           |    CAST(SUM(CAST((x*x)*x AS DECIMAL(30,8))) AS DOUBLE) AS s3,
-           |    CAST(SUM(CAST((x*x)*(x*x) AS DECIMAL(30,8))) AS DOUBLE) AS s4
-           |  FROM (SELECT CAST($c AS DOUBLE) AS x FROM lineitem))""".stripMargin
-      Seq("l_quantity", "l_discount", "l_tax").map(statsFor)
-        .mkString("", "\nUNION ALL\n", "\nUNION ALL\n") +
-        """SELECT 'l_returnflag' AS "Feature",
-          |  CAST(COUNT(l_returnflag) AS DOUBLE) AS "count",
-          |  CAST(COUNT(DISTINCT l_returnflag) AS DOUBLE) AS "unique",
-          |  CAST(SUM(CASE WHEN l_returnflag IS NULL THEN 1 ELSE 0 END)
-          |    AS DOUBLE) AS "missing",
-          |  CAST(NULL AS DOUBLE) AS mean, CAST(NULL AS DOUBLE) AS variance,
-          |  CAST(NULL AS DOUBLE) AS stddev, CAST(NULL AS DOUBLE) AS skewness,
-          |  CAST(NULL AS DOUBLE) AS kurtosis
-          |FROM lineitem""".stripMargin
-    },
-
-    // Integer-derived columns only: counts are exact BIGINTs; quality is
-    // hashed as quality_q4 = floor(q*1e4 + 0.5) computed from the same
-    // integers in the same fixed operation order on both sides (floor has
-    // no decimal-tie semantics, unlike round(x,6), so it survives DuckDB
-    // version drift); lang-id tokenization uses a literal letter class
-    // instead of the Unicode-table-dependent \p{L}.
-    "doc_stats" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    CAST(length(text) AS DOUBLE) AS len_d,
-        |    string_split_regex(trim(text), '\s+') AS toks,
-        |    string_split_regex(lower(trim(text)), '\s+') AS ltoks,
-        |    string_split_regex(lower(text),
-        |      '[^a-zàâçèéêëîïôùûüáíóúñäöß]+') AS wtoks
-        |  FROM documents),
-        |counted AS (
-        |  SELECT doc_id, len_d, len(toks) AS n_tokens,
-        |    -- CAST the list_sum: DuckDB widens BIGINT sums to HUGEINT,
-        |    -- which pandas/arrow-side compares render as float64 ("42.0"
-        |    -- vs Spark's int64 "42") — the round-5/6 hash-gate red was
-        |    -- exactly this type skew, not a value difference
-        |    CAST(list_sum(list_transform(toks,
-        |      w -> CAST(ceil(length(w) / 4.0) AS BIGINT))) AS BIGINT)
-        |      AS n_tokens_est,
-        |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-        |      AS BIGINT) AS n_alpha,
-        |    CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-        |      AS BIGINT) AS n_punct,
-        |    CAST(len(list_filter(ltoks, t -> list_contains(
-        |      ['the','a','an','and','or','of','to','in','is','it','that',
-        |       'for','on','with','as','at','by','be','this','are'], t)))
-        |      AS BIGINT) AS n_stop,
-        |    CAST(len(ltoks) AS DOUBLE) AS n_ltoks_d,
-        |    CAST(len(list_filter(wtoks, t -> list_contains(
-        |      ['the','and','of','to','is','you','that','it'], t))) AS DOUBLE)
-        |      AS s_en,
-        |    CAST(len(list_filter(wtoks, t -> list_contains(
-        |      ['le','la','les','des','et','est','une','que'], t))) AS DOUBLE)
-        |      + CAST(length(regexp_replace(text, '[^àâçéèêëîïôùûü]', '', 'g'))
-        |        AS DOUBLE) AS s_fr,
-        |    CAST(len(list_filter(wtoks, t -> list_contains(
-        |      ['el','los','las','es','una','que','por','como'], t))) AS DOUBLE)
-        |      + CAST(length(regexp_replace(text, '[^áéíóúñ¿¡]', '', 'g'))
-        |        AS DOUBLE) AS s_es,
-        |    CAST(len(list_filter(wtoks, t -> list_contains(
-        |      ['der','die','das','und','ist','nicht','ein','mit'], t))) AS DOUBLE)
-        |      + CAST(length(regexp_replace(text, '[^äöüß]', '', 'g'))
-        |        AS DOUBLE) AS s_de,
-        |    CAST(length(regexp_replace(text, '[^一-鿿]', '', 'g'))
-        |      AS DOUBLE) * 2 AS s_zh
-        |  FROM base)
-        |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, n_tokens_est,
-        |  n_alpha, n_punct, n_stop,
-        |  CAST(floor(least(1.0,
-        |    CAST(n_alpha AS DOUBLE) / greatest(len_d, 1.0) * 0.4
-        |    + (1.0 - least(
-        |        CAST(n_punct AS DOUBLE) / greatest(len_d, 1.0) * 5, 1.0)) * 0.2
-        |    + CAST(n_stop AS DOUBLE) / greatest(n_ltoks_d, 1.0) * 2.0 * 0.2
-        |    + (CASE WHEN len_d / greatest(n_ltoks_d, 1.0)
-        |        BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.2)
-        |    * 10000.0 + 0.5) AS BIGINT) AS quality_q4,
-        |  CASE greatest(s_en, s_fr, s_es, s_de, s_zh)
-        |    WHEN s_zh THEN 'zh' WHEN s_fr THEN 'fr' WHEN s_es THEN 'es'
-        |    WHEN s_en THEN 'en' ELSE 'de' END AS lang_pred
-        |FROM counted""".stripMargin,
-
-    // PageSplitter greedy cut recurrence via recursive CTE: cut at the
-    // last boundary in (minLen=100, maxLen=200] (regexp strip of the
-    // trailing non-space run finds it), hard cut at maxLen when none
-    "page_splitter" ->
-      """WITH RECURSIVE r AS (
-        |  SELECT doc_id, text, 0 AS off, 0 AS n FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, text,
-        |    off + CASE WHEN last_ws > 0 THEN 100 + last_ws ELSE 200 END,
-        |    n + 1
-        |  FROM (
-        |    SELECT doc_id, text, off, n,
-        |      length(regexp_replace(substring(text, off + 101, 100),
-        |        '[^\s]*$', '')) AS last_ws
-        |    FROM r WHERE length(text) - off > 200) s),
-        |final AS (
-        |  SELECT doc_id, max_by(n, off) AS n, max(off) AS off,
-        |    any_value(length(text)) AS tlen
-        |  FROM r GROUP BY doc_id)
-        |SELECT doc_id,
-        |  CAST(n + CASE WHEN tlen - off > 0 OR n = 0 THEN 1 ELSE 0 END
-        |    AS INTEGER) AS n_pages
-        |FROM final""".stripMargin,
-
-    // overlapping token windows; ceil via floor of exact-int double division
-    "doc_chunks" ->
-      """WITH t AS (SELECT doc_id,
-        |    string_split_regex(trim(text), '\s+') AS toks FROM documents),
-        |n AS (SELECT doc_id, toks,
-        |    CAST(FLOOR((GREATEST(len(toks) - 40, 0) + 29) / CAST(30 AS DOUBLE))
-        |      AS INTEGER) + 1 AS nchunks FROM t)
-        |SELECT doc_id, CAST(i AS INTEGER) AS chunk_id,
-        |  array_to_string(list_slice(toks, i * 30 + 1, i * 30 + 40), ' ')
-        |    AS chunk
-        |FROM (SELECT doc_id, toks, unnest(range(0, nchunks)) AS i FROM n)""".stripMargin,
-
-    "multi_ngram" -> // piecewise so 1-2-token docs stay correct
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' '))
-        |    + GREATEST(len(string_split(text, ' ')) - 1, 0)
-        |    + GREATEST(len(string_split(text, ' ')) - 2, 0) AS INTEGER) AS n_ngrams
-        |FROM documents""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT doc_id, text FROM (
-        |  SELECT doc_id, text, row_number() OVER (
-        |    PARTITION BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |    ORDER BY doc_id) AS rn
-        |  FROM documents) WHERE rn = 1""".stripMargin,
-
-    // same canonical-text partition as dedup_exact; the window order is
-    // (priority, id) instead of id
-    "dedup_exact_priority" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang, row_number() OVER (
-        |    PARTITION BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |    ORDER BY CASE WHEN lang = 'en' THEN 0 ELSE 1 END, doc_id) AS rn
-        |  FROM documents) WHERE rn = 1""".stripMargin,
-
-    // every 3-gram occurrence counted (no dedup within a doc), total
-    // order (cnt desc, gram asc) makes the LIMIT deterministic
-    "frequent_ngrams" ->
-      """WITH g AS (
-        |  SELECT [array_to_string(
-        |      toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ')
-        |      for i in range(1, len(toks) - 1)] AS grams
-        |  FROM (SELECT string_split_regex(lower(trim(text)), '\s+') AS toks
-        |        FROM documents))
-        |SELECT gram, CAST(COUNT(*) AS BIGINT) AS cnt
-        |FROM (SELECT unnest(grams) AS gram FROM g)
-        |GROUP BY gram ORDER BY cnt DESC, gram LIMIT 20""".stripMargin,
-
-    // the three stage replays (dedup_exact, quality_filter,
-    // concat_chunk) chained as CTEs over each other's survivors —
-    // the composition, not just the pieces
-    "curation_e2e" ->
-      """WITH dd AS (
-        |  SELECT doc_id, text FROM (
-        |    SELECT doc_id, text, row_number() OVER (
-        |      PARTITION BY lower(regexp_replace(trim(text), '\s+', ' ', 'g'))
-        |      ORDER BY doc_id) AS rn
-        |    FROM documents) WHERE rn = 1),
-        |qbase AS (
-        |  SELECT doc_id, text,
-        |    CAST(length(text) AS DOUBLE) AS len_d,
-        |    string_split_regex(trim(text), '\s+') AS toks,
-        |    string_split_regex(lower(trim(text)), '\s+') AS ltoks
-        |  FROM dd),
-        |qcnt AS (
-        |  SELECT doc_id, text, len_d, len(toks) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-        |      AS BIGINT) AS n_alpha,
-        |    CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-        |      AS BIGINT) AS n_punct,
-        |    CAST(len(list_filter(ltoks, t -> list_contains(
-        |      ['the','a','an','and','or','of','to','in','is','it','that',
-        |       'for','on','with','as','at','by','be','this','are'], t)))
-        |      AS BIGINT) AS n_stop,
-        |    CAST(len(ltoks) AS DOUBLE) AS n_ltoks_d
-        |  FROM qbase),
-        |surv AS (
-        |  SELECT doc_id, text FROM (
-        |    SELECT doc_id, text, n_tokens, n_stop,
-        |      CAST(floor(least(1.0,
-        |        CAST(n_alpha AS DOUBLE) / greatest(len_d, 1.0) * 0.4
-        |        + (1.0 - least(
-        |            CAST(n_punct AS DOUBLE) / greatest(len_d, 1.0) * 5, 1.0)) * 0.2
-        |        + CAST(n_stop AS DOUBLE) / greatest(n_ltoks_d, 1.0) * 2.0 * 0.2
-        |        + (CASE WHEN len_d / greatest(n_ltoks_d, 1.0)
-        |            BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.2)
-        |        * 10000.0 + 0.5) AS BIGINT) AS q4
-        |    FROM qcnt)
-        |  WHERE n_tokens BETWEEN 40 AND 100000
-        |    AND q4 >= 4000 AND n_stop >= 1),
-        |tok AS (
-        |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':e2e') AS h,
-        |    CAST(len(list_filter(
-        |      string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> x <> '')) AS BIGINT) AS n
-        |  FROM surv),
-        |off AS (SELECT doc_id, n,
-        |    CAST(COALESCE(SUM(n) OVER (ORDER BY h, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS o
-        |  FROM tok),
-        |pieces AS (
-        |  SELECT doc_id, o AS tok_offset, n,
-        |    unnest(range(o // 128, (o + n - 1) // 128 + 1)) AS chunk_id
-        |  FROM off WHERE n > 0)
-        |SELECT doc_id, tok_offset, chunk_id,
-        |  GREATEST(0, chunk_id * 128 - tok_offset) AS tok_start,
-        |  LEAST(n, (chunk_id + 1) * 128 - tok_offset) AS tok_end
-        |FROM pieces""".stripMargin,
-
-    // identical synthesized structure, all ten signal columns recomputed
-    // with the same literal classes and q4 operation order
-    // C4 replay: same planted lines; line filter (terminal punct, >= 3
-    // words, no 'javascript'), then the page rules on the CLEANED text
-    "c4_filter" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    text || chr(10) ||
-        |    CASE WHEN doc_id % 3 = 0 THEN 'This sentence ends properly.'
-        |      ELSE 'no terminal punctuation here' END || chr(10) ||
-        |    CASE WHEN doc_id % 4 = 0 THEN 'Too short.'
-        |      ELSE 'this longer line survives fine.' END || chr(10) ||
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN 'Enable javascript to view this page.'
-        |      ELSE 'another good sentence here.' END || chr(10) ||
-        |    CASE WHEN doc_id % 7 = 0 THEN 'lorem ipsum dolor sit amet.'
-        |      ELSE 'final line of the page.' END || chr(10) ||
-        |    CASE WHEN doc_id % 11 = 0 THEN 'code { margin: 0 }'
-        |      ELSE 'closing remark stands alone.' END || chr(10) ||
-        |    CASE WHEN doc_id % 13 = 0 THEN 'that badword kills pages.'
-        |      ELSE 'a clean finishing line.' END AS t
-        |  FROM documents),
-        |clean AS (
-        |  SELECT doc_id, array_to_string(list_filter(
-        |    string_split(t, chr(10)),
-        |    l -> regexp_matches(trim(l), '[.!?"]$')
-        |     AND len(list_filter(string_split_regex(trim(l), '\s+'),
-        |           w -> w <> '')) >= 3
-        |     AND NOT contains(lower(l), 'javascript')), chr(10)) AS c
-        |  FROM base)
-        |SELECT doc_id, c AS c4_text FROM clean
-        |WHERE (length(c) - length(regexp_replace(c, '[.!?]', '', 'g'))) >= 2
-        |  AND NOT contains(lower(c), 'lorem ipsum')
-        |  AND NOT contains(lower(c), '{')
-        |  AND NOT list_contains(list_filter(
-        |    string_split_regex(lower(c), '\s+'), w -> w <> ''),
-        |    'badword')""".stripMargin,
-
-    "gopher_signals" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    text || chr(10) ||
-        |    CASE WHEN doc_id % 3 = 0
-        |      THEN '- bullet item ' || CAST(doc_id AS VARCHAR)
-        |      ELSE 'plain ' || CAST(doc_id AS VARCHAR) END || chr(10) ||
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN 'to be continued...' ELSE 'the end' END || chr(10) ||
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN '### tags… and more ' || CAST(doc_id AS VARCHAR)
-        |      ELSE 'closing line' END AS t
-        |  FROM documents),
-        |parts AS (
-        |  SELECT doc_id, t,
-        |    list_filter(string_split_regex(trim(t), '\s+'),
-        |      w -> w <> '') AS toks,
-        |    list_filter(list_transform(string_split(t, chr(10)),
-        |      l -> trim(l)), l -> l <> '') AS lns
-        |  FROM base),
-        |cnt AS (
-        |  SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS nw,
-        |    CAST(len(list_filter(toks,
-        |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS naw,
-        |    CAST(length(t) - length(regexp_replace(t, '#', '', 'g'))
-        |      + (length(t) - length(replace(t, '...', ''))) / 3
-        |      + length(t) - length(regexp_replace(t, '…', '', 'g'))
-        |      AS BIGINT) AS nsym,
-        |    CAST(len(lns) AS BIGINT) AS nl,
-        |    CAST(len(list_filter(lns, l -> list_contains(
-        |      ['-', '*', '•', '‣', '▶'], substr(l, 1, 1)))) AS BIGINT) AS nbl,
-        |    CAST(len(list_filter(lns, l -> ends_with(l, '...')
-        |      OR ends_with(l, '…'))) AS BIGINT) AS nel
-        |  FROM parts)
-        |SELECT doc_id,
-        |  nw AS gs_n_words, naw AS gs_n_alpha_words,
-        |  CASE WHEN nw > 0 THEN CAST(FLOOR(CAST(naw AS DOUBLE)
-        |    / CAST(nw AS DOUBLE) * 10000.0 + 0.5) AS BIGINT)
-        |    ELSE 0 END AS gs_alpha_word_q4,
-        |  nsym AS gs_n_symbols,
-        |  CASE WHEN nw > 0 THEN CAST(FLOOR(CAST(nsym AS DOUBLE)
-        |    / CAST(nw AS DOUBLE) * 10000.0 + 0.5) AS BIGINT)
-        |    ELSE 0 END AS gs_symbol_word_q4,
-        |  nl AS gs_n_lines, nbl AS gs_n_bullet_lines,
-        |  CASE WHEN nl > 0 THEN CAST(FLOOR(CAST(nbl AS DOUBLE)
-        |    / CAST(nl AS DOUBLE) * 10000.0 + 0.5) AS BIGINT)
-        |    ELSE 0 END AS gs_bullet_line_q4,
-        |  nel AS gs_n_ellipsis_lines,
-        |  CASE WHEN nl > 0 THEN CAST(FLOOR(CAST(nel AS DOUBLE)
-        |    / CAST(nl AS DOUBLE) * 10000.0 + 0.5) AS BIGINT)
-        |    ELSE 0 END AS gs_ellipsis_line_q4
-        |FROM cnt""".stripMargin,
-
-    // doc_stats' integer/q4 signal expressions with the gate thresholds
-    "quality_filter" ->
-      """WITH base AS (
-        |  SELECT doc_id, text,
-        |    CAST(length(text) AS DOUBLE) AS len_d,
-        |    string_split_regex(trim(text), '\s+') AS toks,
-        |    string_split_regex(lower(trim(text)), '\s+') AS ltoks
-        |  FROM documents),
-        |counted AS (
-        |  SELECT doc_id, len_d, len(toks) AS n_tokens,
-        |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-        |      AS BIGINT) AS n_alpha,
-        |    CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-        |      AS BIGINT) AS n_punct,
-        |    CAST(len(list_filter(ltoks, t -> list_contains(
-        |      ['the','a','an','and','or','of','to','in','is','it','that',
-        |       'for','on','with','as','at','by','be','this','are'], t)))
-        |      AS BIGINT) AS n_stop,
-        |    CAST(len(ltoks) AS DOUBLE) AS n_ltoks_d
-        |  FROM base)
-        |SELECT doc_id FROM (
-        |  SELECT doc_id, n_tokens, n_stop,
-        |    CAST(floor(least(1.0,
-        |      CAST(n_alpha AS DOUBLE) / greatest(len_d, 1.0) * 0.4
-        |      + (1.0 - least(
-        |          CAST(n_punct AS DOUBLE) / greatest(len_d, 1.0) * 5, 1.0)) * 0.2
-        |      + CAST(n_stop AS DOUBLE) / greatest(n_ltoks_d, 1.0) * 2.0 * 0.2
-        |      + (CASE WHEN len_d / greatest(n_ltoks_d, 1.0)
-        |          BETWEEN 3.0 AND 10.0 THEN 1.0 ELSE 0.5 END) * 0.2)
-        |      * 10000.0 + 0.5) AS BIGINT) AS q4
-        |  FROM counted)
-        |WHERE n_tokens BETWEEN 40 AND 100000
-        |  AND q4 >= 4000 AND n_stop >= 1""".stripMargin,
-
-    // Brute-force word-3-shingle Jaccard ground truth: a doc is dropped iff
-    // a smaller-id doc reaches threshold. The LSH/posting-list candidate
-    // paths are probabilistically full-recall at J>=0.8 and verified by
-    // exact Jaccard, so their FINAL output must equal the exact pair
-    // computation — a hash gate on end-to-end dedup correctness (empty
-    // shingle sets count as J=1, mirroring the merge expression's 0/0=1).
-    // Tokenization mirrors the native expression's Character.isWhitespace
-    // split as an explicit literal class (RE2 \s is narrower); known
-    // residual divergence: per-char Character.toLowerCase vs utf8proc
-    // full case mapping differ on locale-special codepoints (e.g. U+0130).
-    // exact-by-construction (Spark computes both sides; see the query)
-    "dedup_simhash_exact" ->
-      "SELECT CAST(0 AS BIGINT) AS mismatches",
-
-    // pair set by inverted index (see dedup_clusters note): |A∩B| counted
-    // over shared distinct shingles, identical math to pairwise
-    // list_intersect but ~100x cheaper (sf0.1: 1079 s -> 11 s, equal
-    // results A/B-verified at all three sfs). Empty×empty pairs (union=0,
-    // J=1 per the operator's 0/0=1 merge) come from the explicit branch.
-    "dedup_minhash" ->
-      """WITH c AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text),
-        |    '[\t\n\x0B\f\r\x1C-\x1F \x{1680}\x{2000}-\x{2006}\x{2008}-\x{200A}\x{2028}\x{2029}\x{205F}\x{3000}]+'), t -> t <> '') AS toks
-        |  FROM documents),
-        |s AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(
-        |      toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ')
-        |      for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM c),
-        |sz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM s),
-        |ex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM s),
-        |p AS (
-        |  SELECT q.dst AS r FROM (
-        |    SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS inter
-        |    FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) q
-        |  JOIN sz sa ON sa.doc_id = q.src
-        |  JOIN sz sb ON sb.doc_id = q.dst
-        |  WHERE CAST(q.inter AS DOUBLE) / (sa.n + sb.n - q.inter) >= 0.8
-        |  UNION ALL
-        |  SELECT b.doc_id AS r FROM sz a JOIN sz b ON a.doc_id < b.doc_id
-        |  WHERE a.n = 0 AND b.n = 0)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT r FROM p)""".stripMargin,
-
-    // same exact ground truth, except docs with NO shingles are excluded
-    // from the pair set: they index nothing, so the operator can never
-    // produce them as candidates (unlike minhash, whose constant
-    // empty-set signature pairs empties as exact duplicates) — with the
-    // inverted index that exclusion is structural (a pair must SHARE a
-    // shingle), so no empty branch exists here
-    "dedup_ngram_jaccard" ->
-      """WITH c AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text),
-        |    '[\t\n\x0B\f\r\x1C-\x1F \x{1680}\x{2000}-\x{2006}\x{2008}-\x{200A}\x{2028}\x{2029}\x{205F}\x{3000}]+'), t -> t <> '') AS toks
-        |  FROM documents),
-        |s AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(
-        |      toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ')
-        |      for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM c),
-        |sz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM s),
-        |ex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM s),
-        |p AS (
-        |  SELECT q.dst AS r FROM (
-        |    SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS inter
-        |    FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) q
-        |  JOIN sz sa ON sa.doc_id = q.src
-        |  JOIN sz sb ON sb.doc_id = q.dst
-        |  WHERE CAST(q.inter AS DOUBLE) / (sa.n + sb.n - q.inter) >= 0.8)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT r FROM p)""".stripMargin,
-
-    // exact transitive ground truth for near-dup clustering: edges = exact
-    // word-3-shingle Jaccard >= 0.8 pairs (the dedup_minhash tokenization,
-    // both directions), components by recursive min-label propagation —
-    // every doc collects the ids of all docs that reach it, MIN = the
-    // component minimum, singletons label themselves. The pair set is
-    // computed by inverted index (explode distinct shingles, count shared
-    // grams per pair) — identical math to pairwise list_intersect
-    // (|A∩B| over distinct sets) but only shingle-sharing pairs are ever
-    // scored; the naive O(n²) list_intersect form measured >55 min at
-    // sf0.1 vs 1.9 s for this one. Empty-shingle docs (union = 0) count
-    // as J=1, mirroring the operator's 0/0=1 merge semantics, via the
-    // explicit empty×empty edge branch. MATERIALIZED pins the edge CTE
-    // against per-iteration recomputation inside the recursion.
-    "dedup_clusters" ->
-      """WITH RECURSIVE c AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text),
-        |    '[\t\n\x0B\f\r\x1C-\x1F \x{1680}\x{2000}-\x{2006}\x{2008}-\x{200A}\x{2028}\x{2029}\x{205F}\x{3000}]+'), t -> t <> '') AS toks
-        |  FROM documents),
-        |s AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(
-        |      toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ')
-        |      for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM c),
-        |sz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM s),
-        |ex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM s),
-        |e AS MATERIALIZED (
-        |  SELECT p.src, p.dst FROM (
-        |    SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS inter
-        |    FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id <> b.doc_id
-        |    GROUP BY 1, 2) p
-        |  JOIN sz sa ON sa.doc_id = p.src
-        |  JOIN sz sb ON sb.doc_id = p.dst
-        |  WHERE CAST(p.inter AS DOUBLE) / (sa.n + sb.n - p.inter) >= 0.8
-        |  UNION ALL
-        |  SELECT a.doc_id, b.doc_id FROM sz a JOIN sz b
-        |    ON a.doc_id <> b.doc_id AND a.n = 0 AND b.n = 0),
-        |lab AS (
-        |  SELECT doc_id AS id, doc_id AS comp FROM documents
-        |  UNION
-        |  SELECT e.dst AS id, lab.comp AS comp
-        |  FROM e JOIN lab ON e.src = lab.id)
-        |SELECT id AS doc_id, MIN(comp) AS cluster_id
-        |FROM lab GROUP BY id""".stripMargin,
-
-    // same recursive min-label clustering, then argmax by
-    // (length desc, doc_id asc) per cluster + the member count
-    "dedup_canonical" ->
-      """WITH RECURSIVE c AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text),
-        |    '[\t\n\x0B\f\r\x1C-\x1F \x{1680}\x{2000}-\x{2006}\x{2008}-\x{200A}\x{2028}\x{2029}\x{205F}\x{3000}]+'), t -> t <> '') AS toks
-        |  FROM documents),
-        |s AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(
-        |      toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ')
-        |      for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM c),
-        |sz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM s),
-        |ex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM s),
-        |e AS MATERIALIZED (
-        |  SELECT p.src, p.dst FROM (
-        |    SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS inter
-        |    FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id <> b.doc_id
-        |    GROUP BY 1, 2) p
-        |  JOIN sz sa ON sa.doc_id = p.src
-        |  JOIN sz sb ON sb.doc_id = p.dst
-        |  WHERE CAST(p.inter AS DOUBLE) / (sa.n + sb.n - p.inter) >= 0.8
-        |  UNION ALL
-        |  SELECT a.doc_id, b.doc_id FROM sz a JOIN sz b
-        |    ON a.doc_id <> b.doc_id AND a.n = 0 AND b.n = 0),
-        |lab AS (
-        |  SELECT doc_id AS id, doc_id AS comp FROM documents
-        |  UNION
-        |  SELECT e.dst AS id, lab.comp AS comp
-        |  FROM e JOIN lab ON e.src = lab.id),
-        |cl AS (SELECT id AS doc_id, MIN(comp) AS cluster_id
-        |  FROM lab GROUP BY id),
-        |r AS (
-        |  SELECT cl.cluster_id, cl.doc_id,
-        |    row_number() OVER (PARTITION BY cl.cluster_id
-        |      ORDER BY len(d.text) DESC, cl.doc_id ASC) AS rn,
-        |    COUNT(*) OVER (PARTITION BY cl.cluster_id) AS cluster_size
-        |  FROM cl JOIN documents d USING (doc_id))
-        |SELECT cluster_id, doc_id, CAST(cluster_size AS BIGINT) AS cluster_size
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    // exact cosine ground truth for the hyperplane-LSH near-dup path; the
-    // fixture's closest pair sits ~0.44 below the 0.95 threshold, so no
-    // float-boundary ambiguity exists
-    "dedup_embedding" ->
-      """WITH p AS (
-        |  SELECT b.vec_id AS r,
-        |    list_cosine_similarity(a.embedding, b.embedding) AS cs
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-        |SELECT vec_id FROM embeddings
-        |WHERE vec_id NOT IN (SELECT r FROM p WHERE cs >= 0.95)""".stripMargin,
-
-    // replay: exact shingle-3 Jaccard via inverted-index joins (the
-    // dedup_minhash construction) over the planted snapshot split —
-    // corpus check first, then the pairwise larger-id drop rule WITHIN
-    // the corpus-cleared survivors; empty-shingle docs pair as exact
-    // duplicates (union = 0 -> Jaccard 1), mirroring the operator
-    "dedup_incremental_minhash" ->
-      """WITH c AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text),
-        |    '[\t\n\x0B\f\r\x1C-\x1F \x{1680}\x{2000}-\x{2006}\x{2008}-\x{200A}\x{2028}\x{2029}\x{205F}\x{3000}]+'), t -> t <> '') AS toks
-        |  FROM documents),
-        |s AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(
-        |      toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ')
-        |      for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM c),
-        |corp AS (SELECT doc_id, sh FROM s WHERE doc_id % 4 <> 0),
-        |bat AS (
-        |  SELECT doc_id, sh FROM s WHERE doc_id % 4 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, sh FROM s WHERE doc_id % 8 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, sh FROM s WHERE doc_id % 8 = 4),
-        |bsz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM bat),
-        |csz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM corp),
-        |bex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM bat),
-        |cex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM corp),
-        |cd AS (
-        |  SELECT q.bid AS r FROM (
-        |    SELECT b.doc_id AS bid, cx.doc_id AS cid, count(*) AS inter
-        |    FROM bex b JOIN cex cx ON b.g = cx.g GROUP BY 1, 2) q
-        |  JOIN bsz ON bsz.doc_id = q.bid
-        |  JOIN csz ON csz.doc_id = q.cid
-        |  WHERE CAST(q.inter AS DOUBLE) / (bsz.n + csz.n - q.inter) >= 0.8
-        |  UNION ALL
-        |  SELECT b.doc_id FROM bsz b
-        |  WHERE b.n = 0 AND EXISTS (SELECT 1 FROM csz WHERE n = 0)),
-        |surv AS (SELECT doc_id FROM bat
-        |  WHERE doc_id NOT IN (SELECT r FROM cd)),
-        |sex AS (SELECT doc_id, g FROM bex
-        |  WHERE doc_id IN (SELECT doc_id FROM surv)),
-        |ssz AS (SELECT doc_id, n FROM bsz
-        |  WHERE doc_id IN (SELECT doc_id FROM surv)),
-        |wd AS (
-        |  SELECT q.dst AS r FROM (
-        |    SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS inter
-        |    FROM sex a JOIN sex b ON a.g = b.g AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) q
-        |  JOIN ssz sa ON sa.doc_id = q.src
-        |  JOIN ssz sb ON sb.doc_id = q.dst
-        |  WHERE CAST(q.inter AS DOUBLE) / (sa.n + sb.n - q.inter) >= 0.8
-        |  UNION ALL
-        |  SELECT b.doc_id FROM ssz a JOIN ssz b ON a.doc_id < b.doc_id
-        |  WHERE a.n = 0 AND b.n = 0)
-        |SELECT doc_id FROM surv
-        |WHERE doc_id NOT IN (SELECT r FROM wd)""".stripMargin,
-
-    // signature-mode gate: same exact-Jaccard replay at 0.85 — sound
-    // because the threshold sits in a measured gap of both the exact
-    // and the estimate spectra (see the queries() comment)
-    "dedup_incremental_minhash_sig" ->
-      """WITH c AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text),
-        |    '[\t\n\x0B\f\r\x1C-\x1F \x{1680}\x{2000}-\x{2006}\x{2008}-\x{200A}\x{2028}\x{2029}\x{205F}\x{3000}]+'), t -> t <> '') AS toks
-        |  FROM documents),
-        |s AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_distinct([array_to_string(
-        |      toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ')
-        |      for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM c),
-        |corp AS (SELECT doc_id, sh FROM s WHERE doc_id % 4 <> 0),
-        |bat AS (
-        |  SELECT doc_id, sh FROM s WHERE doc_id % 4 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, sh FROM s WHERE doc_id % 8 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, sh FROM s WHERE doc_id % 8 = 4),
-        |bsz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM bat),
-        |csz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM corp),
-        |bex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM bat),
-        |cex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM corp),
-        |cd AS (
-        |  SELECT q.bid AS r FROM (
-        |    SELECT b.doc_id AS bid, cx.doc_id AS cid, count(*) AS inter
-        |    FROM bex b JOIN cex cx ON b.g = cx.g GROUP BY 1, 2) q
-        |  JOIN bsz ON bsz.doc_id = q.bid
-        |  JOIN csz ON csz.doc_id = q.cid
-        |  WHERE CAST(q.inter AS DOUBLE) / (bsz.n + csz.n - q.inter) >= 0.85
-        |  UNION ALL
-        |  SELECT b.doc_id FROM bsz b
-        |  WHERE b.n = 0 AND EXISTS (SELECT 1 FROM csz WHERE n = 0)),
-        |surv AS (SELECT doc_id FROM bat
-        |  WHERE doc_id NOT IN (SELECT r FROM cd)),
-        |sex AS (SELECT doc_id, g FROM bex
-        |  WHERE doc_id IN (SELECT doc_id FROM surv)),
-        |ssz AS (SELECT doc_id, n FROM bsz
-        |  WHERE doc_id IN (SELECT doc_id FROM surv)),
-        |wd AS (
-        |  SELECT q.dst AS r FROM (
-        |    SELECT a.doc_id AS src, b.doc_id AS dst, count(*) AS inter
-        |    FROM sex a JOIN sex b ON a.g = b.g AND a.doc_id < b.doc_id
-        |    GROUP BY 1, 2) q
-        |  JOIN ssz sa ON sa.doc_id = q.src
-        |  JOIN ssz sb ON sb.doc_id = q.dst
-        |  WHERE CAST(q.inter AS DOUBLE) / (sa.n + sb.n - q.inter) >= 0.85
-        |  UNION ALL
-        |  SELECT b.doc_id FROM ssz a JOIN ssz b ON a.doc_id < b.doc_id
-        |  WHERE a.n = 0 AND b.n = 0)
-        |SELECT doc_id FROM surv
-        |WHERE doc_id NOT IN (SELECT r FROM wd)""".stripMargin,
-
-    "dedup_incremental" ->
-      """WITH canon AS (
-        |  SELECT doc_id,
-        |    lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS ct
-        |  FROM documents),
-        |corpus AS (SELECT DISTINCT ct FROM canon WHERE doc_id % 4 <> 0),
-        |batch AS (
-        |  SELECT doc_id, ct FROM canon WHERE doc_id % 4 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, ct FROM canon WHERE doc_id % 8 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, ct FROM canon WHERE doc_id % 8 = 4),
-        |kept AS (SELECT ct, MIN(doc_id) AS doc_id FROM batch GROUP BY ct)
-        |SELECT doc_id FROM kept
-        |WHERE ct NOT IN (SELECT ct FROM corpus)""".stripMargin,
-
-    // Bloom cascade (exact verify) provably equals IncrementalDeduplicator,
-    // so both Bloom gates replay the identical planted-split SQL; the
-    // approximate gate additionally pins that no false positive occurs
-    // at its 40-bit budget on this corpus
-    "dedup_bloom" ->
-      """WITH canon AS (
-        |  SELECT doc_id,
-        |    lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS ct
-        |  FROM documents),
-        |corpus AS (SELECT DISTINCT ct FROM canon WHERE doc_id % 4 <> 0),
-        |batch AS (
-        |  SELECT doc_id, ct FROM canon WHERE doc_id % 4 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, ct FROM canon WHERE doc_id % 8 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, ct FROM canon WHERE doc_id % 8 = 4),
-        |kept AS (SELECT ct, MIN(doc_id) AS doc_id FROM batch GROUP BY ct)
-        |SELECT doc_id FROM kept
-        |WHERE ct NOT IN (SELECT ct FROM corpus)""".stripMargin,
-
-    "dedup_bloom_approx" ->
-      """WITH canon AS (
-        |  SELECT doc_id,
-        |    lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS ct
-        |  FROM documents),
-        |corpus AS (SELECT DISTINCT ct FROM canon WHERE doc_id % 4 <> 0),
-        |batch AS (
-        |  SELECT doc_id, ct FROM canon WHERE doc_id % 4 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, ct FROM canon WHERE doc_id % 8 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, ct FROM canon WHERE doc_id % 8 = 4),
-        |kept AS (SELECT ct, MIN(doc_id) AS doc_id FROM batch GROUP BY ct)
-        |SELECT doc_id FROM kept
-        |WHERE ct NOT IN (SELECT ct FROM corpus)""".stripMargin,
-
-    "semdedup_exact" ->
-      """WITH p AS (
-        |  SELECT b.vec_id AS r,
-        |    list_cosine_similarity(a.embedding, b.embedding) AS cs
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-        |SELECT vec_id FROM embeddings
-        |WHERE vec_id NOT IN (SELECT r FROM p WHERE cs >= 0.465)""".stripMargin,
-
-    // all-pairs replay of the incremental semantic decisions: a batch
-    // row drops on any corpus pair at cosine >= 0.465 (the corpus copy
-    // always survives), then the surviving batch near-dedups against
-    // itself with the minId rule — the semdedup_exact arithmetic on
-    // both legs (DuckDB orders NaN above every number like Spark, so
-    // zero-norm pairs agree too)
-    "semdedup_incremental_exact" ->
-      """WITH corp AS MATERIALIZED (
-        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 <> 0),
-        |bat AS MATERIALIZED (
-        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 = 0
-        |  UNION ALL
-        |  SELECT vec_id + 1000000 AS vec_id, embedding
-        |  FROM embeddings WHERE vec_id % 8 = 1),
-        |cd AS (
-        |  SELECT DISTINCT b.vec_id AS r FROM bat b, corp c
-        |  WHERE list_cosine_similarity(b.embedding, c.embedding) >= 0.465),
-        |surv AS MATERIALIZED (
-        |  SELECT vec_id, embedding FROM bat
-        |  WHERE vec_id NOT IN (SELECT r FROM cd)),
-        |wd AS (
-        |  SELECT DISTINCT b.vec_id AS r FROM surv a, surv b
-        |  WHERE a.vec_id < b.vec_id
-        |    AND list_cosine_similarity(a.embedding, b.embedding) >= 0.465)
-        |SELECT vec_id FROM surv
-        |WHERE vec_id NOT IN (SELECT r FROM wd)""".stripMargin,
-
-    "sar_item_similarity" ->
-      """WITH pairs AS (SELECT DISTINCT user_id AS u, event_type AS itm FROM events),
-        |occ AS (SELECT itm, COUNT(*) AS occ FROM pairs GROUP BY itm),
-        |co AS (SELECT a.itm AS i1, b.itm AS i2, COUNT(*) AS cooc
-        |       FROM pairs a JOIN pairs b ON a.u = b.u GROUP BY 1, 2)
-        |SELECT i1, i2,
-        |  CAST(cooc AS DOUBLE) / (o1.occ + o2.occ - cooc) AS similarity
-        |FROM co
-        |JOIN occ o1 ON co.i1 = o1.itm
-        |JOIN occ o2 ON co.i2 = o2.itm""".stripMargin,
-
-    // whole-day halving exponent => exact power-of-two scaling, so the
-    // double product is bit-identical in Spark and DuckDB; DECIMAL sums
-    // make the aggregation order-independent
-    "sar_affinity" ->
-      """WITH d AS (SELECT user_id, event_type, value,
-        |    FLOOR(FLOOR(epoch(ts)) / 86400.0) AS day FROM events),
-        |m AS (SELECT MAX(day) AS maxday FROM d)
-        |SELECT user_id AS "user", event_type AS item,
-        |  CAST(SUM(CAST(value * POWER(0.5, FLOOR((m.maxday - d.day) / 30.0))
-        |    AS DECIMAL(30,10))) AS DOUBLE) AS affinity
-        |FROM d CROSS JOIN m
-        |GROUP BY user_id, event_type""".stripMargin,
-
-    "sar_recommend" ->
-      """WITH d AS (SELECT user_id, event_type, value,
-        |    FLOOR(FLOOR(epoch(ts)) / 86400.0) AS day FROM events),
-        |m AS (SELECT MAX(day) AS maxday FROM d),
-        |aff AS (SELECT user_id AS u, event_type AS itm,
-        |  CAST(SUM(CAST(value * POWER(0.5, FLOOR((m.maxday - d.day) / 30.0))
-        |    AS DECIMAL(30,10))) AS DOUBLE) AS affinity
-        |  FROM d CROSS JOIN m GROUP BY user_id, event_type),
-        |pairs AS (SELECT DISTINCT user_id AS u, event_type AS itm FROM events),
-        |occ AS (SELECT itm, COUNT(*) AS occ FROM pairs GROUP BY itm),
-        |co AS (SELECT a.itm AS i1, b.itm AS i2, COUNT(*) AS cooc
-        |       FROM pairs a JOIN pairs b ON a.u = b.u GROUP BY 1, 2),
-        |sim AS (SELECT i1, i2,
-        |  CAST(cooc AS DOUBLE) / (o1.occ + o2.occ - cooc) AS similarity
-        |  FROM co JOIN occ o1 ON co.i1 = o1.itm JOIN occ o2 ON co.i2 = o2.itm),
-        |scored AS (SELECT aff.u AS "user", sim.i2 AS item,
-        |  CAST(SUM(CAST(aff.affinity * sim.similarity AS DECIMAL(30,10)))
-        |    AS DOUBLE) AS score
-        |  FROM aff JOIN sim ON aff.itm = sim.i1 GROUP BY aff.u, sim.i2)
-        |SELECT "user", item, score, CAST(rank AS INTEGER) AS rank FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY "user" ORDER BY score DESC, item) AS rank
-        |  FROM scored) WHERE rank <= 3""".stripMargin,
-
-    // closed-form NDCG constants from the RankingGateFixture derivation:
-    // jaccard mean = (8/log2(5) + 0.5)/9, lift mean = (4/log2(6) +
-    // (4+1)/log2(5))/9, quantized with the shared floor(x*1e4+0.5)
-    "ranking_tvs" ->
-      """SELECT 'jaccard' AS similarity, CAST(30 AS INTEGER) AS half_life,
-        |       CAST(floor((8/log2(5) + 0.5)/9 * 1e4 + 0.5) AS BIGINT) AS ndcg_q,
-        |       CAST(1 AS INTEGER) AS is_best
-        |UNION ALL
-        |SELECT 'lift', CAST(30 AS INTEGER),
-        |       CAST(floor((4/log2(6) + 5/log2(5))/9 * 1e4 + 0.5) AS BIGINT),
-        |       CAST(0 AS INTEGER)""".stripMargin,
-
-    "ranking_ground_truth" ->
-      """SELECT user_id AS "user", CAST(rn AS INTEGER) AS rn,
-        |       event_type AS item
-        |FROM (
-        |  SELECT user_id, event_type, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY value DESC, event_type) AS rn
-        |  FROM events) WHERE rn <= 3""".stripMargin,
-
-    // per-user ranking metrics over the no-decay SAR recs + adapter ground
-    // truth; every metric rounded to 9 dp on both sides so last-ulp log /
-    // sum-order differences cannot surface
-    "ranking_metrics" ->
-      """WITH aff AS (SELECT user_id AS u, event_type AS itm,
-        |    CAST(SUM(CAST(value AS DECIMAL(30,10))) AS DOUBLE) AS affinity
-        |  FROM events GROUP BY 1, 2),
-        |pairs AS (SELECT DISTINCT user_id AS u, event_type AS itm FROM events),
-        |occ AS (SELECT itm, COUNT(*) AS occ FROM pairs GROUP BY itm),
-        |co AS (SELECT a.itm AS i1, b.itm AS i2, COUNT(*) AS cooc
-        |       FROM pairs a JOIN pairs b ON a.u = b.u GROUP BY 1, 2),
-        |sim AS (SELECT i1, i2,
-        |  CAST(cooc AS DOUBLE) / (o1.occ + o2.occ - cooc) AS similarity
-        |  FROM co JOIN occ o1 ON co.i1 = o1.itm JOIN occ o2 ON co.i2 = o2.itm),
-        |scored AS (SELECT aff.u, sim.i2 AS item,
-        |  CAST(SUM(CAST(aff.affinity * sim.similarity AS DECIMAL(30,10)))
-        |    AS DOUBLE) AS score
-        |  FROM aff JOIN sim ON aff.itm = sim.i1 GROUP BY 1, 2),
-        |recs AS (SELECT u, item, rank FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY u ORDER BY score DESC, item) AS rank
-        |  FROM scored) WHERE rank <= 3),
-        |gtd AS (SELECT DISTINCT user_id AS u, event_type AS item FROM (
-        |  SELECT user_id, event_type, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY value DESC, event_type) AS rn
-        |  FROM events) WHERE rn <= 3),
-        |nrel AS (SELECT u, COUNT(*) AS nrel FROM gtd GROUP BY u),
-        |rel AS (SELECT r.u, r.rank,
-        |    CASE WHEN g.item IS NOT NULL THEN 1 ELSE 0 END AS rel
-        |  FROM recs r LEFT JOIN gtd g ON r.u = g.u AND r.item = g.item),
-        |cum AS (SELECT u, rank, rel,
-        |    SUM(rel) OVER (PARTITION BY u ORDER BY rank) AS hits_so_far
-        |  FROM rel),
-        |per AS (SELECT c.u,
-        |    SUM(c.rel) AS hits,
-        |    SUM(CASE WHEN c.rel = 1
-        |      THEN CAST(c.hits_so_far AS DOUBLE) / c.rank ELSE 0.0 END) AS ap_sum,
-        |    SUM(CASE WHEN c.rel = 1
-        |      THEN 1.0 / (ln(c.rank + 1) / ln(2.0)) ELSE 0.0 END) AS dcg,
-        |    MAX(CASE WHEN c.rel = 1 AND c.hits_so_far = 1
-        |      THEN 1.0 / c.rank ELSE 0.0 END) AS rr
-        |  FROM cum c GROUP BY c.u)
-        |SELECT p.u AS "user",
-        |  round(CAST(p.hits AS DOUBLE) / 3, 9) + 0.0 AS precision_at_k,
-        |  round(CAST(p.hits AS DOUBLE) / n.nrel, 9) + 0.0 AS recall_at_k,
-        |  round(p.ap_sum / LEAST(n.nrel, 3), 9) + 0.0 AS ap,
-        |  round(p.dcg / (CASE LEAST(n.nrel, 3)
-        |    WHEN 1 THEN 1.0 / (ln(2.0) / ln(2.0))
-        |    WHEN 2 THEN 1.0 / (ln(2.0) / ln(2.0)) + 1.0 / (ln(3.0) / ln(2.0))
-        |    ELSE 1.0 / (ln(2.0) / ln(2.0)) + 1.0 / (ln(3.0) / ln(2.0))
-        |      + 1.0 / (ln(4.0) / ln(2.0)) END), 9) + 0.0 AS ndcg_at_k,
-        |  round(p.rr, 9) + 0.0 AS rr,
-        |  CAST(CASE WHEN p.hits > 0 THEN 1.0 ELSE 0.0 END AS DOUBLE) AS hit
-        |FROM per p JOIN nrel n ON p.u = n.u""".stripMargin,
-
-    // mirrors PerTenantStandardScaler's exact arithmetic: decimal partial
-    // sums -> double mean / unbiased std -> one subtraction and division
-    "cyber_std_scaler" ->
-      """WITH s AS (SELECT event_type,
-        |    COUNT(value) AS n,
-        |    CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE) AS sm,
-        |    CAST(SUM(CAST(value * value AS DECIMAL(38,8))) AS DOUBLE) AS sq
-        |  FROM events GROUP BY event_type)
-        |SELECT e.event_id, e.event_type, e.value,
-        |  CASE WHEN s.n <= 1 OR (s.sq - s.sm * s.sm / s.n) <= 0 THEN 0.0
-        |       ELSE (e.value - s.sm / s.n)
-        |            / SQRT((s.sq - s.sm * s.sm / s.n) / (s.n - 1)) END AS z
-        |FROM events e JOIN s ON e.event_type = s.event_type""".stripMargin,
-
-    "cyber_minmax_scaler" ->
-      """WITH s AS (SELECT event_type, MIN(value) AS lo, MAX(value) AS hi
-        |  FROM events GROUP BY event_type)
-        |SELECT e.event_id, e.event_type, e.value,
-        |  CASE WHEN s.hi = s.lo THEN 0.0
-        |       ELSE (e.value - s.lo) / (s.hi - s.lo) END AS scaled
-        |FROM events e JOIN s ON e.event_type = s.event_type""".stripMargin,
-
-    "cyber_id_indexer" ->
-      """SELECT event_id, event_type, user_id,
-        |  CAST(dense_rank() OVER (
-        |    PARTITION BY event_type ORDER BY user_id) AS INTEGER) AS uid
-        |FROM events""".stripMargin,
-
-    "cyber_complement" ->
-      """WITH obs AS (SELECT DISTINCT event_type,
-        |    user_id, CAST(TRUNC(value) AS INTEGER) % 10 AS res FROM events),
-        |u AS (SELECT DISTINCT event_type, user_id FROM obs),
-        |r AS (SELECT DISTINCT event_type, res FROM obs)
-        |SELECT u.event_type, u.user_id, r.res
-        |FROM u JOIN r ON u.event_type = r.event_type
-        |LEFT JOIN obs ON obs.event_type = u.event_type
-        |  AND obs.user_id = u.user_id AND obs.res = r.res
-        |WHERE obs.user_id IS NULL""".stripMargin,
-
-    "http_transformer" ->
-      "SELECT doc_id, CAST(len(text) AS INTEGER) AS text_len FROM documents",
-
-    // mock blob service serves (doc_id % 64) + 1 bytes per document
-    "download_from_urls" ->
-      """SELECT doc_id, CAST(doc_id % 64 + 1 AS INTEGER) AS n_bytes,
-        |  CAST(200 AS INTEGER) AS status
-        |FROM documents""".stripMargin,
-
-    // events.ts is TIMESTAMP(NANOS) parquet: epoch seconds = nanos DIV 1e9;
-    // make_timestamp (not to_timestamp) so the oracle stays naive-UTC like
-    // the parquet round trip of Spark's window bounds
-    // the streaming-engine run must agree with the batch oracle exactly
-    "window_agg_hourly_stream" ->
-      """SELECT
-        |  make_timestamp(CAST(FLOOR(FLOOR(epoch(ts)) / 3600) * 3600 AS BIGINT) * 1000000) AS window_start,
-        |  make_timestamp((CAST(FLOOR(FLOOR(epoch(ts)) / 3600) * 3600 AS BIGINT) + 3600) * 1000000) AS window_end,
-        |  event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "window_agg_hourly" ->
-      """SELECT
-        |  make_timestamp(CAST(FLOOR(FLOOR(epoch(ts)) / 3600) * 3600 AS BIGINT) * 1000000) AS window_start,
-        |  make_timestamp((CAST(FLOOR(FLOOR(epoch(ts)) / 3600) * 3600 AS BIGINT) + 3600) * 1000000) AS window_end,
-        |  event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE) AS sum_value
-        |FROM events
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "shap_tabular" -> // background means over the SAME explained subset
-      """WITH m AS (SELECT
-        |    CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE) / COUNT(value) AS mv,
-        |    CAST(SUM(CAST(user_id AS DECIMAL(30,8))) AS DOUBLE) / COUNT(user_id) AS mu
-        |  FROM events WHERE event_id < 200)
-        |SELECT event_id,
-        |  ROUND(2 * m.mv + 0.5 * m.mu, 4) + 0.0 AS base,
-        |  ROUND(2 * (value - m.mv), 4) + 0.0 AS phi_value,
-        |  ROUND(0.5 * (user_id - m.mu), 4) + 0.0 AS phi_user
-        |FROM events CROSS JOIN m WHERE event_id < 200""".stripMargin,
-
-    // exactly-linear per-dimension model => VectorLIME's surrogate IS the
-    // model: coef(d) = ((d % 4) + 1) / 4 for every explained vector
-    "lime_vector" ->
-      """SELECT vec_id, CAST(d AS INTEGER) AS dim,
-        |  CAST(((d % 4) + 1) * 0.25 AS DOUBLE) AS coef
-        |FROM (SELECT vec_id, unnest(range(0, len(embedding))) AS d
-        |      FROM embeddings WHERE vec_id < 20)""".stripMargin,
-
-    // planted one-hot rule models: coef 1 at the planted position/
-    // quadrant, 0 elsewhere, intercept 0 (see the query comments)
-    "lime_text" ->
-      """SELECT doc_id, CAST(0.0 AS DOUBLE) AS intercept, CAST(d AS INTEGER) AS dim,
-        |  CAST(CASE WHEN d = doc_id % 8 THEN 1.0 ELSE 0.0 END AS DOUBLE)
-        |    AS coef
-        |FROM documents CROSS JOIN (SELECT unnest(range(8)) AS d)
-        |WHERE doc_id < 200""".stripMargin,
-
-    "lime_image" ->
-      """SELECT doc_id, CAST(0.0 AS DOUBLE) AS intercept, CAST(d AS INTEGER) AS dim,
-        |  CAST(CASE WHEN d = doc_id % 4 THEN 1.0 ELSE 0.0 END AS DOUBLE)
-        |    AS coef
-        |FROM documents CROSS JOIN (SELECT unnest(range(4)) AS d)
-        |WHERE doc_id < 100""".stripMargin,
-
-    // linear model => phi_d = c_d (x_d - mean_d) with decimal-exact
-    // per-dimension background means over the same explained subset
-    "shap_vector" ->
-      """WITH u AS (SELECT vec_id, CAST(i - 1 AS INTEGER) AS dim,
-        |    CAST(embedding[i] AS DOUBLE) AS v
-        |  FROM (SELECT vec_id, embedding,
-        |        unnest(range(1, len(embedding) + 1)) AS i
-        |        FROM embeddings WHERE vec_id < 20)),
-        |m AS (SELECT dim,
-        |    CAST(SUM(CAST(v AS DECIMAL(30,8))) AS DOUBLE) / COUNT(v) AS mv
-        |  FROM u GROUP BY dim),
-        |b AS (SELECT ROUND(SUM(((dim % 4) + 1) * 0.25 * mv), 3) + 0.0 AS base
-        |  FROM m)
-        |SELECT u.vec_id, u.dim,
-        |  ROUND(((u.dim % 4) + 1) * 0.25 * (u.v - m.mv), 4) + 0.0 AS phi,
-        |  b.base AS base
-        |FROM u JOIN m ON u.dim = m.dim CROSS JOIN b""".stripMargin,
-
-    "knn_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-        |  FROM embeddings WHERE vec_id < 10),
-        |scored AS (SELECT q.query_id, e.vec_id AS id,
-        |    list_cosine_similarity(q.qv, e.embedding) AS score
-        |  FROM q CROSS JOIN embeddings e),
-        |ranked AS (SELECT query_id, id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, id) AS rn FROM scored)
-        |SELECT query_id, id AS neighbor_id FROM ranked WHERE rn <= 5""".stripMargin,
-
-    // the planted 64->4->1 ReLU head replayed literally: the same
-    // dyadic weights as the fixture, generated per unit (quarters and
-    // 64th-quantized features make every term exact — see the gate)
-    "mlp_score" -> {
-      val (d, h) = (64, 4)
-      val hidden = (0 until h).map { i =>
-        val terms = (0 until d).map { j =>
-          s"(${((i * 3 + j * 5) % 7 - 3) / 4.0})*x[${j + 1}]"
-        }.mkString(" + ")
-        s"GREATEST(0, ${(i % 3 - 1) / 4.0} + $terms)"
-      }
-      val out = (0 until h).map { i =>
-        s"(${((i * 2) % 5 - 2) / 4.0})*(${hidden(i)})"
-      }.mkString(" + ")
-      s"""WITH q AS (SELECT vec_id,
-         |  list_transform(embedding, e -> floor(e * 64) / 64) AS x
-         |  FROM embeddings)
-         |SELECT vec_id, CAST((0.25 + $out) * 1024 AS BIGINT) AS score_q
-         |FROM q""".stripMargin
-    },
-
-    // full recall is the expected steady state at 1-bit banding; any ANN
-    // regression (banding, bucket join, top-k) breaks the hash
-    "knn_lsh_recall" ->
-      """SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS hits,
-        |  CAST(5 AS BIGINT) AS k
-        |FROM embeddings WHERE vec_id < 20""".stripMargin,
-
-    // exhaustive probing == brute force, deterministically (quantizer is
-    // seeded and trained driver-side; ties break by id in the aggregator)
-    // every (node, neighbor) edge of the 100-node brute-force graph
-    "knn_graph" ->
-      """WITH sub AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id < 100),
-        |scored AS (SELECT q.vec_id AS query_id, e.vec_id AS id,
-        |    list_cosine_similarity(q.embedding, e.embedding) AS score
-        |  FROM sub q CROSS JOIN sub e WHERE q.vec_id <> e.vec_id),
-        |ranked AS (SELECT query_id, id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, id) AS rn FROM scored)
-        |SELECT query_id, id AS neighbor_id FROM ranked WHERE rn <= 3""".stripMargin,
-
-    "knn_graph_recall" ->
-      """SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS hits,
-        |  CAST(5 AS BIGINT) AS k
-        |FROM embeddings""".stripMargin,
-
-    "knn_ivf_recall" ->
-      """SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS hits,
-        |  CAST(5 AS BIGINT) AS k
-        |FROM embeddings WHERE vec_id < 20""".stripMargin,
-
-    "knn_ivfpq_recall" ->
-      """SELECT vec_id AS query_id, CAST(5 AS BIGINT) AS hits,
-        |  CAST(5 AS BIGINT) AS k
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-
-    "knn_balltree" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv
-        |  FROM embeddings WHERE vec_id < 100),
-        |scored AS (SELECT q.qid, e.vec_id AS id,
-        |    list_distance(q.qv, e.embedding) AS d
-        |  FROM q CROSS JOIN embeddings e),
-        |ranked AS (SELECT qid, id, row_number() OVER (
-        |    PARTITION BY qid ORDER BY d, id) AS rn FROM scored)
-        |SELECT qid AS vec_id, id AS neighbor_id FROM ranked WHERE rn <= 5""".stripMargin,
-
-    "bucketed_join" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4)))
-        |    AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderkey, o_orderpriority""".stripMargin,
-
-    // same exact ground truth as knn_balltree: the partitioned path must
-    // produce identical neighbor sets with the corpus never collected
-    "knn_partitioned" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv
-        |  FROM embeddings WHERE vec_id < 100),
-        |scored AS (SELECT q.qid, e.vec_id AS id,
-        |    list_distance(q.qv, e.embedding) AS d
-        |  FROM q CROSS JOIN embeddings e),
-        |ranked AS (SELECT qid, id, row_number() OVER (
-        |    PARTITION BY qid ORDER BY d, id) AS rn FROM scored)
-        |SELECT qid AS vec_id, id AS neighbor_id FROM ranked WHERE rn <= 5""".stripMargin,
-
-    // greedy first-fit packing replayed sequentially: docs in id order per
-    // source, a running token sum that resets past the budget, bin index +1
-    // on every reset — the recursive CTE walks rn -> rn+1 exactly like the
-    // operator's in-partition scan (budget 256; oversize doc = own bin)
-    "seq_pack" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT source, doc_id,
-        |    len(string_split_regex(trim(text), '\s+')) AS tl,
-        |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |pack AS (
-        |  SELECT source, rn, doc_id, tl, CAST(tl AS BIGINT) AS acc,
-        |    CAST(0 AS BIGINT) AS bin
-        |  FROM d WHERE rn = 1
-        |  UNION ALL
-        |  SELECT d.source, d.rn, d.doc_id, d.tl,
-        |    CASE WHEN p.acc + d.tl <= 256 THEN p.acc + d.tl
-        |         ELSE CAST(d.tl AS BIGINT) END,
-        |    CASE WHEN p.acc + d.tl <= 256 THEN p.bin ELSE p.bin + 1 END
-        |  FROM d JOIN pack p ON d.source = p.source AND d.rn = p.rn + 1)
-        |SELECT source, doc_id, bin AS seq_id FROM pack""".stripMargin,
-
-    // per-(group, dim) exact decimal mean over unnested embeddings
-    "embedding_pool" ->
-      """SELECT CAST(vec_id % 10 AS BIGINT) AS grp,
-        |  CAST(i - 1 AS INTEGER) AS dim,
-        |  CAST(SUM(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(30,8)))
-        |    AS DOUBLE) / COUNT(embedding[i]) AS mean_val
-        |FROM (SELECT vec_id, embedding,
-        |  unnest(range(1, len(embedding) + 1)) AS i FROM embeddings)
-        |GROUP BY 1, 2""".stripMargin,
-
-    // label-conditioned exact KNN: corpus restricted to allowed labels
-    "knn_conditional" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv
-        |  FROM embeddings WHERE vec_id < 10),
-        |corpus AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE CAST(vec_id % 3 AS INTEGER) IN (0, 1)),
-        |scored AS (SELECT q.qid, e.vec_id AS id,
-        |    list_distance(q.qv, e.embedding) AS d
-        |  FROM q CROSS JOIN corpus e),
-        |ranked AS (SELECT qid, id, row_number() OVER (
-        |    PARTITION BY qid ORDER BY d, id) AS rn FROM scored)
-        |SELECT qid AS vec_id, id AS neighbor_id FROM ranked WHERE rn <= 5""".stripMargin,
-
-    "lime_tabular" ->
-      """SELECT event_id, CAST(0.0 AS DOUBLE) AS intercept,
-        |  CAST(2.0 AS DOUBLE) AS c_value, CAST(0.5 AS DOUBLE) AS c_user
-        |FROM events WHERE event_id < 200""".stripMargin,
-
-    "per_instance_stats" ->
-      """WITH m AS (SELECT CAST(SUM(CAST(value AS DECIMAL(30,8))) AS DOUBLE)
-        |    / COUNT(value) AS mean FROM events)
-        |SELECT event_id,
-        |  ABS(m.mean - value) AS L1_loss,
-        |  (m.mean - value) * (m.mean - value) AS L2_loss
-        |FROM events CROSS JOIN m""".stripMargin,
-
-    // mirrors MulticlassMetrics arithmetic exactly: per-class precision =
-    // tp/(tp+fp), recall = tp/classCount, f1 = ((2*p)*r)/((1*p)+r), weighted
-    // mean term = ((metric * classCount) / n), label-0 term first — every
-    // division/multiplication in the same IEEE order the evaluator uses,
-    // then the same floor(x*1e4+0.5) scaling as the Spark projection
-    "model_statistics" ->
-      """WITH c AS (
-        |  SELECT
-        |    CAST(SUM(CASE WHEN event_type = 'purchase' AND value > 35.0
-        |      THEN 1 ELSE 0 END) AS DOUBLE) AS tp1,
-        |    CAST(SUM(CASE WHEN event_type <> 'purchase' AND value > 35.0
-        |      THEN 1 ELSE 0 END) AS DOUBLE) AS fp1,
-        |    CAST(SUM(CASE WHEN event_type <> 'purchase' AND NOT value > 35.0
-        |      THEN 1 ELSE 0 END) AS DOUBLE) AS tp0,
-        |    CAST(SUM(CASE WHEN event_type = 'purchase' AND NOT value > 35.0
-        |      THEN 1 ELSE 0 END) AS DOUBLE) AS fp0,
-        |    CAST(COUNT(*) AS DOUBLE) AS n
-        |  FROM events),
-        |m AS (
-        |  SELECT n, tp0 + fp1 AS c0, tp1 + fp0 AS c1,
-        |    CASE WHEN tp0 + fp0 = 0 THEN 0 ELSE tp0 / (tp0 + fp0) END AS p0,
-        |    CASE WHEN tp1 + fp1 = 0 THEN 0 ELSE tp1 / (tp1 + fp1) END AS p1,
-        |    tp0 / (tp0 + fp1) AS r0, tp1 / (tp1 + fp0) AS r1,
-        |    (tp0 + tp1) / n AS accuracy
-        |  FROM c),
-        |f AS (
-        |  -- zero-denominator guards mirror MulticlassMetrics' convention
-        |  -- (precision/fMeasure return 0 for a never-predicted class)
-        |  SELECT n, c0, c1, p0, p1, r0, r1, accuracy,
-        |    CASE WHEN p0 + r0 = 0 THEN 0
-        |      ELSE ((2.0 * p0) * r0) / ((1.0 * p0) + r0) END AS f0,
-        |    CASE WHEN p1 + r1 = 0 THEN 0
-        |      ELSE ((2.0 * p1) * r1) / ((1.0 * p1) + r1) END AS f1
-        |  FROM m)
-        |SELECT
-        |  CAST(floor(accuracy * 10000.0 + 0.5) AS BIGINT) AS accuracy_q4,
-        |  CAST(floor((((p0 * c0) / n) + ((p1 * c1) / n)) * 10000.0 + 0.5)
-        |    AS BIGINT) AS precision_q4,
-        |  CAST(floor((((r0 * c0) / n) + ((r1 * c1) / n)) * 10000.0 + 0.5)
-        |    AS BIGINT) AS recall_q4,
-        |  CAST(floor((((f0 * c0) / n) + ((f1 * c1) / n)) * 10000.0 + 0.5)
-        |    AS BIGINT) AS f1_q4
-        |FROM f""".stripMargin,
-
-    // constants = murmur3_32(key) & 0x3FFFF, the closed key set of this
-    // fixture (see the query's comment); a regenerated fixture with a new
-    // event_type yields NULL feat_idx here and reddens the gate loudly
-    "vw_featurizer" -> {
-      def vwIdx(k: String): Int =
-        graft.featurize.Murmur3.hashString(k, 0) & ((1 << 18) - 1)
-      val cases = Seq("click", "signup", "error", "view", "purchase")
-        .map(t => s"WHEN '$t' THEN ${vwIdx("event_type=" + t)}").mkString(" ")
-      s"""SELECT event_id, CAST(${vwIdx("value")} AS INTEGER) AS feat_idx,
-         |  value AS feat_val FROM events
-         |WHERE value IS NOT NULL AND value <> 0.0
-         |UNION ALL
-         |SELECT event_id, CAST(CASE event_type $cases END AS INTEGER)
-         |    AS feat_idx,
-         |  CAST(1.0 AS DOUBLE) AS feat_val FROM events
-         |WHERE event_type IS NOT NULL""".stripMargin
-    },
-
-    "multimodal_stub" ->
-      """SELECT doc_id, 'image' AS modality,
-        |  CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS size_bytes,
-        |  'unknown' AS magic, FALSE AS decoded,
-        |  CAST(0 AS BIGINT) AS duration_ms, CAST(0 AS BIGINT) AS luma255
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id, 'audio' AS modality,
-        |  CAST(44 + 2 * 2000 * (1 + doc_id % 4) AS BIGINT) AS size_bytes,
-        |  'riff' AS magic, TRUE AS decoded,
-        |  CAST(250 * (1 + doc_id % 4) AS BIGINT) AS duration_ms,
-        |  CAST(0 AS BIGINT) AS luma255
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id, 'video' AS modality,
-        |  CAST(38 + 204 * (1 + doc_id % 4) AS BIGINT) AS size_bytes,
-        |  'y4m' AS magic, TRUE AS decoded,
-        |  CAST(250 * (1 + doc_id % 4) AS BIGINT) AS duration_ms,
-        |  CAST(64 * (doc_id % 4) AS BIGINT) AS luma255
-        |FROM documents""".stripMargin,
-
-    // survivors = min id per planted 4-id group (testBmpBytes: base /
-    // brightness / contrast / both variants of one pattern per group)
-    "image_phash_dedup" ->
-      "SELECT min(doc_id) AS doc_id FROM documents GROUP BY doc_id // 4",
-
-    // exhaustive image-chain companion: every within-group pair sits
-    // at cosine >= 0.99989 (dup), every cross-group pair <= 0.68908
-    // (not), so minId survivors are min per planted 4-id group
-    "image_embed_chain_exact" ->
-      "SELECT min(doc_id) AS doc_id FROM documents GROUP BY doc_id // 4",
-
-    // exhaustive probe == brute force, so hits is the constant k
-    "image_ivf_recall" ->
-      """SELECT doc_id AS query_id, CAST(5 AS BIGINT) AS hits,
-        |  CAST(5 AS BIGINT) AS k
-        |FROM documents WHERE doc_id < 20""".stripMargin,
-
-    // the serving-point floor is a planted boolean: >= 90% of the
-    // 40x4 group-member pairs recovered at nProbe=1 (seeded k-means,
-    // deterministic per SF; the Spark side computes the count)
-    // 40 planted queries x 4 group members, measured deterministic at
-    // nProbe=1 on all three SFs (IVFServingProbe) — the exact count,
-    // not the 144 floor, is the pinned contract
-    "image_ivf_serving" -> "SELECT CAST(160 AS INTEGER) AS recovered",
-
-    // every streamed query's exact top-4 is its own planted 4-member
-    // group (nProbe == nLists), so in-group hits is the constant 4
-    "knn_stream" ->
-      """SELECT doc_id, CAST(4 AS BIGINT) AS hits
-        |FROM documents WHERE doc_id < 200""".stripMargin,
-
-    // survivors = min id per planted 4-id group (testFpWavBytes: one
-    // amplitude grid per group, exact volume re-encode variants)
-    "audio_fp_dedup" ->
-      "SELECT min(doc_id) AS doc_id FROM documents GROUP BY doc_id // 4",
-
-    // closed-form replay of the planted MP3 headers (testMp3Bytes);
-    // garbage ids carry no evidence -> NULL metadata
-    "mp3_metadata" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 16 = 7 THEN NULL ELSE 32000 END
-        |    AS INTEGER) AS sample_rate,
-        |  CAST(CASE WHEN doc_id % 16 = 7 THEN NULL
-        |    WHEN doc_id % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS channels,
-        |  CAST(CASE WHEN doc_id % 16 = 7 THEN NULL
-        |    ELSE 2 + doc_id % 4 END AS INTEGER) AS frames,
-        |  CAST(CASE WHEN doc_id % 16 = 7 THEN NULL
-        |    ELSE 36 * (2 + doc_id % 4) END AS BIGINT) AS duration_ms,
-        |  CAST(CASE WHEN doc_id % 16 = 7 THEN NULL
-        |    ELSE 128 + 32 * (doc_id % 5) END AS INTEGER) AS bitrate_kbps
-        |FROM documents""".stripMargin,
-
-    // closed-form replay of the planted MP4 box trees (testMp4Bytes)
-    "mp4_metadata" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 16 = 3 THEN NULL ELSE 'isom' END
-        |    AS major_brand,
-        |  CAST(CASE WHEN doc_id % 16 = 3 THEN NULL ELSE 1000 END
-        |    AS INTEGER) AS timescale,
-        |  CAST(CASE WHEN doc_id % 16 = 3 THEN NULL
-        |    ELSE 500 * (1 + doc_id % 8) END AS BIGINT) AS duration_ms,
-        |  CAST(CASE WHEN doc_id % 16 = 3 THEN NULL
-        |    WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS INTEGER) AS tracks,
-        |  CAST(CASE WHEN doc_id % 16 = 3 THEN NULL
-        |    ELSE 16 * (1 + doc_id % 4) END AS INTEGER) AS width,
-        |  CAST(CASE WHEN doc_id % 16 = 3 THEN NULL
-        |    ELSE 16 * (1 + doc_id % 3) END AS INTEGER) AS height
-        |FROM documents""".stripMargin,
-
-    // every image's nearest non-self neighbor lands in its own planted
-    // group — the mismatch count is identically zero
-    "image_knn" -> "SELECT CAST(0 AS BIGINT) AS mismatches",
-
-    // survivors = min id per planted 4-id group (testFpY4mBytes: one
-    // luma grid per group, exact brightness re-grade variants)
-    "video_fp_dedup" ->
-      "SELECT min(doc_id) AS doc_id FROM documents GROUP BY doc_id // 4",
-
-    "sessionize" ->
-      """SELECT event_id, user_id,
-        |  CAST(SUM(CASE WHEN gap THEN 1 ELSE 0 END) OVER (
-        |    PARTITION BY user_id ORDER BY secs
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS INTEGER)
-        |    AS session_id
-        |FROM (
-        |  SELECT event_id, user_id, FLOOR(epoch(ts)) AS secs,
-        |    (FLOOR(epoch(ts)) - lag(FLOOR(epoch(ts))) OVER (
-        |      PARTITION BY user_id ORDER BY FLOOR(epoch(ts)))) > 1800 AS gap
-        |  FROM events)""".stripMargin,
-
-    // the streaming-engine run emits CLOSED sessions only: every session
-    // except each user's last (still open at end-of-input)
-    "sessionize_stream" ->
-      """WITH e AS (SELECT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(FLOOR(epoch(ts)) AS BIGINT) AS secs FROM events),
-        |b AS (SELECT user_id, secs,
-        |    CASE WHEN secs - lag(secs) OVER (
-        |      PARTITION BY user_id ORDER BY secs) > 1800
-        |    THEN 1 ELSE 0 END AS brk FROM e),
-        |g AS (SELECT user_id, secs,
-        |    SUM(brk) OVER (PARTITION BY user_id ORDER BY secs
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM b),
-        |a AS (SELECT user_id, sid, MIN(secs) AS session_start,
-        |    MAX(secs) AS session_end, COUNT(*) AS n
-        |  FROM g GROUP BY user_id, sid),
-        |m AS (SELECT user_id, MAX(sid) AS last_sid FROM a GROUP BY user_id)
-        |SELECT a.user_id, a.session_start, a.session_end, a.n
-        |FROM a JOIN m USING (user_id) WHERE a.sid < m.last_sid""".stripMargin,
-
-    // generalized ESD, k=3 iterations unrolled; arithmetic mirrors the
-    // Spark side exactly (decimal sums -> double, fixed-order ops)
-    "detect_anomalies" ->
-      """WITH pts AS (
-        |  SELECT user_id, event_id, round(value*100) AS x FROM events),
-        |s1 AS (
-        |  SELECT user_id, COUNT(*) AS n,
-        |    CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE) AS s,
-        |    CAST(SUM(CAST(x*x AS DECIMAL(30,8))) AS DOUBLE) AS q
-        |  FROM pts GROUP BY user_id),
-        |d1 AS (
-        |  SELECT p.user_id, p.event_id, s.n, s.s, s.q,
-        |    ABS(s.n * p.x - s.s) AS dev,
-        |    ROW_NUMBER() OVER (PARTITION BY p.user_id
-        |      ORDER BY ABS(s.n * p.x - s.s) DESC, p.event_id) AS rn
-        |  FROM pts p JOIN s1 s USING (user_id)),
-        |a1 AS (
-        |  SELECT user_id, event_id, 1 AS iter,
-        |    dev / (n * SQRT((n*q - s*s) / (n * (n - 1.0)))) AS r
-        |  FROM d1 WHERE rn = 1),
-        |p1 AS (
-        |  SELECT p.* FROM pts p ANTI JOIN a1 a
-        |    ON p.user_id = a.user_id AND p.event_id = a.event_id),
-        |s2 AS (
-        |  SELECT user_id, COUNT(*) AS n,
-        |    CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE) AS s,
-        |    CAST(SUM(CAST(x*x AS DECIMAL(30,8))) AS DOUBLE) AS q
-        |  FROM p1 GROUP BY user_id),
-        |d2 AS (
-        |  SELECT p.user_id, p.event_id, s.n, s.s, s.q,
-        |    ABS(s.n * p.x - s.s) AS dev,
-        |    ROW_NUMBER() OVER (PARTITION BY p.user_id
-        |      ORDER BY ABS(s.n * p.x - s.s) DESC, p.event_id) AS rn
-        |  FROM p1 p JOIN s2 s USING (user_id)),
-        |a2 AS (
-        |  SELECT user_id, event_id, 2 AS iter,
-        |    dev / (n * SQRT((n*q - s*s) / (n * (n - 1.0)))) AS r
-        |  FROM d2 WHERE rn = 1),
-        |p2 AS (
-        |  SELECT p.* FROM p1 p ANTI JOIN a2 a
-        |    ON p.user_id = a.user_id AND p.event_id = a.event_id),
-        |s3 AS (
-        |  SELECT user_id, COUNT(*) AS n,
-        |    CAST(SUM(CAST(x AS DECIMAL(30,8))) AS DOUBLE) AS s,
-        |    CAST(SUM(CAST(x*x AS DECIMAL(30,8))) AS DOUBLE) AS q
-        |  FROM p2 GROUP BY user_id),
-        |d3 AS (
-        |  SELECT p.user_id, p.event_id, s.n, s.s, s.q,
-        |    ABS(s.n * p.x - s.s) AS dev,
-        |    ROW_NUMBER() OVER (PARTITION BY p.user_id
-        |      ORDER BY ABS(s.n * p.x - s.s) DESC, p.event_id) AS rn
-        |  FROM p2 p JOIN s3 s USING (user_id)),
-        |a3 AS (
-        |  SELECT user_id, event_id, 3 AS iter,
-        |    dev / (n * SQRT((n*q - s*s) / (n * (n - 1.0)))) AS r
-        |  FROM d3 WHERE rn = 1),
-        |tr AS (
-        |  SELECT * FROM a1 UNION ALL SELECT * FROM a2 UNION ALL SELECT * FROM a3),
-        |last AS (
-        |  SELECT user_id,
-        |    MAX(CASE WHEN r > 3.5 THEN iter ELSE 0 END) AS li
-        |  FROM tr GROUP BY user_id)
-        |SELECT t.user_id, t.iter, t.event_id
-        |FROM tr t JOIN last l USING (user_id)
-        |WHERE t.iter <= l.li""".stripMargin,
-
-    // 4-word-gram overlap with the src0 "benchmark"; docs with <4 words
-    // generate no grams on either side (range() is empty, matching the
-    // Spark-side sequence guard)
-    "decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source,
-        |    string_split_regex(trim(text), '\s+') AS t FROM documents),
-        |grams AS (
-        |  SELECT doc_id, source,
-        |    array_to_string(list_slice(t, i, i+3), ' ') AS g
-        |  FROM (SELECT doc_id, source, t,
-        |          unnest(range(1, len(t)-2)) AS i FROM toks)),
-        |bench AS (SELECT DISTINCT g FROM grams WHERE source = 'src0'),
-        |cont AS (
-        |  SELECT DISTINCT doc_id FROM grams
-        |  WHERE source <> 'src0' AND g IN (SELECT g FROM bench))
-        |SELECT d.doc_id,
-        |  CAST(CASE WHEN c.doc_id IS NOT NULL THEN 1 ELSE 0 END AS INTEGER)
-        |    AS is_contaminated
-        |FROM documents d LEFT JOIN cont c USING (doc_id)
-        |WHERE d.source <> 'src0'""".stripMargin,
-
-    // same gram construction; per-doc distinct grams vs the benchmark
-    // set, q4 arithmetic in the PipelineFunctions.q4 operation order
-    "decontaminate_frac" ->
-      """WITH toks AS (
-        |  SELECT doc_id, source,
-        |    string_split_regex(trim(text), '\s+') AS t FROM documents),
-        |grams AS (
-        |  SELECT doc_id, source,
-        |    array_to_string(list_slice(t, i, i+3), ' ') AS g
-        |  FROM (SELECT doc_id, source, t,
-        |          unnest(range(1, len(t)-2)) AS i FROM toks)),
-        |bench AS (SELECT DISTINCT g FROM grams WHERE source = 'src0'),
-        |dg AS (SELECT DISTINCT doc_id, g FROM grams WHERE source <> 'src0'),
-        |sc AS (SELECT doc_id, COUNT(*) AS n_grams,
-        |    SUM(CASE WHEN g IN (SELECT g FROM bench) THEN 1 ELSE 0 END)
-        |      AS n_hit
-        |  FROM dg GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(sc.n_grams, 0) AS BIGINT) AS n_grams,
-        |  CAST(COALESCE(sc.n_hit, 0) AS BIGINT) AS n_hit,
-        |  CAST(CASE WHEN COALESCE(sc.n_grams, 0) > 0 THEN
-        |      FLOOR(CAST(sc.n_hit AS DOUBLE) / CAST(sc.n_grams AS DOUBLE)
-        |        * 10000 + 0.5)
-        |    ELSE 0 END AS BIGINT) AS overlap_q4
-        |FROM documents d LEFT JOIN sc USING (doc_id)
-        |WHERE d.source <> 'src0'""".stripMargin,
-
-    // unigram LM replayed in SQL: same tokenization as the Spark side,
-    // top-16 vocab by (count desc, token asc), add-1.0 smoothing over
-    // V+1 types with OOV pooled into UNK; q4-scaled cross-entropy
-    "lm_perplexity" -> lmPerplexitySql,
-
-    // CCNet head/middle/tail by LM cross-entropy terciles: the lm
-    // oracle runs as a CTE, NTILE over the integer-quantized score
-    // with doc_id tiebreak (total order -> both engines agree)
-    "ccnet_buckets" ->
-      s"""WITH lm AS ($lmPerplexitySql)
-         |SELECT doc_id, CAST(NTILE(3) OVER
-         |  (ORDER BY lm_ce_q4, doc_id) AS INTEGER) AS bucket
-         |FROM lm WHERE lm_n_tokens > 0""".stripMargin,
-
-    "quality_classifier" ->
-      """SELECT doc_id, CAST(doc_id % 2 AS BIGINT) AS quality_pred
-        |FROM documents""".stripMargin,
-
-    // the oracle is the planted language itself (the classifier must
-    // recover it exactly; synthesis is pure integer arithmetic on
-    // doc_id, so the label needs no text replay)
-    "language_id" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 5 AS INTEGER)
-        |    WHEN 0 THEN 'en' WHEN 1 THEN 'fr' WHEN 2 THEN 'es'
-        |    WHEN 3 THEN 'de' ELSE 'it' END AS lang_pred
-        |FROM documents""".stripMargin,
-
-    "tar_roundtrip" ->
-      "SELECT doc_id, text FROM documents",
-
-    "warc_roundtrip" ->
-      "SELECT doc_id, text FROM documents",
-
-    "url_filter_table" -> {
-      val sufs = graft.text.UrlFilter.defaultMultiSuffixes
-        .map(s => s"'$s'").mkString(", ")
-      s"""WITH u AS (SELECT doc_id,
-         |  'https://' ||
-         |  (['news.bbc.co.uk','a.b.example.com','www.example.com',
-         |    'shop.com.au','sub.x.co.jp','foo.org','co.uk'])
-         |    [CAST(doc_id % 7 + 1 AS INTEGER)] ||
-         |  '/p/' || CAST(doc_id AS VARCHAR) AS url FROM documents),
-         |h AS (SELECT doc_id, url,
-         |  regexp_replace(regexp_extract(lower(url),
-         |    '^[a-z][a-z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1),
-         |    '^www\\.', '') AS host FROM u),
-         |p AS (SELECT doc_id, url,
-         |  regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS two,
-         |  regexp_extract(host, '([^.]+\\.[^.]+\\.[^.]+)$$', 1) AS three
-         |  FROM h),
-         |rd AS (SELECT doc_id, url,
-         |  CASE WHEN two IN ($sufs) AND three <> '' THEN three
-         |       ELSE two END AS domain FROM p)
-         |SELECT doc_id, url FROM rd
-         |WHERE domain NOT IN ('example.com', 'bbc.co.uk', 'x.co.jp')"""
-        .stripMargin
-    },
-
-    // the same registered-domain chain, membership flipped to IN
-    "url_filter_allow" -> {
-      val sufs = graft.text.UrlFilter.defaultMultiSuffixes
-        .map(s => s"'$s'").mkString(", ")
-      s"""WITH u AS (SELECT doc_id,
-         |  'https://' ||
-         |  (['news.bbc.co.uk','a.b.example.com','www.example.com',
-         |    'shop.com.au','sub.x.co.jp','foo.org','co.uk'])
-         |    [CAST(doc_id % 7 + 1 AS INTEGER)] ||
-         |  '/p/' || CAST(doc_id AS VARCHAR) AS url FROM documents),
-         |h AS (SELECT doc_id, url,
-         |  regexp_replace(regexp_extract(lower(url),
-         |    '^[a-z][a-z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1),
-         |    '^www\\.', '') AS host FROM u),
-         |p AS (SELECT doc_id, url,
-         |  regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS two,
-         |  regexp_extract(host, '([^.]+\\.[^.]+\\.[^.]+)$$', 1) AS three
-         |  FROM h),
-         |rd AS (SELECT doc_id, url,
-         |  CASE WHEN two IN ($sufs) AND three <> '' THEN three
-         |       ELSE two END AS domain FROM p)
-         |SELECT doc_id, url FROM rd
-         |WHERE domain IN ('example.com', 'bbc.co.uk', 'x.co.jp')"""
-        .stripMargin
-    },
-
-    "registered_domain" -> {
-      val sufs = graft.text.UrlFilter.defaultMultiSuffixes
-        .map(s => s"'$s'").mkString(", ")
-      s"""WITH u AS (SELECT doc_id,
-         |  'https://' ||
-         |  (['news.bbc.co.uk','a.b.example.com','www.example.com',
-         |    'shop.com.au','sub.x.co.jp','foo.org','co.uk'])
-         |    [CAST(doc_id % 7 + 1 AS INTEGER)] ||
-         |  '/p/' || CAST(doc_id AS VARCHAR) AS url FROM documents),
-         |h AS (SELECT doc_id,
-         |  regexp_replace(regexp_extract(lower(url),
-         |    '^[a-z][a-z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1),
-         |    '^www\\.', '') AS host FROM u),
-         |p AS (SELECT doc_id,
-         |  regexp_extract(host, '([^.]+\\.[^.]+)$$', 1) AS two,
-         |  regexp_extract(host, '([^.]+\\.[^.]+\\.[^.]+)$$', 1) AS three
-         |  FROM h)
-         |SELECT doc_id,
-         |  CASE WHEN two IN ($sufs) AND three <> '' THEN three
-         |       ELSE two END AS domain FROM p""".stripMargin
-    },
-
-    "url_filter" ->
-      """WITH u AS (SELECT doc_id,
-        |  'https://' ||
-        |  CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE '' END ||
-        |  (['good.com','evil.com','fine.org','sub.bad.org','notevil.com'])
-        |    [CAST(doc_id % 5 + 1 AS INTEGER)] ||
-        |  '/page/' || CAST(doc_id AS VARCHAR) ||
-        |  CASE WHEN doc_id % 7 = 0 THEN '?ref=casino' ELSE '' END AS url
-        |  FROM documents),
-        |h AS (SELECT doc_id, url,
-        |  regexp_replace(regexp_extract(lower(url),
-        |    '^[a-z][a-z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1),
-        |    '^www\.', '') AS host FROM u)
-        |SELECT doc_id, url FROM h
-        |WHERE NOT (host = 'evil.com' OR host LIKE '%.evil.com'
-        |        OR host = 'bad.org' OR host LIKE '%.bad.org'
-        |        OR lower(url) LIKE '%casino%')""".stripMargin,
-
-    // full replay of UrlNormalizer.normalize: each regex matches at
-    // most once (all anchored, or first-#-to-end), so DuckDB's
-    // replace-first equals Spark's replace-all
-    "url_normalize" ->
-      """WITH u AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 11 = 10 THEN 'doc ' || CAST(doc_id AS VARCHAR)
-        |  ELSE
-        |    (['https','HTTPS','http','HTTP'])[CAST(doc_id % 4 + 1 AS INTEGER)]
-        |    || '://' ||
-        |    CASE WHEN doc_id % 3 = 0 THEN 'user:pw@' ELSE '' END ||
-        |    CASE WHEN doc_id % 2 = 0 THEN 'WWW.' ELSE '' END ||
-        |    (['Example.com','site.org','News.co.uk'])
-        |      [CAST(doc_id % 3 + 1 AS INTEGER)] ||
-        |    ([':443',':80',':8080',''])[CAST(doc_id % 4 + 1 AS INTEGER)] ||
-        |    '/Path/' || CAST(doc_id AS VARCHAR) ||
-        |    (['/','//','','',''])[CAST(doc_id % 5 + 1 AS INTEGER)] ||
-        |    (['?utm_source=f&q=' || CAST(doc_id AS VARCHAR),
-        |      '?gclid=x','?a=1&fbclid=y&b=2',''])
-        |      [CAST(doc_id % 7 % 4 + 1 AS INTEGER)] ||
-        |    CASE WHEN doc_id % 6 = 0 THEN '#sec' ELSE '' END
-        |  END AS url FROM documents),
-        |n1 AS (SELECT doc_id, url,
-        |  regexp_replace(url, '#.*', '') AS nofrag FROM u),
-        |n2 AS (SELECT doc_id, url,
-        |  lower(regexp_extract(nofrag,
-        |    '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |  regexp_replace(nofrag,
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest FROM n1),
-        |n3 AS (SELECT doc_id, url, scheme,
-        |  regexp_extract(rest, '^([^/?]*)', 1) AS hostport,
-        |  regexp_replace(rest, '^[^/?]*', '') AS tail FROM n2),
-        |n4 AS (SELECT doc_id, url, scheme, tail,
-        |  regexp_replace(lower(regexp_replace(hostport, '^[^@]*@', '')),
-        |    '^www\.', '') AS h1 FROM n3),
-        |n5 AS (SELECT doc_id, url, scheme, tail,
-        |  CASE WHEN scheme = 'http' THEN regexp_replace(h1, ':80$', '')
-        |       WHEN scheme = 'https' THEN regexp_replace(h1, ':443$', '')
-        |       ELSE h1 END AS h2 FROM n4),
-        |n6 AS (SELECT doc_id, url, scheme, h2,
-        |  regexp_replace(regexp_extract(tail, '^([^?]*)', 1),
-        |    '/+$', '') AS path,
-        |  regexp_replace(tail, '^[^?]*', '') AS qs FROM n5),
-        |n7 AS (SELECT doc_id, url, scheme, h2, path, qs,
-        |  list_filter(string_split(substr(qs, 2), '&'),
-        |    p -> NOT lower(regexp_extract(p, '^([^=]*)', 1)) IN
-        |      ('utm_source','utm_medium','utm_campaign','utm_term',
-        |       'utm_content','utm_id','gclid','fbclid','msclkid',
-        |       'mc_cid','mc_eid','igshid','ref')) AS kept FROM n6),
-        |n8 AS (SELECT doc_id, url, scheme, h2, path,
-        |  CASE WHEN length(qs) <= 1 THEN ''
-        |       WHEN len(kept) = 0 THEN ''
-        |       ELSE '?' || array_to_string(kept, '&') END AS qnorm
-        |  FROM n7)
-        |SELECT doc_id,
-        |  CASE WHEN scheme = '' THEN url
-        |       ELSE scheme || '://' || h2 || path || qnorm END AS url_norm
-        |FROM n8""".stripMargin,
-
-    // normalize replay (same chain as url_normalize, on the grouped
-    // fixture) + the deduplicator's min-id-per-group window
-    "url_dedup" ->
-      """WITH u AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN 'HTTPS' ELSE 'https' END
-        |  || '://' ||
-        |  CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE '' END ||
-        |  'site.com' ||
-        |  CASE WHEN doc_id % 4 = 1 THEN ':443' ELSE '' END ||
-        |  '/page/' || CAST(doc_id % 50 AS VARCHAR) ||
-        |  CASE WHEN doc_id % 5 = 0 THEN '/' ELSE '' END ||
-        |  (['?q=' || CAST(doc_id % 50 AS VARCHAR),
-        |    '?q=' || CAST(doc_id % 50 AS VARCHAR) || '&utm_source=f',
-        |    '?gclid=x',''])[CAST(doc_id % 7 % 4 + 1 AS INTEGER)] ||
-        |  CASE WHEN doc_id % 6 = 0 THEN '#top' ELSE '' END AS url
-        |  FROM documents),
-        |n1 AS (SELECT doc_id,
-        |  regexp_replace(url, '#.*', '') AS nofrag FROM u),
-        |n2 AS (SELECT doc_id,
-        |  lower(regexp_extract(nofrag,
-        |    '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |  regexp_replace(nofrag,
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest FROM n1),
-        |n3 AS (SELECT doc_id, scheme,
-        |  regexp_extract(rest, '^([^/?]*)', 1) AS hostport,
-        |  regexp_replace(rest, '^[^/?]*', '') AS tail FROM n2),
-        |n4 AS (SELECT doc_id, scheme, tail,
-        |  regexp_replace(lower(regexp_replace(hostport, '^[^@]*@', '')),
-        |    '^www\.', '') AS h1 FROM n3),
-        |n5 AS (SELECT doc_id, scheme, tail,
-        |  CASE WHEN scheme = 'http' THEN regexp_replace(h1, ':80$', '')
-        |       WHEN scheme = 'https' THEN regexp_replace(h1, ':443$', '')
-        |       ELSE h1 END AS h2 FROM n4),
-        |n6 AS (SELECT doc_id, scheme, h2,
-        |  regexp_replace(regexp_extract(tail, '^([^?]*)', 1),
-        |    '/+$', '') AS path,
-        |  regexp_replace(tail, '^[^?]*', '') AS qs FROM n5),
-        |n7 AS (SELECT doc_id, scheme, h2, path, qs,
-        |  list_filter(string_split(substr(qs, 2), '&'),
-        |    p -> NOT lower(regexp_extract(p, '^([^=]*)', 1)) IN
-        |      ('utm_source','utm_medium','utm_campaign','utm_term',
-        |       'utm_content','utm_id','gclid','fbclid','msclkid',
-        |       'mc_cid','mc_eid','igshid','ref')) AS kept FROM n6),
-        |n8 AS (SELECT doc_id,
-        |  scheme || '://' || h2 || path ||
-        |  CASE WHEN length(qs) <= 1 THEN ''
-        |       WHEN len(kept) = 0 THEN ''
-        |       ELSE '?' || array_to_string(kept, '&') END AS url_norm
-        |  FROM n7)
-        |SELECT doc_id, url_norm FROM (
-        |  SELECT doc_id, url_norm, row_number() OVER (
-        |    PARTITION BY url_norm ORDER BY doc_id) AS rn FROM n8)
-        |WHERE rn = 1""".stripMargin,
-
-    "embedding_sq8" ->
-      """WITH d AS (SELECT vec_id,
-        |    CAST(unnest(embedding) AS DOUBLE) AS x,
-        |    generate_subscripts(embedding, 1) AS p
-        |  FROM embeddings),
-        |st AS (SELECT p, min(x) AS mn, max(x) AS mx FROM d GROUP BY p)
-        |SELECT d.vec_id, CAST(d.p - 1 AS INTEGER) AS pos,
-        |  CAST(CASE WHEN mx = mn THEN 0
-        |    ELSE least(255.0, greatest(0.0,
-        |      floor((x - mn) * 255.0 / (mx - mn) + 0.5)))
-        |  END AS INTEGER) AS code
-        |FROM d JOIN st USING (p)""".stripMargin,
-
-    "mojibake_repair" -> {
-      import graft.text.MojibakeRepair.{moji, table}
-      val synth = s"'It${moji("’")}s ${moji("“")}fine${moji("„")} " +
-        s"caf${moji("é")} ${moji("—")} 20${moji("°")}C ' || text || " +
-        s"' tail${moji("…")} ${moji("«")}q${moji("»")} ${moji("ü")}ber'"
-      val chain = table.foldLeft(s"($synth)") { case (acc, (bad, good)) =>
-        s"replace($acc, '$bad', '$good')"
-      }
-      s"SELECT doc_id, $chain AS repaired FROM documents"
-    },
-
-    "tokenshard_roundtrip" ->
-      """WITH base AS (SELECT doc_id,
-        |  regexp_split_to_array(
-        |    lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS arr
-        |  FROM documents),
-        |w AS (SELECT doc_id, unnest(arr) AS w,
-        |    generate_subscripts(arr, 1) AS pos FROM base),
-        |wf AS (SELECT * FROM w WHERE length(w) > 0),
-        |v AS (SELECT w, ROW_NUMBER() OVER (ORDER BY w) AS id
-        |      FROM (SELECT DISTINCT w FROM wf)),
-        |ranked AS (SELECT doc_id, wf.pos, v.id,
-        |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY wf.pos) AS dense
-        |  FROM wf JOIN v USING (w))
-        |SELECT doc_id, CAST(dense - 1 AS INTEGER) AS pos,
-        |  CAST(id AS INTEGER) AS token_id FROM ranked""".stripMargin,
-
-    "html_extract" ->
-      """WITH page AS (SELECT doc_id,
-        |  '<html><head><title>T</title><script>if (1 < 2) { f("x"); }' ||
-        |  '</script><style>p { color: red }</style></head><body><h1>Doc ' ||
-        |  CAST(doc_id AS VARCHAR) ||
-        |  '</h1><!-- hidden --><p class="a">' || text ||
-        |  '</p><div>A&amp;B &lt;tag&gt;&nbsp;tail&#39;s</div>' ||
-        |  '</body></html>' AS h FROM documents),
-        |c1 AS (SELECT doc_id, regexp_replace(h, '(?s)<!--.*?-->', '', 'g') AS h FROM page),
-        |c2 AS (SELECT doc_id, regexp_replace(h, '(?is)<script\b[^>]*>.*?</script>', '', 'g') AS h FROM c1),
-        |c3 AS (SELECT doc_id, regexp_replace(h, '(?is)<style\b[^>]*>.*?</style>', '', 'g') AS h FROM c2),
-        |c4 AS (SELECT doc_id, regexp_replace(h, '(?is)<noscript\b[^>]*>.*?</noscript>', '', 'g') AS h FROM c3),
-        |c5 AS (SELECT doc_id, regexp_replace(h, '(?is)<head\b[^>]*>.*?</head>', '', 'g') AS h FROM c4),
-        |c6 AS (SELECT doc_id, regexp_replace(h,
-        |  '(?i)</?(p|div|br|h[1-6]|li|ul|ol|table|tr|td|th|blockquote|section|article|header|footer|pre|form)\b[^>]{0,1000}>',
-        |  chr(10), 'g') AS h FROM c5),
-        |c7 AS (SELECT doc_id, regexp_replace(h, '<[^>]{1,1000}>', '', 'g') AS h FROM c6),
-        |c8 AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(regexp_replace(h,
-        |  '&nbsp;', ' ', 'g'), '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g') AS h FROM c7),
-        |c9 AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(regexp_replace(h,
-        |  '&#34;', '"', 'g'), '&#39;', CHR(39), 'g'), '&apos;', CHR(39), 'g'), '&amp;', '&', 'g') AS h FROM c8),
-        |c10 AS (SELECT doc_id, regexp_replace(h, '[ \t\r]+', ' ', 'g') AS h FROM c9),
-        |c11 AS (SELECT doc_id, regexp_replace(h, ' ?\n ?', chr(10), 'g') AS h FROM c10),
-        |c12 AS (SELECT doc_id, regexp_replace(h, '\n{2,}', chr(10), 'g') AS h FROM c11),
-        |c13 AS (SELECT doc_id, regexp_replace(h, '^\n+', '', 'g') AS h FROM c12),
-        |c14 AS (SELECT doc_id, regexp_replace(h, '\n+$', '', 'g') AS h FROM c13)
-        |SELECT doc_id, trim(h) AS extracted FROM c14""".stripMargin,
-
-    "html_entities" ->
-      """WITH page AS (SELECT doc_id,
-        |  '<html><body><p>Doc ' || CAST(doc_id AS VARCHAR) ||
-        |  ': A&#x2019;B em&#8212;dash caf&#233; it&#146;s ' ||
-        |  'smile&#x1F600;! lone&#xD800;surr nul&#0;x big&#x110000;y ' ||
-        |  'bad&#zz; esc&amp;#39;q ' || text ||
-        |  '</p></body></html>' AS h FROM documents),
-        |c1 AS (SELECT doc_id, regexp_replace(h, '(?s)<!--.*?-->', '', 'g') AS h FROM page),
-        |c2 AS (SELECT doc_id, regexp_replace(h, '(?is)<script\b[^>]*>.*?</script>', '', 'g') AS h FROM c1),
-        |c3 AS (SELECT doc_id, regexp_replace(h, '(?is)<style\b[^>]*>.*?</style>', '', 'g') AS h FROM c2),
-        |c4 AS (SELECT doc_id, regexp_replace(h, '(?is)<noscript\b[^>]*>.*?</noscript>', '', 'g') AS h FROM c3),
-        |c5 AS (SELECT doc_id, regexp_replace(h, '(?is)<head\b[^>]*>.*?</head>', '', 'g') AS h FROM c4),
-        |c6 AS (SELECT doc_id, regexp_replace(h,
-        |  '(?i)</?(p|div|br|h[1-6]|li|ul|ol|table|tr|td|th|blockquote|section|article|header|footer|pre|form)\b[^>]{0,1000}>',
-        |  chr(10), 'g') AS h FROM c5),
-        |c7 AS (SELECT doc_id, regexp_replace(h, '<[^>]{1,1000}>', '', 'g') AS h FROM c6),
-        |c8 AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(regexp_replace(h,
-        |  '&nbsp;', ' ', 'g'), '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g') AS h FROM c7),
-        |c9 AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(h,
-        |  '&#34;', '"', 'g'), '&#39;', CHR(39), 'g'), '&apos;', CHR(39), 'g') AS h FROM c8),
-        |n1 AS (SELECT doc_id, replace(replace(replace(replace(h,
-        |  '&#x2019;', '’'), '&#8212;', '—'), '&#233;', 'é'),
-        |  '&#146;', '’') AS h FROM c9),
-        |n2 AS (SELECT doc_id, replace(replace(replace(replace(h,
-        |  '&#x1F600;', '😀'), '&#xD800;', '�'), '&#0;', '�'),
-        |  '&#x110000;', '�') AS h FROM n1),
-        |n3 AS (SELECT doc_id, regexp_replace(h, '&amp;', '&', 'g') AS h FROM n2),
-        |c10 AS (SELECT doc_id, regexp_replace(h, '[ \t\r]+', ' ', 'g') AS h FROM n3),
-        |c11 AS (SELECT doc_id, regexp_replace(h, ' ?\n ?', chr(10), 'g') AS h FROM c10),
-        |c12 AS (SELECT doc_id, regexp_replace(h, '\n{2,}', chr(10), 'g') AS h FROM c11),
-        |c13 AS (SELECT doc_id, regexp_replace(h, '^\n+', '', 'g') AS h FROM c12),
-        |c14 AS (SELECT doc_id, regexp_replace(h, '\n+$', '', 'g') AS h FROM c13)
-        |SELECT doc_id, trim(h) AS extracted FROM c14""".stripMargin,
-
-    "crawl_e2e" ->
-      """WITH page AS (SELECT doc_id,
-        |  '<html><head><title>T</title><script>if (1 < 2) { f("x"); }' ||
-        |  '</script><style>p { color: red }</style></head><body><h1>Doc ' ||
-        |  CAST(doc_id AS VARCHAR) ||
-        |  '</h1><!-- hidden --><p class="a">' || text ||
-        |  '</p><div>A&amp;B &lt;tag&gt;&nbsp;tail&#39;s</div>' ||
-        |  '</body></html>' AS h FROM documents),
-        |c1 AS (SELECT doc_id, regexp_replace(h, '(?s)<!--.*?-->', '', 'g') AS h FROM page),
-        |c2 AS (SELECT doc_id, regexp_replace(h, '(?is)<script\b[^>]*>.*?</script>', '', 'g') AS h FROM c1),
-        |c3 AS (SELECT doc_id, regexp_replace(h, '(?is)<style\b[^>]*>.*?</style>', '', 'g') AS h FROM c2),
-        |c4 AS (SELECT doc_id, regexp_replace(h, '(?is)<noscript\b[^>]*>.*?</noscript>', '', 'g') AS h FROM c3),
-        |c5 AS (SELECT doc_id, regexp_replace(h, '(?is)<head\b[^>]*>.*?</head>', '', 'g') AS h FROM c4),
-        |c6 AS (SELECT doc_id, regexp_replace(h,
-        |  '(?i)</?(p|div|br|h[1-6]|li|ul|ol|table|tr|td|th|blockquote|section|article|header|footer|pre|form)\b[^>]{0,1000}>',
-        |  chr(10), 'g') AS h FROM c5),
-        |c7 AS (SELECT doc_id, regexp_replace(h, '<[^>]{1,1000}>', '', 'g') AS h FROM c6),
-        |c8 AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(regexp_replace(h,
-        |  '&nbsp;', ' ', 'g'), '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g') AS h FROM c7),
-        |c9 AS (SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(regexp_replace(h,
-        |  '&#34;', '"', 'g'), '&#39;', CHR(39), 'g'), '&apos;', CHR(39), 'g'), '&amp;', '&', 'g') AS h FROM c8),
-        |c10 AS (SELECT doc_id, regexp_replace(h, '[ \t\r]+', ' ', 'g') AS h FROM c9),
-        |c11 AS (SELECT doc_id, regexp_replace(h, ' ?\n ?', chr(10), 'g') AS h FROM c10),
-        |c12 AS (SELECT doc_id, regexp_replace(h, '\n{2,}', chr(10), 'g') AS h FROM c11),
-        |c13 AS (SELECT doc_id, regexp_replace(h, '^\n+', '', 'g') AS h FROM c12),
-        |c14 AS (SELECT doc_id, regexp_replace(h, '\n+$', '', 'g') AS h FROM c13)
-        |SELECT doc_id, trim(h) AS extracted FROM c14""".stripMargin,
-
-    "dedup_exact_stream" ->
-      """SELECT DISTINCT
-        |  lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS ct
-        |FROM documents""".stripMargin,
-
-    // all-pairs replay of the streaming semantic decisions (single-cell
-    // quantizer => the broadcast probe IS exhaustive): a base %4==0 id
-    // survives iff no corpus vector sits at cosine >= 0.465; the %8==1
-    // offset copies are identical to corpus vectors (cosine 1, always
-    // dropped by the probe) and the %8==4 copies collapse onto their
-    // bit-identical base twin in the in-stream exact state, so the
-    // distinct base-id set is exactly the probe decisions
-    "semdedup_stream" ->
-      """WITH corp AS MATERIALIZED (
-        |  SELECT embedding FROM embeddings WHERE vec_id % 4 <> 0)
-        |SELECT vec_id FROM embeddings b
-        |WHERE vec_id % 4 = 0 AND NOT EXISTS (
-        |  SELECT 1 FROM corp c
-        |  WHERE list_cosine_similarity(b.embedding, c.embedding)
-        |    >= 0.465)""".stripMargin,
-
-    // streaming survivors = exactly the odd planted groups (even groups
-    // are in the corpus index; in-stream bit-identical pairs collapse
-    // to one row per group)
-    "audio_fp_dedup_stream" ->
-      """SELECT DISTINCT doc_id // 4 AS group_id
-        |FROM documents WHERE (doc_id // 4) % 2 = 1""".stripMargin,
-
-    // exact-Jaccard replay of the streaming near-dup decisions (sound:
-    // SigModeProbe margins — see the query's comment), then the
-    // surviving DISTINCT canonical-text set (in-stream exact dedup).
-    // The n=0 rule mirrors the engine: an empty-shingle doc carries the
-    // all-sentinel signature and matches other empty docs exactly
-    "dedup_minhash_stream" ->
-      """WITH c AS MATERIALIZED (
-        |  SELECT doc_id, text, list_filter(string_split_regex(lower(text),
-        |    '[\t\n\x0B\f\r\x1C-\x1F \x{1680}\x{2000}-\x{2006}\x{2008}-\x{200A}\x{2028}\x{2029}\x{205F}\x{3000}]+'), t -> t <> '') AS toks
-        |  FROM documents),
-        |s AS MATERIALIZED (
-        |  SELECT doc_id, text,
-        |    list_distinct([array_to_string(
-        |      toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+2], ' ')
-        |      for i in range(1, len(toks) - 1)]) AS sh
-        |  FROM c),
-        |corp AS (SELECT doc_id, sh FROM s WHERE doc_id % 4 <> 0),
-        |bat AS (
-        |  SELECT doc_id, text, sh FROM s WHERE doc_id % 4 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, sh FROM s WHERE doc_id % 8 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text, sh FROM s WHERE doc_id % 8 = 4),
-        |bsz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM bat),
-        |csz AS MATERIALIZED (SELECT doc_id, len(sh) AS n FROM corp),
-        |bex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM bat),
-        |cex AS MATERIALIZED (SELECT doc_id, unnest(sh) AS g FROM corp),
-        |cd AS (
-        |  SELECT q.bid AS r FROM (
-        |    SELECT b.doc_id AS bid, cx.doc_id AS cid, count(*) AS inter
-        |    FROM bex b JOIN cex cx ON b.g = cx.g GROUP BY 1, 2) q
-        |  JOIN bsz ON bsz.doc_id = q.bid
-        |  JOIN csz ON csz.doc_id = q.cid
-        |  WHERE CAST(q.inter AS DOUBLE) / (bsz.n + csz.n - q.inter) >= 0.85
-        |  UNION ALL
-        |  SELECT b.doc_id FROM bsz b
-        |  WHERE b.n = 0 AND EXISTS (SELECT 1 FROM csz WHERE n = 0))
-        |SELECT DISTINCT
-        |  lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS ct
-        |FROM bat WHERE doc_id NOT IN (SELECT r FROM cd)""".stripMargin,
-
-    "line_dedup_within" ->
-      """WITH b AS (
-        |  SELECT doc_id, string_split(
-        |    text || chr(10) || text || chr(10) || 'tail' || chr(10) || text,
-        |    chr(10)) AS ls
-        |  FROM documents)
-        |SELECT doc_id, array_to_string(
-        |  list_filter(ls, (x, i) -> list_position(ls, x) = i),
-        |  chr(10)) AS dedup_text
-        |FROM b""".stripMargin,
-
-    "corpus_report" ->
-      """WITH b AS (
-        |  SELECT length(text) AS chars,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> x <> '')) AS ntok,
-        |    lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS ct,
-        |    lang, source
-        |  FROM documents)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(COALESCE(SUM(ntok), 0) AS BIGINT) AS n_tokens,
-        |  CAST(COALESCE(SUM(chars), 0) AS BIGINT) AS n_chars,
-        |  CAST(COUNT(DISTINCT ct) AS BIGINT) AS n_unique_docs,
-        |  CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-        |  CAST(COUNT(DISTINCT source) AS BIGINT) AS n_domains,
-        |  CAST(COALESCE(MIN(ntok), 0) AS BIGINT) AS min_tokens,
-        |  CAST(COALESCE(MAX(ntok), 0) AS BIGINT) AS max_tokens,
-        |  CAST(COALESCE(SUM(CASE WHEN ntok = 0 THEN 1 ELSE 0 END), 0)
-        |    AS BIGINT) AS n_empty_docs,
-        |  CAST(COUNT(*) - COUNT(DISTINCT ct) AS BIGINT) AS n_exact_dups
-        |FROM b""".stripMargin,
-
-    // the md5 sign-bit arithmetic replayed: bit j of the digest via
-    // hex-char strpos + shift, summed as ±tf per (doc, dim); docs with
-    // zero tokens emit all-zero dims in both engines (LEFT JOIN +
-    // COALESCE mirrors the UDF's zero accumulator)
-    "hashed_embedding" ->
-      """WITH tok AS (
-        |  SELECT doc_id, t, COUNT(*) AS c FROM (
-        |    SELECT doc_id, unnest(list_filter(
-        |      string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> x <> '')) AS t
-        |    FROM documents WHERE text IS NOT NULL)
-        |  GROUP BY doc_id, t),
-        |sig AS (SELECT doc_id, c, md5(t || ':e15') AS h FROM tok),
-        |r AS (SELECT unnest(range(16)) AS j)
-        |SELECT d.doc_id, CAST(r.j AS BIGINT) AS dim,
-        |  CAST(COALESCE(SUM(sig.c * (CASE WHEN
-        |    ((strpos('0123456789abcdef',
-        |        substr(sig.h, (r.j // 4) + 1, 1)) - 1)
-        |      >> (3 - (r.j % 4))) & 1 = 1
-        |    THEN 1 ELSE -1 END)), 0) AS BIGINT) AS val
-        |FROM documents d CROSS JOIN r
-        |LEFT JOIN sig ON sig.doc_id = d.doc_id
-        |WHERE d.text IS NOT NULL
-        |GROUP BY d.doc_id, r.j""".stripMargin,
-
-    // the planted-class rule itself (the language_id pattern): the gate
-    // passes iff nearest-centroid assignment over the learned embedding
-    // space recovers every planted class
-    "trained_embedding" ->
-      """SELECT doc_id, CAST(doc_id % 5 AS BIGINT) AS pred_class
-        |FROM documents""".stripMargin,
-
-    // same planted rule; the gate's Spark side must recover it THROUGH
-    // the 16-token stopword flood via SIF weighting
-    "trained_embedding_sif" ->
-      """SELECT doc_id, CAST(doc_id % 5 AS BIGINT) AS pred_class
-        |FROM documents""".stripMargin,
-
-    // same planted rule again; here the test docs (doc_id % 3 = 0) are
-    // all-OOV morphological variants, so recovery proves the subword
-    // fallback (the word-lookup path pools them to zero)
-    "subword_embedding" ->
-      """SELECT doc_id, CAST(doc_id % 5 AS BIGINT) AS pred_class
-        |FROM documents""".stripMargin,
-
-    // the same report arithmetic per language group
-    "corpus_report_grouped" ->
-      """WITH b AS (
-        |  SELECT length(text) AS chars,
-        |    len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> x <> '')) AS ntok,
-        |    lower(regexp_replace(trim(text), '\s+', ' ', 'g')) AS ct,
-        |    lang, source
-        |  FROM documents)
-        |SELECT lang,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(COALESCE(SUM(ntok), 0) AS BIGINT) AS n_tokens,
-        |  CAST(COALESCE(SUM(chars), 0) AS BIGINT) AS n_chars,
-        |  CAST(COUNT(DISTINCT ct) AS BIGINT) AS n_unique_docs,
-        |  CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-        |  CAST(COUNT(DISTINCT source) AS BIGINT) AS n_domains,
-        |  CAST(COALESCE(MIN(ntok), 0) AS BIGINT) AS min_tokens,
-        |  CAST(COALESCE(MAX(ntok), 0) AS BIGINT) AS max_tokens,
-        |  CAST(COALESCE(SUM(CASE WHEN ntok = 0 THEN 1 ELSE 0 END), 0)
-        |    AS BIGINT) AS n_empty_docs,
-        |  CAST(COUNT(*) - COUNT(DISTINCT ct) AS BIGINT) AS n_exact_dups
-        |FROM b GROUP BY lang""".stripMargin,
-
-    "score_select_domain" ->
-      """SELECT doc_id, source, n_chars FROM (
-        |  SELECT doc_id, source, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars DESC, doc_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY source) AS n
-        |  FROM documents)
-        |WHERE rn <= CEIL(0.25 * n)""".stripMargin,
-
-    "score_select" ->
-      """SELECT doc_id, n_chars FROM (
-        |  SELECT doc_id, n_chars,
-        |    row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rn,
-        |    COUNT(*) OVER () AS n
-        |  FROM documents)
-        |WHERE rn <= CEIL(0.25 * n)""".stripMargin,
-
-    // planted-partition recovery, label-free: the oracle is the planted
-    // grouping itself, canonicalized to each group's min doc_id
-    "embed_cluster" ->
-      """SELECT doc_id, min(doc_id) OVER (PARTITION BY doc_id % 6)
-        |  AS cluster_rep FROM documents""".stripMargin,
-
-    // the bottom-k aggregator's keep set == the window-rank rule
-    "group_quota" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source, row_number() OVER (PARTITION BY source
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR) || ':quota'), doc_id)
-        |    AS rn FROM documents)
-        |WHERE rn <= 10""".stripMargin,
-
-    "topic_balance" ->
-      """WITH kept AS (
-        |  SELECT doc_id, doc_id % 6 AS grp FROM (
-        |    SELECT doc_id, row_number() OVER (PARTITION BY doc_id % 6
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR) || ':balance'), doc_id)
-        |      AS rn FROM documents) WHERE rn <= 15)
-        |SELECT doc_id, min(doc_id) OVER (PARTITION BY grp) AS cluster_rep
-        |FROM kept""".stripMargin,
-
-    // distinct-3-gram document frequencies, integer statistics only
-    // (the sd_weight double is a pure function of the per-gram dfs and
-    // stays suite-pinned off the hash gate)
-    "soft_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'), x -> x <> '')
-        |    AS t FROM documents),
-        |grams AS (
-        |  SELECT DISTINCT doc_id,
-        |    array_to_string(list_slice(t, i, i+2), ' ') AS g
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t)-1)) AS i
-        |        FROM toks)),
-        |dfreq AS (SELECT g, COUNT(*) AS df FROM grams GROUP BY g),
-        |sc AS (SELECT doc_id, COUNT(*) AS n_grams, SUM(df) AS sum_df
-        |  FROM grams JOIN dfreq USING (g) GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(sc.n_grams, 0) AS BIGINT) AS sd_n_grams,
-        |  CAST(COALESCE(sc.sum_df, 0) AS BIGINT) AS sd_sum_df
-        |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin,
-
-    // collision-free sketch == exact dfs at the correctness fixture, so
-    // the exact SQL applies verbatim (the dedup_bloom_approx pattern)
-    "soft_dedup_sketch" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'), x -> x <> '')
-        |    AS t FROM documents),
-        |grams AS (
-        |  SELECT DISTINCT doc_id,
-        |    array_to_string(list_slice(t, i, i+2), ' ') AS g
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t)-1)) AS i
-        |        FROM toks)),
-        |dfreq AS (SELECT g, COUNT(*) AS df FROM grams GROUP BY g),
-        |sc AS (SELECT doc_id, COUNT(*) AS n_grams, SUM(df) AS sum_df
-        |  FROM grams JOIN dfreq USING (g) GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(sc.n_grams, 0) AS BIGINT) AS sd_n_grams,
-        |  CAST(COALESCE(sc.sum_df, 0) AS BIGINT) AS sd_sum_df
-        |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin,
-
-    "concat_chunk" ->
-      """WITH tok AS (
-        |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || ':42') AS h,
-        |    CAST(len(list_filter(
-        |      string_split_regex(lower(trim(text)), '\s+'),
-        |      x -> x <> '')) AS BIGINT) AS n
-        |  FROM documents),
-        |off AS (SELECT doc_id, n,
-        |    CAST(COALESCE(SUM(n) OVER (ORDER BY h, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS o
-        |  FROM tok),
-        |pieces AS (
-        |  SELECT doc_id, o AS tok_offset, n,
-        |    unnest(range(o // 128, (o + n - 1) // 128 + 1)) AS chunk_id
-        |  FROM off WHERE n > 0)
-        |SELECT doc_id, tok_offset, chunk_id,
-        |  GREATEST(0, chunk_id * 128 - tok_offset) AS tok_start,
-        |  LEAST(n, (chunk_id + 1) * 128 - tok_offset) AS tok_end
-        |FROM pieces""".stripMargin,
-
-    "bpe_roundtrip" ->
-      """SELECT doc_id, array_to_string(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'), x -> x <> ''),
-        |  ' ') AS rt
-        |FROM documents""".stripMargin,
-
-    // Unigram tokenizer losslessness: identical canonicalization replay
-    "unigram_roundtrip" ->
-      """SELECT doc_id, array_to_string(list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'), x -> x <> ''),
-        |  ' ') AS rt
-        |FROM documents""".stripMargin,
-
-    // Winnowing replay: same canonicalization, char 9-gram md5 hashes,
-    // per-window MIN over w=4 via a position-range self-join (clipping
-    // at the gram-array end exactly as slice() does), then the
-    // rightmost-min tie rule as MAX(pos) among window positions
-    // achieving the window minimum
-    "winnow_fingerprints" ->
-      """WITH canon AS (
-        |  SELECT doc_id,
-        |         trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-        |  FROM documents),
-        |grams AS (
-        |  SELECT doc_id, CAST(p AS BIGINT) AS pos, md5(substr(t, p, 9)) AS h
-        |  FROM canon, unnest(range(1, greatest(length(t) - 9 + 1, 0) + 1)) u(p)),
-        |mcnt AS (SELECT doc_id, COUNT(*) AS m FROM grams GROUP BY doc_id),
-        |wins AS (
-        |  SELECT g1.doc_id, g1.pos AS q, MIN(g2.h) AS mh
-        |  FROM grams g1
-        |  JOIN mcnt ON mcnt.doc_id = g1.doc_id
-        |  JOIN grams g2 ON g2.doc_id = g1.doc_id
-        |   AND g2.pos BETWEEN g1.pos AND g1.pos + 3
-        |  WHERE g1.pos <= greatest(mcnt.m - 3, 1)
-        |  GROUP BY g1.doc_id, g1.pos),
-        |sel AS (
-        |  SELECT w.doc_id, MAX(g.pos) AS pos, w.mh AS hash
-        |  FROM wins w JOIN grams g ON g.doc_id = w.doc_id AND g.h = w.mh
-        |   AND g.pos BETWEEN w.q AND w.q + 3
-        |  GROUP BY w.doc_id, w.q, w.mh)
-        |SELECT DISTINCT doc_id, pos, hash FROM sel""".stripMargin,
-
-    // Stupid-backoff replay: per-order count tables with the same
-    // (count desc, gram asc) pruning, then per-position the same
-    // highest-surviving-order rule with CAST(0.4 AS DOUBLE) factors
-    // (a bare 0.4 literal is DECIMAL in DuckDB — 0.4*0.4 would be exact
-    // 0.16, not the IEEE product the Scala side computes)
-    "sb_perplexity" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'),
-        |    x -> x <> '') AS t
-        |  FROM documents),
-        |ucnt AS (SELECT g, COUNT(*) AS c FROM (
-        |    SELECT unnest(t) AS g FROM tok) GROUP BY g),
-        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nb FROM ucnt),
-        |vocab AS (SELECT g, c FROM (
-        |    SELECT g, c, row_number() OVER (ORDER BY c DESC, g) AS rn
-        |    FROM ucnt) WHERE rn <= 16),
-        |vs AS (SELECT CAST(COUNT(*) AS BIGINT) AS v,
-        |    CAST(SUM(c) AS BIGINT) AS cv FROM vocab),
-        |par AS (SELECT
-        |    CAST(tot.nb AS DOUBLE) + 1.0 * (vs.v + 1) AS denom,
-        |    CAST(tot.nb - vs.cv AS DOUBLE) + 1.0 AS unknum
-        |  FROM tot CROSS JOIN vs),
-        |bcnt AS (SELECT g, COUNT(*) AS c FROM (
-        |    SELECT array_to_string(list_slice(t, i, i + 1), ' ') AS g
-        |    FROM (SELECT t, unnest(range(1, len(t))) AS i FROM tok))
-        |  GROUP BY g),
-        |btab AS (SELECT g, c FROM (
-        |    SELECT g, c, row_number() OVER (ORDER BY c DESC, g) AS rn
-        |    FROM bcnt) WHERE rn <= 32),
-        |tcnt AS (SELECT g, COUNT(*) AS c FROM (
-        |    SELECT array_to_string(list_slice(t, i, i + 2), ' ') AS g
-        |    FROM (SELECT t, unnest(range(1, len(t) - 1)) AS i FROM tok))
-        |  GROUP BY g),
-        |ttab AS (SELECT g, c FROM (
-        |    SELECT g, c, row_number() OVER (ORDER BY c DESC, g) AS rn
-        |    FROM tcnt) WHERE rn <= 32),
-        |pos AS (SELECT doc_id, i, t[i] AS w,
-        |    CASE WHEN i >= 2
-        |      THEN array_to_string(list_slice(t, i - 1, i), ' ') END AS g2,
-        |    CASE WHEN i >= 2 THEN t[i - 1] END AS x2,
-        |    CASE WHEN i >= 3
-        |      THEN array_to_string(list_slice(t, i - 2, i), ' ') END AS g3,
-        |    CASE WHEN i >= 3
-        |      THEN array_to_string(list_slice(t, i - 2, i - 1), ' ') END AS x3
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i FROM tok)),
-        |sc AS (SELECT p.doc_id,
-        |    CASE WHEN t3.c IS NOT NULL AND b3.c IS NOT NULL THEN 3
-        |         WHEN b2.c IS NOT NULL AND v2.c IS NOT NULL THEN 2
-        |         ELSE 1 END AS ord,
-        |    CASE WHEN t3.c IS NOT NULL AND b3.c IS NOT NULL
-        |        THEN CAST(t3.c AS DOUBLE) / b3.c
-        |      WHEN b2.c IS NOT NULL AND v2.c IS NOT NULL
-        |        THEN (CASE WHEN p.i >= 3 THEN CAST(0.4 AS DOUBLE)
-        |              ELSE CAST(1.0 AS DOUBLE) END)
-        |          * (CAST(b2.c AS DOUBLE) / v2.c)
-        |      ELSE (CASE WHEN p.i >= 3
-        |              THEN CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE)
-        |            WHEN p.i = 2 THEN CAST(0.4 AS DOUBLE)
-        |            ELSE CAST(1.0 AS DOUBLE) END)
-        |          * ((CASE WHEN vw.c IS NOT NULL
-        |               THEN CAST(vw.c AS DOUBLE) + 1.0
-        |               ELSE par.unknum END) / par.denom)
-        |    END AS s
-        |  FROM pos p
-        |  LEFT JOIN ttab t3 ON p.g3 = t3.g
-        |  LEFT JOIN btab b3 ON p.x3 = b3.g
-        |  LEFT JOIN btab b2 ON p.g2 = b2.g
-        |  LEFT JOIN vocab v2 ON p.x2 = v2.g
-        |  LEFT JOIN vocab vw ON p.w = vw.g
-        |  CROSS JOIN par),
-        |agg AS (SELECT doc_id, COUNT(*) AS n,
-        |    SUM(CASE WHEN ord = 1 THEN 1 ELSE 0 END) AS h1,
-        |    SUM(CASE WHEN ord = 2 THEN 1 ELSE 0 END) AS h2,
-        |    SUM(CASE WHEN ord = 3 THEN 1 ELSE 0 END) AS h3,
-        |    SUM(-ln(s)) AS sce
-        |  FROM sc GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(agg.n, 0) AS BIGINT) AS sb_n_tokens,
-        |  CAST(COALESCE(agg.h1, 0) AS BIGINT) AS sb_hits_1,
-        |  CAST(COALESCE(agg.h2, 0) AS BIGINT) AS sb_hits_2,
-        |  CAST(COALESCE(agg.h3, 0) AS BIGINT) AS sb_hits_3,
-        |  CAST(COALESCE(FLOOR(agg.sce / agg.n * 10000 + 0.5), 0) AS BIGINT)
-        |    AS sb_ce_q4
-        |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin,
-
-    // ExactSubstr replayed with EXACT window text (no hashing): windows
-    // with corpus count >= 2 -> per-doc sorted match positions -> islands
-    // via lag() gaps-and-islands with the same "new span iff
-    // pos > prev_pos + k" rule -> covered length = max+k - min per island
-    // (gaps inside a merged chain are < k by construction, so the union
-    // is contiguous); cleaned text = tokens outside every island
-    "exact_substring" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(
-        |    string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |win AS (
-        |  SELECT doc_id, i - 1 AS pos,
-        |    array_to_string(list_slice(t, i, i + 4), ' ') AS g
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 3)) AS i
-        |        FROM tok)),
-        |dup AS (SELECT g FROM win GROUP BY g HAVING COUNT(*) >= 2),
-        |m AS (SELECT w.doc_id, w.pos FROM win w JOIN dup USING (g)),
-        |isl0 AS (
-        |  SELECT doc_id, pos, CASE WHEN
-        |      lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) IS NULL
-        |      OR pos > lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) + 5
-        |    THEN 1 ELSE 0 END AS ni
-        |  FROM m),
-        |isl1 AS (SELECT doc_id, pos,
-        |    SUM(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM isl0),
-        |isl AS (SELECT doc_id, island, MIN(pos) AS s, MAX(pos) + 5 AS e
-        |  FROM isl1 GROUP BY doc_id, island),
-        |st AS (SELECT doc_id, COUNT(*) AS n_spans, SUM(e - s) AS dup_toks
-        |  FROM isl GROUP BY doc_id),
-        |dw AS (SELECT doc_id, COUNT(*) AS n_dup FROM m GROUP BY doc_id),
-        |toki AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS i
-        |  FROM tok),
-        |kept AS (
-        |  SELECT k.doc_id,
-        |    COALESCE(string_agg(k.t[k.i], ' ' ORDER BY k.i), '') AS txt
-        |  FROM toki k
-        |  WHERE NOT EXISTS (SELECT 1 FROM isl
-        |      WHERE isl.doc_id = k.doc_id
-        |        AND k.i - 1 >= isl.s AND k.i - 1 < isl.e)
-        |  GROUP BY k.doc_id)
-        |SELECT d.doc_id,
-        |  CAST(len(tok.t) AS BIGINT) AS es_n_tokens,
-        |  CAST(greatest(len(tok.t) - 4, 0) AS BIGINT) AS es_n_windows,
-        |  CAST(COALESCE(dw.n_dup, 0) AS BIGINT) AS es_n_dup_windows,
-        |  CAST(COALESCE(st.n_spans, 0) AS BIGINT) AS es_n_spans,
-        |  CAST(COALESCE(st.dup_toks, 0) AS BIGINT) AS es_n_dup_tokens,
-        |  CAST(CASE WHEN len(tok.t) > 0 THEN
-        |      FLOOR(CAST(COALESCE(st.dup_toks, 0) AS DOUBLE)
-        |        / CAST(len(tok.t) AS DOUBLE) * 10000 + 0.5)
-        |    ELSE 0 END AS BIGINT) AS es_dup_frac_q4,
-        |  COALESCE(kept.txt, '') AS es_text
-        |FROM documents d
-        |JOIN tok ON tok.doc_id = d.doc_id
-        |LEFT JOIN dw ON dw.doc_id = d.doc_id
-        |LEFT JOIN st ON st.doc_id = d.doc_id
-        |LEFT JOIN kept ON kept.doc_id = d.doc_id""".stripMargin,
-
-    // DSIR replayed in SQL: two add-1 bigram LMs (top-16 vocab each, UNK
-    // pooling) fitted on the src0 slice and the full corpus; per-doc
-    // logratio = sr/n - st/n in the Spark side's operation order
-    "dsir_score" ->
-      """WITH tok AS (
-        |  SELECT doc_id, source, list_filter(
-        |    string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |gr AS (
-        |  SELECT doc_id, source,
-        |    array_to_string(list_slice(t, i, i + 1), ' ') AS g
-        |  FROM (SELECT doc_id, source, t, unnest(range(1, len(t))) AS i
-        |        FROM tok)),
-        |tc AS (SELECT g, COUNT(*) AS c FROM gr
-        |  WHERE source = 'src0' GROUP BY g),
-        |ttot AS (SELECT CAST(COALESCE(SUM(c), 0) AS BIGINT) AS nb FROM tc),
-        |tv AS (SELECT g, c FROM (
-        |    SELECT g, c, row_number() OVER (ORDER BY c DESC, g) AS rn
-        |    FROM tc) WHERE rn <= 16),
-        |tvs AS (SELECT CAST(COUNT(*) AS BIGINT) AS v,
-        |    CAST(COALESCE(SUM(c), 0) AS BIGINT) AS cv FROM tv),
-        |tpar AS (SELECT
-        |    CAST(ttot.nb AS DOUBLE) + 1.0 * (tvs.v + 1) AS denom,
-        |    CAST(ttot.nb - tvs.cv AS DOUBLE) + 1.0 AS unknum
-        |  FROM ttot CROSS JOIN tvs),
-        |rc AS (SELECT g, COUNT(*) AS c FROM gr GROUP BY g),
-        |rtot AS (SELECT CAST(COALESCE(SUM(c), 0) AS BIGINT) AS nb FROM rc),
-        |rv AS (SELECT g, c FROM (
-        |    SELECT g, c, row_number() OVER (ORDER BY c DESC, g) AS rn
-        |    FROM rc) WHERE rn <= 16),
-        |rvs AS (SELECT CAST(COUNT(*) AS BIGINT) AS v,
-        |    CAST(COALESCE(SUM(c), 0) AS BIGINT) AS cv FROM rv),
-        |rpar AS (SELECT
-        |    CAST(rtot.nb AS DOUBLE) + 1.0 * (rvs.v + 1) AS denom,
-        |    CAST(rtot.nb - rvs.cv AS DOUBLE) + 1.0 AS unknum
-        |  FROM rtot CROSS JOIN rvs),
-        |sc AS (
-        |  SELECT gr.doc_id, COUNT(*) AS n,
-        |    SUM(-ln((CASE WHEN tv.g IS NULL THEN tpar.unknum
-        |      ELSE CAST(tv.c AS DOUBLE) + 1.0 END) / tpar.denom)) AS st,
-        |    SUM(-ln((CASE WHEN rv.g IS NULL THEN rpar.unknum
-        |      ELSE CAST(rv.c AS DOUBLE) + 1.0 END) / rpar.denom)) AS sr
-        |  FROM gr LEFT JOIN tv ON gr.g = tv.g
-        |    LEFT JOIN rv ON gr.g = rv.g
-        |    CROSS JOIN tpar CROSS JOIN rpar
-        |  GROUP BY gr.doc_id)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(sc.n, 0) AS BIGINT) AS dsir_n_tokens,
-        |  CAST(COALESCE(
-        |      FLOOR((sc.sr / sc.n - sc.st / sc.n) * 10000 + 0.5), 0)
-        |    AS BIGINT) AS dsir_logratio_q4,
-        |  CAST(CASE WHEN COALESCE(
-        |      FLOOR((sc.sr / sc.n - sc.st / sc.n) * 10000 + 0.5), 0) >= 0
-        |    THEN 1 ELSE 0 END AS INTEGER) AS dsir_selected
-        |FROM documents d LEFT JOIN sc USING (doc_id)""".stripMargin,
-
-    // line dedup replayed with exact line text: identical synthesized
-    // boilerplate/unique lines, trim+drop-empty tokenization, corpus-wide
-    // count >= 2, kept lines re-joined in position order
-    "line_dedup" ->
-      """WITH base AS (
-        |  SELECT doc_id, text || chr(10) || 'boilerplate-' || (doc_id % 3)
-        |    || chr(10) || 'unique-' || doc_id AS t2
-        |  FROM documents),
-        |ln AS (SELECT doc_id, list_filter(list_transform(
-        |    string_split(t2, chr(10)), x -> trim(x)), x -> x <> '') AS l
-        |  FROM base),
-        |ex AS (SELECT doc_id, i - 1 AS pos, l[i] AS line
-        |  FROM (SELECT doc_id, l, unnest(range(1, len(l) + 1)) AS i
-        |        FROM ln)),
-        |dup AS (SELECT line FROM ex GROUP BY line HAVING COUNT(*) >= 2),
-        |m AS (SELECT e.doc_id, e.pos FROM ex e JOIN dup USING (line)),
-        |dw AS (SELECT doc_id, COUNT(*) AS nd FROM m GROUP BY doc_id),
-        |kept AS (SELECT e.doc_id,
-        |    COALESCE(string_agg(e.line, chr(10) ORDER BY e.pos), '') AS txt
-        |  FROM ex e
-        |  WHERE NOT EXISTS (SELECT 1 FROM m
-        |      WHERE m.doc_id = e.doc_id AND m.pos = e.pos)
-        |  GROUP BY e.doc_id)
-        |SELECT d.doc_id,
-        |  CAST(len(ln.l) AS BIGINT) AS ld_n_lines,
-        |  CAST(COALESCE(dw.nd, 0) AS BIGINT) AS ld_n_dup_lines,
-        |  COALESCE(kept.txt, '') AS ld_text
-        |FROM documents d
-        |JOIN ln ON ln.doc_id = d.doc_id
-        |LEFT JOIN dw ON dw.doc_id = d.doc_id
-        |LEFT JOIN kept ON kept.doc_id = d.doc_id""".stripMargin,
-
-    // per-source scoping + document-frequency counting replayed: dup
-    // groups by (source, line) over DISTINCT doc_ids
-    "line_dedup_scoped" ->
-      """WITH base AS (
-        |  SELECT doc_id, source, text
-        |    || chr(10) || 'sitebp-' || source
-        |    || chr(10) || 'xdom-' || CAST(CAST(floor(doc_id / 20)
-        |         AS BIGINT) AS VARCHAR)
-        |    || chr(10) || 'twice-' || doc_id
-        |    || chr(10) || 'twice-' || doc_id
-        |    || chr(10) || 'unique-' || doc_id AS t2
-        |  FROM documents),
-        |ln AS (SELECT doc_id, source, list_filter(list_transform(
-        |    string_split(t2, chr(10)), x -> trim(x)), x -> x <> '') AS l
-        |  FROM base),
-        |ex AS (SELECT doc_id, source, i - 1 AS pos, l[i] AS line
-        |  FROM (SELECT doc_id, source, l, unnest(range(1, len(l) + 1)) AS i
-        |        FROM ln)),
-        |dup AS (SELECT source, line FROM ex GROUP BY source, line
-        |  HAVING COUNT(DISTINCT doc_id) >= 2),
-        |m AS (SELECT e.doc_id, e.pos FROM ex e
-        |  JOIN dup USING (source, line)),
-        |dw AS (SELECT doc_id, COUNT(*) AS nd FROM m GROUP BY doc_id),
-        |kept AS (SELECT e.doc_id,
-        |    COALESCE(string_agg(e.line, chr(10) ORDER BY e.pos), '') AS txt
-        |  FROM ex e
-        |  WHERE NOT EXISTS (SELECT 1 FROM m
-        |      WHERE m.doc_id = e.doc_id AND m.pos = e.pos)
-        |  GROUP BY e.doc_id)
-        |SELECT d.doc_id,
-        |  CAST(len(ln.l) AS BIGINT) AS ld_n_lines,
-        |  CAST(COALESCE(dw.nd, 0) AS BIGINT) AS ld_n_dup_lines,
-        |  COALESCE(kept.txt, '') AS ld_text
-        |FROM documents d
-        |JOIN ln ON ln.doc_id = d.doc_id
-        |LEFT JOIN dw ON dw.doc_id = d.doc_id
-        |LEFT JOIN kept ON kept.doc_id = d.doc_id""".stripMargin,
-
-    // the shuffle key is the contract: md5(id || ':42'), ties by id
-    // the expected post-extraction text is constructed directly (the
-    // extraction/repair chains have their own replay gates — here the
-    // hash still breaks if the pipeline's extraction or repair drifts);
-    // curation arithmetic replayed exactly: URL block = doc_id%5=1,
-    // lorem page rule = doc_id%13=0, Gopher gate = line2 words + 4
-    // closing words >= 70, canonical min-id dedup, md5 ':e2e' order,
-    // alphabetical vocab ranks over the curated corpus
-    "recipe_e2e" ->
-      """WITH synth AS (
-        |  SELECT doc_id,
-        |    text || ' café ends here. and this sentence too. plus a ' ||
-        |    'third one. also a fourth sentence. finally the fifth.' AS line2
-        |  FROM documents
-        |  WHERE doc_id % 5 <> 1 AND doc_id % 13 <> 0),
-        |gop AS (
-        |  SELECT doc_id,
-        |    line2 || chr(10) || 'a clean closing line.' AS c4_text
-        |  FROM synth
-        |  WHERE len(list_filter(string_split_regex(trim(line2), '\s+'),
-        |    w -> w <> '')) + 4 >= 70),
-        |canon AS (
-        |  SELECT doc_id,
-        |    lower(regexp_replace(trim(c4_text), '\s+', ' ', 'g')) AS ct
-        |  FROM gop),
-        |surv AS (SELECT min(doc_id) AS doc_id, ct FROM canon GROUP BY ct),
-        |shuf AS (
-        |  SELECT doc_id, ct, CAST(row_number() OVER (
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR) || ':e2e'), doc_id) - 1
-        |    AS BIGINT) AS shuffle_pos
-        |  FROM surv),
-        |w AS (
-        |  SELECT doc_id, shuffle_pos, unnest(arr) AS w,
-        |    generate_subscripts(arr, 1) AS pos
-        |  FROM (SELECT doc_id, shuffle_pos,
-        |    regexp_split_to_array(ct, ' ') AS arr FROM shuf)),
-        |wf AS (SELECT * FROM w WHERE length(w) > 0),
-        |v AS (SELECT w, ROW_NUMBER() OVER (ORDER BY w) AS id
-        |      FROM (SELECT DISTINCT w FROM wf)),
-        |ranked AS (SELECT doc_id, shuffle_pos, wf.pos, v.id,
-        |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY wf.pos) AS dense
-        |  FROM wf JOIN v USING (w))
-        |SELECT doc_id, shuffle_pos, CAST(dense - 1 AS INTEGER) AS pos,
-        |  CAST(id AS INTEGER) AS token_id FROM ranked""".stripMargin,
-
-    // the FineWeb splice replayed: expected post-extraction text
-    // constructed directly (recipe_e2e's convention — extraction/repair
-    // have their own replay gates), then the hashed_embedding md5
-    // sign-bit arithmetic at salt e16 feeds the mlp_score dyadic head;
-    // every term is exact, so >= 0 is engine-independent
-    "recipe_embed_e2e" -> {
-      val (d, h) = (16, 4)
-      val hidden = (0 until h).map { i =>
-        val terms = (0 until d).map { j =>
-          s"(${((i * 3 + j * 5) % 7 - 3) / 4.0})*x[${j + 1}]"
-        }.mkString(" + ")
-        s"GREATEST(0, ${(i % 3 - 1) / 4.0} + $terms)"
-      }
-      val out = (0 until h).map { i =>
-        s"(${((i * 2) % 5 - 2) / 4.0})*(${hidden(i)})"
-      }.mkString(" + ")
-      s"""WITH synth AS (
-         |  SELECT doc_id,
-         |    text || ' café ends here. and this sentence too. plus a ' ||
-         |    'third one. also a fourth sentence. finally the fifth.' ||
-         |    chr(10) || 'a clean closing line.' AS t
-         |  FROM documents
-         |  WHERE doc_id % 5 <> 1 AND doc_id % 13 <> 0),
-         |tok AS (SELECT doc_id, tk, COUNT(*) AS c FROM (
-         |    SELECT doc_id, unnest(list_filter(
-         |      string_split_regex(lower(trim(t)), '\\s+'), x -> x <> '')) AS tk
-         |    FROM synth) GROUP BY doc_id, tk),
-         |sig AS (SELECT doc_id, c, md5(tk || ':e16') AS hh FROM tok),
-         |r AS (SELECT unnest(range($d)) AS j),
-         |emb AS (SELECT sy.doc_id, r.j,
-         |    CAST(COALESCE(SUM(sig.c * (CASE WHEN
-         |      ((strpos('0123456789abcdef',
-         |          substr(sig.hh, (r.j // 4) + 1, 1)) - 1)
-         |        >> (3 - (r.j % 4))) & 1 = 1
-         |      THEN 1 ELSE -1 END)), 0) AS DOUBLE) AS v
-         |  FROM synth sy CROSS JOIN r
-         |  LEFT JOIN sig ON sig.doc_id = sy.doc_id
-         |  GROUP BY sy.doc_id, r.j),
-         |xs AS (SELECT doc_id, list(v ORDER BY j) AS x FROM emb
-         |  GROUP BY doc_id)
-         |SELECT doc_id FROM xs
-         |WHERE 0.25 + $out >= 12.0""".stripMargin
-    },
-
-    "corpus_shuffle" ->
-      """SELECT doc_id, CAST(row_number() OVER (
-        |    ORDER BY md5(CAST(doc_id AS VARCHAR) || ':42'), doc_id) - 1
-        |  AS BIGINT) AS shuffle_pos
-        |FROM documents""".stripMargin,
-
-    // identical synthesized-PII construction, identical ordered regex
-    // chain (email, ssn, phone, ipv4); patterns use only literal classes
-    // + bounded quantifiers so Java regex and RE2 agree
-    "pii_redact" ->
-      """WITH pii AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || doc_id || '@mail.example.com or +1 555-'
-        |    || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-'
-        |    || lpad(CAST((doc_id * 7) % 10000 AS VARCHAR), 4, '0')
-        |    || ' ip 10.0.' || (doc_id % 256) || '.' || ((doc_id * 3) % 256)
-        |    || ' ssn ' || lpad(CAST((doc_id % 900) + 100 AS VARCHAR), 3, '0')
-        |    || '-' || lpad(CAST((doc_id % 90) + 10 AS VARCHAR), 2, '0')
-        |    || '-' || lpad(CAST((doc_id * 13) % 10000 AS VARCHAR), 4, '0') AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(t,
-        |          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-        |          '<EMAIL>', 'g'),
-        |        '[0-9]{3}-[0-9]{2}-[0-9]{4}', '<SSN>', 'g'),
-        |      '[0-9]{3}[- ][0-9]{3}[- ][0-9]{4}', '<PHONE>', 'g'),
-        |    '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g')
-        |    AS redacted
-        |FROM pii""".stripMargin,
-
-    // duplicate-occurrence counts via unnest+group (equivalent to the
-    // Spark side's sorted-array run-length scan: a gram with count c>1
-    // contributes c occurrences); fractions are q4-scaled from the same
-    // integers in the same operation order
-    "repetition_signals" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |g2 AS (
-        |  SELECT doc_id, array_to_string(list_slice(t, i, i+1), ' ') AS g
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks)),
-        |agg2 AS (
-        |  SELECT doc_id, max(c) AS topc, sum(c) AS n2,
-        |    sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup2
-        |  FROM (SELECT doc_id, g, count(*) AS c FROM g2 GROUP BY 1, 2)
-        |  GROUP BY 1),
-        |w AS (
-        |  SELECT doc_id, len(t) AS nw, len(list_distinct(t)) AS nd
-        |  FROM toks)
-        |SELECT w.doc_id, CAST(nw AS BIGINT) AS n_words,
-        |  CAST(floor(CAST(nw - nd AS DOUBLE) / CAST(nw AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS dup_word_q4,
-        |  CAST(topc AS BIGINT) AS top_2gram_count,
-        |  CAST(floor(CAST(topc AS DOUBLE) / CAST(n2 AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS top_2gram_q4,
-        |  CAST(floor(CAST(dup2 AS DOUBLE) / CAST(n2 AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS dup_2gram_q4
-        |FROM w JOIN agg2 ON w.doc_id = agg2.doc_id""".stripMargin,
-
-    // rebuilds the gate's synthesized text, then replays every Gopher
-    // repetition signal at ecosystem (datatrove/Dolma) semantics:
-    // exclude-first line/paragraph duplicate fractions, whole-document
-    // char denominators, top-{2,3,4}-gram char fraction with inner
-    // spaces (ties to the binary-smallest gram), and overlap-aware
-    // dup-{5..10}-gram char coverage via DISTINCT covered word positions
-    "gopher_repetition" ->
-      ("""WITH docs AS (
-        |  SELECT doc_id,
-        |    text || chr(10) ||
-        |    'the same exact line repeats here' || chr(10) ||
-        |    CASE WHEN doc_id % 3 = 0
-        |      THEN 'the same exact line repeats here'
-        |      ELSE 'distinct closing line ' || CAST(doc_id AS VARCHAR)
-        |    END || chr(10) || chr(10) ||
-        |    CASE WHEN doc_id % 4 = 0
-        |      THEN 'para block alpha' || chr(10) || 'para block beta'
-        |      ELSE 'para body ' || CAST(doc_id AS VARCHAR)
-        |    END || chr(10) || chr(10) ||
-        |    'para block alpha' || chr(10) || 'para block beta'
-        |    || chr(10) || chr(10) ||
-        |    CASE WHEN doc_id % 5 = 0
-        |      THEN 'one two three four five six seven eight nine ten' ||
-        |        ' filler word ' ||
-        |        'one two three four five six seven eight nine ten'
-        |      ELSE 'tail words close page ' || CAST(doc_id AS VARCHAR)
-        |    END AS t2
-        |  FROM documents),""".stripMargin + "\n" +
-      GopherRepetitionCtes + "\n" +
-      """SELECT doc_id,
-        |  CAST(nl AS BIGINT) AS gr_n_lines,
-        |  CAST(floor(CAST(ldup AS DOUBLE) / CAST(nl AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_line_q4,
-        |  CAST(floor(CAST(ldupch AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_line_char_q4,
-        |  CAST(np AS BIGINT) AS gr_n_paras,
-        |  CAST(floor(CAST(pdup AS DOUBLE) / CAST(np AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_para_q4,
-        |  CAST(floor(CAST(pdupch AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_para_char_q4,
-        |  CAST(nw AS BIGINT) AS gr_n_words,
-        |  CAST(floor(CAST(tc2 AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_top_2gram_char_q4,
-        |  CAST(floor(CAST(tc3 AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_top_3gram_char_q4,
-        |  CAST(floor(CAST(tc4 AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_top_4gram_char_q4,
-        |  CAST(floor(CAST(COALESCE(dc5, 0) AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_5gram_char_q4,
-        |  CAST(floor(CAST(COALESCE(dc6, 0) AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_6gram_char_q4,
-        |  CAST(floor(CAST(COALESCE(dc7, 0) AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_7gram_char_q4,
-        |  CAST(floor(CAST(COALESCE(dc8, 0) AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_8gram_char_q4,
-        |  CAST(floor(CAST(COALESCE(dc9, 0) AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_9gram_char_q4,
-        |  CAST(floor(CAST(COALESCE(dc10, 0) AS DOUBLE) / CAST(dch AS DOUBLE)
-        |    * 10000.0 + 0.5) AS BIGINT) AS gr_dup_10gram_char_q4
-        |FROM docs
-        |  JOIN dstat USING (doc_id) JOIN lstat USING (doc_id) JOIN pstat USING (doc_id)
-        |  JOIN wstat USING (doc_id)
-        |  JOIN tp2 USING (doc_id) JOIN tp3 USING (doc_id)
-        |  JOIN tp4 USING (doc_id)
-        |  LEFT JOIN s5 USING (doc_id) LEFT JOIN s6 USING (doc_id)
-        |  LEFT JOIN s7 USING (doc_id) LEFT JOIN s8 USING (doc_id)
-        |  LEFT JOIN s9 USING (doc_id) LEFT JOIN s10 USING (doc_id)""".stripMargin),
-
-    // rebuilds the gate's priority-CASE fixture, then applies every
-    // Gopher Table-A1 threshold as exact q4 integer comparisons over
-    // the shared repetition CTEs + structural counts
-    "gopher_filter" ->
-      ("""WITH docs AS (
-        |  SELECT doc_id,
-        |    CASE
-        |      WHEN doc_id % 7 = 0 THEN 'tiny doc the and'
-        |      WHEN doc_id % 11 = 0 THEN body || ' ' ||
-        |        repeat('alpha beta gamma delta epsilon zeta eta ' ||
-        |          'theta iota kappa lambda mu ', 6)
-        |      WHEN doc_id % 13 = 0 THEN body || chr(10) ||
-        |        array_to_string(list_transform(range(1, 31),
-        |          j -> '•filler item' || CAST(doc_id + j AS VARCHAR)),
-        |          chr(10))
-        |      WHEN doc_id % 17 = 0 THEN bw
-        |      WHEN doc_id % 19 = 0 THEN body ||
-        |        ' ### ### ### ### ### ### ### ### ### ###'
-        |      WHEN doc_id % 23 = 0 THEN body || chr(10) ||
-        |        array_to_string(list_transform(range(1, 6),
-        |          j -> 'more to come ' || CAST(doc_id + j AS VARCHAR)
-        |            || '...'), chr(10))
-        |      WHEN doc_id % 29 = 0 THEN body || chr(10) ||
-        |        repeat('repeated filler line here' || chr(10), 7) ||
-        |        'repeated filler line here'
-        |      ELSE body END AS t2
-        |  FROM (SELECT doc_id, bw, bw || ' the and of that' AS body
-        |    FROM (SELECT doc_id,
-        |      array_to_string(list_transform(range(1, 61),
-        |        i -> 'wrd' || CAST((doc_id * 31 + i) % 97 AS VARCHAR)),
-        |        ' ') AS bw
-        |      FROM documents))),""".stripMargin + "\n" +
-      GopherRepetitionCtes + ",\n" +
-      s"""structc AS (
-        |  SELECT d.doc_id,
-        |    CAST(len(list_filter(k.t, w -> regexp_matches(w, '[A-Za-z]')))
-        |      AS BIGINT) AS naw,
-        |    CAST(length(d.t2) - length(regexp_replace(d.t2, '#', '', 'g'))
-        |      + (length(d.t2) - length(replace(d.t2, '...', ''))) / 3
-        |      + length(d.t2) - length(regexp_replace(d.t2, '…', '', 'g'))
-        |      AS BIGINT) AS nsym,
-        |    CAST(len(list_intersect(list_distinct(list_transform(k.t,
-        |      w -> lower(w))), ['the', 'be', 'to', 'of', 'and', 'that',
-        |      'have', 'with'])) AS BIGINT) AS nstop
-        |  FROM docs d JOIN toks k USING (doc_id)),
-        |linec AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(lns, l -> list_contains(
-        |      ['-', '*', '•', '‣', '▶'], substr(l, 1, 1)))) AS BIGINT)
-        |      AS nbl,
-        |    CAST(len(list_filter(lns, l -> ends_with(l, '...')
-        |      OR ends_with(l, '…'))) AS BIGINT) AS nel
-        |  FROM (SELECT doc_id, list_filter(list_transform(
-        |      string_split(t2, chr(10)), l -> trim(l)), l -> l <> '')
-        |      AS lns
-        |    FROM docs))
-        |SELECT doc_id FROM docs
-        |  JOIN dstat USING (doc_id) JOIN lstat USING (doc_id) JOIN pstat USING (doc_id)
-        |  JOIN wstat USING (doc_id) JOIN structc USING (doc_id)
-        |  JOIN linec USING (doc_id)
-        |  JOIN tp2 USING (doc_id) JOIN tp3 USING (doc_id)
-        |  JOIN tp4 USING (doc_id)
-        |  LEFT JOIN s5 USING (doc_id) LEFT JOIN s6 USING (doc_id)
-        |  LEFT JOIN s7 USING (doc_id) LEFT JOIN s8 USING (doc_id)
-        |  LEFT JOIN s9 USING (doc_id) LEFT JOIN s10 USING (doc_id)
-        |WHERE nw BETWEEN 50 AND 100000
-        |  AND ${q4sql("twc", "nw")} BETWEEN 30000 AND 100000
-        |  AND ${q4sql("nsym", "nw")} <= 1000
-        |  AND ${q4sql("naw", "nw")} >= 8000
-        |  AND ${q4sql("nbl", "nl")} <= 9000
-        |  AND ${q4sql("nel", "nl")} <= 3000
-        |  AND nstop >= 2
-        |  AND ${q4sql("ldup", "nl")} <= 3000
-        |  AND ${q4sql("pdup", "np")} <= 3000
-        |  AND ${q4sql("ldupch", "dch")} <= 2000
-        |  AND ${q4sql("pdupch", "dch")} <= 2000
-        |  AND ${q4sql("tc2", "dch")} <= 2000
-        |  AND ${q4sql("tc3", "dch")} <= 1800
-        |  AND ${q4sql("tc4", "dch")} <= 1600
-        |  AND ${q4sql("COALESCE(dc5, 0)", "dch")} <= 1500
-        |  AND ${q4sql("COALESCE(dc6, 0)", "dch")} <= 1400
-        |  AND ${q4sql("COALESCE(dc7, 0)", "dch")} <= 1300
-        |  AND ${q4sql("COALESCE(dc8, 0)", "dch")} <= 1200
-        |  AND ${q4sql("COALESCE(dc9, 0)", "dch")} <= 1100
-        |  AND ${q4sql("COALESCE(dc10, 0)", "dch")} <= 1000""".stripMargin),
-
-    // md5-hex-prefix thresholds: floor(w * 16^8) as 8-hex lowercase;
-    // 'g' sorts above every hex digit => weight 1.0 keeps all
-    "domain_mixture" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR) || ':mix'), 1, 8) <
-        |  CASE source
-        |    WHEN 'src0' THEN 'g'
-        |    WHEN 'src1' THEN 'c0000000'
-        |    WHEN 'src2' THEN '80000000'
-        |    WHEN 'src3' THEN '40000000'
-        |    WHEN 'src4' THEN '19999999'
-        |    ELSE '20000000' END""".stripMargin,
-
-    // replays the temperature rule with the SAME operation order as the
-    // Scala side: r = ((f * N) * (n^tau / z)) / n, threshold =
-    // floor(r * 2^32) as 8-hex (floor == Long truncation for r >= 0)
-    // repeat factors replayed exactly: floor copies + one fractional
-    // copy under the shared md5/hexThreshold convention, then
-    // range-unnest to 0-based epochs
-    "domain_upsample" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    'd' || CAST(LEAST(doc_id % 16, 3) AS VARCHAR) AS dom
-        |  FROM documents),
-        |w(dom, fl, thr) AS (VALUES
-        |  ('d0', 2, '80000000'), ('d1', 1, '0'),
-        |  ('d2', 0, '40000000'), ('d3', 0, '0')),
-        |cp AS (
-        |  SELECT b.doc_id,
-        |    fl + CASE WHEN substr(md5(CAST(b.doc_id AS VARCHAR) || ':up'),
-        |        1, 8) < w.thr THEN 1 ELSE 0 END AS copies
-        |  FROM base b JOIN w ON b.dom = w.dom)
-        |SELECT doc_id, CAST(u.e AS BIGINT) AS epoch
-        |FROM cp, unnest(range(0, copies)) AS u(e)
-        |WHERE copies > 0""".stripMargin,
-
-    "temperature_mixture" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    'd' || CAST(LEAST(doc_id % 16, 3) AS VARCHAR) AS dom
-        |  FROM documents),
-        |cnt AS (SELECT dom, COUNT(*) AS n FROM base GROUP BY dom),
-        |tot AS (SELECT CAST(SUM(n) AS DOUBLE) AS nn FROM cnt),
-        |pw AS (SELECT dom, n,
-        |    POWER(CAST(n AS DOUBLE), 0.5) AS p FROM cnt),
-        |z AS (SELECT SUM(p) AS z FROM pw),
-        |thr AS (SELECT dom,
-        |    CASE WHEN 0.5 * tot.nn * (pw.p / z.z) / CAST(pw.n AS DOUBLE)
-        |           >= 1.0 THEN 'g'
-        |    ELSE printf('%08x', CAST(FLOOR(
-        |      0.5 * tot.nn * (pw.p / z.z) / CAST(pw.n AS DOUBLE)
-        |        * 4294967296.0) AS BIGINT)) END AS t
-        |  FROM pw CROSS JOIN z CROSS JOIN tot)
-        |SELECT b.doc_id FROM base b JOIN thr ON b.dom = thr.dom
-        |WHERE substr(md5(CAST(b.doc_id AS VARCHAR) || ':tmix'), 1, 8)
-        |  < thr.t""".stripMargin,
-
-    // replays the token-budget rate: per-domain token totals, rate =
-    // min(1, budget/total) (uncapped budgets and zero-token domains
-    // keep all), then the shared floor(r*2^32) 8-hex threshold rule
-    "token_budget_mixture" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    'd' || CAST(LEAST(doc_id % 16, 3) AS VARCHAR) AS dom,
-        |    doc_id % 97 + 20 AS toks
-        |  FROM documents),
-        |tot AS (SELECT dom, SUM(toks) AS t FROM base GROUP BY dom),
-        |bud AS (SELECT dom, t,
-        |    CASE dom WHEN 'd0' THEN 4000 WHEN 'd1' THEN 99999999
-        |      WHEN 'd2' THEN 0 ELSE -1 END AS b
-        |  FROM tot),
-        |thr AS (SELECT dom,
-        |    CASE WHEN b < 0 OR t <= 0 THEN 'g'
-        |      WHEN CAST(b AS DOUBLE) / CAST(t AS DOUBLE) >= 1.0 THEN 'g'
-        |      ELSE printf('%08x', CAST(FLOOR(
-        |        CAST(b AS DOUBLE) / CAST(t AS DOUBLE) * 4294967296.0)
-        |        AS BIGINT)) END AS thr
-        |  FROM bud)
-        |SELECT b.doc_id, b.dom FROM base b JOIN thr ON b.dom = thr.dom
-        |WHERE substr(md5(CAST(b.doc_id AS VARCHAR) || ':tok'), 1, 8)
-        |  < thr.thr""".stripMargin,
-
-    // replays the split CASE: name-ascending cumulative boundaries
-    // (train 0.75 -> c0000000, +val 0.125 -> e0000000), leftover NULL
-    "deterministic_split" ->
-      """SELECT doc_id,
-        |  CASE WHEN k < 'c0000000' THEN 'train'
-        |       WHEN k < 'e0000000' THEN 'val'
-        |       ELSE NULL END AS split
-        |FROM (SELECT doc_id,
-        |    substr(md5(CAST(doc_id AS VARCHAR) || ':sp'), 1, 8) AS k
-        |  FROM documents)""".stripMargin,
-
-    // replays the greedy hash-ordered prefix: cumulative tokens BEFORE
-    // each doc in (md5, id-string) order per domain, kept while under
-    // the hard budget; negative budget = uncapped
-    "token_budget_exact" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    'd' || CAST(LEAST(doc_id % 16, 3) AS VARCHAR) AS dom,
-        |    doc_id % 97 + 20 AS toks
-        |  FROM documents),
-        |b AS (SELECT *,
-        |    CASE dom WHEN 'd0' THEN 1000 WHEN 'd1' THEN 0 ELSE -1 END
-        |      AS bud
-        |  FROM base),
-        |c AS (SELECT doc_id, dom, bud,
-        |    SUM(toks) OVER (PARTITION BY dom
-        |      ORDER BY substr(md5(CAST(doc_id AS VARCHAR) || ':tok'), 1, 8),
-        |        CAST(doc_id AS VARCHAR)) - toks AS before
-        |  FROM b)
-        |SELECT doc_id, dom FROM c WHERE bud < 0 OR before < bud""".stripMargin
-  )
+    GateRegistry.all.flatMap(g => g.oracle.map(g.name -> _)).toMap
 }

@@ -32,9 +32,11 @@ object SessionDefaults {
   val recommended: Seq[(String, String)] = Seq(
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
-  /** Apply [[recommended]] to a session builder (an explicit earlier
-    * `.config` of the same key is overridden by the LAST set value, so
-    * call this first when a caller must win). */
+  /** Apply [[recommended]] to a session builder. The last value set
+    * for a key wins, and every caller (Bench, Verify, PlanStats,
+    * perfbench) wraps its fully configured builder, so these defaults
+    * override an earlier `.config` of the same key. A caller that must
+    * win sets its value on the returned builder instead. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     recommended.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 }

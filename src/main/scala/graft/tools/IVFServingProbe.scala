@@ -23,7 +23,7 @@ object IVFServingProbe {
       .config("spark.ui.enabled", false)
       .appName("ivf-serving-probe").getOrCreate()
     try dirs.foreach { dir =>
-      val bmp = udf((id: Long) => graft.SparkEntry.testBmpBytes(id))
+      val bmp = udf((id: Long) => graft.gates.MediaFixtures.testBmpBytes(id))
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id")).withColumn("payload", bmp(col("doc_id")))
       val emb = new graft.image.ImageEmbedder().setInputCol("payload")

@@ -10,7 +10,7 @@ object PHashProbe {
   private def embedProbe(n: Int): Unit = {
     val embs = (0 until n).map { id =>
       val ac = graft.image.PerceptualHash.acCoeffs(
-        graft.SparkEntry.testBmpBytes(id.toLong)).get
+        graft.gates.MediaFixtures.testBmpBytes(id.toLong)).get
       val norm = math.sqrt(ac.map(x => x * x).sum)
       ac.map(_ / norm)
     }.toArray
@@ -43,11 +43,11 @@ object PHashProbe {
     val hashes = (0 until n).map { id =>
       val h = mode match {
         case "audio" => graft.io.binary.AudioFingerprint.fp64(
-          graft.SparkEntry.testFpWavBytes(id.toLong))
+          graft.gates.MediaFixtures.testFpWavBytes(id.toLong))
         case "video" => graft.io.binary.VideoFingerprint.fp64(
-          graft.SparkEntry.testFpY4mBytes(id.toLong))
+          graft.gates.MediaFixtures.testFpY4mBytes(id.toLong))
         case _ => graft.image.PerceptualHash.phash64(
-          graft.SparkEntry.testBmpBytes(id.toLong))
+          graft.gates.MediaFixtures.testBmpBytes(id.toLong))
       }
       require(h != null, s"id $id undecodable")
       h.longValue()

@@ -71,7 +71,7 @@ class ExplainSuite extends TestBase {
   }
 
   test("lime_text gate margin: planted one-hot recovery is far from the threshold") {
-    // mirror of the SparkEntry lime_text fixture: 8 tokens, "key" planted
+    // mirror of the ExplainerGates lime_text fixture: 8 tokens, "key" planted
     // at position id % 8, rule model contains("key"). The gate rounds to
     // 4 decimals — assert the solver lands ORDERS of magnitude inside
     // that: planted coef within 1e-6 of 1, others within 1e-6 of 0.
@@ -105,13 +105,13 @@ class ExplainSuite extends TestBase {
         lit("synth").as("origin"), lit(32).as("height"),
         lit(32).as("width"), lit(3).as("nChannels"),
         lit(graft.image.ImageSchemaUtils.ocvType8UC3).as("mode"),
-        udf((id: Long) => graft.SparkEntry.plantedImageBytes(id))
+        udf((id: Long) => graft.gates.MediaFixtures.plantedImageBytes(id))
           .apply(col("doc_id")).as("data")))
     // structural precondition the gate's closed-form oracle rests on:
     // the bright 16x16 quadrant is EXACTLY one SLIC segment whose index
     // is the quadrant index
     (0L until 4L).foreach { id =>
-      val data = graft.SparkEntry.plantedImageBytes(id)
+      val data = graft.gates.MediaFixtures.plantedImageBytes(id)
       val (labels, k) = graft.image.Superpixel.segment(32, 32, data, 4)
       assert(k == 4)
       val bright = labels.indices.filter(p => data(p * 3) != 0)

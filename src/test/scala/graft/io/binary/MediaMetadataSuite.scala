@@ -12,12 +12,12 @@ class MediaMetadataSuite extends TestBase {
 
   test("MP3: frame walk over the planted fixture fields") {
     // even id: ID3v2 + mono; id % 3 == 0 exercises the VBR walk
-    val m = MediaMetadata.parseMp3(graft.SparkEntry.testMp3Bytes(6L)).get
+    val m = MediaMetadata.parseMp3(graft.gates.MediaFixtures.testMp3Bytes(6L)).get
     assert(m.mpegVersion == 1 && m.layer == 3)
     assert(m.sampleRate == 32000 && m.channels == 1)
     assert(m.frames == 4 && m.durationMs == 144) // 4 frames x 36 ms
     assert(m.bitrateKbps == 160)                 // idx 9 + (6 % 5)
-    val s = MediaMetadata.parseMp3(graft.SparkEntry.testMp3Bytes(5L)).get
+    val s = MediaMetadata.parseMp3(graft.gates.MediaFixtures.testMp3Bytes(5L)).get
     assert(s.channels == 2 && s.frames == 3 && s.durationMs == 108)
   }
 
@@ -25,10 +25,10 @@ class MediaMetadataSuite extends TestBase {
     assert(MediaMetadata.parseMp3(null).isEmpty)
     assert(MediaMetadata.parseMp3(Array[Byte](1, 2, 3)).isEmpty)
     assert(MediaMetadata
-      .parseMp3(graft.SparkEntry.testMp3Bytes(7L)).isEmpty) // planted garbage
+      .parseMp3(graft.gates.MediaFixtures.testMp3Bytes(7L)).isEmpty) // planted garbage
     // a valid stream truncated mid-frame keeps the WHOLE frames seen
     // (id 1: odd -> no ID3, 3 frames of 720 bytes at 160 kbps)
-    val full = graft.SparkEntry.testMp3Bytes(1L)
+    val full = graft.gates.MediaFixtures.testMp3Bytes(1L)
     val oneFrame = java.util.Arrays.copyOf(full, 720 + 100)
     val t = MediaMetadata.parseMp3(oneFrame).get
     assert(t.frames == 1 && t.durationMs == 36)
@@ -38,28 +38,28 @@ class MediaMetadataSuite extends TestBase {
   }
 
   test("MP3: trailing garbage after valid frames is tolerated") {
-    val full = graft.SparkEntry.testMp3Bytes(1L)
+    val full = graft.gates.MediaFixtures.testMp3Bytes(1L)
     val withTail = full ++ Array[Byte](0x41, 0x42, 0x43)
     val m = MediaMetadata.parseMp3(withTail).get
     assert(m.frames == 3)
   }
 
   test("MP4: box tree over the planted fixture fields") {
-    val m = MediaMetadata.parseMp4(graft.SparkEntry.testMp4Bytes(10L)).get
+    val m = MediaMetadata.parseMp4(graft.gates.MediaFixtures.testMp4Bytes(10L)).get
     assert(m.majorBrand == "isom" && m.timescale == 1000)
     assert(m.durationMs == 500L * (1 + 10 % 8))
     assert(m.tracks == 2) // even id adds the audio trak
     assert(m.width == 16 * 3 && m.height == 16 * 2)
-    val odd = MediaMetadata.parseMp4(graft.SparkEntry.testMp4Bytes(9L)).get
+    val odd = MediaMetadata.parseMp4(graft.gates.MediaFixtures.testMp4Bytes(9L)).get
     assert(odd.tracks == 1)
   }
 
   test("MP4: 64-bit largesize boxes, moov-less runs, corrupt sizes") {
     // wrap the moov of a valid fixture in a largesize box shell
-    val base = graft.SparkEntry.testMp4Bytes(1L)
+    val base = graft.gates.MediaFixtures.testMp4Bytes(1L)
     assert(MediaMetadata.parseMp4(base).isDefined)
     assert(MediaMetadata
-      .parseMp4(graft.SparkEntry.testMp4Bytes(3L)).isEmpty) // no moov
+      .parseMp4(graft.gates.MediaFixtures.testMp4Bytes(3L)).isEmpty) // no moov
     assert(MediaMetadata.parseMp4(null).isEmpty)
     assert(MediaMetadata.parseMp4(Array[Byte](0, 0, 0, 99, 'f', 'o')).isEmpty)
     // a box whose size overruns the payload is corruption, not a crash
@@ -76,7 +76,7 @@ class MediaMetadataSuite extends TestBase {
   test("MP3: an ID3v2.4 footer is part of the tag's on-disk size " +
     "(review find)") {
     val frames = {
-      val full = graft.SparkEntry.testMp3Bytes(1L) // odd: no ID3
+      val full = graft.gates.MediaFixtures.testMp3Bytes(1L) // odd: no ID3
       full
     }
     val n = 6
@@ -109,7 +109,7 @@ class MediaMetadataSuite extends TestBase {
 
   test("MP4: corruption inside moov yields None, not a partial parse " +
     "(review find)") {
-    val base = graft.SparkEntry.testMp4Bytes(2L)
+    val base = graft.gates.MediaFixtures.testMp4Bytes(2L)
     // find the moov box and corrupt its SECOND child's size field to
     // overrun the moov end
     def u32(b: Array[Byte], o: Int): Int =
@@ -133,8 +133,8 @@ class MediaMetadataSuite extends TestBase {
   test("MediaMetadataExtractor: null struct for invalid payloads, " +
     "schema validation, save/load") {
     val df = Seq(
-      (1L, graft.SparkEntry.testMp3Bytes(1L)),
-      (7L, graft.SparkEntry.testMp3Bytes(7L)),   // garbage -> null
+      (1L, graft.gates.MediaFixtures.testMp3Bytes(1L)),
+      (7L, graft.gates.MediaFixtures.testMp3Bytes(7L)),   // garbage -> null
       (3L, null.asInstanceOf[Array[Byte]]))
       .toDF("doc_id", "payload")
     val stage = new MediaMetadataExtractor().setInputCol("payload")

@@ -6,13 +6,13 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Pins the energy-contour audio fingerprint and its dedup operating
-  * point on the planted WAV family ([[graft.SparkEntry.testFpWavBytes]]):
+  * point on the planted WAV family ([[graft.gates.MediaFixtures.testFpWavBytes]]):
   * the exact volume invariance the 512-grid construction guarantees,
   * cross-group margins, null/undecodable handling, and the end-to-end
   * min-id-per-group survivor rule. */
 class AudioFingerprintSuite extends TestBase {
 
-  private def wav(id: Long): Array[Byte] = graft.SparkEntry.testFpWavBytes(id)
+  private def wav(id: Long): Array[Byte] = graft.gates.MediaFixtures.testFpWavBytes(id)
   private def fp(id: Long): Long = {
     val h = AudioFingerprint.fp64(wav(id))
     assert(h != null, s"id $id undecodable")
@@ -27,7 +27,7 @@ class AudioFingerprintSuite extends TestBase {
     assert(AudioFingerprint.fp64(tinyWav(32)) == null)
     assert(AudioFingerprint.fp64(tinyWav(64)) != null) // exactly enough
     // a normal-length decodable clip fingerprints
-    assert(AudioFingerprint.fp64(graft.SparkEntry.testWavBytes(0L)) != null)
+    assert(AudioFingerprint.fp64(graft.gates.MediaFixtures.testWavBytes(0L)) != null)
   }
 
   /** Minimal valid 8 kHz mono 16-bit WAV with `frames` samples. */

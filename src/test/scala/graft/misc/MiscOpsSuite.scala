@@ -229,7 +229,7 @@ class MiscOpsSuite extends TestBase {
   test("MultimodalFeaturizer audio modality decodes real WAV bytes") {
     import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
     // independent WAV construction (AudioSystem.write, not the manual
-    // RIFF header the SparkEntry gate fixture uses)
+    // RIFF header the MediaFixtures gate fixture uses)
     def wav(fmt: AudioFormat, frames: Int, fill: java.nio.ByteBuffer => Unit): Array[Byte] = {
       val buf = java.nio.ByteBuffer
         .allocate(frames * fmt.getFrameSize)
@@ -283,9 +283,9 @@ class MiscOpsSuite extends TestBase {
     val f3 = out3.getSeq[Float](1)
     assert(f3.take(3) == Seq(0.125f, 8000f, 1f))
     assert(f3.drop(3).forall(v => math.abs(v - 0.5f) < 0.01f))
-    // gate-fixture parity: the hand-rolled RIFF header in SparkEntry
+    // gate-fixture parity: the hand-rolled RIFF header in MediaFixtures
     // decodes identically (id=3 -> 1.0 s, RMS 0.25)
-    val fix = graft.SparkEntry.testWavBytes(3L)
+    val fix = graft.gates.MediaFixtures.testWavBytes(3L)
     val out4 = new MultimodalFeaturizer().setInputCol("payload")
       .setModality("audio").setDim(6)
       .transform(Seq((3L, fix)).toDF("id", "payload"))
@@ -357,7 +357,7 @@ class MiscOpsSuite extends TestBase {
       .select("media_meta.decoded").head
     assert(!f4.getBoolean(0), "truncated Y4M must not decode")
     // gate-fixture parity (id=3 -> 1.0 s, 8 frames, luma 192)
-    val fix = graft.SparkEntry.testY4mBytes(3L)
+    val fix = graft.gates.MediaFixtures.testY4mBytes(3L)
     val f5 = new MultimodalFeaturizer().setInputCol("payload")
       .setModality("video").setDim(7)
       .transform(Seq((3L, fix)).toDF("id", "payload"))

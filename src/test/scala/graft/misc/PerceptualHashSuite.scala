@@ -7,13 +7,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Pins the DCT perceptual hash and its dedup operating point on the
-  * planted BMP family ([[graft.SparkEntry.testBmpBytes]]): re-encode
+  * planted BMP family ([[graft.gates.MediaFixtures.testBmpBytes]]): re-encode
   * invariances, the within/cross-group Hamming margins the
   * `image_phash_dedup` gate relies on, null/undecodable handling, and
   * the end-to-end min-id-per-group survivor rule. */
 class PerceptualHashSuite extends TestBase {
 
-  private def bmp(id: Long): Array[Byte] = graft.SparkEntry.testBmpBytes(id)
+  private def bmp(id: Long): Array[Byte] = graft.gates.MediaFixtures.testBmpBytes(id)
   private def ph(id: Long): Long = {
     val h = PerceptualHash.phash64(bmp(id))
     assert(h != null, s"id $id should decode")

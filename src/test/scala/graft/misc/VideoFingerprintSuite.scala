@@ -6,13 +6,13 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Pins the luma-contour video fingerprint and its dedup operating
-  * point on the planted Y4M family ([[graft.SparkEntry.testFpY4mBytes]]):
+  * point on the planted Y4M family ([[graft.gates.MediaFixtures.testFpY4mBytes]]):
   * the exact brightness-re-grade invariance the 16-step grid
   * guarantees, cross-group margins, null/short-clip handling, and the
   * end-to-end min-id-per-group survivor rule. */
 class VideoFingerprintSuite extends TestBase {
 
-  private def y4m(id: Long): Array[Byte] = graft.SparkEntry.testFpY4mBytes(id)
+  private def y4m(id: Long): Array[Byte] = graft.gates.MediaFixtures.testFpY4mBytes(id)
   private def fp(id: Long): Long = {
     val h = VideoFingerprint.fp64(y4m(id))
     assert(h != null, s"id $id undecodable")
@@ -24,7 +24,7 @@ class VideoFingerprintSuite extends TestBase {
     assert(VideoFingerprint.fp64(null) == null)
     assert(VideoFingerprint.fp64("not video".getBytes("UTF-8")) == null)
     // the multimodal fixture has 2-8 frames — far below 64 windows
-    assert(VideoFingerprint.fp64(graft.SparkEntry.testY4mBytes(3L)) == null)
+    assert(VideoFingerprint.fp64(graft.gates.MediaFixtures.testY4mBytes(3L)) == null)
   }
 
   test("golden value pins the construction against silent drift") {

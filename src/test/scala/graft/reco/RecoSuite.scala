@@ -123,7 +123,7 @@ class RecoSuite extends TestBase {
       .setUserCol("user").setItemCol("item").setRatingCol("rating")
       .setK(5).setHoldoutFraction(0.25)
       .setGrid(Seq(("jaccard", 30), ("lift", 30)))
-      .fit(graft.RankingGateFixture.df(spark))
+      .fit(graft.gates.RankingGateFixture.df(spark))
     assert(r.bestParams("similarityFunction") == "jaccard")
     val byFn = r.results.collect()
       .map(x => x.getAs[String]("similarity") -> x.getAs[Double]("ndcg_at_k"))

@@ -161,7 +161,7 @@ class StreamingSuite extends TestBase {
     "in-stream exact + null passthrough (batch parity)") {
     // planted audio fixture: groups of 4 ids share one contour (exact
     // re-encodes -> bit-identical fps); cross-group hamming >= 12
-    val wav = (id: Long) => graft.SparkEntry.testFpWavBytes(id)
+    val wav = (id: Long) => graft.gates.MediaFixtures.testFpWavBytes(id)
     val corpus = Seq(0L, 1L, 2L, 3L).map(id => (id, wav(id)))
       .toDF("doc_id", "payload")
     val idx = StreamingFingerprintDeduplicator.fingerprintIndex(
@@ -184,7 +184,7 @@ class StreamingSuite extends TestBase {
   test("StreamingFingerprintDeduplicator dedups a stream against the " +
     "persisted index and within the watermark") {
     implicit val sqlCtx = spark.sqlContext
-    val wav = (id: Long) => graft.SparkEntry.testFpWavBytes(id)
+    val wav = (id: Long) => graft.gates.MediaFixtures.testFpWavBytes(id)
     val idx = StreamingFingerprintDeduplicator.fingerprintIndex(
       Seq((0L, wav(0L))).toDF("doc_id", "payload"), "payload", "audio")
     val mem = MemoryStream[(java.sql.Timestamp, Long)]
@@ -694,7 +694,7 @@ class StreamingSuite extends TestBase {
   }
 
   test("StreamingFingerprintDeduplicator maxIndexEntries fails fast") {
-    val wav = (id: Long) => graft.SparkEntry.testFpWavBytes(id)
+    val wav = (id: Long) => graft.gates.MediaFixtures.testFpWavBytes(id)
     // ids 0,4,8,12: four distinct groups -> four distinct fps
     val corpus = Seq(0L, 4L, 8L, 12L).map(id => (id, wav(id)))
       .toDF("doc_id", "payload")
@@ -763,7 +763,7 @@ class StreamingSuite extends TestBase {
       () => assert(mh.transform(texts).count() == 0),
       () => mh.setCorpusIndex(mhIdx), () => mh.release())
     // ids 0-3 are bit-identical audio re-encodes: 1 hits 0's fingerprint
-    val wav = (id: Long) => graft.SparkEntry.testFpWavBytes(id)
+    val wav = (id: Long) => graft.gates.MediaFixtures.testFpWavBytes(id)
     val fpIdx = StreamingFingerprintDeduplicator.fingerprintIndex(
       Seq((0L, wav(0L))).toDF("doc_id", "payload"), "payload", "audio")
     val media = Seq((10L, wav(1L))).toDF("doc_id", "payload")

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{LanguageGateFixture, TestBase}
+import graft.TestBase
+import graft.gates.LanguageGateFixture
 import org.apache.spark.sql.functions._
 
 class LanguageIdentifierSuite extends TestBase {
