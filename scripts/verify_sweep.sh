@@ -21,7 +21,10 @@ for m in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$m=ALL-UNNAMED"
 done
-JVM="$ADD_OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx16g"
+# driver heap: SPARK_DRIVER_MEM (as build.sbt's javaOptions), defaulting
+# like the Tier-1 test command to half of MemTotal, clamped to 2-8 GB
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+JVM="$ADD_OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx$MEM"
 
 sbt -batch compile >/dev/null
 

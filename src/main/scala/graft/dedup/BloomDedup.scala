@@ -108,19 +108,8 @@ class BloomIncrementalDeduplicator(override val uid: String)
       case r if r.isNullAt(0) => 1 // empty index: everything misses
       case r => r.getInt(0)
     }
-    val canon = DedupFunctions.canonical(col(getInputCol))
-    val idOrd = coalesce(col($(idCol)).cast("long"), lit(Long.MaxValue))
-    val ord =
-      if (isSet(priorityCol))
-        struct(coalesce(col($(priorityCol)).cast("double"),
-          lit(Double.MaxValue)), idOrd)
-      else struct(idOrd)
-    val collapsed = df
-      .groupBy(xxhash64(canon).as("__fp"),
-        xxhash64(lit(0x9e3779b9L), canon).as("__fp2"))
-      .agg(min_by(struct(df.columns.toIndexedSeq.map(col): _*), ord)
-        .as("__row"))
-    val joined = collapsed
+    val joined = DedupFunctions.keepOnePerFingerprint(df,
+        DedupFunctions.canonical(col(getInputCol)), $(idCol), get(priorityCol))
       .withColumn("__bucket", pmod(col("__fp"), lit(nb)).cast("int"))
       .join(bloomIdx, Seq("__bucket"), "left_outer")
     val maybe = BloomIncrementalDeduplicator.containsUdf(
@@ -213,24 +202,29 @@ object BloomIncrementalDeduplicator
       }
       buf
     }
-    def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] =
-      if (x.isEmpty) y
-      else if (y.isEmpty) x
-      else {
-        // same-m enforcement: silently OR-ing up to x.length would
-        // either AIOOBE or drop y's tail bits (= missed duplicates in
-        // approximate mode) when two differently-sized indexes meet
-        require(x.length == y.length,
-          s"incompatible Bloom buffers (${x.length} vs ${y.length} bytes " +
-            "— indexes built with different m cannot merge)")
-        var i = 0
-        while (i < x.length) { x(i) = (x(i) | y(i)).toByte; i += 1 }
-        x
-      }
+    def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] = orBits(x, y)
     def finish(b: Array[Byte]): Array[Byte] = b
     def bufferEncoder = Encoders.BINARY
     def outputEncoder = Encoders.BINARY
   }
+
+  /** In-place bit-OR of two same-size bucket bit arrays into `x`; an
+    * empty (zero-buffer) or null side is the identity. OR is commutative
+    * and associative, so any merge order yields identical bits. */
+  private def orBits(x: Array[Byte], y: Array[Byte]): Array[Byte] =
+    if (x.isEmpty) y
+    else if (y == null || y.isEmpty) x
+    else {
+      // same-m enforcement: silently OR-ing up to x.length would
+      // either AIOOBE or drop y's tail bits (= missed duplicates in
+      // approximate mode) when two differently-sized indexes meet
+      require(x.length == y.length,
+        s"incompatible Bloom buffers (${x.length} vs ${y.length} bytes " +
+          "— indexes built with different m cannot merge)")
+      var i = 0
+      while (i < x.length) { x(i) = (x(i) | y(i)).toByte; i += 1 }
+      x
+    }
 
   /** Build the partitioned Bloom index from an exact `(__fp, __fp2)`
     * fingerprint frame. One pass over the 16 B/doc index (plus a count
@@ -269,18 +263,8 @@ object BloomIncrementalDeduplicator
   private class OrAgg
       extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
     def zero: Array[Byte] = Array.emptyByteArray
-    def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] = merge(b, a)
-    def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] =
-      if (x.isEmpty) y
-      else if (y == null || y.isEmpty) x
-      else {
-        require(x.length == y.length,
-          s"incompatible Bloom buffers (${x.length} vs ${y.length} bytes " +
-            "— indexes built with different m cannot merge)")
-        var i = 0
-        while (i < x.length) { x(i) = (x(i) | y(i)).toByte; i += 1 }
-        x
-      }
+    def reduce(b: Array[Byte], a: Array[Byte]): Array[Byte] = orBits(b, a)
+    def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] = orBits(x, y)
     def finish(b: Array[Byte]): Array[Byte] = b
     def bufferEncoder = Encoders.BINARY
     def outputEncoder = Encoders.BINARY

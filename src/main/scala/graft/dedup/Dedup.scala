@@ -25,6 +25,39 @@ object DedupFunctions {
   def canonical(c: Column): Column =
     lower(regexp_replace(trim(c), "\\s+", " "))
 
+  /** The 128-bit exact-dedup fingerprint of `key`: two independently
+    * seeded xxhash64. Grouping on the pair instead of the key text keeps
+    * the shuffle key at 16 bytes (the full normalized document as a
+    * shuffle/hash-map key carried every byte twice — key + kept row — and
+    * measured super-linear in the x10->x100 sweep), and the
+    * any-collision probability stays negligible at corpus scale (~1e-20
+    * per pair at 10^9 docs). The pair is also the persisted
+    * `(__fp, __fp2)` index format that the exact, Bloom and streaming
+    * faces join on, so it is defined only here. */
+  private[graft] def fingerprintPair(key: Column): (Column, Column) =
+    (xxhash64(key), xxhash64(lit(0x9e3779b9L), key))
+
+  /** The exact keep rule: per fingerprint pair of `key`, the whole row
+    * (every column of `df`, as `__row`) with the lowest `(priority, id)`
+    * — lexicographic, so priority decides and id breaks ties; without a
+    * priority column the smallest id wins. Null priorities and ids order
+    * last: min_by skips null ordering values entirely, which would drop
+    * a group whose rows all have null ids. One map-side-combinable
+    * aggregation — no per-group sort, and the map phase collapses local
+    * duplicates before the shuffle (a window + row_number ships every
+    * duplicate row through the shuffle and sorts each group). Returns
+    * `(__fp, __fp2, __row)`. */
+  private[graft] def keepOnePerFingerprint(df: DataFrame, key: Column,
+      idCol: String, priorityCol: Option[String]): DataFrame = {
+    val (fp, fp2) = fingerprintPair(key)
+    val idOrd = coalesce(col(idCol).cast("long"), lit(Long.MaxValue))
+    val ord = priorityCol.fold(struct(idOrd))(p =>
+      struct(coalesce(col(p).cast("double"), lit(Double.MaxValue)), idOrd))
+    df.groupBy(fp.as("__fp"), fp2.as("__fp2"))
+      .agg(min_by(struct(df.columns.toIndexedSeq.map(col): _*), ord)
+        .as("__row"))
+  }
+
   /** Word k-shingles of the canonical text, as distinct array. */
   def shingles(c: Column, k: Int): Column = {
     val toks = split(canonical(c), " ")
@@ -132,17 +165,40 @@ object DedupFunctions {
     * them back by id afterwards.
     */
   private[graft] def candidatePairs(keyed: DataFrame, maxBucket: Int,
-      metricName: String): DataFrame = {
-    val bounded = udaf(new BoundedIdSetAggregator(maxBucket),
-      org.apache.spark.sql.Encoders.scalaLong)
-    keyed.groupBy(col("__key")).agg(bounded(col("__id")).as("__b"))
-      .observe(metricName, sum(col("__b.dropped")).as("dropped_candidates"))
+      metricName: String): DataFrame =
+    boundedIdsPerKey(keyed, "__id", maxBucket, metricName)
       .select(col("__b.ids").as("__ids"))
       .filter(size(col("__ids")) >= 2)
       .select(explode(inBucketPairs(col("__ids"))).as("__p"))
       .select(col("__p.l").as("__id_l"), col("__p.r").as("__id_r"))
       .filter(col("__id_l") < col("__id_r"))
       .distinct()
+
+  /** Groups narrow `(__key, idCol)` rows on `__key` into `__b`, the
+    * [[BoundedIdSetAggregator]] buffer of the key's `maxBucket` smallest
+    * ids; the overflow is observable as `<metricName>.dropped_candidates`.
+    * The one per-key cap of the family: self-join candidates
+    * ([[candidatePairs]]) and the corpus side of every band probe
+    * ([[cappedCorpusBands]]). */
+  private def boundedIdsPerKey(keyed: DataFrame, idCol: String,
+      maxBucket: Int, metricName: String): DataFrame = {
+    val bounded = udaf(new BoundedIdSetAggregator(maxBucket),
+      org.apache.spark.sql.Encoders.scalaLong)
+    keyed.groupBy(col("__key")).agg(bounded(col(idCol)).as("__b"))
+      .observe(metricName, sum(col("__b.dropped")).as("dropped_candidates"))
+  }
+
+  /** The capped band frame of a `(__id, __sig)` signature index: one
+    * `(__key, __cid)` row per band key and corpus id, at most `maxBucket`
+    * ids per key (capped before any join, so a degenerate bucket cannot
+    * explode). The corpus side of the incremental and streaming MinHash
+    * band probes. */
+  private[graft] def cappedCorpusBands(index: DataFrame, bands: Int,
+      rowsPerBand: Int, maxBucket: Int, metricName: String): DataFrame = {
+    val keys = index.select(col("__id").as("__cid"),
+      explode(bandHashes(col("__sig"), bands, rowsPerBand)).as("__key"))
+    boundedIdsPerKey(keys, "__cid", maxBucket, metricName)
+      .select(col("__key"), explode(col("__b.ids")).as("__cid"))
   }
 
   /** Verification payload join, both shapes. `restrict = false` (the
@@ -275,34 +331,9 @@ class ExactDeduplicator(override val uid: String) extends Transformer
   override def transform(ds: Dataset[_]): DataFrame = {
     transformSchema(ds.schema)
     val df = ds.toDF()
-    val canon = if ($(rawKey)) col(getInputCol)
+    val key = if ($(rawKey)) col(getInputCol)
       else DedupFunctions.canonical(col(getInputCol))
-    // 128-bit fingerprint pair as the group key, NOT the canonical text:
-    // the full normalized document as a shuffle/hash-map key made the
-    // exact-dedup shuffle carry every byte twice (key + kept row) and
-    // measured super-linear in the x10->x100 sweep. Two independently
-    // seeded 64-bit hashes keep the any-collision probability negligible
-    // at corpus scale (~1e-20 per pair at 10^9 docs).
-    val fp1 = xxhash64(canon)
-    val fp2 = xxhash64(lit(0x9e3779b9L), canon)
-    // min_by keeps the whole smallest-id row per fingerprint in ONE
-    // map-side-combinable aggregation — no per-bucket sort, and the map
-    // phase already collapses local duplicates before the shuffle (a
-    // window + row_number ships every duplicate row through the shuffle
-    // and sorts each bucket)
-    // null ids order last (min_by skips null ordering values entirely,
-    // which would drop a group whose rows all have null ids); with a
-    // priority column the min_by key is the (priority, id) struct —
-    // lexicographic, so priority decides and id breaks ties
-    val idOrd = coalesce(col($(idCol)).cast("long"), lit(Long.MaxValue))
-    val ord =
-      if (isSet(priorityCol))
-        struct(coalesce(col($(priorityCol)).cast("double"),
-          lit(Double.MaxValue)), idOrd)
-      else struct(idOrd)
-    df.groupBy(fp1.as("__fp"), fp2.as("__fp2"))
-      .agg(min_by(struct(df.columns.toIndexedSeq.map(col): _*), ord)
-        .as("__row"))
+    DedupFunctions.keepOnePerFingerprint(df, key, $(idCol), get(priorityCol))
       .select(col("__row.*"))
   }
   override def transformSchema(schema: StructType): StructType = {

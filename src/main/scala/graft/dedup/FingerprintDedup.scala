@@ -15,9 +15,11 @@ import org.apache.spark.sql.types.StructType
   * ([[DedupFunctions.hammingDupIds]]) and the smallest-id-survives
   * anti-join. Null or undecodable payloads fingerprint as null — no
   * evidence — and are always KEPT. Subclasses supply the fingerprint
-  * kernel and their measured `spreadDecode` default (extracted round
+  * kernel and their measured `spreadDecode` constant (extracted round
   * 16: the two operators differed only in those, and single-sided
-  * fixes to the shared mechanics kept missing the copy).
+  * fixes to the shared mechanics kept missing the copy). `spreadDecode`
+  * is fixed per class, not settable: it follows the payload's
+  * decode-cost/byte ratio, which is a property of the format.
   */
 abstract class FingerprintDeduplicatorBase extends Transformer
     with graft.core.HasInputCol with graft.core.GraftWritable {
@@ -46,12 +48,11 @@ abstract class FingerprintDeduplicatorBase extends Transformer
     "per-bucket candidate cap (skew guard)", ParamValidators.gt(0))
   setDefault(maxBucketSize -> 1000)
   def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
-  final val spreadDecode = new BooleanParam(this, "spreadDecode",
-    "repartition (id, bytes) across all slots before decoding when the " +
-      "scan gave fewer partitions than slots — pays a payload shuffle " +
-      "to parallelize the decode; set per the decode-cost/byte ratio " +
-      "(see the subclass default's measurement)")
-  def setSpreadDecode(v: Boolean): this.type = set(spreadDecode, v)
+  /** Repartition (id, bytes) across all slots before decoding when the
+    * scan gave fewer partitions than slots — pays a payload shuffle to
+    * parallelize the decode. Each subclass fixes it from its format's
+    * measured decode-cost/byte ratio. */
+  protected def spreadDecode: Boolean
 
   /** 64-bit fingerprint of one payload; null = undecodable/no evidence.
     * Must be a pure function (it runs inside a deterministic UDF). */
@@ -72,7 +73,7 @@ abstract class FingerprintDeduplicatorBase extends Transformer
       col(getInputCol).as("__bytes"))
     val slots = df.sparkSession.sparkContext.defaultParallelism
     val spread =
-      if ($(spreadDecode) && narrow.rdd.getNumPartitions < slots)
+      if (spreadDecode && narrow.rdd.getNumPartitions < slots)
         narrow.repartition(slots)
       else narrow
     val fps = spread

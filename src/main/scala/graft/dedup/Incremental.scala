@@ -67,19 +67,10 @@ class IncrementalDeduplicator(override val uid: String) extends Transformer
     val index =
       if (corpusIdx != null) corpusIdx.select(col("__fp"), col("__fp2"))
       else IncrementalDeduplicator.fingerprintIndex(corpusRaw, getInputCol)
-    val canon = DedupFunctions.canonical(col(getInputCol))
-    val idOrd = coalesce(col($(idCol)).cast("long"), lit(Long.MaxValue))
-    val ord =
-      if (isSet(priorityCol))
-        struct(coalesce(col($(priorityCol)).cast("double"),
-          lit(Double.MaxValue)), idOrd)
-      else struct(idOrd)
     // in-batch collapse first (map-side combine does most of the work),
     // THEN the corpus anti-join on the already-partitioned group key
-    df.groupBy(xxhash64(canon).as("__fp"),
-        xxhash64(lit(0x9e3779b9L), canon).as("__fp2"))
-      .agg(min_by(struct(df.columns.toIndexedSeq.map(col): _*), ord)
-        .as("__row"))
+    DedupFunctions.keepOnePerFingerprint(df,
+        DedupFunctions.canonical(col(getInputCol)), $(idCol), get(priorityCol))
       .join(index, Seq("__fp", "__fp2"), "left_anti")
       .select(col("__row.*"))
   }
@@ -105,9 +96,8 @@ object IncrementalDeduplicator
     * Write it out with the curated corpus; union each batch's survivor
     * index onto it. */
   def fingerprintIndex(df: DataFrame, inputCol: String): DataFrame = {
-    val canon = DedupFunctions.canonical(col(inputCol))
-    df.select(xxhash64(canon).as("__fp"),
-        xxhash64(lit(0x9e3779b9L), canon).as("__fp2"))
-      .distinct()
+    val (fp, fp2) =
+      DedupFunctions.fingerprintPair(DedupFunctions.canonical(col(inputCol)))
+    df.select(fp.as("__fp"), fp2.as("__fp2")).distinct()
   }
 }

@@ -16,17 +16,20 @@ import org.apache.spark.sql.types._
   * state a production pipeline actually keeps between snapshots), then
   * near-deduped within itself by the full [[MinHashDeduplicator]].
   *
-  * Corpus-side verification has two modes:
-  *  - `signature` (default, the steady-state path): similarity is the
-  *    fraction of agreeing signature components — the unbiased MinHash
-  *    estimate of Jaccard (se ≈ sqrt(t(1-t)/numHashes), ~0.035 at
-  *    t=0.8/128 hashes). Needs ONLY the index; corpus text is never
-  *    reread. Borderline pairs (true Jaccard within ~2 se of the
+  * Corpus-side verification follows the attached corpus:
+  *  - `setCorpusIndex` (the steady-state path) verifies by signature:
+  *    similarity is the fraction of agreeing signature components — the
+  *    unbiased MinHash estimate of Jaccard (se ≈ sqrt(t(1-t)/numHashes),
+  *    ~0.035 at t=0.8/128 hashes). Needs ONLY the index; corpus text is
+  *    never reread. Borderline pairs (true Jaccard within ~2 se of the
   *    threshold) are decided by the estimate — the documented trade for
   *    not rereading 100 TB.
-  *  - `exact`: candidates verify by exact shingle Jaccard against the
-  *    raw corpus — batch-vs-corpus decisions then match a from-scratch
-  *    rebuild (and the driver gate's SQL oracle replays them).
+  *  - `setCorpus` (raw text) verifies candidates by exact shingle
+  *    Jaccard against the raw corpus — batch-vs-corpus decisions then
+  *    match a from-scratch rebuild (and the driver gate's SQL oracle
+  *    replays them). With the text at hand the estimate would save
+  *    nothing: the derived index already hashes every corpus document,
+  *    and the exact verify shingles only the candidate rows.
   *
   * Scale shape: band keys explode to narrow (key, id) rows on both
   * sides; the corpus side is capped per key by the shared bounded
@@ -60,20 +63,15 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     "per-band-bucket corpus candidate cap (skew guard)")
   setDefault(maxBucketSize -> 1000)
   def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
-  final val verifyMode = new Param[String](this, "verifyMode",
-    "'signature' verifies against the index alone (MinHash Jaccard " +
-      "estimate); 'exact' verifies candidates by exact shingle Jaccard " +
-      "against the raw corpus",
-    ParamValidators.inArray(Array("signature", "exact")))
-  setDefault(verifyMode -> "signature")
-  def setVerifyMode(v: String): this.type = set(verifyMode, v)
 
   private var corpusRaw: DataFrame = _
   private var corpusIdx: DataFrame = _
-  /** Raw corpus documents (id + text); the index is derived on the fly. */
+  /** Raw corpus documents (id + text): the index is derived on the fly
+    * and candidates verify by exact shingle Jaccard. */
   def setCorpus(df: DataFrame): this.type = { corpusRaw = df; corpusIdx = null; this }
   /** Precomputed `(__id, __sig)` frame from
-    * [[IncrementalMinHashDeduplicator.signatureIndex]] (signature mode only). */
+    * [[IncrementalMinHashDeduplicator.signatureIndex]]: candidates verify
+    * by signature agreement. */
   def setCorpusIndex(df: DataFrame): this.type = { corpusIdx = df; corpusRaw = null; this }
 
   override def transform(ds: Dataset[_]): DataFrame = {
@@ -84,8 +82,6 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     val r = $(numHashes) / $(bands)
     require(corpusRaw != null || corpusIdx != null,
       "setCorpus or setCorpusIndex first")
-    require($(verifyMode) == "signature" || corpusRaw != null,
-      "exact verification needs the raw corpus (setCorpus)")
     val index =
       if (corpusIdx != null) corpusIdx.select(col("__id"), col("__sig"))
       else IncrementalMinHashDeduplicator.signatureIndex(
@@ -96,17 +92,10 @@ class IncrementalMinHashDeduplicator(override val uid: String)
         .as("__sig"))
     val batchKeys = batchSig.select(col("__id"),
       explode(bandHashes(col("__sig"), $(bands), r)).as("__key"))
-    val corpusKeys = index.select(col("__id").as("__cid"),
-      explode(bandHashes(col("__sig"), $(bands), r)).as("__key"))
     // per-bucket corpus cap BEFORE the join (map-side bounded, dropped
     // candidates observable) — the two-frame analogue of candidatePairs
-    val bounded = udaf(new BoundedIdSetAggregator($(maxBucketSize)),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val cKeyed = corpusKeys.groupBy(col("__key"))
-      .agg(bounded(col("__cid")).as("__b"))
-      .observe(s"${uid}_dropped", sum(col("__b.dropped"))
-        .as("dropped_candidates"))
-      .select(col("__key"), explode(col("__b.ids")).as("__cid"))
+    val cKeyed = cappedCorpusBands(index, $(bands), r, $(maxBucketSize),
+      s"${uid}_dropped")
     // materialized: the verify joins reference the candidate frame three
     // times (batch restrict, corpus restrict, pair join) and without the
     // barrier each reference replans — and re-executes — the whole band
@@ -152,8 +141,8 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     def maybeBroadcast(f: DataFrame): DataFrame =
       if (broadcastLimit >= 0 && candBytes <= broadcastLimit) broadcast(f)
       else f
-    val dropIds = $(verifyMode) match {
-      case "signature" =>
+    val dropIds =
+      if (corpusRaw == null) { // index only: signature agreement
         val bSig = df.select(id.cast("long").as("__id"),
             col(getInputCol).as("__t"))
           .join(maybeBroadcast(cands.select(col("__id")).distinct()),
@@ -170,7 +159,7 @@ class IncrementalMinHashDeduplicator(override val uid: String)
           .join(cSig, Seq("__cid"))
           .filter(sigAgreement(col("__sig"), col("__csig")) >= $(threshold))
           .select(col("__id")).distinct()
-      case "exact" =>
+      } else { // raw corpus attached: exact shingle Jaccard
         val bsh = df.select(id.cast("long").as("__id"),
             col(getInputCol).as("__t"))
           .join(maybeBroadcast(cands.select(col("__id")).distinct()),
@@ -188,7 +177,7 @@ class IncrementalMinHashDeduplicator(override val uid: String)
           .join(csh, Seq("__cid"))
           .filter(jaccard(col("__sh"), col("__csh")) >= $(threshold))
           .select(col("__id")).distinct()
-    }
+      }
     // materialized survivor boundary: the inner self-dedup references its
     // input FOUR times (band explode, the l/r payload joins, the survivor
     // anti-join); without the barrier each reference re-executes the

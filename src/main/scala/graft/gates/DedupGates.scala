@@ -386,9 +386,10 @@ object DedupGates {
         |WHERE ct NOT IN (SELECT ct FROM corpus)""".stripMargin)),
 
     // Incremental NEAR-dup dedup (MinHash): same planted snapshot split
-    // as dedup_incremental; exact verify mode so the oracle can replay
-    // batch-vs-corpus decisions by exact shingle Jaccard (signature mode
-    // estimates at the threshold and is suite-covered instead). Natural
+    // as dedup_incremental; the raw corpus is attached, so candidates
+    // verify by exact shingle Jaccard and the oracle can replay
+    // batch-vs-corpus decisions (signature verification, from the index
+    // alone, is dedup_incremental_minhash_sig below). Natural
     // cross-split near-dups exist in the fixture (~25 pairs at sf0.01),
     // so this gate is not planted-only.
     Gate("dedup_incremental_minhash", { (s, dir) =>
@@ -400,8 +401,7 @@ object DedupGates {
         .unionByName(docs.filter(col("doc_id") % 8 === 4)
           .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
       new graft.dedup.IncrementalMinHashDeduplicator().setInputCol("text")
-        .setIdCol("doc_id").setVerifyMode("exact")
-        .setCorpus(corpus).transform(batch)
+        .setIdCol("doc_id").setCorpus(corpus).transform(batch)
         .select(col("doc_id"))
     }, oracle = Some(
       // replay: exact shingle-3 Jaccard via inverted-index joins (the

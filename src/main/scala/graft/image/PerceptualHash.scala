@@ -208,11 +208,11 @@ class ImagePHashDeduplicator(override val uid: String)
     * above SimHash's text default (3); see the base's `blocks` scaladoc
     * for the key-width analysis this operator's 100x sweep produced.
     *
-    * spreadDecode defaults TRUE here: image decode+DCT is CPU-heavy
+    * spreadDecode is TRUE here: image decode+DCT is CPU-heavy
     * (~0.5 ms/image) and shuffling the (id, bytes) frame to every slot
     * was measured to beat decoding on a handful of cores at the 100x
     * corpus — 331 → 261 s (SCALING.md round 16). */
-  setDefault(spreadDecode -> true)
+  override protected val spreadDecode = true
 
   override protected def fingerprint(bytes: Array[Byte]): java.lang.Long =
     PerceptualHash.phash64(bytes)

@@ -90,13 +90,12 @@ class AudioFingerprintDeduplicator(override val uid: String)
     * inherited maxHamming default (4) tolerates mild
     * clipping/requantization noise with margin.
     *
-    * spreadDecode defaults FALSE, unlike
+    * spreadDecode is FALSE, unlike
     * [[graft.image.ImagePHashDeduplicator]]: the contour decode is one
     * cheap pass over the samples, and shuffling full audio payloads to
     * gain parallelism was measured to LOSE at the 100x corpus
-    * (154 → 311 s, SCALING.md round 16). Flip on for genuinely
-    * few-split scans of expensive-to-decode formats. */
-  setDefault(spreadDecode -> false)
+    * (154 → 311 s, SCALING.md round 16). */
+  override protected val spreadDecode = false
 
   override protected def fingerprint(bytes: Array[Byte]): java.lang.Long =
     AudioFingerprint.fp64(bytes)

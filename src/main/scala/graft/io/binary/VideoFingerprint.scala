@@ -80,13 +80,13 @@ object VideoFingerprint extends GraftReadable[VideoFingerprint] {
   * completes the multimodal dedup family (text SimHash, image pHash,
   * audio energy contour, video luma contour; one shared
   * [[FingerprintDeduplicatorBase]] shell and Manku pigeonhole).
-  * spreadDecode defaults FALSE like the audio member: the frame walk
+  * spreadDecode is FALSE like the audio member: the frame walk
   * is one cheap pass over the luma planes, cheaper than shuffling raw
   * video payloads. */
 class VideoFingerprintDeduplicator(override val uid: String)
     extends graft.dedup.FingerprintDeduplicatorBase {
   def this() = this(Identifiable.randomUID("VideoFingerprintDeduplicator"))
-  setDefault(spreadDecode -> false)
+  override protected val spreadDecode = false
 
   override protected def fingerprint(bytes: Array[Byte]): java.lang.Long =
     VideoFingerprint.fp64(bytes)

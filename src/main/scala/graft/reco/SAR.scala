@@ -218,19 +218,23 @@ class SARModel(override val uid: String) extends Model[SARModel]
       }
     }
 
+  /** (user, item, score) for every item reachable from a user's
+    * affinities: affinity × similarity, decimal-summed for partial-order
+    * determinism. */
+  private def scores: DataFrame = affinities
+    .join(broadcast(sparsifiedSimilarity), affinities("item") === itemSimilarity("i1"))
+    .groupBy(col("user"), col("i2").as("item"))
+    .agg(sum((col("affinity") * col("similarity")).cast(DecimalType(30, 10)))
+      .cast("double").as("score"))
+
   /** Top-k recommendations per user: (user, item, score, rank). Scores are
     * decimal-summed for partial-order determinism; ties break on item. */
   def recommendForAllUsers(k: Int, removeSeen: Boolean = true): DataFrame = {
-    val scored = affinities
-      .join(broadcast(sparsifiedSimilarity), affinities("item") === itemSimilarity("i1"))
-      .groupBy(col("user"), col("i2").as("item"))
-      .agg(sum((col("affinity") * col("similarity")).cast(DecimalType(30, 10)))
-        .cast("double").as("score"))
     val unseen = if (removeSeen) {
-      scored.join(affinities.select(col("user"), col("item"), lit(1).as("__seen")),
+      scores.join(affinities.select(col("user"), col("item"), lit(1).as("__seen")),
           Seq("user", "item"), "left")
         .filter(col("__seen").isNull).drop("__seen")
-    } else scored
+    } else scores
     val w = Window.partitionBy("user").orderBy(col("score").desc, col("item"))
     unseen.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
@@ -238,12 +242,7 @@ class SARModel(override val uid: String) extends Model[SARModel]
   override def transform(ds: Dataset[_]): DataFrame = {
     // score the supplied (user, item) pairs
     val df = ds.toDF().select(col(getUserCol).as("user"), col(getItemCol).as("item"))
-    val scored = affinities
-      .join(broadcast(sparsifiedSimilarity), affinities("item") === itemSimilarity("i1"))
-      .groupBy(col("user"), col("i2").as("item"))
-      .agg(sum((col("affinity") * col("similarity")).cast(DecimalType(30, 10)))
-        .cast("double").as("score"))
-    df.join(scored, Seq("user", "item"), "left")
+    df.join(scores, Seq("user", "item"), "left")
       .na.fill(0.0, Seq("score"))
   }
   override def transformSchema(schema: StructType): StructType =

@@ -251,11 +251,12 @@ private[streaming] trait HasEventTime extends Params {
       graft.core.SchemaChecks.requireCols(df.schema, "timeCol" -> $(timeCol))
 
   /** Adds the 128-bit fingerprint pair `(__fp, __fp2)` of `key` — the
-    * [[graft.dedup.ExactDeduplicator]] pair, 16 bytes of state per
-    * retained row. */
-  protected def withFingerprint(df: DataFrame, key: Column): DataFrame =
-    df.withColumn("__fp", xxhash64(key))
-      .withColumn("__fp2", xxhash64(lit(0x9e3779b9L), key))
+    * [[graft.dedup.DedupFunctions.fingerprintPair]], 16 bytes of state
+    * per retained row. */
+  protected def withFingerprint(df: DataFrame, key: Column): DataFrame = {
+    val (fp, fp2) = graft.dedup.DedupFunctions.fingerprintPair(key)
+    df.withColumn("__fp", fp).withColumn("__fp2", fp2)
+  }
 
   /** Drops exact repeats on the fingerprint columns `fps` — within the
     * watermark horizon on a stream, outright on batch — then drops
@@ -637,15 +638,16 @@ object StreamingFingerprintDeduplicator
   * Jaccard sits within ~2 se of the threshold can decide differently
   * between the batch and streaming paths. That is the documented trade
   * for a text-free probe; pipelines that need batch-identical
-  * decisions at the cutoff set `verifyMode = exact` and drive
-  * [[transformMicroBatch]] with the raw corpus attached ([[setCorpus]]
-  * — corpus shingles are computed once per index reference and
-  * persisted; the tier-2 verify then IS the batch exact-Jaccard rule).
+  * decisions at the cutoff attach the raw corpus ([[setCorpus]]) and
+  * drive [[transformMicroBatch]]: the verify rule follows the attached
+  * corpus, so the tier-2 verify then IS the batch exact-Jaccard rule
+  * (corpus shingles are computed once per index reference and
+  * persisted).
   *
   * **Past the broadcast ceiling — [[transformMicroBatch]]** (the
   * two-tier large-index mode, round-18): instead of broadcasting full
   * signatures, broadcast only a Bloom filter of the corpus BAND KEYS
-  * (~7 bits/key at the 3% default `prefilterFpp` vs numHashes·8
+  * (~7 bits/key at the fixed 3% false-positive rate vs numHashes·8
   * bytes/signature — ~2 orders of magnitude more index entries per
   * broadcast MB) and verify the flagged minority through a per-batch
   * distributed equi-join on the persisted index. Bloom filters have no
@@ -690,24 +692,6 @@ class StreamingMinHashDeduplicator(override val uid: String)
     ParamValidators.gt(0))
   setDefault(maxBucketSize -> 1000)
   def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
-  final val prefilterFpp = new DoubleParam(this, "prefilterFpp",
-    "transformMicroBatch tier 1: Bloom false-positive rate for the " +
-      "broadcast band-key prefilter (false positives cost a wasted " +
-      "tier-2 verify, never a wrong decision)",
-    ParamValidators.inRange(0.0, 1.0, false, false))
-  setDefault(prefilterFpp -> 0.03)
-  def setPrefilterFpp(v: Double): this.type = set(prefilterFpp, v)
-
-  final val verifyMode = new Param[String](this, "verifyMode",
-    "transformMicroBatch tier 2: 'signature' verifies flagged candidates " +
-      "against the index alone (MinHash Jaccard estimate — the text-free " +
-      "steady state); 'exact' verifies by exact shingle Jaccard against " +
-      "the raw corpus (setCorpus), making streaming corpus decisions " +
-      "batch-identical at the cutoff",
-    ParamValidators.inArray(Array("signature", "exact")))
-  setDefault(verifyMode -> "signature")
-  def setVerifyMode(v: String): this.type = set(verifyMode, v)
-
   /** Persisted corpus `(__id, __sig)` signature index — the batch
     * family's [[graft.dedup.IncrementalMinHashDeduplicator.signatureIndex]].
     * Replacing it destroys the cached probe state — don't swap it while
@@ -720,10 +704,13 @@ class StreamingMinHashDeduplicator(override val uid: String)
     this
   }
 
-  /** Raw corpus documents for `verifyMode = exact` — id + text under
-    * the SAME columns the signature index was built from. Only read by
-    * [[transformMicroBatch]]'s tier-2 verify (one shingle pass, cached
-    * per index reference); the signature mode never touches it. */
+  /** Raw corpus documents — id + text under the SAME columns the
+    * signature index was built from. Attaching them switches
+    * [[transformMicroBatch]]'s tier-2 verify from signature agreement
+    * (the text-free steady state) to exact shingle Jaccard, making
+    * streaming corpus decisions batch-identical at the cutoff (one
+    * shingle pass, cached per index reference). The DSL [[transform]]
+    * refuses a stage with a raw corpus attached. */
   private var corpusRaw: DataFrame = _
   def setCorpus(df: DataFrame, idCol: String, textCol: String): this.type = {
     corpusRaw = df.select(col(idCol).cast("long").as("__cid"),
@@ -751,10 +738,11 @@ class StreamingMinHashDeduplicator(override val uid: String)
     requireEventTime(df)
     val r = $(numHashes) / $(bands)
     require(r > 0, s"numHashes (${$(numHashes)}) must be >= bands (${$(bands)})")
-    require(corpusIndex == null || $(verifyMode) == "signature",
-      "verifyMode 'exact' needs the per-batch corpus join — drive " +
-        "transformMicroBatch from foreachBatch (the DSL path's " +
-        "broadcast probe is text-free by design)")
+    require(corpusRaw == null,
+      "exact verification against the raw corpus (setCorpus) needs the " +
+        "per-batch corpus join — drive transformMicroBatch from " +
+        "foreachBatch (the DSL path's broadcast probe is text-free by " +
+        "design)")
     val withSig = df.withColumn("__sig",
       minHashSignature(hashedShingles(col(getInputCol), $(shingleSize)),
         $(numHashes)))
@@ -831,7 +819,7 @@ class StreamingMinHashDeduplicator(override val uid: String)
   // id) frame persists executor-side and the Bloom filter of its keys
   // broadcasts ONCE (re-broadcasting the O(index) filter per micro-batch
   // would contradict the O(batch) per-batch-bytes contract). The last
-  // slot is the exact-mode corpus shingle frame (None in signature mode).
+  // slot is the corpus shingle frame when a raw corpus is attached.
   @transient private lazy val microBatchProbe = new ProbeCache[(DataFrame,
     DataFrame, Broadcast[org.apache.spark.util.sketch.BloomFilter],
     Option[DataFrame])]
@@ -873,23 +861,14 @@ class StreamingMinHashDeduplicator(override val uid: String)
     val r = $(numHashes) / $(bands)
     require(r > 0,
       s"numHashes (${$(numHashes)}) must be >= bands (${$(bands)})")
-    require($(verifyMode) == "signature" || corpusRaw != null,
-      "exact verification needs the raw corpus (setCorpus)")
-    val shape = ($(bands), $(numHashes), $(maxBucketSize), $(prefilterFpp),
-      $(verifyMode), $(shingleSize))
+    val shape = ($(bands), $(numHashes), $(maxBucketSize), $(shingleSize))
     val (cKeyed, cSigs, bcBloom, cShingles) = microBatchProbe(shape) {
-      val keys = corpusIndex.select(col("__id").as("__cid"),
-        explode(bandHashes(col("__sig"), $(bands), r)).as("__key"))
-      val bounded = udaf(new BoundedIdSetAggregator($(maxBucketSize)),
-        org.apache.spark.sql.Encoders.scalaLong)
-      val k = microBatchProbe.persist(keys.groupBy(col("__key"))
-        .agg(bounded(col("__cid")).as("__b"))
-        .observe(s"${uid}_dropped",
-          sum(col("__b.dropped")).as("dropped_candidates"))
-        .select(col("__key"), explode(col("__b.ids")).as("__cid")))
+      val k = microBatchProbe.persist(cappedCorpusBands(corpusIndex,
+        $(bands), r, $(maxBucketSize), s"${uid}_dropped"))
       val n = math.max(1L, k.count()) // also materializes the persist
       val b = microBatchProbe.broadcast(batch.sparkSession.sparkContext,
-        k.stat.bloomFilter("__key", n, $(prefilterFpp)))
+        k.stat.bloomFilter("__key", n,
+          StreamingMinHashDeduplicator.PrefilterFpp))
       // NOT persisted/repartitioned: the tier-2 verify joins this
       // side by __cid against a broadcast O(batch) frame — the scan
       // is cheap per row, and a measured attempt to repartition +
@@ -898,7 +877,7 @@ class StreamingMinHashDeduplicator(override val uid: String)
       // signatures the broadcast join streams through fine)
       val s = corpusIndex.select(col("__id").as("__cid"),
         col("__sig").as("__csig"))
-      // exact mode rereads the corpus text ONCE per index reference:
+      // a raw corpus is reread ONCE per index reference:
       // the shingle frame (numHashes-independent) persists beside the
       // band frame and is the tier-2 scan side every batch. Unlike
       // the streamed-through cSigs above, this frame's split count
@@ -906,14 +885,10 @@ class StreamingMinHashDeduplicator(override val uid: String)
       // single-file corpus pins every batch's exact-verify pass to
       // ~3 of 32 cores (the semantic face's measured stranding,
       // review find)
-      val sh =
-        if ($(verifyMode) == "exact")
-          Some(microBatchProbe.persist(corpusRaw
-            .select(col("__cid"),
-              hashedShingles(col("__ctext"), $(shingleSize)).as("__csh"))
-            .repartition(
-              batch.sparkSession.sparkContext.defaultParallelism)))
-        else None
+      val sh = Option(corpusRaw).map(raw => microBatchProbe.persist(raw
+        .select(col("__cid"),
+          hashedShingles(col("__ctext"), $(shingleSize)).as("__csh"))
+        .repartition(batch.sparkSession.sparkContext.defaultParallelism)))
       (k, s, b, sh)
     }
     val mightUdf = udf { keys: Seq[Long] =>
@@ -952,7 +927,7 @@ class StreamingMinHashDeduplicator(override val uid: String)
     val candPairs = cKeyed.join(broadcast(flaggedKeys), Seq("__key"))
       .select(col("__fp"), col("__fp2"), col("__cid")).distinct()
     val dropFps = cShingles match {
-      case None => // signature mode: verify against the index alone
+      case None => // no raw corpus: verify against the index alone
         val withBatchSig = candPairs.join(
           flagged.select(col("__fp"), col("__fp2"), col("__sig")),
           Seq("__fp", "__fp2"))
@@ -960,11 +935,11 @@ class StreamingMinHashDeduplicator(override val uid: String)
           .filter(sigAgreement(col("__sig"), col("__csig")) >= $(threshold))
           .select(col("__fp"), col("__fp2")).distinct()
       case Some(csh) =>
-        // exact mode: band candidacy is unchanged (tier 1 + band join
-        // — Bloom has no false negatives), but candidates verify by
-        // EXACT shingle Jaccard against the persisted corpus shingle
-        // frame, so corpus-drop decisions are batch-identical at the
-        // cutoff (the IncrementalMinHashDeduplicator 'exact' contract).
+        // raw corpus attached: band candidacy is unchanged (tier 1 +
+        // band join — Bloom has no false negatives), but candidates
+        // verify by EXACT shingle Jaccard against the persisted corpus
+        // shingle frame, so corpus-drop decisions are batch-identical at
+        // the cutoff (the IncrementalMinHashDeduplicator setCorpus rule).
         // Same join shape: broadcast the O(batch) side, scan the frame.
         val withBatchSh = candPairs.join(
           flagged.select(col("__fp"), col("__fp2"), col("__sh")),
@@ -998,6 +973,12 @@ object StreamingMinHashDeduplicator
       shingleSize: Int, numHashes: Int): DataFrame =
     graft.dedup.IncrementalMinHashDeduplicator.signatureIndex(
       df, idCol, inputCol, shingleSize, numHashes)
+
+  /** [[StreamingMinHashDeduplicator.transformMicroBatch]] tier 1: the
+    * false-positive rate of the broadcast band-key Bloom prefilter. A
+    * false positive costs a wasted tier-2 verify, never a wrong
+    * decision. */
+  private val PrefilterFpp = 0.03
 
   /** Band key of signature entries [b·r, b·r+r): xxhash64-chained.
     * Self-consistent between index build and probe; NOT bit-compatible

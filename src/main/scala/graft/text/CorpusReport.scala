@@ -46,7 +46,8 @@ class CorpusReport(override val uid: String) extends Transformer
 
   override def transform(ds: Dataset[_]): DataFrame = {
     val df = ds.toDF()
-    val canon = graft.dedup.DedupFunctions.canonical(col(getInputCol))
+    val (fp, fp2) = graft.dedup.DedupFunctions.fingerprintPair(
+      graft.dedup.DedupFunctions.canonical(col(getInputCol)))
     val toks = UnigramLM.tokens(col(getInputCol))
     val grouped = $(groupByCol).nonEmpty
     if (grouped)
@@ -58,7 +59,7 @@ class CorpusReport(override val uid: String) extends Transformer
     val base = df.select(groupSel ++ Seq(
         length(col(getInputCol)).cast("long").as("__chars"),
         size(toks).cast("long").as("__ntok"),
-        struct(xxhash64(canon), xxhash64(lit(0x9e3779b9L), canon)).as("__fp"),
+        struct(fp, fp2).as("__fp"),
         col($(langCol)).cast("string").as("__lang"),
         col($(domainCol)).cast("string").as("__dom")): _*)
     val aggs = Seq(

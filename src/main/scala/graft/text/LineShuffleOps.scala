@@ -112,11 +112,10 @@ class LineDeduplicator(override val uid: String)
       else coalesce(col($(scopeCol)).cast("string"), lit(""))
     // key columns: one 64-bit hash, or the seeded pair when the caller
     // opted into nameplate-exact keys (see the class scaladoc)
+    val (h, h2) = graft.dedup.DedupFunctions.fingerprintPair(col("__ld_line"))
     val hashCols =
-      if ($(use128BitKeys))
-        Seq(xxhash64(col("__ld_line")).as("__ld_h"),
-          xxhash64(lit(0x9e3779b9L), col("__ld_line")).as("__ld_h2"))
-      else Seq(xxhash64(col("__ld_line")).as("__ld_h"))
+      if ($(use128BitKeys)) Seq(h.as("__ld_h"), h2.as("__ld_h2"))
+      else Seq(h.as("__ld_h"))
     val keyNames = "__ld_s" +: hashCols.indices
       .map(i => if (i == 0) "__ld_h" else "__ld_h2")
     val exploded = df

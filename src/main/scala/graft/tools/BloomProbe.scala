@@ -29,9 +29,7 @@ object BloomProbe {
     val bloom = BloomIncrementalDeduplicator.buildIndex(fpIdx, 16)
     val row = bloom.head()
     println(s"corpus n=$n m=${row.getLong(2)} k=${row.getInt(3)}")
-    val canon = DedupFunctions.canonical(col("text"))
-    val probes = batch.select(xxhash64(canon).as("__fp"),
-        xxhash64(lit(0x9e3779b9L), canon).as("__fp2")).distinct()
+    val probes = IncrementalDeduplicator.fingerprintIndex(batch, "text")
     val newOnly = probes.join(fpIdx, Seq("__fp", "__fp2"), "left_anti")
       .withColumn("__bucket", pmod(col("__fp"), lit(16)).cast("int"))
       .join(bloom, Seq("__bucket"), "left_outer")

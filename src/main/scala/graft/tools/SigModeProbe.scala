@@ -34,15 +34,18 @@ object SigModeProbe {
       .unionByName(docs.filter(col("doc_id") % 8 === 4)
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
 
-    def run(mode: String) = {
-      val d = new graft.dedup.IncrementalMinHashDeduplicator()
-        .setInputCol("text").setIdCol("doc_id").setThreshold(t)
-        .setVerifyMode(mode).setCorpus(corpus)
+    // the attached corpus picks the verify rule: an index verifies by
+    // signature agreement, raw text by exact shingle Jaccard
+    def run(attach: graft.dedup.IncrementalMinHashDeduplicator =>
+        graft.dedup.IncrementalMinHashDeduplicator) = {
+      val d = attach(new graft.dedup.IncrementalMinHashDeduplicator()
+        .setInputCol("text").setIdCol("doc_id").setThreshold(t))
       d.transform(batch).select("doc_id").as[Long](
         org.apache.spark.sql.Encoders.scalaLong).collect().toSet
     }
-    val sig = run("signature")
-    val exact = run("exact")
+    val sig = run(_.setCorpusIndex(graft.dedup.IncrementalMinHashDeduplicator
+      .signatureIndex(corpus, "doc_id", "text", 3, 128)))
+    val exact = run(_.setCorpus(corpus))
     println(s"survivors: signature=${sig.size} exact=${exact.size} " +
       s"symmetric-diff=${(sig diff exact).size + (exact diff sig).size}")
     ((sig diff exact) ++ (exact diff sig)).toSeq.sorted.take(20)

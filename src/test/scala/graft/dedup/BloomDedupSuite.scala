@@ -65,6 +65,29 @@ class BloomDedupSuite extends TestBase {
     assertDFEq(got, expected)
   }
 
+  test("priorityCol keeps exactly IncrementalDeduplicator's rows, " +
+    "null priorities last") {
+    val (corpus, batch) = split
+    // prefer the larger id — the planted +2000000 in-batch copy — except
+    // where that copy's priority is null (doc_id % 3 == 0): nulls rank
+    // last, so the original wins those groups
+    val prioritized = batch.withColumn("prio",
+      when(col("doc_id") % 3 === 0, lit(null)).otherwise(-col("doc_id")))
+    val fpIdx = IncrementalDeduplicator.fingerprintIndex(corpus, "text")
+    val expected = new IncrementalDeduplicator().setInputCol("text")
+      .setIdCol("doc_id").setPriorityCol("prio").setCorpusIndex(fpIdx)
+      .transform(prioritized)
+    val got = new BloomIncrementalDeduplicator().setInputCol("text")
+      .setIdCol("doc_id").setPriorityCol("prio")
+      .setBloomIndex(buildIndex(fpIdx, numBuckets = 16))
+      .setCorpusIndex(fpIdx).transform(prioritized)
+    assertDFEq(got, expected)
+    val kept = got.select("doc_id").as[Long].collect().toSet
+    assert(kept.exists(_ >= 2000000L), "no group kept its priority winner")
+    assert(kept.exists(id => id < 1000000L && id % 8 == 4 && id % 3 == 1),
+      "no group kept the original over a null-priority copy")
+  }
+
   test("approximate mode at a high bit budget equals exact on the fixture") {
     val (corpus, batch) = split
     val fpIdx = IncrementalDeduplicator.fingerprintIndex(corpus, "text")

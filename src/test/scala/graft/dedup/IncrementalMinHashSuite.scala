@@ -21,31 +21,55 @@ class IncrementalMinHashSuite extends TestBase {
     (13L, "another genuinely fresh document with nothing shared at all")
   ).toDF("doc_id", "text")
 
-  private def op(mode: String) = new IncrementalMinHashDeduplicator()
+  // the attached corpus picks the verify rule: setCorpus (raw text) is
+  // exact shingle Jaccard, setCorpusIndex is signature agreement
+  private def op() = new IncrementalMinHashDeduplicator()
     .setInputCol("text").setIdCol("doc_id").setShingleSize(2)
-    .setNumHashes(128).setBands(32).setThreshold(0.6).setVerifyMode(mode)
+    .setNumHashes(128).setBands(32).setThreshold(0.6)
+
+  private lazy val idx = IncrementalMinHashDeduplicator.signatureIndex(
+    corpus, "doc_id", "text", 2, 128)
 
   private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
     df.select("doc_id").as[Long].collect().sorted.toSeq
 
   test("exact mode: corpus near-dups drop, in-batch pair collapses") {
-    val out = op("exact").setCorpus(corpus).transform(batch)
+    val out = op().setCorpus(corpus).transform(batch)
     assert(ids(out) == Seq(11L, 13L))
   }
 
   test("signature mode from the index alone agrees on clear margins") {
-    val idx = IncrementalMinHashDeduplicator.signatureIndex(
-      corpus, "doc_id", "text", 2, 128)
-    val out = op("signature").setCorpusIndex(idx).transform(batch)
+    val out = op().setCorpusIndex(idx).transform(batch)
     assert(ids(out) == Seq(11L, 13L))
   }
 
   test("signature mode from raw corpus equals index path") {
-    val viaRaw = op("signature").setCorpus(corpus).transform(batch)
-    val idx = IncrementalMinHashDeduplicator.signatureIndex(
-      corpus, "doc_id", "text", 2, 128)
-    val viaIdx = op("signature").setCorpusIndex(idx).transform(batch)
+    // the raw corpus verifies exactly and the index by signature; on
+    // this clear-margin fixture both rules decide alike
+    val viaRaw = op().setCorpus(corpus).transform(batch)
+    val viaIdx = op().setCorpusIndex(idx).transform(batch)
     assertDFEq(viaRaw, viaIdx)
+  }
+
+  test("a raw corpus means exact verification: streaming-identical " +
+    "decisions at the cutoff, unlike the signature index") {
+    val (gCorpus, gBatch) = IncrementalMinHashSuite.graded(spark)
+    def stage() = new IncrementalMinHashDeduplicator().setInputCol("text")
+      .setIdCol("doc_id").setNumHashes(32).setBands(16).setThreshold(0.5)
+    val gIdx = IncrementalMinHashDeduplicator.signatureIndex(
+      gCorpus, "doc_id", "text", 3, 32)
+    val viaRaw = ids(stage().setCorpus(gCorpus).transform(gBatch))
+    val streaming = new graft.streaming.StreamingMinHashDeduplicator()
+      .setInputCol("text").setNumHashes(32).setBands(16).setThreshold(0.5)
+      .setCorpusIndex(gIdx).setCorpus(gCorpus, "doc_id", "text")
+    try {
+      val viaStream = ids(streaming.transformMicroBatch(gBatch))
+      assert(viaRaw == viaStream,
+        s"incremental raw-corpus $viaRaw vs streaming exact $viaStream")
+    } finally streaming.release()
+    val viaIdx = ids(stage().setCorpusIndex(gIdx).transform(gBatch))
+    assert(viaRaw != viaIdx,
+      s"raw corpus decided like the signature index ($viaRaw)")
   }
 
   test("a clean batch passes through untouched") {
@@ -53,9 +77,9 @@ class IncrementalMinHashSuite extends TestBase {
       (20L, "some words that exist nowhere else in any corpus fixture"),
       (21L, "yet another disjoint sentence carrying no shared shingles"))
       .toDF("doc_id", "text")
-    assert(ids(op("exact").setCorpus(corpus).transform(clean)) ==
+    assert(ids(op().setCorpus(corpus).transform(clean)) ==
       Seq(20L, 21L))
-    assert(ids(op("signature").setCorpus(corpus).transform(clean)) ==
+    assert(ids(op().setCorpusIndex(idx).transform(clean)) ==
       Seq(20L, 21L))
   }
 
@@ -99,11 +123,11 @@ class IncrementalMinHashSuite extends TestBase {
           .exists(_.strategy.contains(BROADCAST)))
       }
       val small = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        op("exact").setCorpus(corpus).transform(batch)
+        op().setCorpus(corpus).transform(batch)
       }
       assert(!antiJoinBroadcastHints().exists(identity),
         "over-threshold path must not hint a broadcast")
-      val default = op("exact").setCorpus(corpus).transform(batch)
+      val default = op().setCorpus(corpus).transform(batch)
       assert(antiJoinBroadcastHints().exists(identity),
         "under-threshold path should keep the broadcast hint")
       assert(ids(small) == Seq(11L, 13L) && ids(default) == Seq(11L, 13L),
@@ -118,7 +142,26 @@ class IncrementalMinHashSuite extends TestBase {
       .setIdCol("doc_id").setShingleSize(2).setNumHashes(128).setBands(32)
       .setThreshold(0.6).transform(corpus.unionByName(batch))
     val fullBatch = ids(full.filter(col("doc_id") >= 10))
-    val inc = op("exact").setCorpus(corpus).transform(batch)
+    val inc = op().setCorpus(corpus).transform(batch)
     assert(ids(inc) == fullBatch)
+  }
+}
+
+object IncrementalMinHashSuite {
+  /** Graded fixture whose pairs straddle a 0.5 threshold: corpus doc i
+    * holds 40 tokens c<i>_*, and batch doc i + 100 shares a prefix of
+    * 10 + i of them, so exact Jaccard sweeps through the cutoff. At 32
+    * hashes (se ~0.09 at t=0.5) the signature estimate and the exact
+    * Jaccard decide at least one pair differently. */
+  def graded(spark: org.apache.spark.sql.SparkSession)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    def ctext(i: Int): String =
+      (1 to 40).map(j => s"c${i}_$j").mkString(" ")
+    def btext(i: Int): String =
+      ((1 to (10 + i)).map(j => s"c${i}_$j") ++
+        ((10 + i + 1) to 40).map(j => s"b${i}_$j")).mkString(" ")
+    ((0 until 20).map(i => (i.toLong, ctext(i))).toDF("doc_id", "text"),
+      (0 until 20).map(i => (i + 100L, btext(i))).toDF("doc_id", "text"))
   }
 }

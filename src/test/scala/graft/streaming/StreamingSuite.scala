@@ -885,23 +885,15 @@ class StreamingSuite extends TestBase {
   test("StreamingMinHashDeduplicator verifyMode=exact makes corpus " +
     "decisions batch-identical at the cutoff (parity with the " +
     "incremental exact mode on threshold-straddling pairs)") {
-    // corpus doc i holds 40 tokens c<i>_*; batch doc i shares a graded
-    // prefix of them — exact Jaccard sweeps through the 0.5 threshold
-    def ctext(i: Int): String =
-      (1 to 40).map(j => s"c${i}_$j").mkString(" ")
-    def btext(i: Int): String =
-      ((1 to (10 + i)).map(j => s"c${i}_$j") ++
-        ((10 + i + 1) to 40).map(j => s"b${i}_$j")).mkString(" ")
-    val corpus = (0 until 20).map(i => (i.toLong, ctext(i)))
-      .toDF("doc_id", "text")
-    val batch = (0 until 20).map(i => (i + 100L, btext(i)))
-      .toDF("doc_id", "text")
+    // exact Jaccard sweeps through the 0.5 threshold on this fixture
+    val (corpus, batch) = graft.dedup.IncrementalMinHashSuite.graded(spark)
     val idx = StreamingMinHashDeduplicator.signatureIndex(
       corpus, "doc_id", "text", 3, 32)
+    // the attached raw corpus selects exact verification
     def survivors(mode: String): Set[Long] = {
       val st = new StreamingMinHashDeduplicator().setInputCol("text")
         .setNumHashes(32).setBands(16).setThreshold(0.5)
-        .setVerifyMode(mode).setCorpusIndex(idx)
+        .setCorpusIndex(idx)
       if (mode == "exact") st.setCorpus(corpus, "doc_id", "text")
       st.transformMicroBatch(batch).select("doc_id").as[Long].collect().toSet
     }
@@ -912,7 +904,7 @@ class StreamingSuite extends TestBase {
     val incr = new graft.dedup.IncrementalMinHashDeduplicator()
       .setInputCol("text").setIdCol("doc_id")
       .setNumHashes(32).setBands(16).setThreshold(0.5)
-      .setVerifyMode("exact").setCorpus(corpus)
+      .setCorpus(corpus)
       .transform(batch).select("doc_id").as[Long].collect().toSet
     assert(exact == incr, s"streaming exact $exact vs incremental $incr")
     // at 32 hashes (se ~0.09 at t=0.5) the graded fixture straddles:
@@ -920,10 +912,10 @@ class StreamingSuite extends TestBase {
     // least one pair, so the tier switch is observable
     assert(exact != sig,
       s"fixture no longer straddles the cutoff (exact == signature == $exact)")
-    // DSL path refuses exact mode (text-free by design)
+    // DSL path refuses a raw corpus (text-free by design)
     val e = intercept[IllegalArgumentException] {
       new StreamingMinHashDeduplicator().setInputCol("text")
-        .setVerifyMode("exact").setCorpusIndex(idx)
+        .setCorpusIndex(idx).setCorpus(corpus, "doc_id", "text")
         .transform(batch)
     }
     assert(e.getMessage.contains("foreachBatch"))
