@@ -45,8 +45,12 @@ import org.apache.spark.sql.types._
   *    paper's centroid keep rule applies only to the within-batch
   *    pass);
   *  - survivors then near-dedup WITHIN the batch by a regular
-  *    [[SemDeDup]] at the same threshold (`dedupWithinBatch`,
-  *    default on — the [[IncrementalMinHashDeduplicator]] shape).
+  *    [[SemDeDup]] at the same threshold with the minId keep rule (the
+  *    [[IncrementalMinHashDeduplicator]] shape). The fitted quantizer
+  *    decides its cluster count: with one cell (`nClusters = 1`) the
+  *    within-batch pass is exhaustive too, so the whole decision is
+  *    exact pairwise cosine; with more cells it uses SemDeDup's auto k
+  *    over the survivors.
   *
   * `nClusters = 1` is the exhaustive setting: every batch-vs-corpus
   * pair is compared, so the result is exact pairwise cosine dedup and
@@ -81,7 +85,7 @@ import org.apache.spark.sql.types._
   */
 class IncrementalSemDeDup(override val uid: String)
     extends Estimator[IncrementalSemDeDupModel] with HasInputCol
-    with GraftWritable {
+    with SemDeDup.AutoKParams with GraftWritable {
   def this() = this(Identifiable.randomUID("IncrementalSemDeDup"))
 
   final val idCol = new Param[String](this, "idCol", "unique row id column")
@@ -91,62 +95,15 @@ class IncrementalSemDeDup(override val uid: String)
     "cosine cutoff", ParamValidators.inRange(-1.0, 1.0))
   setDefault(threshold -> 0.95)
   def setThreshold(v: Double): this.type = set(threshold, v)
-  final val nClusters = new IntParam(this, "nClusters",
-    "k-means cluster count (1 = exhaustive exact pairwise; 0 = auto — " +
-      "ceil(corpusSize / targetClusterSize), capped at maxAutoClusters)",
-    ParamValidators.gtEq(0))
-  setDefault(nClusters -> 0)
-  def setNClusters(v: Int): this.type = set(nClusters, v)
-  final val targetClusterSize = new IntParam(this, "targetClusterSize",
-    "auto mode: intended average cluster population",
-    ParamValidators.gt(1))
-  setDefault(targetClusterSize -> 256)
-  def setTargetClusterSize(v: Int): this.type = set(targetClusterSize, v)
-  final val corpusSizeHint = new LongParam(this, "corpusSizeHint",
-    "auto mode: approximate corpus row count (0 = count it)",
-    ParamValidators.gtEq(0))
-  setDefault(corpusSizeHint -> 0L)
-  def setCorpusSizeHint(v: Long): this.type = set(corpusSizeHint, v)
-  final val maxAutoClusters = new IntParam(this, "maxAutoClusters",
-    "auto mode cap on k", ParamValidators.gt(0))
-  setDefault(maxAutoClusters -> 4096)
-  def setMaxAutoClusters(v: Int): this.type = set(maxAutoClusters, v)
-  final val seed = new LongParam(this, "seed", "k-means seed")
-  setDefault(seed -> 42L)
-  def setSeed(v: Long): this.type = set(seed, v)
-  final val maxIter = new IntParam(this, "maxIter",
-    "k-means iteration cap", ParamValidators.gt(0))
-  setDefault(maxIter -> 10)
-  def setMaxIter(v: Int): this.type = set(maxIter, v)
-  final val trainSample = new IntParam(this, "trainSample",
-    "max vectors sampled for quantizer training", ParamValidators.gt(0))
-  setDefault(trainSample -> 65536)
-  def setTrainSample(v: Int): this.type = set(trainSample, v)
 
   override def fit(ds: Dataset[_]): IncrementalSemDeDupModel = {
     transformSchema(ds.schema)
     val df = ds.toDF()
-    val narrow = df.select(
-      col($(idCol)).cast("long").as("__id"),
-      col(getInputCol).cast(ArrayType(DoubleType)).as("__v"))
-    def autoK(n: Long): Int =
-      math.max(1, math.min($(maxAutoClusters).toLong,
-        (n + $(targetClusterSize) - 1) / $(targetClusterSize))).toInt
-    val k =
-      if ($(nClusters) > 0) $(nClusters)
-      else autoK(if ($(corpusSizeHint) > 0L) $(corpusSizeHint)
-        else narrow.count())
-    val sampleCap =
-      if ($(nClusters) > 0) $(trainSample)
-      else math.min($(trainSample), math.max(4096, 64 * k))
+    val narrow = SemDeDup.narrow(df, $(idCol), getInputCol)
     // bounded hash-ordered sample — the SemDeDup draw, deterministic
     // for a given corpus + seed
-    val sample: Array[Array[Double]] = narrow
-      .where(col("__v").isNotNull)
-      .orderBy(xxhash64(col("__id")))
-      .limit(sampleCap)
-      .collect()
-      .map(r => graft.sim.IVF.normalize(r.getSeq[Double](1).toArray))
+    val k = clusterCount(narrow)
+    val sample = graft.sim.IVF.sample(narrow, sampleCap(k))
     require(sample.nonEmpty,
       s"IncrementalSemDeDup: no non-null '$getInputCol' rows to fit on")
     val m = new IncrementalSemDeDupModel(uid + "_model")
@@ -173,10 +130,15 @@ object IncrementalSemDeDup
     extends GraftReadable[IncrementalSemDeDup]
 
 /** Fitted [[IncrementalSemDeDup]]: the persisted quantizer plus the
-  * per-snapshot corpus-index machinery. */
+  * per-snapshot corpus-index machinery. `transform` drops batch rows
+  * within `threshold` cosine of a corpus member in their cell, then
+  * near-dedups the survivors against each other (minId keep rule). That
+  * within-batch pass is exhaustive (`nClusters = 1`) exactly when the
+  * quantizer has one cell ([[SemDeDup.cells]]), and auto-k otherwise,
+  * so the single-cell setting is exact pairwise end to end. */
 class IncrementalSemDeDupModel(override val uid: String)
     extends Model[IncrementalSemDeDupModel] with HasInputCol
-    with GraftWritable {
+    with SemDeDup.CellCapParams with GraftWritable {
   def this() = this(Identifiable.randomUID("IncrementalSemDeDupModel"))
 
   final val idCol = new Param[String](this, "idCol", "unique row id column")
@@ -186,23 +148,6 @@ class IncrementalSemDeDupModel(override val uid: String)
     "cosine cutoff", ParamValidators.inRange(-1.0, 1.0))
   setDefault(threshold -> 0.95)
   def setThreshold(v: Double): this.type = set(threshold, v)
-  final val maxClusterSize = new IntParam(this, "maxClusterSize",
-    "per-cell corpus candidate cap (skew guard; overflow counts in the " +
-      "<uid>_dropped observation)", ParamValidators.gt(1))
-  setDefault(maxClusterSize -> 2048)
-  def setMaxClusterSize(v: Int): this.type = set(maxClusterSize, v)
-  final val dedupWithinBatch = new BooleanParam(this, "dedupWithinBatch",
-    "after the corpus check, near-dedup the surviving batch against " +
-      "itself with a regular SemDeDup at the same threshold (the " +
-      "IncrementalMinHashDeduplicator shape)")
-  setDefault(dedupWithinBatch -> true)
-  def setDedupWithinBatch(v: Boolean): this.type = set(dedupWithinBatch, v)
-  final val withinBatchClusters = new IntParam(this, "withinBatchClusters",
-    "nClusters for the within-batch SemDeDup pass (0 = auto; 1 = " +
-      "exhaustive — the SQL-replayable setting)", ParamValidators.gtEq(0))
-  setDefault(withinBatchClusters -> 0)
-  def setWithinBatchClusters(v: Int): this.type = set(withinBatchClusters, v)
-
   /** The fitted quantizer — a complex Param, so save/load round-trips
     * the cell partition every future batch must agree on. */
   final val quantizer = new Param[SemDeDup.Quantizer](this, "quantizer",
@@ -215,15 +160,8 @@ class IncrementalSemDeDupModel(override val uid: String)
     * never enter the index. */
   def indexCorpus(corpus: DataFrame): DataFrame = {
     require(isSet(quantizer), "model has no quantizer (not fitted?)")
-    val bc = corpus.sparkSession.sparkContext.broadcast($(quantizer))
-    val assignUdf = udf((v: Seq[Double]) => SemDeDup.assign(bc.value, v))
-    corpus
-      .select(col($(idCol)).cast("long").as("__id"),
-        col(getInputCol).cast(ArrayType(DoubleType)).as("__v"))
-      .where(col("__v").isNotNull)
-      .select(col("__id"), col("__v"), assignUdf(col("__v")).as("__a"))
-      .select(col("__id"), col("__v"),
-        col("__a._1").as("__cell"), col("__a._2").as("__csim"))
+    SemDeDup.assignCells($(quantizer),
+      SemDeDup.narrow(corpus, $(idCol), getInputCol))
   }
 
   private var corpusIndex: DataFrame = _
@@ -236,22 +174,6 @@ class IncrementalSemDeDupModel(override val uid: String)
     val df = ds.toDF()
     val id = col($(idCol))
     val q = $(quantizer)
-    // single-cell quantizer + default cap: auto-raise so the exhaustive
-    // setting stays exact (see the estimator scaladoc; an explicit cap
-    // is honored — SemDeDupSuite pins that contract). Int.MaxValue / 4
-    // keeps the aggregator's 2·max compaction trigger overflow-free.
-    val effCap =
-      if (q.coarse.length == 1 && q.subs(0).length == 1 &&
-          !isSet(maxClusterSize)) Int.MaxValue / 4
-      else $(maxClusterSize)
-    val bc = df.sparkSession.sparkContext.broadcast(q)
-    val assignUdf = udf((v: Seq[Double]) => SemDeDup.assign(bc.value, v))
-    val batch = df
-      .select(id.cast("long").as("__id"),
-        col(getInputCol).cast(ArrayType(DoubleType)).as("__v"))
-      .where(col("__v").isNotNull)
-      .select(col("__id"), col("__v"), assignUdf(col("__v"))("_1")
-        .as("__cell"), lit(0.0).as("__csim"))
     // BOTH sides aggregate per cell through the bounded smallest-id
     // collector (cap + observable drop metric — the SemDeDup contract),
     // then ONE cell-to-cell equi-join (one row per populated cell on
@@ -262,22 +184,13 @@ class IncrementalSemDeDupModel(override val uid: String)
     // boxing that the 100x sweep measured at 153.8 s on a table the
     // plain SemDeDup handles in 16.8 s (the round-16 payload-per-pair
     // trap in a milder costume); grouped both sides: 24.0 s, alpha 0.46.
-    val bounded = udaf(
-      new SemDeDup.BoundedCellAggregator(effCap),
-      org.apache.spark.sql.Encoders.product[SemDeDup.CellEntry])
-    val cells = corpusIndex
-      .select(col("__id"), col("__v"), col("__cell"), col("__csim"))
-      .groupBy(col("__cell"))
-      .agg(bounded(col("__id"), col("__v"), col("__csim")).as("__b"))
-      .observe(s"${uid}_dropped",
-        sum(col("__b.dropped")).as("dropped_candidates"))
-      .select(col("__cell"), col("__b.entries").as("__es"))
-    val batchCells = batch
-      .groupBy(col("__cell"))
-      .agg(bounded(col("__id"), col("__v"), col("__csim")).as("__b"))
-      .observe(s"${uid}_dropped_batch",
-        sum(col("__b.dropped")).as("dropped_candidates"))
-      .select(col("__cell"), col("__b.entries").as("__bs"))
+    val cap = cellCap(q)
+    val cells = SemDeDup.boundedCells(
+      corpusIndex.select(col("__id"), col("__v"), col("__cell"), col("__csim")),
+      cap, s"${uid}_dropped", "__es")
+    val batchCells = SemDeDup.boundedCells(
+      SemDeDup.assignCells(q, SemDeDup.narrow(df, $(idCol), getInputCol)),
+      cap, s"${uid}_dropped_batch", "__bs")
     val thr = $(threshold)
     val dupUdf = udf { (bs: Seq[org.apache.spark.sql.Row],
         es: Seq[org.apache.spark.sql.Row]) =>
@@ -312,29 +225,28 @@ class IncrementalSemDeDupModel(override val uid: String)
       .distinct()
     val survivors = df.join(dropIds,
       id.cast("long") === col("__drop_id"), "left_anti")
-    if (!$(dedupWithinBatch)) survivors
-    else {
-      // materialized survivor boundary (the IncrementalMinHashDeduplicator
-      // pattern): the within-batch SemDeDup references its input TWICE —
-      // its narrow (id, vector) checkpoint AND the final anti-join that
-      // returns the full surviving rows — and without the barrier the
-      // second reference replans and RE-EXECUTES the whole corpus-check
-      // pipeline above (cell aggregations + verify UDF; 115-op plan
-      // measured at sf0.1, plans/r20/semdedup_incremental_before.txt).
-      // Survivors are O(batch) rows — the snapshot delta a pipeline
-      // holds by definition. Trade: locally-checkpointed blocks are not
-      // recomputable, so an executor loss fails the batch job instead of
-      // recomputing — a snapshot batch simply re-runs; a deployment that
-      // cannot re-run should persist to reliable storage instead.
-      val surv = survivors.localCheckpoint()
-      val within = new SemDeDup().setInputCol(getInputCol)
-        .setIdCol($(idCol)).setThreshold(thr).setKeepRule("minId")
-        .setNClusters($(withinBatchClusters))
-      // propagate an explicit cap; leave SemDeDup's own default (and
-      // its single-cell auto-raise) in charge otherwise
-      if (isSet(maxClusterSize)) within.setMaxClusterSize($(maxClusterSize))
-      within.transform(surv)
-    }
+    // materialized survivor boundary (the IncrementalMinHashDeduplicator
+    // pattern): the within-batch SemDeDup references its input TWICE —
+    // its narrow (id, vector) checkpoint AND the final anti-join that
+    // returns the full surviving rows — and without the barrier the
+    // second reference replans and RE-EXECUTES the whole corpus-check
+    // pipeline above (cell aggregations + verify UDF; 115-op plan
+    // measured at sf0.1, plans/r20/semdedup_incremental_before.txt).
+    // Survivors are O(batch) rows — the snapshot delta a pipeline
+    // holds by definition. Trade: locally-checkpointed blocks are not
+    // recomputable, so an executor loss fails the batch job instead of
+    // recomputing — a snapshot batch simply re-runs; a deployment that
+    // cannot re-run should persist to reliable storage instead.
+    val surv = survivors.localCheckpoint()
+    // the within-batch pass is exhaustive exactly when the fitted
+    // quantizer is (one cell), and auto-k otherwise
+    val within = new SemDeDup().setInputCol(getInputCol)
+      .setIdCol($(idCol)).setThreshold(thr).setKeepRule("minId")
+      .setNClusters(if (SemDeDup.cells(q) == 1) 1 else 0)
+    // propagate an explicit cap; leave SemDeDup's own default (and
+    // its single-cell auto-raise) in charge otherwise
+    if (isSet(maxClusterSize)) within.setMaxClusterSize($(maxClusterSize))
+    within.transform(surv)
   }
 
   override def transformSchema(schema: StructType): StructType = {

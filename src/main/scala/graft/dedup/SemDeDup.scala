@@ -79,8 +79,8 @@ import org.apache.spark.sql.types._
   * from the expression-based verify this class used before round 16.
   */
 class SemDeDup(override val uid: String) extends Transformer
-    with HasInputCol with graft.core.GraftWritable
-    with org.apache.spark.internal.Logging {
+    with HasInputCol with SemDeDup.AutoKParams with SemDeDup.CellCapParams
+    with graft.core.GraftWritable with org.apache.spark.internal.Logging {
   def this() = this(Identifiable.randomUID("SemDeDup"))
 
   final val idCol = new Param[String](this, "idCol", "unique row id column")
@@ -90,53 +90,6 @@ class SemDeDup(override val uid: String) extends Transformer
       "duplicates", ParamValidators.inRange(-1.0, 1.0))
   setDefault(threshold -> 0.95)
   def setThreshold(v: Double): this.type = set(threshold, v)
-  final val nClusters = new IntParam(this, "nClusters",
-    "k-means cluster count (1 = exhaustive exact pairwise; 0 = auto — " +
-      "ceil(corpusSize / targetClusterSize), capped at maxAutoClusters)",
-    ParamValidators.gtEq(0))
-  setDefault(nClusters -> 0)
-  def setNClusters(v: Int): this.type = set(nClusters, v)
-  final val targetClusterSize = new IntParam(this, "targetClusterSize",
-    "auto mode: intended average cluster population — the paper's scale " +
-      "knob is cluster COUNT proportional to corpus size, i.e. fixed " +
-      "cluster size; within-cluster pair work is then " +
-      "O(corpus * targetClusterSize), linear in the corpus",
-    ParamValidators.gt(1))
-  setDefault(targetClusterSize -> 256)
-  def setTargetClusterSize(v: Int): this.type = set(targetClusterSize, v)
-  final val corpusSizeHint = new LongParam(this, "corpusSizeHint",
-    "auto mode: approximate corpus row count, if the caller knows it " +
-      "(a curation pipeline always does — the previous stage's row " +
-      "count). 0 = compute it with a count() pass; any positive value " +
-      "skips that pass — k only needs the right order of magnitude, so " +
-      "a stale or rounded hint is fine", ParamValidators.gtEq(0))
-  setDefault(corpusSizeHint -> 0L)
-  def setCorpusSizeHint(v: Long): this.type = set(corpusSizeHint, v)
-  final val maxAutoClusters = new IntParam(this, "maxAutoClusters",
-    "auto mode cap on k. Above SemDeDup.TwoLevelAbove the quantizer is " +
-      "two-level (coarse x sub), so train/assign cost grows with sqrt(k) " +
-      "and the cap can sit in the thousands; a SATURATED cap means " +
-      "clusters outgrow targetClusterSize and pair work turns " +
-      "super-linear (the round-11 x100 sweep measured alpha 1.5 at the " +
-      "old flat-k cap of 512)", ParamValidators.gt(0))
-  setDefault(maxAutoClusters -> 4096)
-  def setMaxAutoClusters(v: Int): this.type = set(maxAutoClusters, v)
-  final val seed = new LongParam(this, "seed", "k-means seed")
-  setDefault(seed -> 42L)
-  def setSeed(v: Long): this.type = set(seed, v)
-  final val maxIter = new IntParam(this, "maxIter",
-    "k-means iteration cap", ParamValidators.gt(0))
-  setDefault(maxIter -> 10)
-  def setMaxIter(v: Int): this.type = set(maxIter, v)
-  final val trainSample = new IntParam(this, "trainSample",
-    "max vectors sampled for quantizer training", ParamValidators.gt(0))
-  setDefault(trainSample -> 65536)
-  def setTrainSample(v: Int): this.type = set(trainSample, v)
-  final val maxClusterSize = new IntParam(this, "maxClusterSize",
-    "per-cluster candidate cap (skew guard; overflow is counted in the " +
-      "<uid>_dropped observation)", ParamValidators.gt(1))
-  setDefault(maxClusterSize -> 2048)
-  def setMaxClusterSize(v: Int): this.type = set(maxClusterSize, v)
   final val keepRule = new Param[String](this, "keepRule",
     "which endpoint of a duplicate pair survives: 'centroidFar' (the " +
       "paper's rule — keep the copy least similar to its cluster " +
@@ -155,43 +108,16 @@ class SemDeDup(override val uid: String) extends Transformer
     // so an expensive upstream — an embedding UDF over raw text — runs
     // exactly once; ~(8 + dim*8) bytes/doc of executor storage,
     // released when the returned plan is garbage-collected
-    val narrow = df
-      .select(id.cast("long").as("__id"),
-        col(getInputCol).cast(ArrayType(DoubleType)).as("__v"))
+    val narrow = SemDeDup.narrow(df, $(idCol), getInputCol)
       .localCheckpoint(true)
-    // auto k: cluster count grows with the corpus (fixed target cluster
-    // SIZE — the paper's protocol), capped where driver-side training
-    // stops being the right tool; the FAISS ~64 samples/cell guideline
-    // then bounds the training collect so quantizer flops stay ~O(k²·dim).
-    // The corpus size comes from the caller's corpusSizeHint when set
-    // (no pass at all — a curation pipeline always knows the previous
-    // stage's row count), else one count() pass. An earlier draft
-    // counted for free via an Observation riding the sample job; it was
-    // reverted — `Observation` lazily materializes the session's
-    // ObservationManager, a non-serializable non-transient SparkSession
-    // field, which then breaks Java serialization of ANY later task
-    // closure that captures a SparkSession in the same JVM (Spark ML
-    // models with training summaries do) — found as 5 cross-suite
-    // failures in the round-12 full test run.
-    def autoK(n: Long): Int =
-      math.max(1, math.min($(maxAutoClusters).toLong,
-        (n + $(targetClusterSize) - 1) / $(targetClusterSize))).toInt
-    val k =
-      if ($(nClusters) > 0) $(nClusters)
-      else autoK(if ($(corpusSizeHint) > 0L) $(corpusSizeHint)
-        else narrow.count())
-    val sampleCap =
-      if ($(nClusters) > 0) $(trainSample)
-      else math.min($(trainSample), math.max(4096, 64 * k))
+    // the corpus size behind auto k comes from corpusSizeHint or one
+    // count() of this checkpoint (AutoKParams)
+    val k = clusterCount(narrow)
     // bounded hash-ordered sample -> driver-side spherical k-means
     // (TakeOrderedAndProject, no global sort; deterministic for a given
     // corpus + seed)
     val t0 = System.nanoTime()
-    val sample: Array[Array[Double]] = narrow
-      .where(col("__v").isNotNull)
-      .orderBy(xxhash64(col("__id")))
-      .limit(sampleCap)
-      .collect().map(r => graft.sim.IVF.normalize(r.getSeq[Double](1).toArray))
+    val sample = graft.sim.IVF.sample(narrow, sampleCap(k))
     // zero comparable vectors (empty frame, or every embedding null) —
     // nothing to dedup and nothing to train on: every row survives by
     // the null-embedding contract. Pre-round-17 this crashed inside the
@@ -208,13 +134,6 @@ class SemDeDup(override val uid: String) extends Transformer
     // each coarse cell's sample members — training AND per-row
     // assignment drop to O(√k·dim).
     val twoLevel = k > SemDeDup.TwoLevelAbove
-    // single-cell + default cap: auto-raise so nClusters=1 stays the
-    // exhaustive setting (see scaladoc; an explicit cap is honored —
-    // the degraded-mode suite test pins that). Int.MaxValue / 4 keeps
-    // the aggregator's 2·max compaction trigger overflow-free.
-    val effCap =
-      if (k == 1 && !isSet(maxClusterSize)) Int.MaxValue / 4
-      else $(maxClusterSize)
     val quant = SemDeDup.fitQuantizer(sample, k, $(maxIter), $(seed))
     val tTrain = System.nanoTime()
     // per-phase walls: the driver-side phases are the only serial part,
@@ -223,34 +142,14 @@ class SemDeDup(override val uid: String) extends Transformer
     logInfo(f"SemDeDup driver phases: sample=${(tSample - t0) / 1e9}%.2fs " +
       f"train=${(tTrain - tSample) / 1e9}%.2fs k=$k twoLevel=$twoLevel " +
       f"sampleRows=${sample.length}")
-    val ctr = df.sparkSession.sparkContext.broadcast(quant)
-    // one narrow pass: cluster assignment + centroid cosine for the keep
-    // rule (unit sphere: cos = 1 - d2/2, so argmin L2 IS argmax cosine);
-    // csim is against the FINEST centroid — the one whose neighborhood
-    // the paper's keep rule reasons about
-    val assignUdf = udf((v: Seq[Double]) => SemDeDup.assign(ctr.value, v))
     // one narrow pass emits (id, vector, cell, centroid-sim); clusters
     // then aggregate their members through the bounded smallest-id cap
     // (the candidatePairs contract: overflow is counted, observable as
     // <uid>_dropped.dropped_candidates) and the paper's pairwise verify
     // + keep rule run inside each capped buffer — each vector crosses
     // the wire once, never per pair (see the class scaladoc)
-    // null embeddings carry no vector to compare: they are never
-    // candidates and always survive (the row itself is kept — the
-    // anti-join only removes ids the verify emitted). Before round 16
-    // a null embedding was an opaque NPE inside the assignment UDF.
-    val assigned = narrow
-      .where(col("__v").isNotNull)
-      .select(col("__id"), col("__v"), assignUdf(col("__v")).as("__a"))
-      .select(col("__id"), col("__v"),
-        col("__a._1").as("__cell"), col("__a._2").as("__csim"))
-    val bounded = udaf(new SemDeDup.BoundedCellAggregator(effCap),
-      org.apache.spark.sql.Encoders.product[SemDeDup.CellEntry])
-    val cells = assigned.groupBy(col("__cell"))
-      .agg(bounded(col("__id"), col("__v"), col("__csim")).as("__b"))
-      .observe(s"${uid}_dropped",
-        sum(col("__b.dropped")).as("dropped_candidates"))
-      .select(col("__b.entries").as("__es"))
+    val cells = SemDeDup.boundedCells(SemDeDup.assignCells(quant, narrow),
+        cellCap(quant), s"${uid}_dropped", "__es")
       .filter(size(col("__es")) >= 2)
     val thr = $(threshold)
     val centroidFar = $(keepRule) == "centroidFar"
@@ -305,6 +204,93 @@ class SemDeDup(override val uid: String) extends Transformer
   override def copy(extra: ParamMap): SemDeDup = defaultCopy(extra)
 }
 object SemDeDup extends graft.core.GraftReadable[SemDeDup] {
+  /** Quantizer params of the SemDeDup family ([[SemDeDup]] and
+    * [[IncrementalSemDeDup]]): the shared training params plus the
+    * automatic cluster count, and the one rule that turns them into k
+    * and a training-sample cap. */
+  private[dedup] trait AutoKParams extends graft.sim.QuantizerParams {
+    final val nClusters = new IntParam(this, "nClusters",
+      "k-means cluster count (1 = exhaustive exact pairwise; 0 = auto — " +
+        "ceil(corpusSize / targetClusterSize), capped at maxAutoClusters)",
+      ParamValidators.gtEq(0))
+    setDefault(nClusters -> 0)
+    def setNClusters(v: Int): this.type = set(nClusters, v)
+    final val targetClusterSize = new IntParam(this, "targetClusterSize",
+      "auto mode: intended average cluster population — the paper's scale " +
+        "knob is cluster COUNT proportional to corpus size, i.e. fixed " +
+        "cluster size; within-cluster pair work is then " +
+        "O(corpus * targetClusterSize), linear in the corpus",
+      ParamValidators.gt(1))
+    setDefault(targetClusterSize -> 256)
+    def setTargetClusterSize(v: Int): this.type = set(targetClusterSize, v)
+    final val corpusSizeHint = new LongParam(this, "corpusSizeHint",
+      "auto mode: approximate corpus row count, if the caller knows it " +
+        "(a curation pipeline always does — the previous stage's row " +
+        "count). 0 = compute it with a count() pass; any positive value " +
+        "skips that pass — k only needs the right order of magnitude, so " +
+        "a stale or rounded hint is fine", ParamValidators.gtEq(0))
+    setDefault(corpusSizeHint -> 0L)
+    def setCorpusSizeHint(v: Long): this.type = set(corpusSizeHint, v)
+    final val maxAutoClusters = new IntParam(this, "maxAutoClusters",
+      "auto mode cap on k. Above SemDeDup.TwoLevelAbove the quantizer is " +
+        "two-level (coarse x sub), so train/assign cost grows with sqrt(k) " +
+        "and the cap can sit in the thousands; a SATURATED cap means " +
+        "clusters outgrow targetClusterSize and pair work turns " +
+        "super-linear (the round-11 x100 sweep measured alpha 1.5 at the " +
+        "old flat-k cap of 512)", ParamValidators.gt(0))
+    setDefault(maxAutoClusters -> 4096)
+    def setMaxAutoClusters(v: Int): this.type = set(maxAutoClusters, v)
+
+    /** Cluster count: `nClusters` when set, else auto — the count grows
+      * with the corpus (fixed target cluster SIZE, the paper's
+      * protocol), capped where driver-side training stops being the
+      * right tool. The corpus size is `corpusSizeHint` when set (no pass
+      * at all — a curation pipeline always knows the previous stage's
+      * row count), else one count() of `narrow`. An earlier draft
+      * counted for free via an Observation riding the sample job; it
+      * was reverted — `Observation` lazily materializes the session's
+      * ObservationManager, a non-serializable non-transient SparkSession
+      * field, which then breaks Java serialization of ANY later task
+      * closure that captures a SparkSession in the same JVM (Spark ML
+      * models with training summaries do) — found as 5 cross-suite
+      * failures in the round-12 full test run. */
+    protected def clusterCount(narrow: DataFrame): Int =
+      if ($(nClusters) > 0) $(nClusters)
+      else {
+        val n = if ($(corpusSizeHint) > 0L) $(corpusSizeHint) else narrow.count()
+        math.max(1, math.min($(maxAutoClusters).toLong,
+          (n + $(targetClusterSize) - 1) / $(targetClusterSize))).toInt
+      }
+
+    /** Training-sample cap for `k` cells: `trainSample` for an explicit
+      * k; in auto mode the FAISS ~64 samples/cell guideline (at least
+      * 4096) bounds the collect so quantizer flops stay ~O(k²·dim). */
+    protected def sampleCap(k: Int): Int =
+      if ($(nClusters) > 0) $(trainSample)
+      else math.min($(trainSample), math.max(4096, 64 * k))
+  }
+
+  /** The per-cell candidate cap and its single-cell rule, shared by
+    * [[SemDeDup]] and [[IncrementalSemDeDupModel]]. */
+  private[dedup] trait CellCapParams extends Params {
+    final val maxClusterSize = new IntParam(this, "maxClusterSize",
+      "per-cluster candidate cap (skew guard; overflow is counted in the " +
+        "<uid>_dropped observation)", ParamValidators.gt(1))
+    setDefault(maxClusterSize -> 2048)
+    def setMaxClusterSize(v: Int): this.type = set(maxClusterSize, v)
+
+    /** The cap a quantizer's cells aggregate under. A single-cell
+      * quantizer with the cap left at its default auto-raises it, so
+      * the exhaustive setting (`nClusters = 1`) stays exact instead of
+      * silently depending on hand-sizing the cap (round-17 advice); an
+      * explicitly set cap is honored — overflow then shows in the drop
+      * metric, the documented degraded mode. Int.MaxValue / 4 keeps the
+      * aggregator's 2·max compaction trigger overflow-free. */
+    protected def cellCap(q: Quantizer): Int =
+      if (cells(q) == 1 && !isSet(maxClusterSize)) Int.MaxValue / 4
+      else $(maxClusterSize)
+  }
+
   /** Cluster counts above this train/assign through the two-level
     * (coarse × sub) quantizer; below it a flat k-means is cheaper and
     * slightly better-balanced. */
@@ -335,20 +321,7 @@ object SemDeDup extends graft.core.GraftReadable[SemDeDup] {
       val cs = graft.sim.IVF.lloyd(sample, k1, maxIter, seed)
       val members = Array.fill(cs.length)(
         scala.collection.mutable.ArrayBuffer.empty[Array[Double]])
-      sample.foreach { v =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < cs.length) {
-          var s = 0.0; var i = 0
-          val cc = cs(c)
-          while (i < v.length && i < cc.length) {
-            val d = v(i) - cc(i); s += d * d; i += 1
-          }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        members(best) += v
-      }
+      sample.foreach(v => members(graft.sim.IVF.nearest(cs, v)._1) += v)
       // sub-cell fits are independent with per-cell seeds, so running
       // them on the driver's cores is hash-identical to the former
       // sequential loop — this single-threaded region was the prime
@@ -369,26 +342,47 @@ object SemDeDup extends graft.core.GraftReadable[SemDeDup] {
 
   /** Two-level assignment: (flat cell id, cosine to the FINEST
     * centroid) — unit sphere, cos = 1 − d²/2, so argmin L2 IS argmax
-    * cosine. Extracted verbatim from the round-16 transform UDF. */
+    * cosine. */
   private[graft] def assign(q: Quantizer, v: Seq[Double]): (Int, Double) = {
     val va = graft.sim.IVF.normalize(v.toArray)
-    def argmin(arr: Array[Array[Double]]): (Int, Double) = {
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < arr.length) {
-        var s = 0.0; var i = 0
-        val cc = arr(c)
-        while (i < va.length && i < cc.length) {
-          val d = va(i) - cc(i); s += d * d; i += 1
-        }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      (best, bestD)
-    }
-    val (c1, _) = argmin(q.coarse)
-    val (c2, d2) = argmin(q.subs(c1))
+    val c1 = graft.sim.IVF.nearest(q.coarse, va)._1
+    val (c2, d2) = graft.sim.IVF.nearest(q.subs(c1), va)
     (q.base(c1) + c2, 1.0 - d2 / 2.0)
+  }
+
+  /** The narrow `(__id: long, __v: array<double>)` projection every
+    * quantizer pass of the family reads. */
+  private[dedup] def narrow(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("__id"),
+      col(vecCol).cast(ArrayType(DoubleType)).as("__v"))
+
+  /** The cell index of a narrow `(__id, __v)` frame under `q`:
+    * `(__id, __v, __cell, __csim)`, one narrow pass over the broadcast
+    * quantizer that also emits the centroid cosine the keep rule reads.
+    * Null embeddings carry no vector to compare and are left out. */
+  private[graft] def assignCells(q: Quantizer, narrow: DataFrame): DataFrame = {
+    val bc = narrow.sparkSession.sparkContext.broadcast(q)
+    val assignUdf = udf((v: Seq[Double]) => assign(bc.value, v))
+    narrow
+      .where(col("__v").isNotNull)
+      .select(col("__id"), col("__v"), assignUdf(col("__v")).as("__a"))
+      .select(col("__id"), col("__v"),
+        col("__a._1").as("__cell"), col("__a._2").as("__csim"))
+  }
+
+  /** Members of each cell of an `(__id, __v, __cell, __csim)` index,
+    * bounded by `cap` through [[BoundedCellAggregator]] (the `cap`
+    * smallest ids, id-ascending): `(__cell, <entries>)`. The overflow
+    * is observable as `<metric>.dropped_candidates`. */
+  private[dedup] def boundedCells(assigned: DataFrame, cap: Int,
+      metric: String, entries: String): DataFrame = {
+    val bounded = udaf(new BoundedCellAggregator(cap),
+      org.apache.spark.sql.Encoders.product[CellEntry])
+    assigned.groupBy(col("__cell"))
+      .agg(bounded(col("__id"), col("__v"), col("__csim")).as("__b"))
+      .observe(metric, sum(col("__b.dropped")).as("dropped_candidates"))
+      .select(col("__cell"), col("__b.entries").as(entries))
   }
 
   /** Number of flat cells `q` assigns to. */

@@ -690,7 +690,7 @@ object DedupGates {
         .setIdCol("vec_id").setThreshold(0.465).setNClusters(1)
         .fit(corpus)
       m.setCorpusIndex(m.indexCorpus(corpus))
-        .setWithinBatchClusters(1).setMaxClusterSize(4096)
+        .setMaxClusterSize(4096)
         .transform(batch)
         .select(col("vec_id"))
     }, oracle = Some(

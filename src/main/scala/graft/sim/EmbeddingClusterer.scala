@@ -36,7 +36,7 @@ import org.apache.spark.sql.types._
   */
 class EmbeddingClusterer(override val uid: String)
     extends Estimator[EmbeddingClustererModel] with HasInputCol
-    with graft.core.GraftWritable {
+    with QuantizerParams with graft.core.GraftWritable {
   def this() = this(Identifiable.randomUID("EmbeddingClusterer"))
 
   final val idCol = new Param[String](this, "idCol", "document id column")
@@ -46,30 +46,16 @@ class EmbeddingClusterer(override val uid: String)
     ParamValidators.gt(0))
   setDefault(k -> 64)
   def setK(v: Int): this.type = set(k, v)
-  final val maxIter = new IntParam(this, "maxIter",
-    "k-means iteration cap", ParamValidators.gt(0))
   setDefault(maxIter -> 20)
-  def setMaxIter(v: Int): this.type = set(maxIter, v)
-  final val seed = new LongParam(this, "seed", "k-means seed")
-  setDefault(seed -> 42L)
-  def setSeed(v: Long): this.type = set(seed, v)
-  final val trainSample = new IntParam(this, "trainSample",
-    "max vectors sampled for quantizer training", ParamValidators.gt(0))
-  setDefault(trainSample -> 65536)
-  def setTrainSample(v: Int): this.type = set(trainSample, v)
 
   override def fit(ds: Dataset[_]): EmbeddingClustererModel = {
     val df = ds.toDF()
-    // bounded hash-ordered sample: same draw as IVF/SemDeDup — orderBy
-    // (xxhash64 of the id) + limit compiles to TakeOrderedAndProject,
-    // per-partition top-K, no global sort
-    val sample: Array[Array[Double]] = df
+    // the shared bounded hash-ordered draw, over embeddings without a
+    // null element (those get a null cluster at transform time)
+    val sample = IVF.sample(df
       .select(col($(idCol)).cast("long").as("__id"),
         col(getInputCol).cast(ArrayType(DoubleType)).as("__v"))
-      .where(col("__v").isNotNull && !exists(col("__v"), x => x.isNull))
-      .orderBy(xxhash64(col("__id")))
-      .limit($(trainSample))
-      .collect().map(r => IVF.normalize(r.getSeq[Double](1).toArray))
+      .where(!exists(col("__v"), x => x.isNull)), $(trainSample))
     require(sample.nonEmpty,
       s"EmbeddingClusterer: no non-null '${getInputCol}' vectors to fit on")
     val m = new EmbeddingClustererModel(uid + "_model")
@@ -113,19 +99,8 @@ class EmbeddingClustererModel(override val uid: String)
     val assignUdf = udf((v: Seq[java.lang.Double]) => {
       if (v == null || v.exists(_ eq null)) null
       else {
-        val cs = ctr.value
-        val va = IVF.normalize(v.map(_.doubleValue).toArray)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < cs.length) {
-          var s = 0.0; var i = 0
-          val cc = cs(c)
-          while (i < va.length && i < cc.length) {
-            val d = va(i) - cc(i); s += d * d; i += 1
-          }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
+        val (best, bestD) =
+          IVF.nearest(ctr.value, IVF.normalize(v.map(_.doubleValue).toArray))
         // unit sphere: cos = 1 - d²/2 (centroids are renormalized means)
         val cos = 1.0 - bestD / 2.0
         (best, math.floor(cos * 10000.0 + 0.5).toLong)

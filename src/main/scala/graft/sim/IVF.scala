@@ -24,7 +24,8 @@ import org.apache.spark.sql.types._
   * nLists=4096, nProbe=64 each query touches ~1.6% of vectors.
   */
 class IVFNearestNeighbors(override val uid: String)
-    extends Estimator[IVFNearestNeighborsModel] with HasInputCol with graft.core.GraftWritable {
+    extends Estimator[IVFNearestNeighborsModel] with HasInputCol
+    with QuantizerParams with graft.core.GraftWritable {
   def this() = this(Identifiable.randomUID("IVFNearestNeighbors"))
 
   final val idCol = new Param[String](this, "idCol", "corpus id column")
@@ -33,44 +34,14 @@ class IVFNearestNeighbors(override val uid: String)
     ParamValidators.gt(0))
   setDefault(nLists -> 64)
   def setNLists(v: Int): this.type = set(nLists, v)
-  final val seed = new LongParam(this, "seed", "k-means seed")
-  setDefault(seed -> 42L)
-  def setSeed(v: Long): this.type = set(seed, v)
-  // a coarse quantizer needs rough cells, not convergence: 10 Lloyd
-  // iterations is the standard IVF training budget; recall at the gated
-  // operating points is asserted by SimilaritySuite either way
-  final val maxIter = new IntParam(this, "maxIter",
-    "k-means iteration cap", ParamValidators.gt(0))
-  setDefault(maxIter -> 10)
-  def setMaxIter(v: Int): this.type = set(maxIter, v)
-  // FAISS trains IVF quantizers on ~max(10k, 39*nLists) points; the cap
-  // bounds the one collect job's output and driver memory at any corpus
-  // size (65536 dim-64 doubles ≈ 34 MB)
-  final val trainSample = new IntParam(this, "trainSample",
-    "max vectors sampled for quantizer training", ParamValidators.gt(0))
-  setDefault(trainSample -> 65536)
-  def setTrainSample(v: Int): this.type = set(trainSample, v)
 
   override def fit(ds: Dataset[_]): IVFNearestNeighborsModel = {
     val df = ds.toDF()
-    // The coarse quantizer trains DRIVER-SIDE on a bounded, hash-ordered
-    // sample (one TakeOrdered job), replacing the distributed KMeans fit:
-    // k-means|| init + per-iteration collects cost ~35 tiny sequential
-    // jobs whose scheduling latency dominated wall time at EVERY corpus
-    // size, for milliseconds of arithmetic. This is also how FAISS trains
-    // IVF: cell balance needs a representative sample, not the corpus.
-    // orderBy(hash)+limit compiles to TakeOrderedAndProject — per-partition
-    // top-K, no global sort shuffle.
     // spherical k-means (Dhillon & Modha '01): the ANN metric is cosine,
     // so the quantizer clusters DIRECTIONS — unit-normalized points and
     // centroids; L2-argmin on the unit sphere is exactly cosine-argmax
-    val sample: Array[Array[Double]] = df
-      .select(col($(idCol)).cast("long").as("__id"),
-        col(getInputCol).cast(ArrayType(DoubleType)).as("__v"))
-      .where(col("__v").isNotNull)
-      .orderBy(xxhash64(col("__id")))
-      .limit($(trainSample))
-      .collect().map(r => IVF.normalize(r.getSeq[Double](1).toArray))
+    val sample = IVF.sample(df.select(col($(idCol)).cast("long").as("__id"),
+      col(getInputCol).cast(ArrayType(DoubleType)).as("__v")), $(trainSample))
     val m = new IVFNearestNeighborsModel(uid + "_model")
     m.set(m.inputCol, getInputCol).set(m.idCol, $(idCol))
     m.centroids = IVF.lloyd(sample, $(nLists), $(maxIter), $(seed))
@@ -127,38 +98,14 @@ class IVFNearestNeighborsModel(override val uid: String)
     val np = $(nProbe)
     // corpus -> cells: one narrow argmin pass over broadcast centroids
     // (no mllib transform, no extra lineage)
-    val assignUdf = udf((v: Seq[Double]) => {
-      val cs = ctr.value
-      val va = IVF.normalize(v.toArray)
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < cs.length) {
-        var s = 0.0; var i = 0
-        val cc = cs(c)
-        while (i < va.length && i < cc.length) {
-          val d = va(i) - cc(i); s += d * d; i += 1
-        }
-        if (s < bestD) { bestD = s; best = c }
-        c += 1
-      }
-      best
-    })
+    val assignUdf = udf((v: Seq[Double]) =>
+      IVF.nearest(ctr.value, IVF.normalize(v.toArray))._1)
     val corpus = df
       .select(col($(idCol)).cast("long").as("id"), col(getInputCol).as("__cv"))
       .withColumn("__cell",
         assignUdf(col("__cv").cast(ArrayType(DoubleType))))
-    val probeUdf = udf((q: Seq[Double]) => {
-      val cs = ctr.value
-      val qa = IVF.normalize(q.toArray)
-      cs.indices.map { c =>
-        var s = 0.0; var i = 0
-        val cc = cs(c)
-        while (i < qa.length && i < cc.length) {
-          val d = qa(i) - cc(i); s += d * d; i += 1
-        }
-        (s, c)
-      }.sortBy(_._1).take(np).map(_._2)
-    })
+    val probeUdf = udf((q: Seq[Double]) =>
+      IVF.probeOrder(ctr.value, IVF.normalize(q.toArray), np))
     val qs = queriesDf
       .withColumn("__cell",
         explode(probeUdf(col("__qv").cast(ArrayType(DoubleType)))))
@@ -198,6 +145,35 @@ object IVFNearestNeighborsModel
       StructField("score", DoubleType), StructField("id", LongType)))))))
 }
 
+/** The spherical quantizer's training params — `seed`, `maxIter` and
+  * `trainSample`, declared once for every quantizer-based vector
+  * operator (IVF, IVF-PQ, KNNGraph, EmbeddingClusterer, SemDeDup,
+  * IncrementalSemDeDup). A stage with another iteration budget sets its
+  * own default after mixing this in. */
+private[graft] trait QuantizerParams extends Params {
+  final val seed = new LongParam(this, "seed", "k-means seed")
+  setDefault(seed -> 42L)
+  def setSeed(v: Long): this.type = set(seed, v)
+  // a coarse quantizer needs rough cells, not convergence: 10 Lloyd
+  // iterations is the standard IVF training budget; recall at the gated
+  // operating points is asserted by SimilaritySuite either way
+  final val maxIter = new IntParam(this, "maxIter",
+    "k-means iteration cap", ParamValidators.gt(0))
+  setDefault(maxIter -> 10)
+  def setMaxIter(v: Int): this.type = set(maxIter, v)
+  // FAISS trains IVF quantizers on ~max(10k, 39*nLists) points; the cap
+  // bounds the one collect job's output and driver memory at any corpus
+  // size (65536 dim-64 doubles ≈ 34 MB)
+  final val trainSample = new IntParam(this, "trainSample",
+    "max vectors sampled for quantizer training", ParamValidators.gt(0))
+  setDefault(trainSample -> 65536)
+  def setTrainSample(v: Int): this.type = set(trainSample, v)
+}
+
+/** The one spherical quantizer shared by the vector family: the
+  * training-sample draw, k-means training, nearest-cell assignment and
+  * nProbe cell order. Batch, incremental and streaming faces agree on a
+  * cell partition because they all call these. */
 private[graft] object IVF {
   /** Unit-normalize (no-op for the zero vector). */
   def normalize(v: Array[Double]): Array[Double] = {
@@ -213,12 +189,52 @@ private[graft] object IVF {
     }
   }
 
+  /** Squared L2 distance over the shorter of the two lengths (a vector
+    * shorter than the centroids compares over its own length). */
   private def dist2(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     val n = math.min(a.length, b.length)
     while (i < n) { val d = a(i) - b(i); s += d * d; i += 1 }
     s
   }
+
+  /** The quantizer's training sample: up to `cap` non-null vectors of a
+    * narrow `(__id: long, __v: array<double>)` frame, in xxhash64(__id)
+    * order, unit-normalized. The draw is deterministic for a given
+    * corpus; orderBy(hash) + limit compiles to one TakeOrderedAndProject
+    * job (per-partition top-K, no global sort shuffle). Training
+    * driver-side on this sample replaced the distributed KMeans fit,
+    * whose k-means|| init and per-iteration collects cost ~35 tiny
+    * sequential jobs for milliseconds of arithmetic; it is also how
+    * FAISS trains IVF: cell balance needs a representative sample, not
+    * the corpus. May be empty; each caller decides what that means. */
+  def sample(narrow: DataFrame, cap: Int): Array[Array[Double]] =
+    narrow
+      .where(col("__v").isNotNull)
+      .orderBy(xxhash64(col("__id")))
+      .limit(cap)
+      .collect().map(r => normalize(r.getSeq[Double](1).toArray))
+
+  /** Nearest centroid: (cell, squared L2 distance). On the unit sphere
+    * argmin L2 is argmax cosine, and cos = 1 - d2/2. Strict `<` sends
+    * ties (and a NaN vector) to the lowest cell index. */
+  def nearest(cs: Array[Array[Double]], v: Array[Double]): (Int, Double) = {
+    var best = 0; var bestD = Double.MaxValue
+    var c = 0
+    while (c < cs.length) {
+      val d = dist2(v, cs(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    (best, bestD)
+  }
+
+  /** The `n` cells closest to unit vector `v`, nearest first (a stable
+    * sort on distance, so ties keep cell order); every cell when
+    * `n` >= the cell count. */
+  def probeOrder(cs: Array[Array[Double]], v: Array[Double],
+                 n: Int): Seq[Int] =
+    cs.indices.map(c => (dist2(v, cs(c)), c)).sortBy(_._1).take(n).map(_._2)
 
   /** Best-of-restarts quantizer training: seeded k-means++ init + bounded
     * Lloyd per restart, lowest within-cell SSE wins (standard
@@ -236,14 +252,7 @@ private[graft] object IVF {
       val cs = lloydOnce(data, k, iters, seed + r)
       var sse = 0.0
       var i = 0
-      while (i < data.length) {
-        var m = Double.MaxValue
-        var j = 0
-        while (j < cs.length) {
-          val d = dist2(data(i), cs(j)); if (d < m) m = d; j += 1
-        }
-        sse += m; i += 1
-      }
+      while (i < data.length) { sse += nearest(cs, data(i))._2; i += 1 }
       if (sse < bestSse) { bestSse = sse; best = cs }
       r += 1
     }
@@ -287,13 +296,7 @@ private[graft] object IVF {
       var changed = false
       var i = 0
       while (i < data.length) {
-        var best = 0; var bestD = Double.MaxValue
-        var j = 0
-        while (j < kk) {
-          val d = dist2(data(i), centers(j))
-          if (d < bestD) { bestD = d; best = j }
-          j += 1
-        }
+        val best = nearest(centers, data(i))._1
         if (assign(i) != best) { assign(i) = best; changed = true }
         i += 1
       }

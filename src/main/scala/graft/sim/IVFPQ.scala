@@ -41,7 +41,7 @@ import org.apache.spark.sql.types._
   */
 class IVFPQNearestNeighbors(override val uid: String)
     extends Estimator[IVFPQNearestNeighborsModel] with HasInputCol
-    with graft.core.GraftWritable {
+    with QuantizerParams with graft.core.GraftWritable {
   def this() = this(Identifiable.randomUID("IVFPQNearestNeighbors"))
 
   final val idCol = new Param[String](this, "idCol", "corpus id column")
@@ -59,27 +59,11 @@ class IVFPQNearestNeighbors(override val uid: String)
     ParamValidators.inRange(1, 8))
   setDefault(nBits -> 8)
   def setNBits(v: Int): this.type = set(nBits, v)
-  final val seed = new LongParam(this, "seed", "k-means seed")
-  setDefault(seed -> 42L)
-  def setSeed(v: Long): this.type = set(seed, v)
-  final val maxIter = new IntParam(this, "maxIter",
-    "k-means iteration cap", ParamValidators.gt(0))
-  setDefault(maxIter -> 10)
-  def setMaxIter(v: Int): this.type = set(maxIter, v)
-  final val trainSample = new IntParam(this, "trainSample",
-    "max vectors sampled for quantizer training", ParamValidators.gt(0))
-  setDefault(trainSample -> 65536)
-  def setTrainSample(v: Int): this.type = set(trainSample, v)
 
   override def fit(ds: Dataset[_]): IVFPQNearestNeighborsModel = {
     val df = ds.toDF()
-    val sample: Array[Array[Double]] = df
-      .select(col($(idCol)).cast("long").as("__id"),
-        col(getInputCol).cast(ArrayType(DoubleType)).as("__v"))
-      .where(col("__v").isNotNull)
-      .orderBy(xxhash64(col("__id")))
-      .limit($(trainSample))
-      .collect().map(r => IVF.normalize(r.getSeq[Double](1).toArray))
+    val sample = IVF.sample(df.select(col($(idCol)).cast("long").as("__id"),
+      col(getInputCol).cast(ArrayType(DoubleType)).as("__v")), $(trainSample))
     require(sample.nonEmpty, "IVFPQ: empty training sample")
     val coarse = IVF.lloyd(sample, $(nLists), $(maxIter), $(seed))
     // residual to the nearest coarse centroid (FAISS IVFPQ encodes
@@ -290,8 +274,12 @@ private[sim] object IVFPQ {
   def subRange(dim: Int, m: Int, sub: Int): (Int, Int) =
     (sub * dim / m, (sub + 1) * dim / m)
 
-  /** L2 distance with implicit zero-padding for length mismatches (the
-    * same convention as IVF's centroid distance). */
+  /** L2 distance with implicit zero-padding for length mismatches. This
+    * is NOT IVF's centroid distance: [[IVF.nearest]] and
+    * [[IVF.probeOrder]] truncate to the shorter length, while this pads
+    * the shorter vector with zeros, so the two agree only on vectors of
+    * equal length. IVF-PQ keeps its own padded argmin and probe order
+    * for that reason. */
   def dist2Padded(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     val n = math.max(a.length, b.length)

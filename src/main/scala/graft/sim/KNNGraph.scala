@@ -38,7 +38,8 @@ import graft.core._
   * pattern); the driver gate pins that equality.
   */
 class KNNGraph(override val uid: String)
-    extends Transformer with HasInputCol with GraftWritable {
+    extends Transformer with HasInputCol with QuantizerParams
+    with GraftWritable {
   def this() = this(Identifiable.randomUID("KNNGraph"))
 
   final val idCol = new Param[String](this, "idCol", "corpus id column")
@@ -60,17 +61,6 @@ class KNNGraph(override val uid: String)
     "cells each node's query side visits", ParamValidators.gt(0))
   setDefault(nProbe -> 8)
   def setNProbe(v: Int): this.type = set(nProbe, v)
-  final val seed = new LongParam(this, "seed", "k-means seed")
-  setDefault(seed -> 42L)
-  def setSeed(v: Long): this.type = set(seed, v)
-  final val maxIter = new IntParam(this, "maxIter",
-    "k-means iteration cap", ParamValidators.gt(0))
-  setDefault(maxIter -> 10)
-  def setMaxIter(v: Int): this.type = set(maxIter, v)
-  final val trainSample = new IntParam(this, "trainSample",
-    "max vectors sampled for quantizer training", ParamValidators.gt(0))
-  setDefault(trainSample -> 65536)
-  def setTrainSample(v: Int): this.type = set(trainSample, v)
 
   override def transform(ds: Dataset[_]): DataFrame = {
     val df = ds.toDF()
@@ -87,26 +77,13 @@ class KNNGraph(override val uid: String)
       } else {
         // quantizer: bounded hash-ordered sample + local spherical Lloyd
         // (one TakeOrdered job — the IVFNearestNeighbors.fit recipe)
-        val sample: Array[Array[Double]] = base
-          .select(col("id"), col("__v").cast(ArrayType(DoubleType)))
-          .where(col("__v").isNotNull)
-          .orderBy(xxhash64(col("id"))).limit($(trainSample))
-          .collect().map(r => IVF.normalize(r.getSeq[Double](1).toArray))
+        val sample = IVF.sample(base.select(col("id").as("__id"),
+          col("__v").cast(ArrayType(DoubleType)).as("__v")), $(trainSample))
         val ctr = spark.sparkContext
           .broadcast(IVF.lloyd(sample, $(nLists), $(maxIter), $(seed)))
         val np = $(nProbe)
-        val cellsUdf = udf((v: Seq[Double], n: Int) => {
-          val cs = ctr.value
-          val va = IVF.normalize(v.toArray)
-          cs.indices.map { c =>
-            var s = 0.0; var i = 0
-            val cc = cs(c)
-            while (i < va.length && i < cc.length) {
-              val d = va(i) - cc(i); s += d * d; i += 1
-            }
-            (s, c)
-          }.sortBy(_._1).take(n).map(_._2)
-        })
+        val cellsUdf = udf((v: Seq[Double], n: Int) =>
+          IVF.probeOrder(ctr.value, IVF.normalize(v.toArray), n))
         (base.select(col("id"), col("__v").as("__cv"),
           element_at(cellsUdf(col("__v").cast(ArrayType(DoubleType)),
             lit(1)), 1).as("__cell")),

@@ -694,12 +694,19 @@ class StreamingMinHashDeduplicator(override val uid: String)
   def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
   /** Persisted corpus `(__id, __sig)` signature index — the batch
     * family's [[graft.dedup.IncrementalMinHashDeduplicator.signatureIndex]].
-    * Replacing it destroys the cached probe state — don't swap it while
-    * a streaming query that references this stage has a micro-batch in
+    * Replacing it destroys the cached probe state and DETACHES any raw
+    * corpus an earlier [[setCorpus]] attached, so verification falls
+    * back to signature agreement over the new index: a fold that swaps
+    * in the index grown by each batch's survivors never verifies
+    * against the old text, which lacks the folded documents. A fold
+    * that wants exact verification re-attaches [[setCorpus]] (covering
+    * the folded documents) after the swap. Don't swap it while a
+    * streaming query that references this stage has a micro-batch in
     * flight (stop or restart the query around the swap). */
   private var corpusIndex: DataFrame = _
   def setCorpusIndex(df: DataFrame): this.type = {
     corpusIndex = df
+    corpusRaw = null
     release()
     this
   }
@@ -709,8 +716,9 @@ class StreamingMinHashDeduplicator(override val uid: String)
     * [[transformMicroBatch]]'s tier-2 verify from signature agreement
     * (the text-free steady state) to exact shingle Jaccard, making
     * streaming corpus decisions batch-identical at the cutoff (one
-    * shingle pass, cached per index reference). The DSL [[transform]]
-    * refuses a stage with a raw corpus attached. */
+    * shingle pass, cached per index reference). Call it after
+    * [[setCorpusIndex]], which detaches the raw corpus. The DSL
+    * [[transform]] refuses a stage with a raw corpus attached. */
   private var corpusRaw: DataFrame = _
   def setCorpus(df: DataFrame, idCol: String, textCol: String): this.type = {
     corpusRaw = df.select(col(idCol).cast("long").as("__cid"),
@@ -1419,19 +1427,7 @@ class StreamingNearestNeighbors(override val uid: String)
       // ~10⁹ single-threaded flops at the 2²⁰ ceiling × 8 cells ×
       // dim 63 (round-18 verdict, What's wrong #4)
       val assignUdf = udf { v: Seq[Double] =>
-        val va = graft.sim.IVF.normalize(v.toArray)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < cs.length) {
-          var s = 0.0; var i = 0
-          val cc = cs(c)
-          while (i < va.length && i < cc.length) {
-            val d = va(i) - cc(i); s += d * d; i += 1
-          }
-          if (s < bestD) { bestD = s; best = c }
-          c += 1
-        }
-        best
+        graft.sim.IVF.nearest(cs, graft.sim.IVF.normalize(v.toArray))._1
       }
       val rows = ProbeCache.collectCapped(
         corpus.na.drop().withColumn("__cell", assignUdf(col("__v"))),
@@ -1463,14 +1459,7 @@ class StreamingNearestNeighbors(override val uid: String)
       val qa = q.toArray
       val qn = graft.sim.IVF.normalize(qa)
       // rank cells by quantizer distance, probe the np closest
-      val order = ctr.indices.map { c =>
-        var s = 0.0; var i = 0
-        val cc = ctr(c)
-        while (i < qn.length && i < cc.length) {
-          val d = qn(i) - cc(i); s += d * d; i += 1
-        }
-        (s, c)
-      }.sortBy(_._1).take(np).map(_._2)
+      val order = graft.sim.IVF.probeOrder(ctr, qn, np)
       // exact cosine over the probed cells, top-k by insertion (k is
       // small; avoids a heap allocation per row). The query self-norm
       // is invariant per row — hoisted out of the candidate loop

@@ -33,20 +33,10 @@ class IncrementalSemDeDupSuite extends TestBase {
     val m = new IncrementalSemDeDup().setInputCol("embedding")
       .setNClusters(1).setThreshold(0.99).fit(corpus)
     val out = m.setCorpusIndex(m.indexCorpus(corpus))
-      .setWithinBatchClusters(1)
       .transform(batch)
     assert(ids(out) == Seq(12L, 14L))
     // corpus rows were never part of the batch output — the corpus
     // copy survives in the CORPUS, the batch sheds its duplicates
-  }
-
-  test("dedupWithinBatch=false keeps batch-internal near-pairs") {
-    val m = new IncrementalSemDeDup().setInputCol("embedding")
-      .setNClusters(1).setThreshold(0.99).fit(corpus)
-    val out = m.setCorpusIndex(m.indexCorpus(corpus))
-      .setDedupWithinBatch(false)
-      .transform(batch)
-    assert(ids(out) == Seq(12L, 13L, 14L))
   }
 
   test("the persisted quantizer pins the cell partition: save/load " +
@@ -102,7 +92,6 @@ class IncrementalSemDeDupSuite extends TestBase {
     val m1 = new IncrementalSemDeDup().setInputCol("embedding")
       .setNClusters(2).setThreshold(0.99).fit(corpus)
     val out = m1.setCorpusIndex(m1.indexCorpus(corpus))
-      .setWithinBatchClusters(1)
       .transform(batch)
     assert(ids(out) == Seq(12L, 14L))
   }
@@ -129,14 +118,53 @@ class IncrementalSemDeDupSuite extends TestBase {
     assert(cells(4L) != bCell,
       s"fixture broken: corpus 4 and batch 10 share cell ${bCell}")
     val missed = m2.setCorpusIndex(m2.indexCorpus(cps))
-      .setDedupWithinBatch(false).transform(bat)
+      .transform(bat)
     assert(ids(missed) == Seq(10L), "cross-cell near pair must be missed")
     // nClusters=1 (exhaustive) catches the same pair
     val m1 = new IncrementalSemDeDup().setInputCol("embedding")
       .setNClusters(1).setThreshold(0.9).fit(cps)
     val caught = m1.setCorpusIndex(m1.indexCorpus(cps))
-      .setDedupWithinBatch(false).transform(bat)
+      .transform(bat)
     assert(ids(caught) == Seq())
+  }
+
+  test("a single-cell quantizer makes the within-batch pass exhaustive: " +
+    "an in-batch near pair straddling auto-k cells drops") {
+    // 300 batch vectors in two blobs (directions e0 and e1, noise in
+    // dims 2..61) plus a planted pair astride the blob boundary:
+    // (0.6, 0.4) and (0.4, 0.6), cosine ~0.923 >= 0.9. The corpus sits
+    // on dim 62, orthogonal to every batch row, so all 302 rows survive
+    // the corpus check and auto-k over them would pick 2 cells
+    val dim = 63
+    val rnd = new scala.util.Random(7)
+    val blobs = (0 until 300).map { i =>
+      val v = Array.fill(dim)(0.0)
+      v(i % 2) = 1.0
+      (2 until 62).foreach(d => v(d) = 0.15 * rnd.nextGaussian())
+      (i.toLong, v)
+    }
+    def unit(a: Double, b: Double) = {
+      val v = Array.fill(dim)(0.0); v(0) = a; v(1) = b; v
+    }
+    val bat = (blobs :+ ((1000L, unit(0.6, 0.4))) :+
+      ((1001L, unit(0.4, 0.6)))).toDF("doc_id", "embedding")
+    val cps = Seq((5000L, Array.tabulate(dim)(d => if (d == 62) 1.0 else 0.0)))
+      .toDF("doc_id", "embedding")
+    // sanity: an auto-k quantizer fitted on the survivors (the batch)
+    // has 2+ cells and splits the planted pair
+    val auto = new IncrementalSemDeDup().setInputCol("embedding")
+      .setThreshold(0.9).fit(bat)
+    assert(SemDeDup.cells(auto.getOrDefault(auto.quantizer)) >= 2)
+    val pairCells = auto.indexCorpus(bat.filter(col("doc_id") >= 1000L))
+      .select("__id", "__cell").as[(Long, Int)].collect().toMap
+    assert(pairCells(1000L) != pairCells(1001L),
+      s"fixture broken: the planted pair shares cell ${pairCells(1000L)}")
+    val m = new IncrementalSemDeDup().setInputCol("embedding")
+      .setNClusters(1).setThreshold(0.9).fit(cps)
+    val out = ids(m.setCorpusIndex(m.indexCorpus(cps)).transform(bat))
+    // minId keeps the smaller id of the pair
+    assert(out.filter(_ >= 1000L) == Seq(1000L),
+      "in-batch near pair across cells must drop its larger id")
   }
 
   test("single-cell default cap auto-raises: exhaustive mode stays " +
@@ -151,7 +179,6 @@ class IncrementalSemDeDupSuite extends TestBase {
     val m = new IncrementalSemDeDup().setInputCol("embedding")
       .setNClusters(1).setThreshold(0.99).fit(big)
     val out = m.setCorpusIndex(m.indexCorpus(big))
-      .setDedupWithinBatch(false)
       .transform(Seq((9000L, Array(1.0, 0.0, 0.0)))
         .toDF("doc_id", "embedding"))
     assert(out.count() == 0, "batch twin of corpus member 2099 must drop")

@@ -882,6 +882,30 @@ class StreamingSuite extends TestBase {
     assert(stage2.transformMicroBatch(novel).count() == 2)
   }
 
+  test("StreamingMinHashDeduplicator.setCorpusIndex detaches the raw " +
+    "corpus: a fold's new documents catch their near-duplicates") {
+    val words = (0 until 60).map(i => s"w$i")
+    val doc1 = words.take(30).mkString(" ")
+    val doc50 = words.drop(30).mkString(" ")
+    // doc 50 with its last word replaced: 3-shingle Jaccard 25/31
+    val nearDup50 = (words.slice(30, 59) :+ "zz").mkString(" ")
+    val raw1 = Seq((1L, doc1)).toDF("doc_id", "text")
+    val raw150 = Seq((1L, doc1), (50L, doc50)).toDF("doc_id", "text")
+    def index(df: org.apache.spark.sql.DataFrame) =
+      StreamingMinHashDeduplicator.signatureIndex(df, "doc_id", "text", 3, 128)
+    val batch = Seq((100L, nearDup50)).toDF("doc_id", "text")
+    val st = new StreamingMinHashDeduplicator().setInputCol("text")
+      .setThreshold(0.5)
+      .setCorpusIndex(index(raw1)).setCorpus(raw1, "doc_id", "text")
+    // the fold: swap in the index grown by doc 50
+    st.setCorpusIndex(index(raw150))
+    assert(st.transformMicroBatch(batch).count() == 0,
+      "near-dup of the folded doc 50 must drop after the index swap")
+    // exact verification after the swap re-attaches the grown raw corpus
+    st.setCorpus(raw150, "doc_id", "text")
+    assert(st.transformMicroBatch(batch).count() == 0)
+  }
+
   test("StreamingMinHashDeduplicator verifyMode=exact makes corpus " +
     "decisions batch-identical at the cutoff (parity with the " +
     "incremental exact mode on threshold-straddling pairs)") {
