@@ -5,7 +5,11 @@
 # flipped at sf0.1 when planted density fell with sf) — run it before
 # landing a round.
 #
-# Usage: scripts/verify_sweep.sh [queryName ...]   (default: all queries)
+# Usage: [OUT=dir] scripts/verify_sweep.sh [queryName ...]
+#   (default: all queries). Outputs land in $OUT/verify_sf<sf>
+#   (OUT defaults to target; a relative OUT is taken from the repo
+#   root), so two sweeps can be kept side by side and
+#   compared with `scripts/check.py <sfDir> <outDir> --against <otherDir>`.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -14,6 +18,7 @@ if [ ! -s "$CP_FILE" ]; then
   sbt -batch "export Runtime/fullClasspath" | tail -1 > "$CP_FILE"
 fi
 CP="target/scala-2.13/classes:$(cat "$CP_FILE")"
+OUT="${OUT:-target}"
 
 ADD_OPENS=""
 for m in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -30,7 +35,7 @@ sbt -batch compile >/dev/null
 
 rc=0
 for sf in 0.001 0.01 0.1; do
-  outDir="target/verify_sf$sf"
+  outDir="$OUT/verify_sf$sf"
   echo "== Verify at sf$sf"
   java $JVM -cp "$CP" graft.Verify "/root/testdata/sf$sf" "$outDir" "$@" \
     2>/dev/null | tail -2

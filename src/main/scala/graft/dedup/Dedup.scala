@@ -20,10 +20,11 @@ import org.apache.spark.sql.types._
   */
 object DedupFunctions {
 
-  /** Canonical text form used by every dedup operator: lowercase,
-    * whitespace-collapsed, trimmed. */
+  /** The one SQL canonical text key (every dedup operator, and
+    * `TextFunctions.fingerprint`). Oracle: the same expression,
+    * `lower(regexp_replace(trim(c), '\s+', ' ', 'g'))`. */
   def canonical(c: Column): Column =
-    lower(regexp_replace(trim(c), "\\s+", " "))
+    lower(regexp_replace(trim(c), graft.text.Words.ws, " "))
 
   /** The 128-bit exact-dedup fingerprint of `key`: two independently
     * seeded xxhash64. Grouping on the pair instead of the key text keeps

@@ -1,6 +1,7 @@
 package graft.explain
 
 import graft.core._
+import graft.text.Words
 import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.Identifiable
@@ -68,8 +69,8 @@ class TextLIME(override val uid: String) extends Transformer with graft.core.Gra
     val exploded = df.mapPartitions { it =>
       it.flatMap { r =>
         val rid = r.getLong(idIdx)
-        val tokens = Option(r.getString(txtIdx)).getOrElse("")
-          .split("\\s+").filter(_.nonEmpty).take(maxT)
+        val tokens = Words.words(
+          Option(r.getString(txtIdx)).getOrElse("")).take(maxT)
         val k = math.max(tokens.length, 1)
         (0 until nS).iterator.map { si =>
           val rng = new java.util.Random(mix(mix(sd ^ rid) ^ si))
@@ -170,8 +171,8 @@ class TextSHAP(override val uid: String) extends Transformer with graft.core.Gra
     val exploded = df.mapPartitions { it =>
       it.flatMap { r =>
         val rid = r.getLong(idIdx)
-        val tokens = Option(r.getString(txtIdx)).getOrElse("")
-          .split("\\s+").filter(_.nonEmpty).take(maxT)
+        val tokens = Words.words(
+          Option(r.getString(txtIdx)).getOrElse("")).take(maxT)
         val k = math.max(tokens.length, 1)
         val cdf = ShapSampling.sizeCdf(k)
         (0 until nS).iterator.map { si =>

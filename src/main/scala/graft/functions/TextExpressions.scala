@@ -127,12 +127,12 @@ object TextExpressions {
     * and rescans to EOF on each failure, which is quadratic on a page
     * full of UNCLOSED `<!--`/`<script` (measured 92-150 s for ONE
     * 300 KB adversarial page in either the non-greedy or the
-    * possessive formulation — graft.tools.HtmlProbe; crawler length
-    * caps make truncated pages routine). The DuckDB oracle keeps the
-    * spec regexp form: RE2 simulates all start positions in one
-    * automaton pass, so `.*?` is already linear THERE, and the
-    * shortest-match semantics the scan implements is exactly what
-    * `.*?Closer` denotes. Case-insensitive matching uses Unicode
+    * possessive formulation — numbers as recorded; HtmlTextSuite
+    * asserts the bound; crawler length caps make truncated pages
+    * routine). The DuckDB oracle keeps the spec regexp form: RE2
+    * simulates all start positions in one automaton pass, so `.*?` is
+    * already linear THERE, and the shortest-match semantics the scan
+    * implements is exactly what `.*?Closer` denotes. Case-insensitive matching uses Unicode
     * folding (regionMatches), the same folding RE2's `(?i)` applies. */
   def stripHtmlSubtrees(text: Column): Column =
     toCol(StripHtmlSubtreesExpr(expr(text)))

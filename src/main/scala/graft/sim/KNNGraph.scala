@@ -82,14 +82,16 @@ class KNNGraph(override val uid: String)
         val ctr = spark.sparkContext
           .broadcast(IVF.lloyd(sample, $(nLists), $(maxIter), $(seed)))
         val np = $(nProbe)
-        val cellsUdf = udf((v: Seq[Double], n: Int) =>
-          IVF.probeOrder(ctr.value, IVF.normalize(v.toArray), n))
+        // home cell = first probe (both break ties to the lowest index)
+        val homeUdf = udf((v: Seq[Double]) =>
+          IVF.nearest(ctr.value, IVF.normalize(v.toArray))._1)
+        val probesUdf = udf((v: Seq[Double]) =>
+          IVF.probeOrder(ctr.value, IVF.normalize(v.toArray), np))
+        val vec = col("__v").cast(ArrayType(DoubleType))
         (base.select(col("id"), col("__v").as("__cv"),
-          element_at(cellsUdf(col("__v").cast(ArrayType(DoubleType)),
-            lit(1)), 1).as("__cell")),
+          homeUdf(vec).as("__cell")),
           base.select(col("id").as("query_id"), col("__v").as("__qv"),
-            explode(cellsUdf(col("__v").cast(ArrayType(DoubleType)),
-              lit(np))).as("__cell")))
+            explode(probesUdf(vec)).as("__cell")))
       }
     corpus.join(probes, Seq("__cell"))
       .where(col("id") =!= col("query_id"))

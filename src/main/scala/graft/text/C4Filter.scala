@@ -79,8 +79,7 @@ class C4Filter(override val uid: String)
     val keepLine = (l: Column) => {
       val t = trim(l)
       val low = lower(l)
-      val words = org.apache.spark.sql.functions.filter(
-        split(t, "\\s+"), w => length(w) > 0)
+      val words = Words.words(l)
       t.rlike("[.!?\"]$") &&
         (size(words) >= $(minWordsPerLine)) &&
         !$(lineDropTerms).foldLeft(lit(false))((acc, term) =>
@@ -95,9 +94,7 @@ class C4Filter(override val uid: String)
       acc && !lowClean.contains(lit(s.toLowerCase)))
     val noBadWord =
       if ($(badWords).isEmpty) lit(true)
-      else !arrays_overlap(
-        org.apache.spark.sql.functions.filter(
-          split(lowClean, "\\s+"), w => length(w) > 0),
+      else !arrays_overlap(Words.words(lowClean),
         lit($(badWords).map(_.toLowerCase)))
     df.withColumn($(outputCol), cleaned)
       .filter((nSentences >= $(minSentences)) && noPageLiteral && noBadWord)

@@ -21,7 +21,8 @@ import org.apache.spark.sql.types._
   * via sort-limit, which Spark plans as `TakeOrderedAndProject` — each
   * partition keeps only its k best, the driver merges k×partitions
   * rows, and no global sort ever materializes. Deterministic: total
-  * order (count desc, gram asc).
+  * order (count desc, gram asc). Tokens keep the empty token
+  * ([[Words.tokens]]), as the oracle's do.
   */
 class FrequentNGrams(override val uid: String) extends Transformer
     with HasInputCol with graft.core.GraftWritable {
@@ -38,7 +39,7 @@ class FrequentNGrams(override val uid: String) extends Transformer
   override def transform(ds: Dataset[_]): DataFrame = {
     PipelineFunctions.explodeNGrams(
         ds.toDF()
-          .select(split(lower(trim(col(getInputCol))), "\\s+").as("__toks")),
+          .select(Words.tokens(lower(col(getInputCol))).as("__toks")),
         col("__toks"), $(n), "gram")
       .select("gram")
       .groupBy("gram").agg(count(lit(1)).as("cnt"))
@@ -183,9 +184,8 @@ object GopherSignals extends graft.core.GraftReadable[GopherSignals] {
   * replicates the original Spark expression EXACTLY (the oracle SQL
   * replays those semantics):
   *
-  *  - words = `split(text, "\\s+")` dropping empties (the leading-
-  *    whitespace artifact token); an alpha word contains an ASCII
-  *    letter (`rlike("[A-Za-z]")`).
+  *  - words = [[Words.words]] (empty tokens dropped); an alpha word
+  *    contains an ASCII letter (`rlike("[A-Za-z]")`).
   *  - symbols = '#' count + NON-OVERLAPPING left-to-right "..." count
   *    (the replace-length arithmetic) + '…' count.
   *  - lines = `split(text, "\n")`, SPACE-trimmed (Spark `trim` strips
@@ -215,14 +215,12 @@ private[text] object GopherStructural {
 
   def profile(text0: String, stops: Array[String]): S = {
     val text = if (text0 == null) "" else text0
-    profileOfWords(text, GopherRepetition.splitWords(text), stops)
+    profileOfWords(text, Words.words(text), stops)
   }
 
-  /** [[profile]] over an already-split word array (the
-    * [[GopherRepetition.splitWords]] tokenization, which produces the
-    * same whitespace-run tokens the former inline `\s+` split loop
-    * consumed) — lets [[GopherQualityFilter]]'s fused kernel split each
-    * document once for both signal families. */
+  /** [[profile]] over an already-split word array ([[Words.words]]) —
+    * lets [[GopherQualityFilter]]'s fused kernel split each document
+    * once for both signal families. */
   private[text] def profileOfWords(text: String, words: Array[String],
       stops: Array[String]): S = {
     // words

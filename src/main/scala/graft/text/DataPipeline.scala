@@ -98,21 +98,22 @@ object Decontamination {
 
   /** n-gram column added over a MATERIALIZED token column (wordNGrams
     * performance contract: an expression argument re-tokenizes per gram
-    * position). */
+    * position). Tokens keep the empty token ([[Words.tokens]]), as the
+    * oracle's do. */
   private def withGrams(df: DataFrame, textCol: String, n: Int,
       out: String): DataFrame =
-    df.withColumn("__dc_toks", split(trim(col(textCol)), "\\s+"))
+    df.withColumn("__dc_toks", Words.tokens(col(textCol)))
       .withColumn(out, PipelineFunctions.wordNGrams(col("__dc_toks"), n))
       .drop("__dc_toks")
 
   /** Exploded 64-bit gram hashes (`__gh`) plus `keep` columns — the
     * [[PipelineFunctions.explodeNGrams]] index-explode shape, so the
     * optimizer's inferred generator filter never re-runs the gram
-    * transform at the scan. */
+    * transform at the scan. Tokens as in [[withGrams]]. */
   private def explodedGramHashes(df: DataFrame, textCol: String, n: Int,
       keep: Seq[String]): DataFrame =
     PipelineFunctions.explodeNGrams(
-        df.withColumn("__dc_toks", split(trim(col(textCol)), "\\s+")),
+        df.withColumn("__dc_toks", Words.tokens(col(textCol))),
         col("__dc_toks"), n, "__dc_g")
       .select(keep.map(col) :+ xxhash64(col("__dc_g")).as("__gh"): _*)
 
@@ -155,7 +156,8 @@ object Decontamination {
     * this doc share ANY n-gram with the benchmark", this grades HOW MUCH:
     * distinct n-grams, distinct n-grams also in the benchmark, and the
     * q4-scaled overlap fraction — the form needed to set a defensible
-    * drop threshold (the flag is the fraction > 0 special case).
+    * drop threshold (the flag is the fraction > 0 special case); grams
+    * over [[Words.tokens]], empty token included, as in [[flag]].
     *
     * Scale shape: the benchmark's distinct grams are collected once
     * (bounded by `maxBenchmarkGrams` — eval benchmarks are MBs; the
@@ -169,7 +171,7 @@ object Decontamination {
       textCol: String, idCol: String, n: Int = 4,
       maxBenchmarkGrams: Long = 50L * 1000 * 1000): DataFrame = {
     val benchRows = PipelineFunctions.explodeNGrams(
-        benchmark.withColumn("__dc_toks", split(trim(col(textCol)), "\\s+")),
+        benchmark.withColumn("__dc_toks", Words.tokens(col(textCol))),
         col("__dc_toks"), n, "__g")
       .select(col("__g")).distinct()
     val cnt = benchRows.count()
@@ -245,7 +247,8 @@ object PIIRedactor extends graft.core.GraftReadable[PIIRedactor] {
   * O(g log g) for the sort) — so the whole profile is a narrow projection:
   * no explode, no groupBy, nothing leaves the partition. At 100 TB that is
   * the difference between a map-only scan and a corpus-wide shuffle of
-  * every n-gram.
+  * every n-gram. Words keep the empty token ([[Words.tokens]]), as the
+  * oracle's do.
   */
 class RepetitionProfiler(override val uid: String) extends Transformer
     with HasInputCol with graft.core.GraftWritable {
@@ -256,7 +259,7 @@ class RepetitionProfiler(override val uid: String) extends Transformer
     // aggregate lambda (element_at per step) — as a raw expression the
     // whole sort-the-ngrams subtree would re-run per step, O(len³)
     val prepped = ds.toDF()
-      .withColumn("__words", split(trim(col(getInputCol)), "\\s+"))
+      .withColumn("__words", Words.tokens(col(getInputCol)))
       .withColumn("__g2",
         array_sort(PipelineFunctions.wordNGrams(col("__words"), 2)))
     val words = col("__words")

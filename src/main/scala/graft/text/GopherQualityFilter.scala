@@ -118,7 +118,7 @@ class GopherQualityFilter(override val uid: String)
     val sw = $(stopWords)
     val fUdf = udf { t: String =>
       val text = if (t == null) "" else t
-      val words = GopherRepetition.splitWords(text)
+      val words = Words.words(text)
       GopherQualityFilter.Fused(
         GopherRepetition.profileOfWords(text, words),
         GopherStructural.profileOfWords(text, words, sw))

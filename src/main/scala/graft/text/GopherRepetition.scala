@@ -66,10 +66,10 @@ import graft.core._
   * 12 (winnowing sweep: 16.7x allocation/GC tax when the operator IS
   * the kernel — SCALING.md round-12 tranche 3).
   *
-  * Tokenization spec (shared with the SQL oracle): words = whitespace
-  * runs split on `\s+` after trim, empties dropped — the RE2∩Java
-  * regex subset, same as [[HtmlText]]. Character counts are Unicode
-  * codepoints (not UTF-16 units), so they agree with DuckDB `len()`.
+  * Tokenization spec (shared with the SQL oracle): words =
+  * [[Words.words]] — whitespace runs split on `\s+`, empties dropped,
+  * no Java trim. Character counts are Unicode codepoints (not UTF-16
+  * units), so they agree with DuckDB `len()`.
   */
 class GopherRepetition(override val uid: String)
     extends Transformer with HasInputCol with GraftWritable {
@@ -177,12 +177,7 @@ object GopherRepetition extends GraftReadable[GopherRepetition] {
 
   def profile(text: String): Profile =
     if (text == null) Zero
-    else profileOfWords(text, splitWords(text))
-
-  /** whitespace-run tokenization, shared with [[GopherStructural]] so
-    * [[GopherQualityFilter]]'s fused kernel splits each document ONCE */
-  private[text] def splitWords(text: String): Array[String] =
-    text.trim.split("\\s+").filter(_.nonEmpty)
+    else profileOfWords(text, Words.words(text))
 
   private[text] def profileOfWords(
       text: String, words: Array[String]): Profile = {

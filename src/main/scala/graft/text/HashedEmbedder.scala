@@ -73,8 +73,7 @@ class HashedEmbedder(override val uid: String)
     val embUdf = udf { text: String =>
       if (text == null) null
       else {
-        val toks = HashedEmbedder.simpleLower(text.trim)
-          .split("\\s+").filter(_.nonEmpty)
+        val toks = HashedEmbedder.tokens(text)
         val tf = new java.util.HashMap[String, Int](toks.length * 2)
         toks.foreach(t => tf.put(t, tf.getOrDefault(t, 0) + 1))
         val acc = new Array[Double](d)
@@ -131,6 +130,11 @@ class HashedEmbedder(override val uid: String)
 }
 
 object HashedEmbedder extends GraftReadable[HashedEmbedder] {
+  /** The embedder tokenization, shared with [[TrainedEmbedder]] and
+    * [[SoftDeduplicator]]; null text has no tokens. */
+  private[text] def tokens(text: String): Array[String] =
+    if (text == null) Array.empty[String] else Words.words(simpleLower(text))
+
   /** Per-codepoint SIMPLE lowercase (Character.toLowerCase) — the
     * mapping SQL `lower()` applies, so the md5 sign bits the SQL oracle
     * replays stay byte-identical on non-ASCII input. JVM

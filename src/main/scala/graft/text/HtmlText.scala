@@ -105,10 +105,10 @@ object HtmlTextExtractor extends GraftReadable[HtmlTextExtractor] {
     * position and rescans to EOF on each failure — quadratic on pages
     * full of unclosed `<!--`/`<script`, a routine crawl shape under
     * crawler length caps (92-150 s measured for ONE 300 KB adversarial
-    * page, in both the non-greedy and possessive formulations;
-    * graft.tools.HtmlProbe). RE2, the oracle engine, simulates all
-    * starts in one automaton pass, so the oracle keeps the published
-    * spec form and stays linear. */
+    * page, in both the non-greedy and possessive formulations; numbers
+    * as recorded; HtmlTextSuite asserts the bound). RE2, the oracle
+    * engine, simulates all starts in one automaton pass, so the oracle
+    * keeps the published spec form and stays linear. */
   def extract(c: Column, numericEntities: Boolean = false): Column = {
     val rest = steps.drop(5)
     // the numeric decode slots between the entity literals and the

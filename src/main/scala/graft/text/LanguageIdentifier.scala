@@ -259,8 +259,6 @@ object LanguageIdentifierModel
     df.withColumn("__li_features", featUdf(col(inputCol)))
   }
 
-  private val Ws = java.util.regex.Pattern.compile("\\s+")
-
   private[text] def sparkLower(s: String): String = {
     var i = 0; var ascii = true
     while (i < s.length && ascii) {
@@ -300,7 +298,7 @@ object LanguageIdentifierModel
       // text0.toLowerCase would make ASCII featurization locale-
       // dependent (tr_TR lowers 'I' to dotless ı) and break saved-model
       // index compatibility; \s+ is the same regex engine either way
-      val canon = Ws.matcher(sparkLower(text0)).replaceAll(" ")
+      val canon = Words.collapse(sparkLower(text0))
       val cps = canon.codePoints.toArray
       var n = 1
       while (n <= maxGram) {

@@ -89,11 +89,10 @@ class UnigramLM(override val uid: String) extends Estimator[UnigramLMModel]
 }
 
 object UnigramLM extends graft.core.GraftReadable[UnigramLM] {
-  /** Shared corpus tokenization: lowercase, whitespace split, empties
-    * dropped (a whitespace-only document tokenizes to zero tokens, not
-    * one empty token). */
-  def tokens(c: Column): Column =
-    filter(split(lower(trim(c)), "\\s+"), t => length(t) > 0)
+  /** Shared corpus tokenization: [[Words.words]] of the lowercased text
+    * (a whitespace-only document tokenizes to zero tokens, not one empty
+    * token). */
+  def tokens(c: Column): Column = Words.words(lower(c))
 
   /** Model types over a MATERIALIZED token-array column: the tokens
     * themselves at n=1, space-joined word n-grams otherwise. Callers

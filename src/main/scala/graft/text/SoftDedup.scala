@@ -27,9 +27,9 @@ import org.apache.spark.sql.types._
   * appears in ~150 documents weighs 150^-lambda. Documents with fewer
   * than n tokens carry no n-gram evidence and weigh 1.0.
   *
-  * Tokenization is the corpus-stats family convention: trim, lowercase
-  * (per-codepoint simple mapping — [[HashedEmbedder.simpleLower]]),
-  * split on whitespace runs. Both modes run it through ONE typed kernel
+  * Tokenization is the corpus-stats family convention,
+  * [[HashedEmbedder.tokens]]: per-codepoint simple lowercase, then
+  * [[Words.words]]. Both modes run it through ONE typed kernel
   * ([[SoftDeduplicator.gramHashes]]) that emits distinct-gram xxhash64
   * keys directly, so gram strings never enter the plan: the column-HOF
   * formulation this replaced was interpreted (higher-order functions
@@ -183,19 +183,17 @@ class SoftDeduplicator(override val uid: String) extends Transformer
 }
 
 object SoftDeduplicator extends graft.core.GraftReadable[SoftDeduplicator] {
-  /** One-pass gram kernel: trim → simple per-codepoint lowercase (the
-    * [[HashedEmbedder.simpleLower]] convention — matches engine `lower()`
-    * on the simple mapping, round-15 advice) → `\s+` split → word
-    * n-grams, deduplicated BY STRING (the `array_distinct` semantics the
-    * oracle replays; a 64-bit collision between two distinct grams in
+  /** One-pass gram kernel: [[HashedEmbedder.tokens]] (simple
+    * per-codepoint lowercase — matches engine `lower()` on the simple
+    * mapping, round-15 advice — then [[Words.words]]) → word n-grams,
+    * deduplicated BY STRING (the `array_distinct` semantics the oracle
+    * replays; a 64-bit collision between two distinct grams in
     * one doc therefore still contributes two key rows, exactly like the
     * previous post-distinct `xxhash64` column) → xxhash64 keys, sorted
     * for a deterministic array. Null text and sub-n docs return an empty
     * array (no gram evidence → weight 1.0 downstream). */
   private[text] def gramHashes(text: String, n: Int): Array[Long] = {
-    if (text == null) return Array.emptyLongArray
-    val words = HashedEmbedder.simpleLower(text.trim)
-      .split("\\s+").filter(_.nonEmpty)
+    val words = HashedEmbedder.tokens(text)
     if (words.length < n) return Array.emptyLongArray
     val seen = new java.util.HashSet[String](words.length * 2)
     val out = new Array[Long](words.length - n + 1)

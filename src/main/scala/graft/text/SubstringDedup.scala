@@ -49,8 +49,9 @@ import org.apache.spark.sql.types._
   * correction. The DuckDB oracle replays with exact window text, so the
   * gate would catch any collision at test scale.
   *
-  * Tokenization: whitespace tokens of `trim(text)` — exact bytes, no
-  * lowercasing (this is EXACT dedup; near-dup canonicalization lives in
+  * Tokenization: [[Words.words]], null text as none (the finishing UDF
+  * never sees null) — exact bytes, no lowercasing (this is EXACT dedup;
+  * near-dup canonicalization lives in
   * [[graft.dedup.DedupFunctions.canonical]]). The cleaned text is the
   * kept tokens re-joined with single spaces, so untouched documents come
   * back whitespace-normalized — stated contract, same as the oracle.
@@ -94,7 +95,7 @@ class ExactSubstringDeduplicator(override val uid: String)
     val tokCol = graft.core.DatasetExtensions.findUnusedColumnName("__esd_toks", df)
     val toks = col(tokCol)
     val dfT = df.withColumn(tokCol,
-      ExactSubstringDeduplicator.tokens(col(getInputCol)))
+      Words.words(coalesce(col(getInputCol), lit(""))))
     // (id, window start 0-based, 64-bit window hash); docs shorter than
     // k emit nothing (sequence() would count DOWN for a negative span —
     // guard with `when`, the wordNGrams precedent). INDEX explode with
@@ -154,11 +155,6 @@ class ExactSubstringDeduplicator(override val uid: String)
 
 object ExactSubstringDeduplicator
     extends graft.core.GraftReadable[ExactSubstringDeduplicator] {
-
-  /** Whitespace tokens of the EXACT text (trimmed, empties dropped;
-    * null text = zero tokens, so the finishing UDF never sees null). */
-  private[text] def tokens(c: org.apache.spark.sql.Column) =
-    filter(split(trim(coalesce(c, lit(""))), "\\s+"), t => length(t) > 0)
 
   /** Per-doc finishing pass: merge sorted match starts into maximal
     * spans ([s, s+k) windows; touching or overlapping spans coalesce)

@@ -18,17 +18,18 @@ import org.apache.spark.sql.types._
   */
 object TextFunctions {
 
-  /** Whitespace token count. */
+  /** Size of [[Words.tokens]], whose empty token the oracle counts too:
+    * `""` counts 1 and a leading tab adds one. */
   def tokenCount(c: Column): Column =
-    when(c.isNull, lit(0)).otherwise(size(split(trim(c), "\\s+")))
+    when(c.isNull, lit(0)).otherwise(size(Words.tokens(c)))
 
   /** BPE-ish subword token estimate: words + punctuation marks, long words
     * counted as ceil(len/4) subword pieces (public rule of thumb ~4
-    * chars/token for English-like text).
+    * chars/token for English-like text), over [[Words.tokens]].
     */
   def tokenEstimate(c: Column): Column =
     aggregate(
-      transform(split(trim(c), "\\s+"),
+      transform(Words.tokens(c),
         w => ceil(length(w).cast("double") / 4.0).cast("long")),
       lit(0L), (acc, x) => acc + x)
 
@@ -42,22 +43,24 @@ object TextFunctions {
   def punctCount(c: Column): Column =
     length(regexp_replace(c, "[^.,;:!?]", ""))
 
-  /** Count of whitespace tokens that hit the stopword list. */
+  /** Count of [[Words.tokens]] of the lowercased text on the stopword
+    * list. */
   def stopwordHits(c: Column, stopwords: Seq[String] = defaultStopwords): Column =
-    size(filter(split(lower(trim(c)), "\\s+"),
+    size(filter(Words.tokens(lower(c)),
       t => t.isin(stopwords.map(lit): _*)))
 
   /** Un-rounded quality composite in [0,1] built from the integer counts
     * above in one fixed operation order, so any engine evaluating the same
     * formula over the same integers produces the bit-identical IEEE double.
     * Components: alpha ratio, punctuation density, stopword hit ratio,
-    * mean word length plausibility.
+    * mean word length plausibility. The token count keeps the empty
+    * token ([[Words.tokens]]), as the oracle's does.
     */
   private def qualityRaw(c: Column, stopwords: Seq[String]): Column = {
     val len = length(c).cast("double")
     val alphaRatio = alphaCount(c).cast("double") / greatest(len, lit(1.0))
     val punctRatio = punctCount(c).cast("double") / greatest(len, lit(1.0))
-    val nToks = size(split(lower(trim(c)), "\\s+")).cast("double")
+    val nToks = size(Words.tokens(lower(c))).cast("double")
     val stopRatio = stopwordHits(c, stopwords).cast("double") / greatest(nToks, lit(1.0))
     val meanWordLen = len / greatest(nToks, lit(1.0))
     val wordLenOk = when(meanWordLen.between(3.0, 10.0), 1.0).otherwise(0.5)
@@ -115,12 +118,10 @@ object TextFunctions {
     array_max(pairs).getField("lang")
   }
 
-  /** Rolling-hash document fingerprint: 64-bit polynomial hash of the
-    * whitespace-normalized, lowercased text. Deterministic, codegen'd
-    * (xxhash64 of the canonical form).
-    */
+  /** Document fingerprint: xxhash64 of the dedup canonical key
+    * ([[graft.dedup.DedupFunctions.canonical]]). Codegen'd. */
   def fingerprint(c: Column): Column =
-    xxhash64(lower(regexp_replace(trim(c), "\\s+", " ")))
+    xxhash64(graft.dedup.DedupFunctions.canonical(c))
 }
 
 /** Stage wrapper computing all document statistics in one projection:
@@ -174,6 +175,7 @@ object DocumentAnalyzer extends graft.core.GraftReadable[DocumentAnalyzer]
   * tokens). Built entirely from native array expressions (split /
   * sequence / slice / array_join) so chunking is a narrow codegen'd
   * projection — no UDF, no shuffle, safe to run over 100 TB of text.
+  * Tokens keep the empty token ([[Words.tokens]]), as the oracle's do.
   * (Beyond the reference's surface; standard public construction.)
   */
 class TokenChunker(override val uid: String) extends Transformer
@@ -193,7 +195,7 @@ class TokenChunker(override val uid: String) extends Transformer
 
   override def transform(ds: Dataset[_]): DataFrame = {
     val n = $(chunkTokens); val s = $(strideTokens)
-    val toks = split(trim(col(getInputCol)), "\\s+")
+    val toks = Words.tokens(col(getInputCol))
     val len = size(toks)
     // integer ceil((len - n)+ / s) + 1 chunk starts at 0, s, 2s, ...
     // (floor of an exact-integer double division — mirrors in SQL)

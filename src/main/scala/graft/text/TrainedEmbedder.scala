@@ -41,8 +41,8 @@ import org.apache.spark.sql.types._
   *    broadcast is vocab × dim floats, bounded by the sample's distinct
   *    tokens and `maxVocab`.
   *
-  * Tokenization matches [[HashedEmbedder]] (trim, per-codepoint simple
-  * lowercase, `\s+` split) so the two embedders are drop-in swaps.
+  * Tokenization is [[HashedEmbedder.tokens]], so the two embedders are
+  * drop-in swaps.
   * OOV tokens are skipped; a doc with no in-vocabulary token embeds as
   * the zero vector (the HashedEmbedder empty-text convention); null
   * text embeds null.
@@ -169,7 +169,7 @@ class TrainedEmbedder(override val uid: String)
   override def fit(ds: Dataset[_]): TrainedEmbedderModel = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val tokUdf = udf(TrainedEmbedder.tokens _)
+    val tokUdf = udf((t: String) => HashedEmbedder.tokens(t).toSeq)
     // bounded deterministic draw (the LanguageIdentifier convention):
     // md5 of the text orders the sample, ties are identical docs, so
     // the drawn MULTISET is unique under any partitioning
@@ -274,13 +274,6 @@ class TrainedEmbedder(override val uid: String)
 }
 
 object TrainedEmbedder extends GraftReadable[TrainedEmbedder] {
-  /** The [[HashedEmbedder]] tokenization: trim, per-codepoint simple
-    * lowercase, whitespace split, empties dropped. */
-  private[text] def tokens(text: String): Seq[String] =
-    if (text == null) Seq.empty
-    else HashedEmbedder.simpleLower(text.trim)
-      .split("\\s+").filter(_.nonEmpty).toSeq
-
   /** fastText's boundary-marked character n-grams: `<where>` at 3..6 →
     * `<wh`, `whe`, …, `here>`, `<where`, `where>` (the multiset — a
     * gram recurring inside one word counts each occurrence, matching
@@ -401,7 +394,7 @@ class TrainedEmbedderModel(override val uid: String)
     val embUdf = udf { text: String =>
       if (text == null) null
       else {
-        val toks = TrainedEmbedder.tokens(text)
+        val toks = HashedEmbedder.tokens(text)
         val acc = new Array[Double](d)
         var n = 0
         toks.foreach { t =>

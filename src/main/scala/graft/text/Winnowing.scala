@@ -111,12 +111,14 @@ object Winnowing {
     0
   }
 
-  /** Canonical text (lowercase, whitespace runs → single spaces — the
-    * corpus-wide normalization, so fingerprints survive reflow/case
+  /** Canonical text (the oracle's `trim(regexp_replace(lower(text),
+    * '\s+', ' ', 'g'))`: per-codepoint lowercase, whitespace runs →
+    * single spaces, space-only trim — so fingerprints survive reflow/case
     * edits) then the paper's algorithm in one pass. */
   def fingerprints(text: String, k: Int, w: Int): Seq[Fingerprint] = {
     if (text == null) return Seq.empty
-    val t = text.toLowerCase.replaceAll("\\s+", " ").trim
+    val t = GopherStructural.spaceTrim(
+      Words.collapse(HashedEmbedder.simpleLower(text)))
     // code points, not UTF-16 units: gram positions must agree with the
     // SQL oracle's substr() and Spark's substring(), both codepoint-based
     val cps = t.codePoints().toArray

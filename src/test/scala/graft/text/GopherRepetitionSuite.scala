@@ -30,6 +30,15 @@ class GopherRepetitionSuite extends TestBase {
     assert(p.nParas == 1 && p.dupParaQ4 == 0)
   }
 
+  test("words follow the oracle's space-only trim: C0 control ends stay " +
+    "words") {
+    // DuckDB 1.0.0: len(list_filter(string_split_regex(
+    //   trim(chr(1)||' foo '||chr(1)), '\s+'), x -> x <> '')) = 3;
+    // Java String.trim would strip both \u0001 and count one word
+    assert(GopherRepetition.profile("\u0001 foo \u0001").nWords == 3)
+    assert(GopherRepetition.profile("\ta\r\nb ").nWords == 2)
+  }
+
   test("duplicate fractions exclude first occurrences (datatrove rule)") {
     // 13 document chars. lines: x, y, x, P1, P1 -> groups x:2, P1:2,
     // exclude-first dup count = 2 of 5; dup chars = 1 + 2 = 3 of the
@@ -119,7 +128,10 @@ class GopherRepetitionSuite extends TestBase {
       GopherRepetitionSuiteHelper.q4(num, den)
     def naive(text: String, n: Int): (Long, Long) = {
       val docChars = cpLen(text)
-      val words = text.trim.split("\\s+").filter(_.nonEmpty)
+      // the oracle's words: DuckDB trims spaces only, and once empty
+      // tokens drop no trim matters (Java trim would eat a trailing
+      // "\u0001" off the vocab's "a\u0001")
+      val words = text.split("\\s+").filter(_.nonEmpty)
       val nW = words.length
       val m = nW - n + 1
       if (m < 1 || docChars == 0) return (0L, 0L)

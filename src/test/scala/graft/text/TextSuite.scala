@@ -50,6 +50,25 @@ class TextSuite extends TestBase {
     val fp2 = Seq("hello world   foo").toDF("t")
       .select(TextFunctions.fingerprint(col("t"))).as[Long].head()
     assert(fp2 == fps(0))
+
+    // the shared SQL word rules on edge inputs; expected values are
+    // literals printed by DuckDB 1.0.0 for the oracle forms
+    // string_split_regex(trim(t), '\s+') (tokens), its list_filter
+    // x <> '' (words) and lower(regexp_replace(trim(t), '\s+', ' ', 'g'))
+    // (canonical); tokenCount is len(tokens), and 0 for null text
+    val edge = Seq[String]("", "   ", "\ta b", "a\r\nb",
+      "\u0001 foo \u0001", null).toDF("t")
+    val got = edge.select(Words.tokens(col("t")), Words.words(col("t")),
+        DedupFunctions.canonical(col("t")), TextFunctions.tokenCount(col("t")))
+      .as[(Seq[String], Seq[String], String, Int)].collect().toSeq
+    assert(got == Seq(
+      (Seq(""), Seq(), "", 1),
+      (Seq(""), Seq(), "", 1),
+      (Seq("", "a", "b"), Seq("a", "b"), " a b", 3),
+      (Seq("a", "b"), Seq("a", "b"), "a b", 2),
+      (Seq("\u0001", "foo", "\u0001"), Seq("\u0001", "foo", "\u0001"),
+        "\u0001 foo \u0001", 3),
+      (null, null, null, 0)))
   }
 
   test("languageId picks the stopword-matching language") {

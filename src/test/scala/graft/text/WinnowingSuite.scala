@@ -6,12 +6,25 @@ import org.apache.spark.sql.functions._
 class WinnowingSuite extends TestBase {
   import spark.implicits._
 
-  /** Straight-from-the-paper reference: md5-hex hashes of char k-grams,
-    * slide a w-window, keep each window's min (rightmost on ties).
-    * Grams count CODEPOINTS (the Spark substring / DuckDB substr unit),
-    * not UTF-16 chars. */
-  private def reference(text: String, k: Int, w: Int): Set[(Int, String)] = {
-    val t = text.toLowerCase.replaceAll("\\s+", " ").trim
+  /** The oracle's canonical text,
+    * `trim(regexp_replace(lower(text), '\s+', ' ', 'g'))`, written out
+    * independently: DuckDB's `lower` maps each codepoint on its own and
+    * its `trim` strips spaces only. */
+  private def oracleCanon(text: String): String = {
+    val low = text.codePoints().map(Character.toLowerCase(_: Int))
+      .toArray
+    new String(low, 0, low.length).replaceAll("\\s+", " ")
+      .dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+  }
+
+  private def reference(text: String, k: Int, w: Int): Set[(Int, String)] =
+    grams(oracleCanon(text), k, w)
+
+  /** Straight-from-the-paper reference over canonical text `t`: md5-hex
+    * hashes of char k-grams, slide a w-window, keep each window's min
+    * (rightmost on ties). Grams count CODEPOINTS (the Spark substring /
+    * DuckDB substr unit), not UTF-16 chars. */
+  private def grams(t: String, k: Int, w: Int): Set[(Int, String)] = {
     val cps = t.codePoints().toArray
     val m = cps.length - k + 1
     if (m < 1) return Set.empty
@@ -53,6 +66,23 @@ class WinnowingSuite extends TestBase {
     for (t <- texts; (k, w) <- Seq((9, 4), (5, 3), (3, 2), (4, 8)))
       assert(run(t, k, w) == reference(t, k, w),
         s"mismatch on '$t' k=$k w=$w")
+  }
+
+  test("canonical text is the oracle's: per-codepoint lowercase, " +
+    "space-only trim") {
+    // expected canonical strings are literals printed by DuckDB 1.0.0
+    // for trim(regexp_replace(lower(t), '\s+', ' ', 'g')). Java's
+    // toLowerCase maps 'İ' to two characters and a final 'Σ' to 'ς',
+    // and Java's trim would strip the \u0001 ends
+    val cases = Seq(
+      "İx ΟΔΟΣ  ab" -> "ix οδοσ ab",
+      "\u0001 Foo\tBAR \u0001" -> "\u0001 foo bar \u0001",
+      "ΣΑΣ İİ  end" -> "σασ ii end")
+    for ((t, canon) <- cases) {
+      assert(oracleCanon(t) == canon)
+      for ((k, w) <- Seq((3, 2), (4, 3)))
+        assert(run(t, k, w) == grams(canon, k, w), s"mismatch on '$t'")
+    }
   }
 
   test("pseudo-random texts agree with the reference") {
