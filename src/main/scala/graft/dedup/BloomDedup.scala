@@ -58,7 +58,8 @@ import org.apache.spark.sql.types._
   * false-positive term that the bit budget cannot buy down, invisible
   * at MB buckets but fatal at small m (at the sf0.001 fixture's
   * 512-bit buckets the 40-bit/doc "5e-9" configuration measured TWO
-  * false positives in 125 probes; graft.tools.BloomProbe). The chain
+  * false positives in 125 probes; numbers as recorded; BloomDedupSuite
+  * asserts the margin). The chain
   * costs k multiplications per doc and makes the FPR formula hold at
   * every m.
   */

@@ -138,10 +138,11 @@ object GraphFunctions {
 }
 
 /** Near-duplicate CLUSTER assignment: the MinHash+LSH candidate/verify
-  * machinery of [[MinHashDeduplicator]] (same params, same semantics)
-  * followed by [[GraphFunctions.connectedComponents]] over the verified
-  * pairs. Adds `outputCol` (default `cluster_id`) = the smallest id among
-  * all documents transitively connected by verified Jaccard ≥ threshold;
+  * body of [[MinHashDeduplicator]] ([[MinHashLshParams.verifiedPairs]]:
+  * same params, exact shingle Jaccard ≥ threshold) followed by
+  * [[GraphFunctions.connectedComponents]] over the verified pairs. Adds
+  * `outputCol` (default `cluster_id`) = the smallest id among all
+  * documents transitively connected by verified Jaccard ≥ threshold;
   * documents with no verified near-dup keep their own id.
   *
   * Where [[MinHashDeduplicator]] answers "drop this doc?", this operator
@@ -150,60 +151,23 @@ object GraphFunctions {
   * training-data pipeline.
   */
 class DuplicateClusterer(override val uid: String) extends Transformer
-    with HasInputCol with HasOutputCol with graft.core.GraftWritable {
+    with HasInputCol with HasOutputCol with MinHashLshParams
+    with graft.core.GraftWritable {
   def this() = this(Identifiable.randomUID("DuplicateClusterer"))
   setDefault(outputCol -> "cluster_id")
 
   final val idCol = new Param[String](this, "idCol", "unique row id column")
   def setIdCol(v: String): this.type = set(idCol, v)
-  final val shingleSize = new IntParam(this, "shingleSize", "word shingle k")
-  setDefault(shingleSize -> 3)
-  def setShingleSize(v: Int): this.type = set(shingleSize, v)
-  final val numHashes = new IntParam(this, "numHashes", "signature length")
-  setDefault(numHashes -> 128)
-  def setNumHashes(v: Int): this.type = set(numHashes, v)
-  final val bands = new IntParam(this, "bands", "LSH bands")
-  setDefault(bands -> 32)
-  def setBands(v: Int): this.type = set(bands, v)
-  final val threshold = new DoubleParam(this, "threshold", "Jaccard cutoff")
-  setDefault(threshold -> 0.8)
-  def setThreshold(v: Double): this.type = set(threshold, v)
-  final val maxBucketSize = new IntParam(this, "maxBucketSize",
-    "per-bucket candidate cap (skew guard)")
-  setDefault(maxBucketSize -> 1000)
-  def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
   final val maxIter = new IntParam(this, "maxIter",
     "connected-components round bound", ParamValidators.gt(0))
   setDefault(maxIter -> 25)
   def setMaxIter(v: Int): this.type = set(maxIter, v)
-  final val restrictVerify = new BooleanParam(this, "restrictVerify",
-    "semi-join the shingle payload down to candidate ids before the " +
-      "verification joins — set true on SPARSE-dup corpora (candidates " +
-      "≪ documents); measured slower when most documents are candidates")
-  setDefault(restrictVerify -> false)
-  def setRestrictVerify(v: Boolean): this.type = set(restrictVerify, v)
 
   override def transform(ds: Dataset[_]): DataFrame = {
-    import DedupFunctions._
+    transformSchema(ds.schema)
     val df = ds.toDF()
-    // withColumn would silently overwrite a pre-existing column of this
-    // name (SequencePacker guards the analogous case); fail fast instead
-    require(!df.columns.contains(getOutputCol),
-      s"input already has a column named '$getOutputCol'; set outputCol " +
-        "to an unused name")
     val id = col($(idCol))
-    val r = $(numHashes) / $(bands)
-    val buckets = df
-      .withColumn("__sig", minHashSignature(
-        hashedShingles(col(getInputCol), $(shingleSize)), $(numHashes)))
-      .select(id.cast("long").as("__id"),
-        explode(bandHashes(col("__sig"), $(bands), r)).as("__key"))
-    val pairs = candidatePairs(buckets, $(maxBucketSize), s"${uid}_dropped")
-    val sh = df.select(id.cast("long").as("__id"),
-      hashedShingles(col(getInputCol), $(shingleSize)).as("__sh"))
-    val verified = joinCandidatePayload(pairs, sh, "__sh", $(restrictVerify))
-      .filter(jaccard(col("__sh_l"), col("__sh_r")) >= $(threshold))
-      .select(col("__id_l"), col("__id_r"))
+    val verified = verifiedPairs(df, id, col(getInputCol))
     // collision-proof label columns: the input frame may legitimately
     // carry a column named `component` or `id`
     val ccId = graft.core.DatasetExtensions.findUnusedColumnName("__cc_id", df)
@@ -217,8 +181,16 @@ class DuplicateClusterer(override val uid: String) extends Transformer
         coalesce(col(ccComp), id.cast("long")))
       .drop(ccId, ccComp)
   }
-  override def transformSchema(schema: StructType): StructType =
+  override def transformSchema(schema: StructType): StructType = {
+    SchemaChecks.requireCols(schema,
+      "idCol" -> $(idCol), "inputCol" -> getInputCol)
+    // withColumn would silently overwrite a pre-existing column of this
+    // name (SequencePacker guards the analogous case); fail fast instead
+    require(!schema.fieldNames.contains(getOutputCol),
+      s"input already has a column named '$getOutputCol'; set outputCol " +
+        "to an unused name")
     StructType(schema :+ StructField(getOutputCol, LongType))
+  }
   override def copy(extra: ParamMap): DuplicateClusterer = defaultCopy(extra)
 }
 object DuplicateClusterer extends graft.core.GraftReadable[DuplicateClusterer]

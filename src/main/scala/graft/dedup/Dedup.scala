@@ -202,53 +202,41 @@ object DedupFunctions {
       .select(col("__key"), explode(col("__b.ids")).as("__cid"))
   }
 
-  /** Verification payload join, both shapes. `restrict = false` (the
-    * measured default): direct two-sided equi-join of the payload onto the
-    * pair frame — within one action Catalyst's ReuseExchange computes and
-    * shuffles the payload subplan once, and on a dup-dense corpus (where
-    * most documents ARE candidates) nothing better exists. `restrict =
-    * true`: the payload is first semi-joined down to candidate ids, so the
-    * wide payload of non-candidate rows never enters the l/r exchanges —
-    * the right shape when verified candidates are a SMALL fraction of the
-    * corpus and the id set broadcasts.
-    *
-    * Measured motivation for the default (SCALING.md round 10): on the
-    * dup-dense ScaleGen 100x corpus the candidate id set (30M) was too
-    * big to broadcast, the sort-merge semi became a THIRD full-payload
-    * shuffle, and walls went 35.6→49.4 s (minhash) / 41.5→71.6 s (ngram)
-    * with zero shuffle saved. Restriction only helps when it restricts.
+  /** Verification payload join: a direct two-sided equi-join of the
+    * payload onto the pair frame. Within one action Catalyst's
+    * ReuseExchange computes and shuffles the payload subplan once, and
+    * on a dup-dense corpus (where most documents ARE candidates) nothing
+    * better exists. A semi-join of the payload down to candidate ids
+    * first (the "restricted" shape) was measured and removed
+    * (SCALING.md round 10): on the dup-dense ScaleGen 100x corpus the
+    * candidate id set (30M) was too big to broadcast, the sort-merge
+    * semi became a THIRD full-payload shuffle, and walls went
+    * 35.6→49.4 s (minhash) / 41.5→71.6 s (ngram) with zero shuffle
+    * saved; its gain on sparse-dup corpora was never measured.
     *
     * `payload` must have an `__id` column plus `payloadCol`; the result
     * has the pair columns plus `<payloadCol>_l` / `<payloadCol>_r`.
     */
   private[graft] def joinCandidatePayload(pairs: DataFrame, payload: DataFrame,
-      payloadCol: String, restrict: Boolean): DataFrame = {
-    val side = if (restrict) {
-      // no distinct on the id set: left_semi dedups inherently, and a
-      // distinct would only add an exchange
-      val candIds = pairs.select(col("__id_l").as("__id"))
-        .union(pairs.select(col("__id_r").as("__id")))
-      payload.join(candIds, Seq("__id"), "left_semi")
-    } else payload
+      payloadCol: String): DataFrame =
     pairs
-      .join(side.select(col("__id").as("__id_l"),
+      .join(payload.select(col("__id").as("__id_l"),
         col(payloadCol).as(s"${payloadCol}_l")), Seq("__id_l"))
-      .join(side.select(col("__id").as("__id_r"),
+      .join(payload.select(col("__id").as("__id_r"),
         col(payloadCol).as(s"${payloadCol}_r")), Seq("__id_r"))
-  }
 
-  /** Shared LAZY tail of every near-dup transform: payload join (shape
-    * per `restrict`, see [[joinCandidatePayload]]), exact verification
-    * with `keep`, duplicate-id projection. Everything stays one
-    * declarative plan so the caller's single action lets Catalyst reuse
-    * the payload exchange across the l/r joins — an eager variant
-    * (persist pairs + materialize ids before returning) was measured 23%
-    * slower at 10x (tasks 26→346, exchange reuse lost; SCALING.md
-    * round 10) and was rejected.
+  /** Shared LAZY tail of the pair-verifying near-dup transforms: payload
+    * join ([[joinCandidatePayload]]), verification with `keep`,
+    * duplicate-id projection. Everything stays one declarative plan so
+    * the caller's single action lets Catalyst reuse the payload exchange
+    * across the l/r joins — an eager variant (persist pairs +
+    * materialize ids before returning) was measured 23% slower at 10x
+    * (tasks 26→346, exchange reuse lost; SCALING.md round 10) and was
+    * rejected.
     */
   private[graft] def dupIdsOf(pairs: DataFrame, payload: DataFrame,
-      payloadCol: String, keep: Column, restrict: Boolean): DataFrame =
-    joinCandidatePayload(pairs, payload, payloadCol, restrict)
+      payloadCol: String, keep: Column): DataFrame =
+    joinCandidatePayload(pairs, payload, payloadCol)
       .filter(keep)
       .select(col("__id_r").as("__dup_id")).distinct()
 
@@ -285,13 +273,11 @@ object DedupFunctions {
     val keyed = withFp.select(id.cast("long").as("__id"),
       explode(array(keyCols: _*)).as("__key"))
     val pairs = candidatePairs(keyed, maxBucket, metricName)
-    // verification joins the (tiny, 16-byte) fingerprints back by id —
-    // the payload is already narrow, restriction has nothing to save
+    // verification joins the (tiny, 16-byte) fingerprints back by id
     val fp = withFp.select(id.cast("long").as("__id"),
       col(fpCol).as("__fp"))
     dupIdsOf(pairs, fp, "__fp",
-      hamming64(col("__fp_l"), col("__fp_r")) <= maxHamming,
-      restrict = false)
+      hamming64(col("__fp_l"), col("__fp_r")) <= maxHamming)
   }
 }
 
@@ -352,66 +338,100 @@ class ExactDeduplicator(override val uid: String) extends Transformer
 object ExactDeduplicator extends graft.core.GraftReadable[ExactDeduplicator]
 
 
+/** The MinHash LSH shape of the near-dup family, declared once for
+  * [[MinHashDeduplicator]], [[DuplicateClusterer]],
+  * [[IncrementalMinHashDeduplicator]] and
+  * [[graft.streaming.StreamingMinHashDeduplicator]]: the five params,
+  * the one rows-per-band rule, and the one signature and band-key
+  * composition. Each face's verify rule (exact shingle Jaccard or
+  * signature agreement) is its own and stays in its scaladoc; `idCol`
+  * stays per face (the streaming face has none). */
+private[graft] trait MinHashLshParams extends Params {
+  final val shingleSize = new IntParam(this, "shingleSize", "word shingle k",
+    ParamValidators.gt(0))
+  setDefault(shingleSize -> 3)
+  def setShingleSize(v: Int): this.type = set(shingleSize, v)
+  final val numHashes = new IntParam(this, "numHashes", "signature length",
+    ParamValidators.gt(0))
+  setDefault(numHashes -> 128)
+  def setNumHashes(v: Int): this.type = set(numHashes, v)
+  final val bands = new IntParam(this, "bands", "LSH bands",
+    ParamValidators.gt(0))
+  setDefault(bands -> 32)
+  def setBands(v: Int): this.type = set(bands, v)
+  final val threshold = new DoubleParam(this, "threshold", "Jaccard cutoff",
+    ParamValidators.inRange(0.0, 1.0))
+  setDefault(threshold -> 0.8)
+  def setThreshold(v: Double): this.type = set(threshold, v)
+  final val maxBucketSize = new IntParam(this, "maxBucketSize",
+    "per-band-bucket candidate cap (skew guard; overflow counts in the " +
+      "<uid>_dropped observation)", ParamValidators.gt(0))
+  setDefault(maxBucketSize -> 1000)
+  def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
+
+  /** Signature entries per band. With `bands > numHashes` the quotient
+    * is 0: every band key would hash an empty slice, all documents would
+    * share one bucket per band, and the bucket cap would silently drop
+    * the candidates — so that shape is refused here, for every face. */
+  protected final def rowsPerBand: Int = {
+    require($(bands) <= $(numHashes),
+      s"numHashes (${$(numHashes)}) must be >= bands (${$(bands)})")
+    $(numHashes) / $(bands)
+  }
+
+  /** MinHash signature of text column `c`. */
+  protected final def signature(c: Column): Column =
+    DedupFunctions.minHashSignature(
+      DedupFunctions.hashedShingles(c, $(shingleSize)), $(numHashes))
+
+  /** The `bands` band keys of signature column `sig`. */
+  protected final def bandKeys(sig: Column): Column =
+    DedupFunctions.bandHashes(sig, $(bands), rowsPerBand)
+
+  /** Verified near-dup pairs `(__id_l, __id_r)` of `df`, `__id_l <
+    * __id_r`: band keys → [[DedupFunctions.candidatePairs]] → hashed
+    * shingle sets joined back by id → exact Jaccard ≥ `threshold`. The
+    * band explode carries ONLY (bucket, id) — 16 bytes/row through the
+    * dominant shuffle; the shingle sets are recomputed for the (far
+    * smaller) verification join, CPU per surviving candidate instead of
+    * `bands`× payload amplification through the explode. */
+  protected final def verifiedPairs(df: DataFrame, id: Column,
+      text: Column): DataFrame = {
+    import DedupFunctions._
+    val buckets = df.withColumn("__sig", signature(text))
+      .select(id.cast("long").as("__id"),
+        explode(bandKeys(col("__sig"))).as("__key"))
+    val pairs = candidatePairs(buckets, $(maxBucketSize), s"${uid}_dropped")
+    val sh = df.select(id.cast("long").as("__id"),
+      hashedShingles(text, $(shingleSize)).as("__sh"))
+    joinCandidatePayload(pairs, sh, "__sh")
+      .filter(jaccard(col("__sh_l"), col("__sh_r")) >= $(threshold))
+      .select(col("__id_l"), col("__id_r"))
+  }
+}
+
 /** MinHash+LSH near-duplicate removal: shingle → minhash → band →
-  * bucket-join. A row is dropped when any band bucket contains a surviving
-  * candidate with smaller id whose verified Jaccard ≥ threshold.
+  * bucket-join. A row is dropped when any band bucket contains a
+  * candidate with smaller id whose exact shingle Jaccard ≥ threshold
+  * ([[MinHashLshParams.verifiedPairs]]).
   *
   * Shuffles: explode to n·bands rows of (bandHash, id) — narrow payload —
   * then a self-join per bucket. Buckets are capped (`maxBucketSize`) so a
   * degenerate bucket (e.g. empty docs) cannot quadratically explode.
   */
 class MinHashDeduplicator(override val uid: String) extends Transformer
-    with HasInputCol with graft.core.GraftWritable {
+    with HasInputCol with MinHashLshParams with graft.core.GraftWritable {
   def this() = this(Identifiable.randomUID("MinHashDeduplicator"))
 
   final val idCol = new Param[String](this, "idCol", "unique row id column")
   def setIdCol(v: String): this.type = set(idCol, v)
-  final val shingleSize = new IntParam(this, "shingleSize", "word shingle k")
-  setDefault(shingleSize -> 3)
-  def setShingleSize(v: Int): this.type = set(shingleSize, v)
-  final val numHashes = new IntParam(this, "numHashes", "signature length")
-  setDefault(numHashes -> 128)
-  def setNumHashes(v: Int): this.type = set(numHashes, v)
-  final val bands = new IntParam(this, "bands", "LSH bands")
-  setDefault(bands -> 32)
-  def setBands(v: Int): this.type = set(bands, v)
-  final val threshold = new DoubleParam(this, "threshold", "Jaccard cutoff")
-  setDefault(threshold -> 0.8)
-  def setThreshold(v: Double): this.type = set(threshold, v)
-  final val maxBucketSize = new IntParam(this, "maxBucketSize",
-    "per-bucket candidate cap (skew guard)")
-  setDefault(maxBucketSize -> 1000)
-  def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
-  final val restrictVerify = new BooleanParam(this, "restrictVerify",
-    "semi-join the shingle payload down to candidate ids before the " +
-      "verification joins — set true on SPARSE-dup corpora (candidates " +
-      "≪ documents); measured slower when most documents are candidates")
-  setDefault(restrictVerify -> false)
-  def setRestrictVerify(v: Boolean): this.type = set(restrictVerify, v)
 
   override def transform(ds: Dataset[_]): DataFrame = {
-    import DedupFunctions._
     transformSchema(ds.schema)
     val df = ds.toDF()
     val id = col($(idCol))
-    val r = $(numHashes) / $(bands)
-
-    // band explode carries ONLY (bucket, id) — 16 bytes/row through the
-    // dominant shuffle. The hashed-shingle arrays are recomputed for the
-    // (far smaller) verification join below: CPU per surviving candidate
-    // instead of `bands`× payload amplification through the explode.
-    val buckets = df
-      .withColumn("__sig", minHashSignature(
-        hashedShingles(col(getInputCol), $(shingleSize)), $(numHashes)))
-      .select(id.cast("long").as("__id"),
-        explode(bandHashes(col("__sig"), $(bands), r)).as("__key"))
-    val pairs = candidatePairs(buckets, $(maxBucketSize), s"${uid}_dropped")
-    // exact-Jaccard verification: shingle sets joined back by id (shape
-    // per restrictVerify — see joinCandidatePayload)
-    val sh = df.select(id.cast("long").as("__id"),
-      hashedShingles(col(getInputCol), $(shingleSize)).as("__sh"))
-    val dupIds = dupIdsOf(pairs, sh, "__sh",
-      jaccard(col("__sh_l"), col("__sh_r")) >= $(threshold), $(restrictVerify))
+    val dupIds = verifiedPairs(df, id, col(getInputCol))
+      .select(col("__id_r").as("__dup_id")).distinct()
     df.join(dupIds, id.cast("long") === col("__dup_id"), "left_anti")
   }
   override def transformSchema(schema: StructType): StructType = {
@@ -515,12 +535,6 @@ class NGramJaccardDeduplicator(override val uid: String) extends Transformer
     "per-shingle posting-list cap (guards boilerplate shingles shared by millions of docs)")
   setDefault(maxBucketSize -> 1000)
   def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
-  final val restrictVerify = new BooleanParam(this, "restrictVerify",
-    "semi-join the shingle payload down to candidate ids before the " +
-      "verification joins — set true on SPARSE-dup corpora (candidates " +
-      "≪ documents); measured slower when most documents are candidates")
-  setDefault(restrictVerify -> false)
-  def setRestrictVerify(v: Boolean): this.type = set(restrictVerify, v)
 
   override def transform(ds: Dataset[_]): DataFrame = {
     import DedupFunctions._
@@ -560,9 +574,9 @@ class NGramJaccardDeduplicator(override val uid: String) extends Transformer
       .filter(col("__rn") <= prefixLen)
       .select(col("__id"), col("__key"))
     val pairs = candidatePairs(inv, $(maxBucketSize), s"${uid}_dropped")
-    // exact-Jaccard verification (shape per restrictVerify)
+    // exact-Jaccard verification
     val dupIds = dupIdsOf(pairs, sh, "__sh",
-      jaccard(col("__sh_l"), col("__sh_r")) >= $(threshold), $(restrictVerify))
+      jaccard(col("__sh_l"), col("__sh_r")) >= $(threshold))
     df.join(dupIds, id.cast("long") === col("__dup_id"), "left_anti")
   }
   override def transformSchema(schema: StructType): StructType = {
@@ -628,10 +642,10 @@ class EmbeddingNearDupDeduplicator(override val uid: String) extends Transformer
     val keyed = df.select(id.cast("long").as("__id"),
       explode(array(bandCols: _*)).as("__key"))
     val pairs = candidatePairs(keyed, $(maxBucketSize), s"${uid}_dropped")
-    // exact-cosine verification, direct join (dup-dense default shape)
+    // exact-cosine verification
     val vecs = df.select(id.cast("long").as("__id"), col(getInputCol).as("__v"))
     val cos = graft.sim.SimilarityFunctions.cosine(col("__v_l"), col("__v_r"))
-    val dupIds = dupIdsOf(pairs, vecs, "__v", cos >= $(threshold), restrict = false)
+    val dupIds = dupIdsOf(pairs, vecs, "__v", cos >= $(threshold))
     df.join(dupIds, id.cast("long") === col("__dup_id"), "left_anti")
   }
   override def transformSchema(schema: StructType): StructType = {

@@ -42,27 +42,12 @@ import org.apache.spark.sql.types._
   * neither ever rides the band shuffle.
   */
 class IncrementalMinHashDeduplicator(override val uid: String)
-    extends Transformer with HasInputCol with graft.core.GraftWritable {
+    extends Transformer with HasInputCol with MinHashLshParams
+    with graft.core.GraftWritable {
   def this() = this(Identifiable.randomUID("IncrementalMinHashDedup"))
 
   final val idCol = new Param[String](this, "idCol", "unique row id column")
   def setIdCol(v: String): this.type = set(idCol, v)
-  final val shingleSize = new IntParam(this, "shingleSize", "word shingle k")
-  setDefault(shingleSize -> 3)
-  def setShingleSize(v: Int): this.type = set(shingleSize, v)
-  final val numHashes = new IntParam(this, "numHashes", "signature length")
-  setDefault(numHashes -> 128)
-  def setNumHashes(v: Int): this.type = set(numHashes, v)
-  final val bands = new IntParam(this, "bands", "LSH bands")
-  setDefault(bands -> 32)
-  def setBands(v: Int): this.type = set(bands, v)
-  final val threshold = new DoubleParam(this, "threshold", "Jaccard cutoff")
-  setDefault(threshold -> 0.8)
-  def setThreshold(v: Double): this.type = set(threshold, v)
-  final val maxBucketSize = new IntParam(this, "maxBucketSize",
-    "per-band-bucket corpus candidate cap (skew guard)")
-  setDefault(maxBucketSize -> 1000)
-  def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
 
   private var corpusRaw: DataFrame = _
   private var corpusIdx: DataFrame = _
@@ -79,7 +64,6 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     transformSchema(ds.schema)
     val df = ds.toDF()
     val id = col($(idCol))
-    val r = $(numHashes) / $(bands)
     require(corpusRaw != null || corpusIdx != null,
       "setCorpus or setCorpusIndex first")
     val index =
@@ -87,15 +71,13 @@ class IncrementalMinHashDeduplicator(override val uid: String)
       else IncrementalMinHashDeduplicator.signatureIndex(
         corpusRaw, $(idCol), getInputCol, $(shingleSize), $(numHashes))
     val batchSig = df.select(id.cast("long").as("__id"),
-      minHashSignature(
-        hashedShingles(col(getInputCol), $(shingleSize)), $(numHashes))
-        .as("__sig"))
+      signature(col(getInputCol)).as("__sig"))
     val batchKeys = batchSig.select(col("__id"),
-      explode(bandHashes(col("__sig"), $(bands), r)).as("__key"))
+      explode(bandKeys(col("__sig"))).as("__key"))
     // per-bucket corpus cap BEFORE the join (map-side bounded, dropped
     // candidates observable) — the two-frame analogue of candidatePairs
-    val cKeyed = cappedCorpusBands(index, $(bands), r, $(maxBucketSize),
-      s"${uid}_dropped")
+    val cKeyed = cappedCorpusBands(index, $(bands), rowsPerBand,
+      $(maxBucketSize), s"${uid}_dropped")
     // materialized: the verify joins reference the candidate frame three
     // times (batch restrict, corpus restrict, pair join) and without the
     // barrier each reference replans — and re-executes — the whole band
@@ -121,9 +103,9 @@ class IncrementalMinHashDeduplicator(override val uid: String)
     // verification payloads are computed ONLY for candidate rows: the
     // batch/corpus text is semi-joined down to candidate ids BEFORE the
     // shingle/signature projection, so the expensive hashing runs per
-    // candidate, not per corpus document (the restrict=true shape of
-    // joinCandidatePayload — here candidates ≪ corpus BY DESIGN, the
-    // index describes an already-deduplicated corpus). The id frames
+    // candidate, not per corpus document (semi-join before verify —
+    // here candidates ≪ corpus BY DESIGN, the index describes an
+    // already-deduplicated corpus). The id frames
     // carry no catalog stats (they derive from a checkpointed RDD), so
     // the planner cannot size them itself: hint broadcast, but only
     // while their MEASURED size fits the session's own broadcast bound,
@@ -147,9 +129,7 @@ class IncrementalMinHashDeduplicator(override val uid: String)
             col(getInputCol).as("__t"))
           .join(maybeBroadcast(cands.select(col("__id")).distinct()),
             Seq("__id"), "left_semi")
-          .select(col("__id"), minHashSignature(
-            hashedShingles(col("__t"), $(shingleSize)), $(numHashes))
-            .as("__sig"))
+          .select(col("__id"), signature(col("__t")).as("__sig"))
         val cSig = index
           .join(maybeBroadcast(cands.select(col("__cid").as("__id")).distinct()),
             Seq("__id"), "left_semi")
@@ -188,12 +168,8 @@ class IncrementalMinHashDeduplicator(override val uid: String)
       id.cast("long") === col("__drop_id"), "left_anti")
       .localCheckpoint()
     // near-dedup WITHIN the corpus-cleared batch (exact-Jaccard verify —
-    // the batch's own text is at hand)
-    new MinHashDeduplicator().setInputCol(getInputCol).setIdCol($(idCol))
-      .setShingleSize($(shingleSize)).setNumHashes($(numHashes))
-      .setBands($(bands)).setThreshold($(threshold))
-      .setMaxBucketSize($(maxBucketSize))
-      .transform(survivors)
+    // the batch's own text is at hand), with this stage's LSH shape
+    copyValues(new MinHashDeduplicator()).transform(survivors)
   }
   override def transformSchema(schema: StructType): StructType = {
     SchemaChecks.requireCols(schema,

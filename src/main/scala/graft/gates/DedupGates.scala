@@ -465,11 +465,11 @@ object DedupGates {
     // signature INDEX alone (setCorpusIndex; corpus text never reread),
     // similarity = the MinHash agreement estimate. The oracle replays
     // with exact Jaccard, which is sound because 0.85 sits in a wide gap
-    // of BOTH spectra on this fixture (SigModeProbe, all three sf dirs:
-    // nearest exact below/above = 0.8000/0.8889, nearest estimate =
-    // 0.7969/0.8984 — every candidate pair ≥0.035 from the threshold on
-    // both measures, zero estimate-vs-exact flips; the semdedup_exact
-    // margin convention)
+    // of BOTH spectra on this fixture (all three sf dirs: nearest exact
+    // below/above = 0.8000/0.8889, nearest estimate = 0.7969/0.8984 —
+    // every candidate pair ≥0.035 from the threshold on both measures,
+    // zero estimate-vs-exact flips; numbers as recorded; DedupSuite
+    // asserts the margin; the semdedup_exact margin convention)
     Gate("dedup_incremental_minhash_sig", { (s, dir) =>
       val docs = tbl(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 4 =!= 0)

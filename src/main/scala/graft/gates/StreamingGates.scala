@@ -31,7 +31,7 @@ object StreamingGates {
   }
 
   // exact-Jaccard replay of the streaming near-dup decisions (sound:
-  // SigModeProbe margins — see the query's comment), then the
+  // measured margins — see the query's comment), then the
   // surviving DISTINCT canonical-text set (in-stream exact dedup).
   // The n=0 rule mirrors the engine: an empty-shingle doc carries the
   // all-sentinel signature and matches other empty docs exactly
@@ -203,12 +203,13 @@ object StreamingGates {
     // exact state instead (their canonical twin rides the same run).
     // %4==0 docs drop iff a corpus doc sits at
     // estimate >= 0.85 — replayable with EXACT Jaccard because
-    // SigModeProbe measured every candidate pair of this fixture >=
-    // 0.035 from the cutoff on BOTH spectra (zero estimate-vs-exact
-    // flips, all three sf dirs). The gate emits the DISTINCT surviving
-    // CANONICAL-TEXT set (the dedup_exact_stream convention — which
-    // copy of canonically-equal rows survives the in-stream state is
-    // engine-arbitrary, the set is not).
+    // every candidate pair of this fixture measured >= 0.035 from the
+    // cutoff on BOTH spectra (zero estimate-vs-exact flips, all three sf
+    // dirs; numbers as recorded; DedupSuite asserts the margin). The
+    // gate emits the DISTINCT surviving CANONICAL-TEXT set (the
+    // dedup_exact_stream convention — which copy of canonically-equal
+    // rows survives the in-stream state is engine-arbitrary, the set is
+    // not).
     Gate("dedup_minhash_stream", { (s, dir) =>
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val corpus = tbl(s, dir, "documents")

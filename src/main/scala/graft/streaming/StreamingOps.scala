@@ -611,8 +611,8 @@ object StreamingFingerprintDeduplicator
   * signature-mode contract transplanted to the engine:
   *
   *  - **against the persisted corpus**: each stream document's MinHash
-  *    signature (the SAME `minHashSignature(hashedShingles(...))`
-  *    column expressions the batch family computes, so one persisted
+  *    signature (the SAME [[graft.dedup.MinHashLshParams]] signature
+  *    column the batch family computes, so one persisted
   *    [[graft.dedup.IncrementalMinHashDeduplicator.signatureIndex]]
   *    serves batch re-runs AND the stream) probes a broadcast
   *    (band-key → candidate signatures) table; a candidate whose
@@ -659,39 +659,15 @@ object StreamingFingerprintDeduplicator
   * per-batch shuffle. */
 class StreamingMinHashDeduplicator(override val uid: String)
     extends Transformer with HasInputCol with HasEventTime
-    with graft.core.GraftWritable {
+    with graft.dedup.MinHashLshParams with graft.core.GraftWritable {
   def this() = this(Identifiable.randomUID("StreamingMinHashDeduplicator"))
 
-  final val shingleSize = new IntParam(this, "shingleSize", "word shingle k",
-    ParamValidators.gt(0))
-  setDefault(shingleSize -> 3)
-  def setShingleSize(v: Int): this.type = set(shingleSize, v)
-  final val numHashes = new IntParam(this, "numHashes", "signature length",
-    ParamValidators.gt(0))
-  setDefault(numHashes -> 128)
-  def setNumHashes(v: Int): this.type = set(numHashes, v)
-  final val bands = new IntParam(this, "bands", "LSH bands",
-    ParamValidators.gt(0))
-  setDefault(bands -> 32)
-  def setBands(v: Int): this.type = set(bands, v)
-  final val threshold = new DoubleParam(this, "threshold",
-    "Jaccard cutoff (signature-agreement estimate)",
-    ParamValidators.inRange(0.0, 1.0))
-  setDefault(threshold -> 0.8)
-  def setThreshold(v: Double): this.type = set(threshold, v)
   final val maxIndexEntries = new IntParam(this, "maxIndexEntries",
     "fail-fast cap on corpus index entries (full signatures are " +
       "broadcast — see the class scaladoc for the scale paths past it)",
     ParamValidators.gt(0))
   setDefault(maxIndexEntries -> (1 << 19))
   def setMaxIndexEntries(v: Int): this.type = set(maxIndexEntries, v)
-  final val maxBucketSize = new IntParam(this, "maxBucketSize",
-    "transformMicroBatch tier 2: per-band-bucket corpus candidate cap " +
-      "(skew guard, the incremental family's bounded aggregator; " +
-      "overflow counts in the <uid>_dropped observation)",
-    ParamValidators.gt(0))
-  setDefault(maxBucketSize -> 1000)
-  def setMaxBucketSize(v: Int): this.type = set(maxBucketSize, v)
   /** Persisted corpus `(__id, __sig)` signature index — the batch
     * family's [[graft.dedup.IncrementalMinHashDeduplicator.signatureIndex]].
     * Replacing it destroys the cached probe state and DETACHES any raw
@@ -744,16 +720,13 @@ class StreamingMinHashDeduplicator(override val uid: String)
     transformSchema(ds.schema)
     val df = ds.toDF()
     requireEventTime(df)
-    val r = $(numHashes) / $(bands)
-    require(r > 0, s"numHashes (${$(numHashes)}) must be >= bands (${$(bands)})")
+    val r = rowsPerBand
     require(corpusRaw == null,
       "exact verification against the raw corpus (setCorpus) needs the " +
         "per-batch corpus join — drive transformMicroBatch from " +
         "foreachBatch (the DSL path's broadcast probe is text-free by " +
         "design)")
-    val withSig = df.withColumn("__sig",
-      minHashSignature(hashedShingles(col(getInputCol), $(shingleSize)),
-        $(numHashes)))
+    val withSig = df.withColumn("__sig", signature(col(getInputCol)))
     val cleared =
       if (corpusIndex == null) withSig
       else {
@@ -866,9 +839,7 @@ class StreamingMinHashDeduplicator(override val uid: String)
         "hands over, not a streaming frame (use transform for the DSL " +
         "path)")
     require(corpusIndex != null, "setCorpusIndex first (signatureIndex)")
-    val r = $(numHashes) / $(bands)
-    require(r > 0,
-      s"numHashes (${$(numHashes)}) must be >= bands (${$(bands)})")
+    val r = rowsPerBand
     val shape = ($(bands), $(numHashes), $(maxBucketSize), $(shingleSize))
     val (cKeyed, cSigs, bcBloom, cShingles) = microBatchProbe(shape) {
       val k = microBatchProbe.persist(cappedCorpusBands(corpusIndex,
@@ -915,13 +886,12 @@ class StreamingMinHashDeduplicator(override val uid: String)
     // mode also carries the shingle set itself for the tier-2 verify)
     val sigs = keyed.filter(col(getInputCol).isNotNull)
       .select((Seq(col("__fp"), col("__fp2"),
-        minHashSignature(hashedShingles(col(getInputCol), $(shingleSize)),
-          $(numHashes)).as("__sig")) ++
+        signature(col(getInputCol)).as("__sig")) ++
         (if (cShingles.isDefined)
           Seq(hashedShingles(col(getInputCol), $(shingleSize)).as("__sh"))
         else Nil)): _*)
       .dropDuplicates("__fp", "__fp2")
-      .withColumn("__keys", bandHashes(col("__sig"), $(bands), r))
+      .withColumn("__keys", bandKeys(col("__sig")))
     val flagged = sigs.filter(mightUdf(col("__keys")))
     // per-batch joins keep the BIG sides (the 32M-row band frame, the
     // 1 GB signature index) as streamed scan sides and broadcast the
@@ -988,13 +958,13 @@ object StreamingMinHashDeduplicator
     * decision. */
   private val PrefilterFpp = 0.03
 
-  /** Band key of signature entries [b·r, b·r+r): xxhash64-chained.
-    * Self-consistent between index build and probe; NOT bit-compatible
-    * with the batch column `bandHashes` and doesn't need to be (the
-    * probe never joins the batch frames). */
+  /** Band key of signature entries [b·r, b·r+r): the JVM form of the
+    * batch column [[graft.dedup.DedupFunctions.bandHashes]] — Spark's
+    * `xxhash64(lit(b), slice(sig, b·r+1, r))` seeds 42, hashes the int
+    * band index, then chains each long — so both give the same key. */
   private[graft] def bandKey(sig: Array[Long], b: Int, r: Int): Long = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
-    var h = XXH64.hashLong(b.toLong, 42L)
+    var h = XXH64.hashInt(b, 42L)
     var i = b * r
     val end = math.min(sig.length, i + r)
     while (i < end) { h = XXH64.hashLong(sig(i), h); i += 1 }

@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions.{filter, length, split, trim}
 object Words {
 
   /** A whitespace run in Java regex, the engine of Spark's `split` and
-    * `regexp_replace`. */
-  val ws: String = "\\s+"
+    * `regexp_replace`: RE2's `\s` class (tab, newline, form feed,
+    * carriage return, space), which the DuckDB oracles use. Java's `\s`
+    * also matches the vertical tab U+000B; RE2's does not. */
+  val ws: String = "[\\t\\n\\f\\r ]+"
   private val wsPattern = java.util.regex.Pattern.compile(ws)
 
   /** `split(trim(c), ws)`, keeping Spark's empty token: `""` gives `[""]`,

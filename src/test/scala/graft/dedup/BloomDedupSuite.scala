@@ -51,6 +51,23 @@ class BloomDedupSuite extends TestBase {
     // allow 2.5x sampling slack
     assert(fp10 < 0.021, s"FPR $fp10 above bound")
     assert(fp10 > 0.0, "suspiciously perfect — probe set never collides")
+    // the small-bucket shape that exposed the rejected double-hashing
+    // scheme (2 false positives in 125 new-only probes): the sf0.001
+    // snapshot split, 16 buckets, 40 bits/doc, where theory is ~5e-9
+    val fpIdx = IncrementalDeduplicator.fingerprintIndex(
+      docs.filter(col("doc_id") % 4 =!= 0), "text")
+    val newOnly = IncrementalDeduplicator.fingerprintIndex(
+        docs.filter(col("doc_id") % 4 === 0), "text")
+      .join(fpIdx, Seq("__fp", "__fp2"), "left_anti")
+      .withColumn("__bucket", pmod(col("__fp"), lit(16)).cast("int"))
+      .join(buildIndex(fpIdx, numBuckets = 16, bitsPerDoc = 40),
+        Seq("__bucket"), "left_outer")
+      .select(containsUdf(col("__bits"), col("__fp"), col("__fp2"),
+        col("__m"), col("__k")))
+      .as[Boolean].collect()
+    assert(newOnly.length >= 100, s"only ${newOnly.length} new-only probes")
+    assert(!newOnly.contains(true),
+      s"${newOnly.count(identity)} false positives at 40 bits/doc")
   }
 
   test("exact cascade output equals IncrementalDeduplicator exactly") {

@@ -59,23 +59,6 @@ class DedupSuite extends TestBase {
     assert(!ids.contains(2L)) // near dup gone at 0.6 threshold
   }
 
-  test("restrictVerify=true is result-identical to the direct-join default") {
-    // the sf0.01 documents table is the gate fixture; both verification
-    // shapes must keep exactly the same survivors
-    val corpus = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    def ids(restrict: Boolean, d: org.apache.spark.sql.DataFrame) = {
-      val mh = new MinHashDeduplicator().setInputCol("text").setIdCol("doc_id")
-        .setRestrictVerify(restrict).transform(d)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      val ng = new NGramJaccardDeduplicator().setInputCol("text").setIdCol("doc_id")
-        .setThreshold(0.8).setRestrictVerify(restrict).transform(d)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      (mh, ng)
-    }
-    assert(ids(restrict = true, corpus) == ids(restrict = false, corpus))
-    assert(ids(restrict = true, docs) == ids(restrict = false, docs))
-  }
-
   test("SimHashDeduplicator removes near duplicates") {
     val out = new SimHashDeduplicator().setInputCol("text").setIdCol("doc_id")
       .setMaxHamming(3).transform(docs)
@@ -166,6 +149,48 @@ class DedupSuite extends TestBase {
         "margined away from their 0.8 threshold")
   }
 
+  test("signature-mode gate fixture keeps every band candidate margined " +
+    "0.035 from 0.85 on both the exact and the estimated Jaccard") {
+    // dedup_incremental_minhash_sig and the two dedup_minhash_stream gates
+    // decide corpus drops on the signature-agreement estimate at 0.85,
+    // but their oracles replay exact Jaccard. That is sound only while no
+    // batch-vs-corpus band candidate sits near 0.85 on either measure
+    // (one MinHash standard error is ~0.035 at 128 hashes). The split is
+    // the gates': corpus doc_id % 4 != 0; batch % 4 == 0 plus the
+    // +1000000 and +2000000 copies. (The sf0.1 margins are as recorded
+    // in DedupGates.)
+    import DedupFunctions._
+    val t = 0.85
+    Seq("sf0.001", "sf0.01").foreach { sf =>
+      val docs = spark.read.parquet(s"/root/testdata/$sf/documents.parquet")
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val corpus = docs.filter(col("doc_id") % 4 =!= 0)
+      val batch = docs.filter(col("doc_id") % 4 === 0)
+        .unionByName(docs.filter(col("doc_id") % 8 === 1)
+          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+        .unionByName(docs.filter(col("doc_id") % 8 === 4)
+          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
+      def side(d: org.apache.spark.sql.DataFrame, id: String) = d.select(
+          col("doc_id").as(id), hashedShingles(col("text"), 3).as(s"sh$id"))
+        .withColumn(s"sig$id", minHashSignature(col(s"sh$id"), 128))
+      val b = side(batch, "b"); val c = side(corpus, "c")
+      val scored = b.select(col("b"), explode(bandHashes(col("sigb"), 32, 4)).as("k"))
+        .join(c.select(col("c"), explode(bandHashes(col("sigc"), 32, 4)).as("k")), "k")
+        .select("b", "c").distinct()
+        .join(b, "b").join(c, "c")
+        .select(sigAgreement(col("sigb"), col("sigc")).as("est"),
+          jaccard(col("shb"), col("shc")).as("exact"))
+        .as[(Double, Double)].collect()
+      assert(scored.nonEmpty, s"$sf: no band candidates")
+      val near = scored.filter { case (e, x) =>
+        math.abs(e - t) < 0.035 || math.abs(x - t) < 0.035 }
+      assert(near.isEmpty, s"$sf: candidates within 0.035 of $t: " +
+        near.take(5).mkString(", "))
+      assert(scored.forall { case (e, x) => (e >= t) == (x >= t) },
+        s"$sf: estimate and exact Jaccard disagree on a side of $t")
+    }
+  }
+
   test("bucket caps bound a pathologically skewed fixture and report drops") {
     // 2,000 identical docs -> every band bucket is one degenerate bucket.
     // Without the cap the pair space is ~2M; with maxBucketSize=50 the
@@ -224,5 +249,24 @@ class DedupSuite extends TestBase {
       IncrementalDeduplicator.fingerprintIndex(docs, "text"))
     assert(msg(inc.transform(docs.drop("text")))
       .contains("inputCol 'text' not found"))
+    assert(msg(new DuplicateClusterer().setInputCol("missing")
+      .setIdCol("id").transform(docs))
+      .contains("inputCol 'missing' not found"))
+    // one LSH shape check for every MinHash face: bands > numHashes
+    // would leave 0 rows per band, so all documents would share one
+    // bucket per band and the bucket cap would drop the candidates
+    val shapes: Seq[() => Any] = Seq(
+      () => new MinHashDeduplicator().setInputCol("text").setIdCol("id")
+        .setNumHashes(16).setBands(32).transform(docs),
+      () => new DuplicateClusterer().setInputCol("text").setIdCol("id")
+        .setNumHashes(16).setBands(32).transform(docs),
+      () => new IncrementalMinHashDeduplicator().setInputCol("text")
+        .setIdCol("id").setNumHashes(16).setBands(32).setCorpus(docs)
+        .transform(docs))
+    shapes.foreach { f =>
+      val m = msg(f())
+      assert(m.contains("numHashes (16)") && m.contains("bands (32)"), m)
+    }
+    assert(msg(new MinHashDeduplicator().setBands(0)).contains("bands"))
   }
 }

@@ -240,6 +240,20 @@ class StreamingSuite extends TestBase {
     }
   }
 
+  test("StreamingMinHashDeduplicator.bandKey equals the SQL bandHashes " +
+    "key of the same band") {
+    // the DSL probe's JVM band key and the batch faces' SQL band column
+    // are one rule: xxhash64 seeded 42 over the int band index, then
+    // each long of the band's slice
+    val rng = new scala.util.Random(3)
+    val sig = Array.fill(128)(rng.nextLong())
+    val sql = Seq(sig.toSeq).toDF("sig")
+      .select(graft.dedup.DedupFunctions.bandHashes(col("sig"), 32, 4))
+      .as[Seq[Long]].head()
+    assert((0 until 32).map(StreamingMinHashDeduplicator.bandKey(sig, _, 4))
+      == sql)
+  }
+
   test("StreamingMinHashDeduplicator.transformMicroBatch decides " +
     "identically to the broadcast DSL path (two-tier large-index mode)") {
     val base = (1 to 20).map(i => s"w$i").mkString(" ")

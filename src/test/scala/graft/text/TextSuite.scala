@@ -57,7 +57,7 @@ class TextSuite extends TestBase {
     // x <> '' (words) and lower(regexp_replace(trim(t), '\s+', ' ', 'g'))
     // (canonical); tokenCount is len(tokens), and 0 for null text
     val edge = Seq[String]("", "   ", "\ta b", "a\r\nb",
-      "\u0001 foo \u0001", null).toDF("t")
+      "\u0001 foo \u0001", "a\u000Bb c", null).toDF("t")
     val got = edge.select(Words.tokens(col("t")), Words.words(col("t")),
         DedupFunctions.canonical(col("t")), TextFunctions.tokenCount(col("t")))
       .as[(Seq[String], Seq[String], String, Int)].collect().toSeq
@@ -68,6 +68,8 @@ class TextSuite extends TestBase {
       (Seq("a", "b"), Seq("a", "b"), "a b", 2),
       (Seq("\u0001", "foo", "\u0001"), Seq("\u0001", "foo", "\u0001"),
         "\u0001 foo \u0001", 3),
+      // RE2's \s has no vertical tab: U+000B stays inside the word
+      (Seq("a\u000Bb", "c"), Seq("a\u000Bb", "c"), "a\u000Bb c", 2),
       (null, null, null, 0)))
   }
 

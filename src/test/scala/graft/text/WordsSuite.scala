@@ -15,7 +15,9 @@ class WordsSuite extends AnyFunSuite {
     ("a\r\nb", Seq("a", "b"), "a b"),
     // DuckDB's trim strips spaces only, so the C0 control characters
     // stay words; Java String.trim would drop both
-    ("\u0001 foo \u0001", Seq("\u0001", "foo", "\u0001"), "\u0001 foo \u0001"))
+    ("\u0001 foo \u0001", Seq("\u0001", "foo", "\u0001"), "\u0001 foo \u0001"),
+    // RE2's \s has no vertical tab, so U+000B stays inside the word
+    ("a\u000Bb c", Seq("a\u000Bb", "c"), "a\u000Bb c"))
 
   test("JVM words match DuckDB's list_filter(string_split_regex(trim(s)))") {
     cases.foreach { case (s, want, _) =>
