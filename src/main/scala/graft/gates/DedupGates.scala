@@ -590,8 +590,8 @@ object DedupGates {
     // fastText subword fallback) INSIDE the plan, embed, SemDeDup at
     // auto-k — the semantic-dedup recipe with in-library LEARNED
     // vectors, no external model anywhere. Runs over the planted
-    // 5-class fixture, NOT the raw synthetic text: tools.EmbedChainProbe
-    // measured the raw corpus's learned-vector cosine floor at 0.9861
+    // 5-class fixture, NOT the raw synthetic text: the raw corpus's
+    // learned-vector cosine floor is 0.9861, as recorded in SCALING.md
     // (tiny shared vocabulary — every doc is every doc's near-dup, a
     // fixture property, so a chain over it is degenerate); the planted
     // pools give the space real topic structure (within-class ≈ 1,

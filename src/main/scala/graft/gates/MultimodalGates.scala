@@ -550,9 +550,9 @@ object MultimodalGates {
     // query's true top-4 is exactly its own 4-member group, and
     // probing ONE cell must recover >= 90% of those planted neighbors
     // (group members quantize together except for the rare group
-    // astride a centroid boundary — tools.IVFServingProbe measured
-    // 160/160 recovered at nProbe=1 on ALL THREE sf dirs, so the 144
-    // floor has maximal margin). Emits the single boolean the floor
+    // astride a centroid boundary — this gate's oracle pins 160/160
+    // recovered at nProbe=1 on ALL THREE sf dirs, so the 144 floor has
+    // maximal margin). Emits the single boolean the floor
     // defines; the k-means is seeded, so the value is deterministic
     // per SF.
     Gate("image_ivf_serving", { (s, dir) =>
@@ -572,8 +572,8 @@ object MultimodalGates {
         .transform(emb)
         .select(col("query_id"), explode(col("neighbors.id")).as("id"))
       // planted pairs = 40 queries x 4 group members; the oracle pins
-      // the EXACT recovered count — tools.IVFServingProbe measured it
-      // DETERMINISTIC at 160/160 on all three SFs (seeded k-means), so
+      // the EXACT recovered count — DETERMINISTIC at 160/160 on all
+      // three SFs (seeded k-means), so
       // a silent recall regression that still clears the documented
       // 144 floor turns the gate red instead of hiding under it
       // (round-18 verdict, What's wrong #5)
@@ -585,8 +585,8 @@ object MultimodalGates {
       // 40x4 group-member pairs recovered at nProbe=1 (seeded k-means,
       // deterministic per SF; the Spark side computes the count)
       // 40 planted queries x 4 group members, measured deterministic at
-      // nProbe=1 on all three SFs (IVFServingProbe) — the exact count,
-      // not the 144 floor, is the pinned contract
+      // nProbe=1 on all three SFs (this gate runs at each) — the exact
+      // count, not the 144 floor, is the pinned contract
       "SELECT CAST(160 AS INTEGER) AS recovered")),
 
     // Energy-contour audio near-dedup — the audio member of the

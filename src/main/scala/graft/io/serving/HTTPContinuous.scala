@@ -8,26 +8,34 @@ import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, Physi
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import java.util
 
-/** Spark Serving, CONTINUOUS mode (ref:
-  * .../continuous/HTTPSourceV2.scala:205-330,475-620 + docs/mmlspark-serving
-  * .md:10-11,93 — the ~1 ms path): DSv2 continuous source whose
-  * long-lived partition readers block directly on the executor-JVM
-  * request queue, paired with a DSv2 streaming write that answers each
-  * reply from the task, so a request is HTTP-in → row → transform → reply
-  * without ever waiting for a micro-batch boundary.
-  *
-  * Shares [[DistributedServingState]] with the distributed micro-batch
-  * mode: same per-JVM listener, same (machine, requestId) correlation.
-  * `queue.poll()` is atomic, so multiple readers on one JVM split the
-  * request stream without duplication.
+/** Spark Serving, DSv2 distributed modes (ref:
+  * .../continuous/HTTPSourceV2.scala:54-79,205-330,475-620 +
+  * docs/mmlspark-serving.md:10-11,93): the [[ServingServer]] runs on every
+  * executor JVM on port 0. Placement is the only difference from driver
+  * mode ([[HTTPSourceProvider]]), which runs the same server in the driver
+  * JVM; rows are keyed by (machine, requestId), and each reply is answered
+  * by the task that lands on the owning JVM. The trigger picks the read
+  * path: [[HTTPMicroBatchStream]] batches drained requests, and
+  * [[HTTPContinuousStream]]'s long-lived readers take each request off the
+  * queue as it arrives, so a request is HTTP-in → row → transform → reply
+  * without waiting for a batch boundary (the ~1 ms path).
   */
 object HTTPContinuous {
-  val schema: StructType = DistributedHTTPSourceV1.schema
+  val schema: StructType = StructType(Seq(
+    StructField("id", StructType(Seq(
+      StructField("machine", StringType, nullable = false),
+      StructField("requestId", LongType, nullable = false))), nullable = false),
+    StructField("method", StringType),
+    StructField("path", StringType),
+    StructField("entity", BinaryType)))
+
+  // readers per continuous query; each holds one task slot for the
+  // query's lifetime
+  val readers = 2
 
   case class ReaderOffset(partitionId: Int, count: Long) extends PartitionOffset
   case class EpochOffset(counts: Map[Int, Long]) extends ConnectorOffset {
@@ -54,20 +62,17 @@ class HTTPContinuousProvider extends TableProvider with DataSourceRegister {
     new HTTPContinuousTable(
       Option(properties.get("name")).getOrElse("default"),
       Option(properties.get("host")).getOrElse("localhost"),
-      Option(properties.get("path")).getOrElse("/"),
-      Option(properties.get("numpartitions")).map(_.toInt).getOrElse(2))
+      Option(properties.get("path")).getOrElse("/"))
 }
 
-/** Serves BOTH streaming modes through one DSv2 table (ref:
+/** Serves BOTH DSv2 streaming modes through one table (ref:
   * HTTPSourceV2.scala:54-79, whose HTTPSourceProviderV2 likewise exposes
-  * micro-batch and continuous from the same provider): the trigger picks
-  * the path — default/AvailableNow → [[HTTPMicroBatchStream]],
-  * Trigger.Continuous → [[HTTPContinuousStream]]. Both share
-  * [[DistributedServingState]], so the per-JVM listener, request queue
-  * and (machine, requestId) reply correlation are identical across modes.
+  * micro-batch and continuous from the same provider): default or
+  * AvailableNow trigger → [[HTTPMicroBatchStream]], Trigger.Continuous →
+  * [[HTTPContinuousStream]].
   */
-class HTTPContinuousTable(name: String, host: String, path: String,
-                          numPartitions: Int) extends Table with SupportsRead {
+class HTTPContinuousTable(name: String, host: String, path: String)
+    extends Table with SupportsRead {
   override def name(): String = s"graft-http-continuous-$name"
   override def schema(): StructType = HTTPContinuous.schema
   override def capabilities(): util.Set[TableCapability] =
@@ -78,22 +83,20 @@ class HTTPContinuousTable(name: String, host: String, path: String,
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = HTTPContinuous.schema
         override def toContinuousStream(checkpointLocation: String): ContinuousStream =
-          new HTTPContinuousStream(name, host, path, numPartitions)
+          new HTTPContinuousStream(name, host, path)
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new HTTPMicroBatchStream(name, host, path)
       }
     }
 }
 
-/** DSv2 MICRO-BATCH mode over the same per-JVM serving state the
-  * continuous reader uses — retires the DSv1 `Source`/`Sink`
-  * deprecation-risk path flagged by SURVEY §7. Mechanics mirror
-  * [[DistributedHTTPSourceV1]]: offsets are a per-machine request-count
-  * map polled by a lightweight job over a one-partition-per-slot setup
-  * RDD; each batch's rows are drained locally by whichever task claims
-  * the batch on its JVM (exactly one winner per JVM per batch), and stay
-  * in the `drained` map until commit so recomputation replays
-  * identically. Request payloads never pass through the driver.
+/** DSv2 micro-batch mode. Offsets are a per-machine request-count map
+  * polled by a lightweight job over a one-partition-per-slot setup RDD
+  * (the reference drives server lifecycle the same way); the poll drains
+  * each JVM's queue, so a batch's rows are already on their JVM when its
+  * tasks run. Exactly one task per JVM wins the batch claim and emits
+  * that JVM's rows, which stay drained until commit, so recomputation
+  * replays identically. Request payloads never pass through the driver.
   */
 class HTTPMicroBatchStream(name: String, host: String, path: String)
     extends MicroBatchStream {
@@ -107,20 +110,18 @@ class HTTPMicroBatchStream(name: String, host: String, path: String)
   locally {
     val (n, h, p) = (name, host, path)
     setupRdd.mapPartitions { _ =>
-      DistributedServingState.ensure(n, h, p); Iterator.empty[Int]
+      ServingServer.ensure(n, h, 0, p); Iterator.empty[Int]
     }.count()
   }
 
   override def latestOffset(): ConnectorOffset = {
     val n = name
     val counts = setupRdd.mapPartitions { _ =>
-      DistributedServingState.get(n)
-        .map(s => Iterator((s.machineId, s.counter.get())))
-        .getOrElse(Iterator.empty)
+      ServingServer.get(n).map(s => (s.machineId, s.offset())).iterator
     }.collect()
-      // two setup partitions on one JVM can observe different counter
-      // values while requests arrive; keep the max so the reported
-      // offset never regresses across polls
+      // two setup partitions on one JVM can observe different offsets
+      // while requests arrive; keep the max so the reported offset never
+      // regresses across polls
       .groupBy(_._1).map { case (m, xs) => m -> xs.map(_._2).max }
     MachineOffset(counts)
   }
@@ -134,7 +135,7 @@ class HTTPMicroBatchStream(name: String, host: String, path: String)
     val lo = MachineOffset.fromJson(start.json()).counts
     val hi = MachineOffset.fromJson(end.json()).counts
     Array.tabulate(sc.defaultParallelism)(i =>
-      BatchServingPartition(i, name, host, path, lo, hi, end.json()))
+      BatchServingPartition(i, name, lo, hi, end.json()))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -145,14 +146,10 @@ class HTTPMicroBatchStream(name: String, host: String, path: String)
 
   override def commit(end: ConnectorOffset): Unit = {
     val n = name
-    val hi = MachineOffset.fromJson(end.json()).counts
-    val hiB = sc.broadcast(hi)
+    val hiB = sc.broadcast(MachineOffset.fromJson(end.json()).counts)
     setupRdd.mapPartitions { _ =>
-      DistributedServingState.get(n).foreach { s =>
-        val to = hiB.value.getOrElse(s.machineId, 0L)
-        s.drained.keys.filter(_ < to).foreach(s.drained.remove)
-        s.batchClaims.clear()
-      }
+      ServingServer.get(n).foreach(s =>
+        s.commit(hiB.value.getOrElse(s.machineId, 0L)))
       Iterator.empty[Int]
     }.count()
     ()
@@ -161,7 +158,7 @@ class HTTPMicroBatchStream(name: String, host: String, path: String)
   override def stop(): Unit = {
     val n = name
     setupRdd.mapPartitions { _ =>
-      DistributedServingState.stop(n); Iterator.empty[Int]
+      ServingServer.stop(n); Iterator.empty[Int]
     }.count()
     ()
   }
@@ -169,36 +166,20 @@ class HTTPMicroBatchStream(name: String, host: String, path: String)
 
 object HTTPMicroBatch {
   case class BatchServingPartition(partitionId: Int, name: String,
-                                   host: String, path: String,
                                    lo: Map[String, Long], hi: Map[String, Long],
                                    endJson: String) extends InputPartition
 }
 
-/** Emits the local JVM's drained rows in [lo, hi) — only if this task won
-  * the per-JVM batch claim (same single-emitter trick as the DSv1 path:
-  * deterministic on recompute because the winner re-runs with its id). */
+/** Emits the local JVM's drained rows in [lo, hi), if this task won the
+  * JVM's claim on the batch. */
 class HTTPMicroBatchReader(p: HTTPMicroBatch.BatchServingPartition)
     extends PartitionReader[InternalRow] {
 
-  private val rows: Iterator[InternalRow] = {
-    val s = DistributedServingState.ensure(p.name, p.host, p.path)
-    s.synchronized { s.drainQueue() }
-    val winner = s.batchClaims.putIfAbsent(p.endJson, p.partitionId)
-      .getOrElse(p.partitionId)
-    if (winner != p.partitionId) Iterator.empty
-    else {
-      val from = p.lo.getOrElse(s.machineId, 0L)
-      val to = p.hi.getOrElse(s.machineId, 0L)
-      s.drained.keys.filter(id => id >= from && id < to).toSeq.sorted
-        .iterator.flatMap { id =>
-          s.drained.get(id).map { case (m, pth, b) =>
-            InternalRow(
-              InternalRow(UTF8String.fromString(s.machineId), id),
-              UTF8String.fromString(m), UTF8String.fromString(pth), b)
-          }
-        }
-    }
-  }
+  private val rows: Iterator[InternalRow] = ServingServer.get(p.name)
+    .filter(_.claim(p.endJson, p.partitionId))
+    .map(s => s.rows(p.lo.getOrElse(s.machineId, 0L),
+      p.hi.getOrElse(s.machineId, 0L), s.machineKey))
+    .getOrElse(Iterator.empty)
 
   private var current: InternalRow = _
   override def next(): Boolean =
@@ -207,12 +188,12 @@ class HTTPMicroBatchReader(p: HTTPMicroBatch.BatchServingPartition)
   override def close(): Unit = ()
 }
 
-class HTTPContinuousStream(name: String, host: String, path: String,
-                           numPartitions: Int) extends ContinuousStream {
+class HTTPContinuousStream(name: String, host: String, path: String)
+    extends ContinuousStream {
   import HTTPContinuous._
 
   override def planInputPartitions(start: ConnectorOffset): Array[InputPartition] =
-    Array.tabulate(numPartitions)(i => ServingPartition(i, name, host, path))
+    Array.tabulate(readers)(i => ServingPartition(i, name, host, path))
 
   override def createContinuousReaderFactory(): ContinuousPartitionReaderFactory =
     new ContinuousPartitionReaderFactory {
@@ -232,32 +213,27 @@ class HTTPContinuousStream(name: String, host: String, path: String,
   override def stop(): Unit = ()
 }
 
+/** A long-lived reader: blocks on the JVM's request queue (the engine
+  * interleaves epoch markers). Readers on one JVM split the requests
+  * without duplication, since each take removes its request. */
 class HTTPContinuousReader(partitionId: Int, name: String, host: String,
                            path: String)
     extends ContinuousPartitionReader[InternalRow] {
   import HTTPContinuous._
 
-  private val server = DistributedServingState.ensure(name, host, path)
+  private val server = ServingServer.ensure(name, host, 0, path)
   private var emitted = 0L
   private var current: InternalRow = _
   @volatile private var closed = false
 
   override def next(): Boolean = {
-    // block until a request arrives (the engine interleaves epoch markers)
-    var e = server.queue.poll()
-    while (e == null && !closed) {
-      Thread.sleep(1)
-      e = server.queue.poll()
-    }
+    // a timed take, so close() is seen within 100 ms
+    var taken = server.take(100)
+    while (taken.isEmpty && !closed) taken = server.take(100)
     if (closed) false
     else {
-      val (id, ex) = e
-      val body = ex.getRequestBody.readAllBytes()
-      server.pending.put(id, ex)
-      current = InternalRow(
-        InternalRow(UTF8String.fromString(server.machineId), id),
-        UTF8String.fromString(ex.getRequestMethod),
-        UTF8String.fromString(ex.getRequestURI.toString), body)
+      val (id, r) = taken.get
+      current = ServingServer.row(server.machineKey(id), r)
       emitted += 1
       true
     }
@@ -267,8 +243,10 @@ class HTTPContinuousReader(partitionId: Int, name: String, host: String,
   override def close(): Unit = { closed = true }
 }
 
-/** Continuous reply sink: DSv2 streaming write whose per-task DataWriter
-  * answers each reply row's exchange on the owning JVM immediately. */
+/** Reply sink for both DSv2 modes: a streaming write whose per-task
+  * DataWriter answers each reply row's exchange on the owning JVM as the
+  * row arrives. Rows that moved to another JVM (a shuffling query) are
+  * skipped there, so queries must stay map-only to be answered. */
 class HTTPContinuousReplyProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-http-continuous-reply"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -319,19 +297,10 @@ class ReplyDataWriter(name: String, schema: StructType)
   private val replyIdx = schema.fieldIndex("reply")
 
   override def write(r: InternalRow): Unit =
-    DistributedServingState.get(name).foreach { s =>
+    ServingServer.get(name).foreach { s =>
       val id = r.getStruct(idIdx, 2)
-      if (id.getUTF8String(0).toString == s.machineId) {
-        s.pending.remove(id.getLong(1)).foreach { ex =>
-          val reply = r.getStruct(replyIdx, 2)
-          val status = reply.getInt(0)
-          val entity = if (reply.isNullAt(1)) Array.emptyByteArray
-            else reply.getBinary(1)
-          ex.sendResponseHeaders(status, if (entity.isEmpty) -1 else entity.length)
-          if (entity.nonEmpty) ex.getResponseBody.write(entity)
-          ex.close()
-        }
-      }
+      if (id.getUTF8String(0).toString == s.machineId)
+        s.reply(id.getLong(1), r.getStruct(replyIdx, 2))
     }
   override def commit(): WriterCommitMessage = new WriterCommitMessage {}
   override def abort(): Unit = ()

@@ -1,67 +1,23 @@
 package graft.io.serving
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
-import scala.collection.concurrent.TrieMap
-import scala.collection.mutable
 
 /** Spark Serving, driver mode (ref:
-  * org/apache/spark/sql/execution/streaming/HTTPSource.scala:43-210):
-  * an HTTP listener on the DRIVER turns requests into micro-batch rows;
-  * the paired sink routes reply rows back to the still-open exchanges via
-  * a JVM-global registry keyed by API name. Request/reply correlation is
-  * by row id; commit trims replied requests. Driver mode is the
-  * simple/correct baseline — the reference's distributed/continuous modes
-  * (one server per executor) are the documented scale-out path.
+  * org/apache/spark/sql/execution/streaming/HTTPSource.scala:43-210): the
+  * [[ServingServer]] runs in the DRIVER JVM on the requested port. Each
+  * micro-batch is the requests drained below its offset, parallelized
+  * from the driver; the paired sink answers reply rows through the same
+  * server, correlated by row id. Placement is the only difference from
+  * the DSv2 modes of [[HTTPContinuousProvider]], which run the same
+  * server on every executor JVM. The provider binds the listener in
+  * `sourceSchema`, which runs on the caller's thread during `load()`, so
+  * `start()` returns with the port already listening.
   */
-object ServingState {
-  case class Entry(exchange: HttpExchange, id: Long)
-  class Api {
-    val queue = new java.util.concurrent.ConcurrentLinkedQueue[Entry]()
-    val pending = TrieMap.empty[Long, HttpExchange]
-    val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-    @volatile var server: HttpServer = _
-  }
-  val apis = TrieMap.empty[String, Api]
-  def apply(name: String): Api = apis.getOrElseUpdate(name, new Api)
-
-  def startServer(name: String, host: String, port: Int, path: String): Api = {
-    val api = apply(name)
-    synchronized {
-      if (api.server == null) {
-        graft.core.ServerTuning.ensure()
-        val server = HttpServer.create(new InetSocketAddress(host, port), 0)
-        server.createContext(path, new HttpHandler {
-          def handle(ex: HttpExchange): Unit = {
-            val id = api.counter.getAndIncrement()
-            api.queue.add(Entry(ex, id))
-          }
-        })
-        server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(
-          r => { val t = new Thread(r); t.setDaemon(true); t }))
-        server.start()
-        api.server = server
-      }
-    }
-    api
-  }
-
-  def stop(name: String): Unit = apis.remove(name).foreach { api =>
-    if (api.server != null) api.server.stop(0)
-  }
-}
-
 object HTTPSourceV1 {
   val schema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -70,94 +26,73 @@ object HTTPSourceV1 {
     StructField("entity", BinaryType)))
 }
 
-class HTTPSourceV1(spark: SparkSession, name: String, host: String, port: Int,
-                   path: String) extends Source with Logging {
-  private val api = ServingState.startServer(name, host, port, path)
-  // batches delivered but not yet committed: offset -> row data
-  private val batches = mutable.TreeMap.empty[Long, Array[(Long, String, String, Array[Byte])]]
-
+class HTTPSourceV1(spark: SparkSession, name: String, server: ServingServer)
+    extends Source {
   override def schema: StructType = HTTPSourceV1.schema
 
   override def getOffset: Option[Offset] = {
-    val n = api.counter.get()
+    val n = server.offset()
     if (n == 0) None else Some(LongOffset(n))
   }
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val lo = start.map(o => o.asInstanceOf[LongOffset].offset).getOrElse(0L)
     val hi = end.asInstanceOf[LongOffset].offset
-    // drain queued exchanges into materialized batch data (driver-side)
-    var e = api.queue.poll()
-    while (e != null) {
-      val body = e.exchange.getRequestBody.readAllBytes()
-      val row = (e.id, e.exchange.getRequestMethod,
-        e.exchange.getRequestURI.toString, body)
-      batches.getOrElseUpdate(e.id, Array(row)) // one row per id
-      api.pending.put(e.id, e.exchange)
-      e = api.queue.poll()
-    }
-    val rows = batches.range(lo, hi).values.flatten.toSeq
-    val internal = rows.map { case (id, m, p, b) =>
-      InternalRow(id, UTF8String.fromString(m), UTF8String.fromString(p), b)
-    }
-    val rdd = spark.sparkContext.parallelize(internal.toIndexedSeq,
-      math.max(1, math.min(internal.size, 4)))
+    val rows = server.rows(lo, hi, id => id).toIndexedSeq
+    val rdd = spark.sparkContext.parallelize(rows,
+      math.max(1, math.min(rows.size, 4)))
     org.apache.spark.sql.graftshims.StreamingBridge
       .internalCreateDataFrame(spark, rdd, schema)
   }
 
-  override def commit(end: Offset): Unit = {
-    val hi = end.asInstanceOf[LongOffset].offset
-    batches.range(0L, hi).keys.toSeq.foreach(batches.remove)
-  }
+  override def commit(end: Offset): Unit =
+    server.commit(end.asInstanceOf[LongOffset].offset)
 
-  override def stop(): Unit = ServingState.stop(name)
+  override def stop(): Unit = ServingServer.stop(name)
 }
 
 /** `format("graft.io.serving.HTTPSourceProvider")` — options: name, host,
   * port, path. */
 class HTTPSourceProvider extends StreamSourceProvider with DataSourceRegister {
   override def shortName(): String = "graft-http"
+
+  // idempotent: load() binds, and a query restarted after stop() rebinds
+  private def listen(parameters: Map[String, String]): (String, ServingServer) = {
+    val name = parameters.getOrElse("name", "default")
+    (name, ServingServer.ensure(name,
+      parameters.getOrElse("host", "localhost"),
+      parameters.getOrElse("port", "8899").toInt,
+      parameters.getOrElse("path", "/")))
+  }
+
   override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
                             providerName: String,
                             parameters: Map[String, String]): (String, StructType) =
-    (parameters.getOrElse("name", "default"), HTTPSourceV1.schema)
+    (listen(parameters)._1, HTTPSourceV1.schema)
   override def createSource(ctx: SQLContext, metadataPath: String,
                             schema: Option[StructType], providerName: String,
-                            parameters: Map[String, String]): Source =
-    new HTTPSourceV1(ctx.sparkSession,
-      parameters.getOrElse("name", "default"),
-      parameters.getOrElse("host", "localhost"),
-      parameters.getOrElse("port", "8899").toInt,
-      parameters.getOrElse("path", "/"))
+                            parameters: Map[String, String]): Source = {
+    val (name, server) = listen(parameters)
+    new HTTPSourceV1(ctx.sparkSession, name, server)
+  }
 }
 
 /** Reply sink: expects (id LONG, reply STRUCT(statusCode INT, entity
   * BINARY)) rows; collects each micro-batch to the driver and answers the
   * matching exchange (ref: HTTPSource.scala:178-210 HTTPSink). */
 class HTTPSinkV1(name: String) extends Sink {
-  override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val api = ServingState(name)
-    // the incoming frame is streaming-tagged, so plain collect() is
-    // rejected; executeCollect() on the physical plan is the sanctioned
-    // sink-side materialization (same approach as Spark's MemorySink).
-    // Replies are small by construction: one row per in-flight request.
-    val idIdx = data.schema.fieldIndex("id")
-    val replyIdx = data.schema.fieldIndex("reply")
-    val rows = data.queryExecution.executedPlan.executeCollect()
-    rows.foreach { r =>
-      val id = r.getLong(idIdx)
-      api.pending.remove(id).foreach { ex =>
-        val reply = r.getStruct(replyIdx, 2)
-        val status = reply.getInt(0)
-        val entity = if (reply.isNullAt(1)) Array.emptyByteArray
-          else reply.getBinary(1)
-        ex.sendResponseHeaders(status, if (entity.isEmpty) -1 else entity.length)
-        if (entity.nonEmpty) ex.getResponseBody.write(entity)
-        ex.close()
+  override def addBatch(batchId: Long, data: DataFrame): Unit =
+    ServingServer.get(name).foreach { server =>
+      // the incoming frame is streaming-tagged, so plain collect() is
+      // rejected; executeCollect() on the physical plan is the sanctioned
+      // sink-side materialization (same approach as Spark's MemorySink).
+      // Replies are small by construction: one row per in-flight request.
+      val idIdx = data.schema.fieldIndex("id")
+      val replyIdx = data.schema.fieldIndex("reply")
+      data.queryExecution.executedPlan.executeCollect().foreach { r =>
+        server.reply(r.getLong(idIdx), r.getStruct(replyIdx, 2))
       }
     }
-  }
 }
 
 class HTTPSinkProvider extends StreamSinkProvider with DataSourceRegister {

@@ -16,7 +16,7 @@ class ContinuousServingSuite extends TestBase {
     val requests = spark.readStream
       .format("graft.io.serving.HTTPContinuousProvider")
       .option("name", "cont-api").option("host", "localhost")
-      .option("path", "/score").option("numPartitions", "2")
+      .option("path", "/score")
       .load()
     val replies = requests.select(col("id"),
       ServingFunctions.makeReply(
@@ -29,10 +29,10 @@ class ContinuousServingSuite extends TestBase {
       .trigger(Trigger.Continuous("2 seconds"))
       .start()
     try {
-      var server: Option[DistributedServingState.JvmServer] = None
+      var server: Option[ServingServer] = None
       val deadline = System.currentTimeMillis() + 30000
       while (server.isEmpty && System.currentTimeMillis() < deadline) {
-        server = DistributedServingState.get("cont-api")
+        server = ServingServer.get("cont-api")
         if (server.isEmpty) Thread.sleep(100)
       }
       val port = server.get.port

@@ -1,53 +1,8 @@
 package graft.io.serving
 
-import graft.TestBase
-import org.apache.spark.sql.functions._
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.charset.StandardCharsets
-import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration._
+import org.scalatest.funsuite.AnyFunSuite
 
-class DistributedServingSuite extends TestBase {
-
-  test("distributed source serves from executor-JVM listeners") {
-    val requests = spark.readStream
-      .format("graft.io.serving.DistributedHTTPSourceProvider")
-      .option("name", "dist-api").option("host", "localhost")
-      .option("path", "/score")
-      .load()
-    val replies = requests.select(col("id"),
-      ServingFunctions.makeReply(
-        concat(lit("len="), length(col("entity").cast("string")))).as("reply"))
-    val query = replies.writeStream
-      .format("graft.io.serving.DistributedHTTPSinkProvider")
-      .option("name", "dist-api")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-dserving").toString)
-      .start()
-    try {
-      // discover the per-JVM listener port (local mode: this JVM)
-      var server: Option[DistributedServingState.JvmServer] = None
-      val deadline = System.currentTimeMillis() + 20000
-      while (server.isEmpty && System.currentTimeMillis() < deadline) {
-        server = DistributedServingState.get("dist-api")
-        if (server.isEmpty) Thread.sleep(100)
-      }
-      val port = server.get.port
-      val client = HttpClient.newHttpClient()
-      def post(body: String): Future[String] = Future {
-        val req = HttpRequest.newBuilder(URI.create(s"http://localhost:$port/score"))
-          .POST(HttpRequest.BodyPublishers.ofString(body))
-          .timeout(java.time.Duration.ofSeconds(30)).build()
-        new String(client.send(req, HttpResponse.BodyHandlers.ofByteArray()).body(),
-          StandardCharsets.UTF_8)
-      }
-      val answers = Await.result(
-        Future.sequence((1 to 6).map(i => post("x" * i))), 60.seconds)
-      assert(answers.toSet == (1 to 6).map(i => s"len=$i").toSet)
-    } finally query.stop()
-  }
+class DistributedServingSuite extends AnyFunSuite {
 
   test("MachineOffset round-trips through json") {
     val o = MachineOffset(Map("aaaa-bb" -> 7L, "cccc-dd" -> 0L))

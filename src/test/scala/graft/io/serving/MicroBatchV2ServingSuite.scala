@@ -31,10 +31,10 @@ class MicroBatchV2ServingSuite extends TestBase {
         java.nio.file.Files.createTempDirectory("graft-mb2").toString)
       .start()
     try {
-      var server: Option[DistributedServingState.JvmServer] = None
+      var server: Option[ServingServer] = None
       val deadline = System.currentTimeMillis() + 30000
       while (server.isEmpty && System.currentTimeMillis() < deadline) {
-        server = DistributedServingState.get("mb2-api")
+        server = ServingServer.get("mb2-api")
         if (server.isEmpty) Thread.sleep(100)
       }
       val port = server.get.port
@@ -55,7 +55,7 @@ class MicroBatchV2ServingSuite extends TestBase {
       // more request to force the next batch — everything before it must
       // then be trimmed (no unbounded executor-side growth)
       val s = server.get
-      assert(s.counter.get() >= 9)
+      assert(s.offset() >= 9)
       assert(Await.result(post("flush"), 90.seconds) == "FLUSH")
       val trimDeadline = System.currentTimeMillis() + 30000
       while (s.drained.size > 1 && System.currentTimeMillis() < trimDeadline)

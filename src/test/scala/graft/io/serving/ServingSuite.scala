@@ -13,11 +13,13 @@ import scala.concurrent.duration._
   * io/split2/HTTPSuite.scala in the reference). */
 class ServingSuite extends TestBase {
 
+  private def freePort(): Int = {
+    val s = new java.net.ServerSocket(0)
+    try s.getLocalPort finally s.close()
+  }
+
   test("http source -> query -> reply sink round trip") {
-    val port = {
-      val s = new java.net.ServerSocket(0)
-      try s.getLocalPort finally s.close()
-    }
+    val port = freePort()
     val requests = spark.readStream
       .format("graft.io.serving.HTTPSourceProvider")
       .option("name", "test-api").option("host", "localhost")
@@ -45,5 +47,27 @@ class ServingSuite extends TestBase {
       val answers = Await.result(Future.sequence(futures), 60.seconds)
       assert(answers.toSet == (1 to 5).map(i => s"HELLO$i").toSet)
     } finally query.stop()
+  }
+
+  test("driver-mode listener accepts connections as soon as start() returns") {
+    val refused = (1 to 6).count { i =>
+      val port = freePort()
+      val query = spark.readStream
+        .format("graft.io.serving.HTTPSourceProvider")
+        .option("name", s"bind-$i").option("host", "localhost")
+        .option("port", port.toString).option("path", "/score")
+        .load()
+        .select(col("id"), ServingFunctions.makeReply(col("entity")).as("reply"))
+        .writeStream
+        .format("graft.io.serving.HTTPSinkProvider")
+        .option("name", s"bind-$i")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft-bind").toString)
+        .start()
+      try { new java.net.Socket("localhost", port).close(); false }
+      catch { case _: java.net.ConnectException => true }
+      finally query.stop()
+    }
+    assert(refused == 0, s"$refused of 6 connects refused right after start()")
   }
 }
